@@ -8,8 +8,8 @@ dir; this script opens each with stock sqlite3 and verifies:
   - PRAGMA integrity_check == 'ok' (b-tree structure, page layout,
     overflow chains, header, AND the index-vs-table cross-audit —
     sqlite's own full structural validation)
-  - i26: every (id, content, vector) row equals the reference's
-    original /root/reference/vectors.db, byte for byte
+  - i26: every (id, content, vector) row equals the reference store
+    it exported (REFERENCE_DIR/vectors.db), byte for byte
   - i27: every blob equals the little-endian float32 packing of the
     matching embeddings.parquet row (via duckdb + struct)
   - write-path continuation on a COPY of each export (full-schema
@@ -20,7 +20,11 @@ dir; this script opens each with stock sqlite3 and verifies:
     QUERY PLAN); integrity still 'ok' after the mutation.
 
 Run AFTER a Verify/Bench pass has executed i26/i27 (any SF):
-    python3 scripts/sqlitecheck.py
+    python3 scripts/sqlitecheck.py [REFERENCE_DIR]
+
+REFERENCE_DIR is the directory the run read as -Dgraft.reference.dir;
+it defaults to that setting's default, the committed fixture
+src/test/resources/graft/reference.
 """
 import glob
 import os
@@ -31,6 +35,11 @@ import sys
 import tempfile
 
 fails = []
+REF_DB = os.path.join(
+    sys.argv[1] if len(sys.argv) > 1 else os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "src", "test", "resources", "graft", "reference"),
+    "vectors.db")
 
 
 def check_integrity(path):
@@ -93,7 +102,7 @@ for path in i26:
     con = check_integrity(path)
     got = con.execute(
         "SELECT id, content, vector FROM documents ORDER BY id").fetchall()
-    ref = sqlite3.connect("/root/reference/vectors.db").execute(
+    ref = sqlite3.connect(REF_DB).execute(
         "SELECT id, content, vector FROM documents ORDER BY id").fetchall()
     if got == ref:
         print(f"  rows == reference original: {len(got)}/{len(ref)}")
@@ -102,7 +111,7 @@ for path in i26:
     # schema parity: the export stores the reference's DDL verbatim
     (sql,) = sqlite3.connect(path).execute(
         "SELECT sql FROM sqlite_master WHERE name='documents'").fetchone()
-    (ref_sql,) = sqlite3.connect("/root/reference/vectors.db").execute(
+    (ref_sql,) = sqlite3.connect(REF_DB).execute(
         "SELECT sql FROM sqlite_master WHERE name='documents'").fetchone()
     if sql == ref_sql:
         print("  CREATE TABLE sql == reference, verbatim")

@@ -895,7 +895,7 @@ object IngestQueries {
       .orderBy("column")
   }
 
-  private val RefDb = "/root/reference/vectors.db"
+  private val RefDb = graft.sources.Sources.referenceDb
 
   /** SQLite EXPORT round-trip at the reference's own geometry — the
     * WRITE half of the migration seam (the store loop closed in both

@@ -2040,7 +2040,7 @@ object VectorQueries {
       .orderBy("doc_id")
   }
 
-  private val RefDb = "/root/reference/vectors.db"
+  private val RefDb = graft.sources.Sources.referenceDb
 
   /** THE REFERENCE'S PREFIX-SEARCH VARIANT (reference README.md:15 —
     * "serverArray.js and embedArray.js uses only the first 5 elements

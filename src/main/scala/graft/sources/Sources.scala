@@ -11,6 +11,18 @@ import org.apache.spark.sql.functions._
   */
 object Sources {
 
+  /** Where the reference service's shipped store lives: `vectors.db`
+    * plus the `documents/` corpus. Set with `-Dgraft.reference.dir`;
+    * the default is the committed fixture `scripts/mkreference.py`
+    * writes, resolved against the working directory (the repository
+    * root under sbt).
+    */
+  lazy val referenceDir: String = new java.io.File(
+    sys.props.getOrElse("graft.reference.dir",
+      "src/test/resources/graft/reference")).getAbsolutePath
+  def referenceDb: String = s"$referenceDir/vectors.db"
+  def referenceDocs: String = s"$referenceDir/documents"
+
   /** Whole-file directory scan — one row per file, like the reference's
     * readdir + readFile loop (server.js:165-170), but distributed:
     * (source, text) with source = file name.

@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
 class SqliteSourceSpec extends SparkSpec {
   import spark.implicits._
 
-  private val db = "/root/reference/vectors.db"
-  private val docsDir = "/root/reference/documents"
+  private val db = Sources.referenceDb
+  private val docsDir = Sources.referenceDocs
 
   test("vectors.db round-trips: 7 docs, 1536-dim float32 vectors") {
     val got = Sources.fromSqliteDocuments(spark, db)

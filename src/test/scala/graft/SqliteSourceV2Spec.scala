@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   */
 class SqliteSourceV2Spec extends SparkSpec {
 
-  private val RefDb = "/root/reference/vectors.db"
+  private val RefDb = Sources.referenceDb
 
   test("format(\"sqlite\") reads the reference vectors.db with an " +
       "inferred DDL schema, matching the library route") {
