@@ -1072,4 +1072,180 @@ class AnnSpec extends SparkSpec {
         bbMin = 1, bbMax = 12)
     }
   }
+
+
+  // ---- walk equivalence: seeded random graphs --------------------------
+
+  /** A plain-Scala beam walk, the rules every graph walk documents:
+    * start from the entries present in `score`, then each round keep
+    * the `beam` best of the visited set (score desc, id asc) and add
+    * their out-neighbours. Returns the final visited set. */
+  private def refWalk(adj: Map[Long, Seq[Long]], score: Map[Long, Double],
+                      entries: Seq[Long], beam: Int,
+                      rounds: Int): Set[Long] = {
+    var visited = entries.filter(score.contains).toSet
+    for (_ <- 1 to rounds) {
+      val b = ranked(visited, score).take(beam)
+      visited ++= b.flatMap(adj.getOrElse(_, Nil)).filter(score.contains)
+    }
+    visited
+  }
+
+  /** Ids by score desc, then id asc — the walks' tie rule. */
+  private def ranked(ids: Set[Long], score: Map[Long, Double]): Seq[Long] =
+    ids.toSeq.sortWith { (x, y) =>
+      score(x) > score(y) || (score(x) == score(y) && x < y) }
+
+  private case class WalkCase(vecs: org.apache.spark.sql.DataFrame,
+                              graph: org.apache.spark.sql.DataFrame,
+                              adj: Map[Long, Seq[Long]],
+                              queries: Seq[(Long, Array[Float])],
+                              entries: Seq[Long], beam: Int, rounds: Int,
+                              k: Int)
+
+  /** Small random graphs over 4-d vectors that are one of three
+    * directions scaled by 1, 2 or 4: scaling by a power of two leaves
+    * the cosine bit-identical, so many nodes tie on score and the
+    * walks' id tie-break decides beams. */
+  private def walkCases(seed: Int, n: Int): Seq[WalkCase] = {
+    val rng = new scala.util.Random(seed)
+    val comps = Seq(-2f, -1f, 1f, 2f)
+    (1 to n).map { _ =>
+      val size = 8 + rng.nextInt(12)
+      val ids = (1 to size).map(_.toLong)
+      val dirs = Seq.fill(3)(Seq.fill(4)(comps(rng.nextInt(4))))
+      val vecs = vecsDf(ids.map { i =>
+        val scale = Seq(1f, 2f, 4f)(rng.nextInt(3))
+        (i, dirs(rng.nextInt(3)).map(_ * scale))
+      }: _*)
+      val adj = ids.map(s => s -> rng.shuffle(ids.filter(_ != s))
+        .take(1 + rng.nextInt(3))).toMap
+      val graph = adj.toSeq.flatMap { case (s, ds) => ds.map(s -> _) }
+        .toDF("src", "dst")
+      val queries = (1 to 3).map(q => (q.toLong * 10,
+        Array.fill(4)(rng.nextGaussian().toFloat)))
+      WalkCase(vecs, graph, adj, queries,
+        rng.shuffle(ids).take(1 + rng.nextInt(3)),
+        beam = 1 + rng.nextInt(3), rounds = rng.nextInt(4),
+        k = 1 + rng.nextInt(5))
+    }
+  }
+
+  /** (rank, id, score, nodes_touched) rows of a walk result, per
+    * query id when the result has a query_id column. */
+  private def rows4(df: org.apache.spark.sql.DataFrame)
+      : Seq[(Long, Long, Double, Long)] =
+    df.select(col("rank").cast("long"), col("vec_id"), col("score"),
+        col("nodes_touched"))
+      .as[(Long, Long, Double, Long)].collect().toSeq.sortBy(_._1)
+
+  private def byQuery(df: org.apache.spark.sql.DataFrame)
+      : Map[Long, Seq[(Long, Long, Double, Long)]] =
+    df.select(col("query_id"), col("rank").cast("long"), col("vec_id"),
+        col("score"), col("nodes_touched"))
+      .as[(Long, Long, Long, Double, Long)].collect().toSeq
+      .groupBy(_._1).map { case (q, rs) =>
+        q -> rs.map(r => (r._2, r._3, r._4, r._5)).sortBy(_._1) }
+
+  test("walk equivalence: single-query, filtered, var-beam and " +
+      "multi-index walks equal their slice of graphBeamSearchBatch") {
+    for (c <- walkCases(seed = 20261017, n = 4)) {
+      val qdf = c.queries.toDF("query_id", "qe")
+      val batch = byQuery(Ann.graphBeamSearchBatch(c.graph, c.vecs, qdf,
+        "vec_id", "embedding", "query_id", c.entries, c.beam, c.rounds,
+        c.k))
+      // the batch itself against the plain-Scala walk over the same
+      // scores (same cosine expression, so bit-identical doubles)
+      val scores = c.vecs.crossJoin(qdf)
+        .select(col("query_id"), col("vec_id"),
+          graft.functions.VectorFunctions.cosineSim(col("embedding"),
+            col("qe")).as("score"))
+        .as[(Long, Long, Double)].collect().groupBy(_._1)
+        .map { case (q, rs) => q -> rs.map(r => r._2 -> r._3).toMap }
+      for ((qid, qe) <- c.queries) {
+        val s = scores(qid)
+        val visited = refWalk(c.adj, s, c.entries, c.beam, c.rounds)
+        val want = ranked(visited, s).take(c.k)
+          .zipWithIndex.map { case (id, i) =>
+            (i + 1L, id, s(id), visited.size.toLong) }
+        assert(batch(qid) == want, s"batch q$qid vs reference")
+        val q1 = Seq(Tuple1(qe)).toDF("qe")
+        assert(rows4(Ann.graphBeamSearch(c.graph, c.vecs, q1, "vec_id",
+          "embedding", c.entries, c.beam, c.rounds, c.k)) == want,
+          s"graphBeamSearch q$qid")
+        assert(rows4(Ann.graphBeamSearchFiltered(c.graph, c.vecs, q1,
+          "vec_id", "embedding", c.entries, c.beam, c.rounds, c.k,
+          pred = lit(true))) == want, s"filtered q$qid")
+      }
+      val varBeam = byQuery(Ann.graphBeamSearchBatchVarBeam(c.graph,
+        c.vecs, qdf.withColumn("beam", lit(c.beam)), "vec_id",
+        "embedding", "query_id", "beam", c.entries, c.rounds, c.k))
+      assert(varBeam == batch, "var-beam at a uniform beam")
+      // one index, tagged per query: every query walks the same graph
+      val ix = qdf.select(col("query_id"))
+      val multi = byQuery(Ann.graphBeamSearchMultiIndex(
+        c.graph.crossJoin(ix), c.vecs.crossJoin(ix), qdf,
+        c.entries.toDF("vec_id").crossJoin(ix), "vec_id", "embedding",
+        "query_id", c.beam, c.rounds, c.k))
+      assert(multi == batch, "multi-index over one index")
+    }
+  }
+
+  test("walk equivalence: graphBeamWalkPq's scored visited set equals " +
+      "the PQ-scored reference walk of every query") {
+    val rng = new scala.util.Random(7)
+    for (c <- walkCases(seed = 99, n = 3)) {
+      // coarse random codebooks (m = 2, k = 3): ADC ties are common
+      val model = Pq.PqModel(2, Array.fill(2, 3, 2)(
+        (rng.nextInt(5) - 2).toFloat))
+      val codes = Pq.encode(c.vecs, "vec_id", "embedding", model)
+      for ((qid, qe) <- c.queries) {
+        val s = codes.select(col("vec_id"),
+            negate(Pq.adcDistance(col("codes"), qe, model)).as("score"))
+          .as[(Long, Double)].collect().toMap
+        val want = refWalk(c.adj, s, c.entries, c.beam, c.rounds)
+          .toSeq.map(id => id -> s(id)).sortBy(_._1)
+        val got = Ann.graphBeamWalkPq(c.graph, codes, qe, model,
+            "vec_id", c.entries, c.beam, c.rounds)
+          .select(col("vec_id"), col("score"))
+          .as[(Long, Double)].collect().toSeq.sortBy(_._1)
+        assert(got == want, s"pq walk q$qid")
+      }
+    }
+  }
+
+  // ---- the equality gates: symDiffCountAll / symDiffCountDistinct ------
+
+  /** Random (a, b) frame pairs over a 3×3 key space with duplicate
+    * rows, null keys and empty sides. */
+  private def gatePairs(seed: Int, n: Int)
+      : Seq[(org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame)] = {
+    val rng = new scala.util.Random(seed)
+    def side(): org.apache.spark.sql.DataFrame = {
+      val size = if (rng.nextInt(5) == 0) 0 else rng.nextInt(9)
+      Seq.fill(size)((rng.nextInt(3).toLong,
+        Seq(Some("x"), Some("y"), None)(rng.nextInt(3))))
+        .toDF("k", "tag")
+    }
+    (1 to n).map(_ => (side(), side()))
+  }
+
+  test("symDiffCountAll counts the multiset symmetric difference " +
+      "(exceptAll both ways)") {
+    for ((a, b) <- gatePairs(seed = 31, n = 25)) {
+      val want = a.exceptAll(b).unionByName(b.exceptAll(a)).count()
+      assert(Ann.symDiffCountAll(a, b) == want,
+        s"a=${a.collect().toSeq} b=${b.collect().toSeq}")
+    }
+  }
+
+  test("symDiffCountDistinct counts the set symmetric difference " +
+      "(except both ways)") {
+    for ((a, b) <- gatePairs(seed = 32, n = 25)) {
+      val want = a.except(b).unionByName(b.except(a)).count()
+      assert(Ann.symDiffCountDistinct(a, b) == want,
+        s"a=${a.collect().toSeq} b=${b.collect().toSeq}")
+    }
+  }
 }
