@@ -12,6 +12,17 @@ import org.apache.spark.sql.functions._
   * reference server.js:45-61). The scale path is IVF: partition vectors
   * into Voronoi cells around centroids, search only the cells nearest
   * the query. Both stay pure DataFrame plans.
+  *
+  * The graph index (a persisted k-NN graph, [[buildKnnGraph]]) is
+  * served by ONE batched beam-walk loop, [[beamWalk]], and one
+  * ranked-top-k tail, [[walkTopK]]. The public walks are wrappers that
+  * differ only in the entries frame and scorer they pass:
+  * [[graphBeamSearch]], [[graphBeamSearchPerBucket]] and
+  * [[graphBeamSearchFiltered]] (one query, cosine),
+  * [[graphBeamWalkPq]], [[graphBeamWalkBq]] and
+  * [[graphBeamSearchPqRerank]] (one query, on PQ or binary codes),
+  * [[graphBeamSearchBatch]], [[graphBeamSearchBatchVarBeam]] and
+  * [[graphBeamSearchMultiIndex]] (many queries in one plan per round).
   */
 object Ann {
 
@@ -439,28 +450,6 @@ object Ann {
         cosineSim(col("vec_a"), col("vec_b")).as("cos"))
   }
 
-  /** Greedy BEAM search over a prebuilt k-NN graph — the graph-index
-    * ANN family (HNSW/NSG-class serving; Malkov & Yashunin 2018 is the
-    * published ancestor) the IVF/PQ/LSH operators don't cover. The
-    * walk is fully deterministic so an oracle can replay it in SQL:
-    * start from the fixed `entryIds`, score them against the (single-
-    * row) query, and for `rounds` iterations expand the current top-
-    * `beam` scored nodes through their out-edges, score every node
-    * seen so far, and re-select the beam (score DESC, id ties). After
-    * the last round the top-`k` of the visited set is the answer;
-    * `nodes_touched` (the visited-set size — the work metric graph-ANN
-    * trades against recall) rides every row as a constant column.
-    *
-    * Scale shape: the frontier is ≤ beam·degree ids per round — every
-    * round is a point-lookup equi-join of a TINY id frame against the
-    * id-partitioned graph and vector stores (bucket-pruned at rest, no
-    * corpus scan, no corpus shuffle), and `rounds` bounds total work.
-    * Per-round lineage is cut with localCheckpoint (the
-    * [[Graph.connectedComponents]] iterative idiom). Visited nodes are
-    * RE-scored each round instead of carrying running state — the
-    * visited set is beam·degree·rounds rows (hundreds), and
-    * re-scoring keeps every round a pure stateless plan.
-    */
   /** Entry points derived FROM THE GRAPH, not from id assignment: the
     * `n` highest in-degree nodes (deterministic id tie-break) — the
     * hub/medoid heuristic every graph-ANN paper's serving tier uses in
@@ -522,23 +511,48 @@ object Ann {
     * any width. */
   val EntryLiteralMaxBits: Int = 11
 
-  /** The walk LOOP under an ARBITRARY scorer — `score` maps an id
-    * frame to (idCol, score) with larger = closer; beam and tie rules
-    * are the family's (score desc, id asc). Factored from
-    * [[beamWalkScored]] so the PQ-scored walk
-    * ([[graphBeamSearchPqRerank]]) shares the exact traversal. */
-  private def beamWalkGeneric(graph: DataFrame, entries: DataFrame,
-                              idCol: String, beam: Int, rounds: Int)
-                             (score: DataFrame => DataFrame)
-      : DataFrame = {
+  /** Greedy BEAM search over a prebuilt k-NN graph — the graph-index
+    * ANN family (HNSW/NSG-class serving; Malkov & Yashunin 2018 is the
+    * published ancestor) the IVF/PQ/LSH operators don't cover. THE
+    * walk loop: every graph-walk entry point below is a wrapper that
+    * builds an `entries` frame of (queryIdCol, idCol) pairs and a
+    * `score` function mapping such pairs to (queryIdCol, idCol, score),
+    * larger = closer, then calls this and [[walkTopK]]. The walk is
+    * fully deterministic so an oracle can replay it in SQL: score the
+    * entries, and for `rounds` iterations rank each query's scored
+    * nodes (score DESC, id ties) as `_r`, keep the rows `beamCut`
+    * passes, expand them through their out-edges, and re-score every
+    * node seen so far. The graph joins on (queryIdCol, src) when it
+    * carries a queryIdCol column — each query walks its own index
+    * ([[graphBeamSearchMultiIndex]]) — and on src otherwise.
+    *
+    * Scale shape: the frontier is ≤ beam·degree ids per query per
+    * round — every round is a point-lookup equi-join of a TINY pair
+    * frame against the id-partitioned graph and vector stores
+    * (bucket-pruned at rest, no corpus scan, no corpus shuffle), and
+    * `rounds` bounds total work. Per-round lineage is cut with
+    * localCheckpoint (the [[Graph.connectedComponents]] iterative
+    * idiom). Visited nodes are RE-scored each round instead of
+    * carrying running state — the visited set is beam·degree·rounds
+    * rows per query (hundreds), and re-scoring keeps every round a
+    * pure stateless plan.
+    */
+  private def beamWalk(graph: DataFrame, entries: DataFrame,
+                       queryIdCol: String, idCol: String,
+                       beamCut: DataFrame => DataFrame, rounds: Int)
+                      (score: DataFrame => DataFrame): DataFrame = {
+    val keys =
+      if (graph.columns.contains(queryIdCol)) Seq(queryIdCol, "src")
+      else Seq("src")
     var scored = score(entries).localCheckpoint()
     for (_ <- 1 to rounds) {
-      val beamIds = scored.orderBy(col("score").desc, col(idCol))
-        .limit(beam)
-        .select(col(idCol).as("src"))
-      val expanded = beamIds.join(graph, "src")
-        .select(col("dst").as(idCol))
-      val visited = scored.select(col(idCol))
+      val wq = Window.partitionBy(queryIdCol)
+        .orderBy(col("score").desc, col(idCol))
+      val beamIds = beamCut(scored.withColumn("_r", row_number().over(wq)))
+        .select(col(queryIdCol), col(idCol).as("src"))
+      val expanded = beamIds.join(graph, keys)
+        .select(col(queryIdCol), col("dst").as(idCol))
+      val visited = scored.select(col(queryIdCol), col(idCol))
         .unionByName(expanded)
         .distinct()
       scored = score(visited).localCheckpoint()
@@ -546,37 +560,76 @@ object Ann {
     scored
   }
 
-  /** The walk LOOP shared by the single-query serving variants: the
-    * scored visited set after `rounds` beam expansions. */
-  private def beamWalkScored(graph: DataFrame, vectors: DataFrame,
-                             query: DataFrame, idCol: String,
-                             vecCol: String, entryIds: Seq[Long],
-                             beam: Int, rounds: Int): DataFrame = {
-    require(entryIds.nonEmpty, "beam walk: entryIds must be non-empty")
-    beamWalkScoredFrom(graph, vectors, query, idCol, vecCol,
-      vectors.select(col(idCol)).filter(col(idCol).isin(entryIds: _*)),
-      beam, rounds)
+  /** A fixed beam width: a literal rank cut, which the planner turns
+    * into per-query WindowGroupLimit heaps (the v21 shape). */
+  private def beamOf(beam: Int): DataFrame => DataFrame =
+    _.filter(col("_r") <= beam)
+
+  /** The ranked-top-k tail every walk shares: each query's `k` best
+    * `candidates` (score desc, id asc) with that query's visited-set
+    * size — the work metric graph-ANN trades against recall — as
+    * `nodes_touched`. `candidates` is the walk's scored visited set,
+    * or what a filter or rerank made of it. */
+  private def walkTopK(visited: DataFrame, candidates: DataFrame,
+                       queryIdCol: String, idCol: String, k: Int)
+      : DataFrame = {
+    val touched = visited.groupBy(queryIdCol)
+      .agg(count(lit(1)).as("nodes_touched"))
+    Search.topKPerQuery(candidates, queryIdCol, idCol, k)
+      .join(touched, Seq(queryIdCol))
+      .select(col(queryIdCol), col("rank").cast("long").as("rank"),
+        col(idCol), col("score"), col("nodes_touched"))
   }
 
-  /** [[beamWalkScored]] seeded from an entry-id FRAME instead of a
-    * literal — round 0 is a broadcast equi-join, so the entry set
-    * never touches the driver (the above-[[EntryLiteralMaxBits]]
-    * form). */
-  private def beamWalkScoredFrom(graph: DataFrame, vectors: DataFrame,
-                                 query: DataFrame, idCol: String,
-                                 vecCol: String, entries: DataFrame,
-                                 beam: Int, rounds: Int): DataFrame = {
-    val q = broadcast(query)
-    beamWalkGeneric(graph,
-      vectors.select(col(idCol))
-        .join(broadcast(entries.select(col(idCol))), Seq(idCol),
-          "left_semi"),
-      idCol, beam, rounds) { ids =>
-      ids.join(vectors.select(col(idCol), col(vecCol)), Seq(idCol))
-        .crossJoin(q)
-        .select(col(idCol), cosineSim(col(vecCol), col("qe")).as("score"))
-    }
+  /** Cosine scorer against the broadcast query vectors `q`
+    * (queryIdCol, qe); `vecKeys` joins the pairs to `vectors` — idCol,
+    * or (queryIdCol, idCol) when each query has its own vector set. */
+  private def cosineScore(vectors: DataFrame, vecKeys: Seq[String],
+                          q: DataFrame, queryIdCol: String,
+                          idCol: String, vecCol: String)
+                         (pairs: DataFrame): DataFrame =
+    pairs.join(vectors.select((vecKeys :+ vecCol).map(col): _*), vecKeys)
+      .join(q, Seq(queryIdCol))
+      .select(col(queryIdCol), col(idCol),
+        cosineSim(col(vecCol), col("qe")).as("score"))
+
+  /** The cosine walk over ONE shared graph and vector set: every query
+    * of `q` starts at every node of `entryNodes` (one idCol column). */
+  private def cosineWalk(graph: DataFrame, vectors: DataFrame,
+                         q: DataFrame, entryNodes: DataFrame,
+                         queryIdCol: String, idCol: String,
+                         vecCol: String, beamCut: DataFrame => DataFrame,
+                         rounds: Int): DataFrame =
+    beamWalk(graph, entryNodes.join(q.select(col(queryIdCol))),
+      queryIdCol, idCol, beamCut, rounds)(
+      cosineScore(vectors, Seq(idCol), q, queryIdCol, idCol, vecCol))
+
+  /** The entry ids present in `nodes`, as a literal isin filter. */
+  private def literalEntries(nodes: DataFrame, idCol: String,
+                             entryIds: Seq[Long]): DataFrame = {
+    require(entryIds.nonEmpty, "beam walk: entryIds must be non-empty")
+    nodes.select(col(idCol)).filter(col(idCol).isin(entryIds: _*))
   }
+
+  /** The query-id column of a single-query walk: it runs as a batch of
+    * one on a constant id, dropped from the output. */
+  private val OneQuery = "_walk_query"
+
+  /** A single-row `query` frame (qe) as a one-query batch. */
+  private def oneQuery(query: DataFrame): DataFrame =
+    broadcast(query.select(lit(0L).as(OneQuery), col("qe")))
+
+  /** A single-query walk scored by a per-node expression over the
+    * code table `codes` (larger = closer). */
+  private def codeWalk(graph: DataFrame, codes: DataFrame, idCol: String,
+                       entryIds: Seq[Long], beam: Int, rounds: Int,
+                       score: Column): DataFrame =
+    beamWalk(graph, literalEntries(codes, idCol, entryIds)
+        .select(lit(0L).as(OneQuery), col(idCol)),
+      OneQuery, idCol, beamOf(beam), rounds) { pairs =>
+      pairs.join(codes, Seq(idCol))
+        .select(col(OneQuery), col(idCol), score.as("score"))
+    }.drop(OneQuery)
 
   /** DiskANN-style serving (Subramanya et al. 2019): the beam walk
     * TRAVERSES on PQ asymmetric distance against the compressed code
@@ -593,23 +646,16 @@ object Ann {
     * replay orders by the same key.
     *
     * [[graphBeamWalkPq]] is the traversal alone — the scored visited
-    * set, each visit one m-lookup ADC evaluation, never a 1536-wide
-    * cosine; [[graphBeamSearchPqRerank]] composes it with the exact
-    * rerank tail into the deployment-shaped answer.
+    * set (idCol, score), each visit one m-lookup ADC evaluation, never
+    * a 1536-wide cosine; [[graphBeamSearchPqRerank]] composes it with
+    * the exact rerank tail into the deployment-shaped answer.
     */
   def graphBeamWalkPq(graph: DataFrame, codes: DataFrame,
                       query: Array[Float], model: Pq.PqModel,
                       idCol: String, entryIds: Seq[Long],
-                      beam: Int, rounds: Int): DataFrame = {
-    require(entryIds.nonEmpty, "beam walk: entryIds must be non-empty")
-    beamWalkGeneric(graph,
-      codes.select(col(idCol)).filter(col(idCol).isin(entryIds: _*)),
-      idCol, beam, rounds) { ids =>
-      ids.join(codes, Seq(idCol))
-        .select(col(idCol),
-          negate(Pq.adcDistance(col("codes"), query, model)).as("score"))
-    }
-  }
+                      beam: Int, rounds: Int): DataFrame =
+    codeWalk(graph, codes, idCol, entryIds, beam, rounds,
+      negate(Pq.adcDistance(col("codes"), query, model)))
 
   /** The beam walk TRAVERSING on binary (sign-bit) hamming distance —
     * [[graphBeamWalkPq]]'s contract at [[Bq]]'s 32× compression rung:
@@ -625,16 +671,9 @@ object Ann {
   def graphBeamWalkBq(graph: DataFrame, codes: DataFrame,
                       qWords: Seq[Long], idCol: String,
                       entryIds: Seq[Long], beam: Int,
-                      rounds: Int): DataFrame = {
-    require(entryIds.nonEmpty, "beam walk: entryIds must be non-empty")
-    beamWalkGeneric(graph,
-      codes.select(col(idCol)).filter(col(idCol).isin(entryIds: _*)),
-      idCol, beam, rounds) { ids =>
-      ids.join(codes, Seq(idCol))
-        .select(col(idCol),
-          Bq.negHammingCol(col("code"), qWords).as("score"))
-    }
-  }
+                      rounds: Int): DataFrame =
+    codeWalk(graph, codes, idCol, entryIds, beam, rounds,
+      Bq.negHammingCol(col("code"), qWords))
 
   /** Exact-cosine rerank of the walk's `shortlist` best-by-ADC against
     * the raw float store — only these rows' full vectors are ever
@@ -646,53 +685,28 @@ object Ann {
                               beam: Int, rounds: Int, shortlist: Int,
                               k: Int): DataFrame = {
     val scored = graphBeamWalkPq(graph, codes, query, model, idCol,
-      entryIds, beam, rounds)
-    val touched = scored.agg(count(lit(1)).as("nodes_touched"))
-    val short = scored.orderBy(col("score").desc, col(idCol))
-      .limit(shortlist).select(col(idCol))
+      entryIds, beam, rounds).withColumn(OneQuery, lit(0L))
+    val short = Search.topKPerQuery(scored, OneQuery, idCol, shortlist)
+      .select(col(idCol))
     val qLit = array(query.map(x => lit(x)).toIndexedSeq: _*)
-    raw.join(broadcast(short), Seq(idCol))
-      .select(col(idCol), cosineSim(col(vecCol), qLit).as("score"))
-      .orderBy(col("score").desc, col(idCol)).limit(k)
-      .withColumn("rank",
-        row_number().over(Search.boundedGlobalWindow(col(idCol))
-          .orderBy(col("score").desc, col(idCol))))
-      .crossJoin(broadcast(touched))
-      .select(col("rank").cast("long").as("rank"), col(idCol),
-        col("score"), col("nodes_touched"))
+    val reranked = raw.join(broadcast(short), Seq(idCol))
+      .select(lit(0L).as(OneQuery), col(idCol),
+        cosineSim(col(vecCol), qLit).as("score"))
+    walkTopK(scored, reranked, OneQuery, idCol, k).drop(OneQuery)
   }
 
-  /** The walk's ranked-top-k tail shared by every entry form. */
-  private def walkTopK(scored: DataFrame, idCol: String, k: Int)
-      : DataFrame = {
-    val touched = scored.agg(count(lit(1)).as("nodes_touched"))
-    scored.orderBy(col("score").desc, col(idCol)).limit(k)
-      .withColumn("rank",
-        row_number().over(Search.boundedGlobalWindow(col(idCol))
-          .orderBy(col("score").desc, col(idCol))))
-      .crossJoin(broadcast(touched))
-      .select(col("rank").cast("long").as("rank"), col(idCol),
-        col("score"), col("nodes_touched"))
-  }
-
+  /** Single-query cosine search: the single-row `query` frame's `qe`
+    * walked from the fixed `entryIds`; returns the ranked top-`k` of
+    * the visited set (rank, idCol, score, nodes_touched). */
   def graphBeamSearch(graph: DataFrame, vectors: DataFrame,
                       query: DataFrame, idCol: String, vecCol: String,
                       entryIds: Seq[Long], beam: Int, rounds: Int,
-                      k: Int): DataFrame =
-    walkTopK(beamWalkScored(graph, vectors, query, idCol, vecCol,
-      entryIds, beam, rounds), idCol, k)
-
-  /** [[graphBeamSearch]] with the entry set as a FRAME — round 0 is
-    * a broadcast semi-join, so the entries never touch the driver or
-    * the plan text as a literal. Identical traversal, beams and tie
-    * rules. */
-  def graphBeamSearchFrameEntries(graph: DataFrame, vectors: DataFrame,
-                                  query: DataFrame, idCol: String,
-                                  vecCol: String, entries: DataFrame,
-                                  beam: Int, rounds: Int, k: Int)
-      : DataFrame =
-    walkTopK(beamWalkScoredFrom(graph, vectors, query, idCol, vecCol,
-      entries, beam, rounds), idCol, k)
+                      k: Int): DataFrame = {
+    val scored = cosineWalk(graph, vectors, oneQuery(query),
+      literalEntries(vectors, idCol, entryIds), OneQuery, idCol, vecCol,
+      beamOf(beam), rounds)
+    walkTopK(scored, scored, OneQuery, idCol, k).drop(OneQuery)
+  }
 
   /** The per-bucket-entries walk BEHIND THE SIZE SWITCH (the
     * round-17 watch note made structural): derive the per-bucket
@@ -700,24 +714,27 @@ object Ann {
     * [[EntryLiteralMaxBits]] the entries collect to a tiny literal
     * (codegen'd isin, the historical plan shape, byte-identical
     * results); above it they stay an in-plan frame
-    * ([[topDegreeEntriesPerBucketFrame]] +
-    * [[graphBeamSearchFrameEntries]]) — per-bucket entry derivation
-    * at bb = 20 is ~2M rows, which belongs in a broadcast join, not
-    * a driver Seq. */
+    * ([[topDegreeEntriesPerBucketFrame]]) and round 0 is a broadcast
+    * semi-join — per-bucket entry derivation at bb = 20 is ~2M rows,
+    * which belongs in a broadcast join, not a driver Seq. The two
+    * sides differ only in the entries frame. */
   def graphBeamSearchPerBucket(graph: DataFrame, vectors: DataFrame,
                                query: DataFrame, idCol: String,
                                vecCol: String, index: DataFrame,
                                perBucket: Int, bucketBits: Int,
                                beam: Int, rounds: Int, k: Int)
-      : DataFrame =
-    if (bucketBits <= EntryLiteralMaxBits)
-      graphBeamSearch(graph, vectors, query, idCol, vecCol,
-        topDegreeEntriesPerBucket(graph, index, idCol, perBucket),
-        beam, rounds, k)
-    else
-      graphBeamSearchFrameEntries(graph, vectors, query, idCol, vecCol,
-        topDegreeEntriesPerBucketFrame(graph, index, idCol, perBucket),
-        beam, rounds, k)
+      : DataFrame = {
+    val entries =
+      if (bucketBits <= EntryLiteralMaxBits)
+        literalEntries(vectors, idCol,
+          topDegreeEntriesPerBucket(graph, index, idCol, perBucket))
+      else vectors.select(col(idCol)).join(
+        broadcast(topDegreeEntriesPerBucketFrame(graph, index, idCol,
+          perBucket)), Seq(idCol), "left_semi")
+    val scored = cosineWalk(graph, vectors, oneQuery(query), entries,
+      OneQuery, idCol, vecCol, beamOf(beam), rounds)
+    walkTopK(scored, scored, OneQuery, idCol, k).drop(OneQuery)
+  }
 
   /** FILTERED graph serving — the metadata-constrained search every
     * vector store exposes (the v05/v29 filtered family completed for
@@ -735,20 +752,91 @@ object Ann {
                               vecCol: String, entryIds: Seq[Long],
                               beam: Int, rounds: Int, k: Int,
                               pred: Column): DataFrame = {
-    val scored = beamWalkScored(graph, vectors, query, idCol, vecCol,
-      entryIds, beam, rounds)
-    val touched = scored.agg(count(lit(1)).as("nodes_touched"))
+    val scored = cosineWalk(graph, vectors, oneQuery(query),
+      literalEntries(vectors, idCol, entryIds), OneQuery, idCol, vecCol,
+      beamOf(beam), rounds)
     val passing = scored
       .join(vectors.filter(pred).select(col(idCol)), Seq(idCol))
-    val nPass = passing.agg(count(lit(1)).as("passed_visited"))
-    passing.orderBy(col("score").desc, col(idCol)).limit(k)
-      .withColumn("rank",
-        row_number().over(Search.boundedGlobalWindow(col(idCol))
-          .orderBy(col("score").desc, col(idCol))))
-      .crossJoin(broadcast(touched))
-      .crossJoin(broadcast(nPass))
-      .select(col("rank").cast("long").as("rank"), col(idCol),
-        col("score"), col("nodes_touched"), col("passed_visited"))
+    val nPass = passing.groupBy(OneQuery)
+      .agg(count(lit(1)).as("passed_visited"))
+    walkTopK(scored, passing, OneQuery, idCol, k)
+      .join(nPass, Seq(OneQuery)).drop(OneQuery)
+  }
+
+  /** Batched [[graphBeamSearch]]: Q queries walk ONE shared graph in a
+    * single plan per round — the serving shape a production graph-ANN
+    * tier runs (the v33-batched-IVF-PQ economics applied to the graph
+    * index: the graph and vector stores are scanned per ROUND, not per
+    * query). `queries` is a small (queryIdCol, qe) frame and rides
+    * every join as a broadcast; per-query beams are rank windows keyed
+    * by `queryIdCol` (WindowGroupLimit heaps, the v21 shape), so each
+    * round is: beam window → frontier equi-join against the graph →
+    * visited-set union/distinct → point-lookup re-score. Per-round
+    * state is (query, visited-node) pairs — Q·beam·degree·rounds rows,
+    * never corpus-scale. Every query starts at every entry. Returns
+    * per-query ranked top-k with that query's visited-set size.
+    */
+  def graphBeamSearchBatch(graph: DataFrame, vectors: DataFrame,
+                           queries: DataFrame, idCol: String,
+                           vecCol: String, queryIdCol: String,
+                           entryIds: Seq[Long], beam: Int, rounds: Int,
+                           k: Int): DataFrame = {
+    val q = broadcast(queries.select(col(queryIdCol), col("qe")))
+    val scored = cosineWalk(graph, vectors, q,
+      literalEntries(vectors, idCol, entryIds), queryIdCol, idCol,
+      vecCol, beamOf(beam), rounds)
+    walkTopK(scored, scored, queryIdCol, idCol, k)
+  }
+
+  /** [[graphBeamSearchBatch]] with a PER-QUERY beam width — the
+    * capacity-sweep shape (v50): N operating points walk the one
+    * shared graph in a single plan per round, each query's rank window
+    * cut at ITS `beamCol` value instead of a global constant. Same
+    * economics as the fixed-beam batch (graph and vector stores
+    * scanned per round, not per query, per-round state =
+    * Σ per-query visited rows); the only difference is the window
+    * filter comparing against the broadcast beam column.
+    */
+  def graphBeamSearchBatchVarBeam(graph: DataFrame, vectors: DataFrame,
+                                  queries: DataFrame, idCol: String,
+                                  vecCol: String, queryIdCol: String,
+                                  beamCol: String, entryIds: Seq[Long],
+                                  rounds: Int, k: Int): DataFrame = {
+    val q = broadcast(
+      queries.select(col(queryIdCol), col("qe"), col(beamCol)))
+    val scored = cosineWalk(graph, vectors,
+      q.select(col(queryIdCol), col("qe")),
+      literalEntries(vectors, idCol, entryIds), queryIdCol, idCol,
+      vecCol, _.join(q.select(col(queryIdCol), col(beamCol)),
+          Seq(queryIdCol))
+        .filter(col("_r") <= col(beamCol)), rounds)
+    walkTopK(scored, scored, queryIdCol, idCol, k)
+  }
+
+  /** The MULTI-INDEX batched walk: each query walks ITS OWN graph over
+    * ITS OWN vector set — the serving shape of a tier answering across
+    * index versions in one plan (v49 walks the compacted graph and the
+    * LSM base graph simultaneously; the same machinery serves N
+    * snapshot versions, the v39 time-travel idea applied to the graph
+    * family). `graph` is (queryIdCol, src, dst), `vectors`
+    * (queryIdCol, idCol, vecCol), `entries` (queryIdCol, idCol),
+    * `queries` (queryIdCol, qe): every join keys on
+    * (queryIdCol, node), so indexes stay disjoint inside one shared
+    * round — rounds-many join stages TOTAL, per-round state
+    * Σ per-index visited rows, never corpus-scale.
+    */
+  def graphBeamSearchMultiIndex(graph: DataFrame, vectors: DataFrame,
+                                queries: DataFrame, entries: DataFrame,
+                                idCol: String, vecCol: String,
+                                queryIdCol: String, beam: Int,
+                                rounds: Int, k: Int): DataFrame = {
+    val q = broadcast(queries.select(col(queryIdCol), col("qe")))
+    val scored = beamWalk(graph,
+      entries.select(col(queryIdCol), col(idCol)), queryIdCol, idCol,
+      beamOf(beam), rounds)(
+      cosineScore(vectors, Seq(queryIdCol, idCol), q, queryIdCol, idCol,
+        vecCol))
+    walkTopK(scored, scored, queryIdCol, idCol, k)
   }
 
   /** Build the k-NN graph artifact (src, dst) every graph-ANN serving
@@ -1846,156 +1934,5 @@ object Ann {
       .agg(bit_or(col("_sd")).as("_m"))
       .filter(col("_m") =!= 3L)
       .count()
-  }
-
-  /** Batched [[graphBeamSearch]]: Q queries walk ONE shared graph in a
-    * single plan per round — the serving shape a production graph-ANN
-    * tier runs (the v33-batched-IVF-PQ economics applied to the graph
-    * index: the graph and vector stores are scanned per ROUND, not per
-    * query). `queries` is a small (queryIdCol, qe) frame and rides
-    * every join as a broadcast; per-query beams are rank windows keyed
-    * by `queryIdCol` (WindowGroupLimit heaps, the v21 shape), so each
-    * round is: beam window → frontier equi-join against the graph →
-    * visited-set union/distinct → point-lookup re-score. Per-round
-    * state is (query, visited-node) pairs — Q·beam·degree·rounds rows,
-    * never corpus-scale. Returns per-query ranked top-k with that
-    * query's visited-set size.
-    */
-  def graphBeamSearchBatch(graph: DataFrame, vectors: DataFrame,
-                           queries: DataFrame, idCol: String,
-                           vecCol: String, queryIdCol: String,
-                           entryIds: Seq[Long], beam: Int, rounds: Int,
-                           k: Int): DataFrame = {
-    require(entryIds.nonEmpty,
-      "graphBeamSearchBatch: entryIds must be non-empty")
-    val q = broadcast(queries.select(col(queryIdCol), col("qe")))
-    def score(pairs: DataFrame): DataFrame =
-      pairs.join(vectors.select(col(idCol), col(vecCol)), Seq(idCol))
-        .join(q, Seq(queryIdCol))
-        .select(col(queryIdCol), col(idCol),
-          cosineSim(col(vecCol), col("qe")).as("score"))
-    val entries = vectors.select(col(idCol))
-      .filter(col(idCol).isin(entryIds: _*))
-      .join(q.select(col(queryIdCol)))  // every query starts at every entry
-    var scored = score(entries).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val wq = Window.partitionBy(queryIdCol)
-        .orderBy(col("score").desc, col(idCol))
-      val beamIds = scored
-        .withColumn("_r", row_number().over(wq))
-        .filter(col("_r") <= beam)
-        .select(col(queryIdCol), col(idCol).as("src"))
-      val expanded = beamIds.join(graph, "src")
-        .select(col(queryIdCol), col("dst").as(idCol))
-      val visited = scored.select(col(queryIdCol), col(idCol))
-        .unionByName(expanded)
-        .distinct()
-      scored = score(visited).localCheckpoint()
-    }
-    val touched = scored.groupBy(queryIdCol)
-      .agg(count(lit(1)).as("nodes_touched"))
-    Search.topKPerQuery(scored, queryIdCol, idCol, k)
-      .join(touched, Seq(queryIdCol))
-      .select(col(queryIdCol), col("rank").cast("long").as("rank"),
-        col(idCol), col("score"), col("nodes_touched"))
-  }
-
-  /** The MULTI-INDEX batched walk: each query walks ITS OWN graph over
-    * ITS OWN vector set — the serving shape of a tier answering across
-    * index versions in one plan (v49 walks the compacted graph and the
-    * LSM base graph simultaneously; the same machinery serves N
-    * snapshot versions, the v39 time-travel idea applied to the graph
-    * family). `graph` is (queryIdCol, src, dst), `vectors`
-    * (queryIdCol, idCol, vecCol), `entries` (queryIdCol, idCol),
-    * `queries` (queryIdCol, qe): every join keys on
-    * (queryIdCol, node), so indexes stay disjoint inside one shared
-    * round — rounds-many join stages TOTAL, per-round state
-    * Σ per-index visited rows, never corpus-scale.
-    */
-  def graphBeamSearchMultiIndex(graph: DataFrame, vectors: DataFrame,
-                                queries: DataFrame, entries: DataFrame,
-                                idCol: String, vecCol: String,
-                                queryIdCol: String, beam: Int,
-                                rounds: Int, k: Int): DataFrame = {
-    val q = broadcast(queries.select(col(queryIdCol), col("qe")))
-    def score(pairs: DataFrame): DataFrame =
-      pairs.join(vectors.select(col(queryIdCol), col(idCol), col(vecCol)),
-          Seq(queryIdCol, idCol))
-        .join(q, Seq(queryIdCol))
-        .select(col(queryIdCol), col(idCol),
-          cosineSim(col(vecCol), col("qe")).as("score"))
-    var scored = score(entries.select(col(queryIdCol), col(idCol)))
-      .localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val wq = Window.partitionBy(queryIdCol)
-        .orderBy(col("score").desc, col(idCol))
-      val beamIds = scored
-        .withColumn("_r", row_number().over(wq))
-        .filter(col("_r") <= beam)
-        .select(col(queryIdCol), col(idCol).as("src"))
-      val expanded = beamIds
-        .join(graph, Seq(queryIdCol, "src"))
-        .select(col(queryIdCol), col("dst").as(idCol))
-      val visited = scored.select(col(queryIdCol), col(idCol))
-        .unionByName(expanded)
-        .distinct()
-      scored = score(visited).localCheckpoint()
-    }
-    val touched = scored.groupBy(queryIdCol)
-      .agg(count(lit(1)).as("nodes_touched"))
-    Search.topKPerQuery(scored, queryIdCol, idCol, k)
-      .join(touched, Seq(queryIdCol))
-      .select(col(queryIdCol), col("rank").cast("long").as("rank"),
-        col(idCol), col("score"), col("nodes_touched"))
-  }
-
-  /** [[graphBeamSearchBatch]] with a PER-QUERY beam width — the
-    * capacity-sweep shape (v50): N operating points walk the one
-    * shared graph in a single plan per round, each query's rank window
-    * cut at ITS `beamCol` value instead of a global constant. Same
-    * economics as the fixed-beam batch (graph and vector stores
-    * scanned per round, not per query, per-round state =
-    * Σ per-query visited rows); the only difference is the window
-    * filter comparing against the broadcast beam column.
-    */
-  def graphBeamSearchBatchVarBeam(graph: DataFrame, vectors: DataFrame,
-                                  queries: DataFrame, idCol: String,
-                                  vecCol: String, queryIdCol: String,
-                                  beamCol: String, entryIds: Seq[Long],
-                                  rounds: Int, k: Int): DataFrame = {
-    require(entryIds.nonEmpty,
-      "graphBeamSearchBatchVarBeam: entryIds must be non-empty")
-    val q = broadcast(
-      queries.select(col(queryIdCol), col("qe"), col(beamCol)))
-    def score(pairs: DataFrame): DataFrame =
-      pairs.join(vectors.select(col(idCol), col(vecCol)), Seq(idCol))
-        .join(q.select(col(queryIdCol), col("qe")), Seq(queryIdCol))
-        .select(col(queryIdCol), col(idCol),
-          cosineSim(col(vecCol), col("qe")).as("score"))
-    val entries = vectors.select(col(idCol))
-      .filter(col(idCol).isin(entryIds: _*))
-      .join(q.select(col(queryIdCol)))
-    var scored = score(entries).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val wq = Window.partitionBy(queryIdCol)
-        .orderBy(col("score").desc, col(idCol))
-      val beamIds = scored
-        .withColumn("_r", row_number().over(wq))
-        .join(q.select(col(queryIdCol), col(beamCol)), Seq(queryIdCol))
-        .filter(col("_r") <= col(beamCol))
-        .select(col(queryIdCol), col(idCol).as("src"))
-      val expanded = beamIds.join(graph, "src")
-        .select(col(queryIdCol), col("dst").as(idCol))
-      val visited = scored.select(col(queryIdCol), col(idCol))
-        .unionByName(expanded)
-        .distinct()
-      scored = score(visited).localCheckpoint()
-    }
-    val touched = scored.groupBy(queryIdCol)
-      .agg(count(lit(1)).as("nodes_touched"))
-    Search.topKPerQuery(scored, queryIdCol, idCol, k)
-      .join(touched, Seq(queryIdCol))
-      .select(col(queryIdCol), col("rank").cast("long").as("rank"),
-        col(idCol), col("score"), col("nodes_touched"))
   }
 }
