@@ -2166,9 +2166,12 @@ object VectorQueries {
       .withColumn("nrm",
         sqrt(aggregate(col("mix"), lit(0.0),
           (acc, x) => acc + x * x)))
+      // the norm rides array_repeat, which evaluates it once per row:
+      // referenced inside the lambda, the optimizer inlines it there
+      // and re-sums all d components for each of the d divisions
       .select(col("vec_id"),
-        transform(col("mix"), x => (x / col("nrm")).cast("float"))
-          .as("embedding"))
+        zip_with(col("mix"), array_repeat(col("nrm"), size(col("mix"))),
+          (x, n) => (x / n).cast("float")).as("embedding"))
   }
 
   private def refDimModels(spark: SparkSession, sfDir: String)
