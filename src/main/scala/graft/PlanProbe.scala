@@ -5,15 +5,16 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** r19 optimization-round evidence dumper — PlanProbeR18's successor
-  * with the two protocol fixes the r18 verdict asked for:
+/** Plan-evidence dumper: writes each named query's formatted physical
+  * plan (and a few interior frames) to `<outDir>/<name>_<suffix>.txt`.
+  * Two protocol rules:
   *
   *   1. INTERIOR frames: most touched queries drive work through
   *      driver-side loops over `localCheckpoint()`ed frames, so the
   *      returned frame's explain cannot show the interior claims
   *      (what got checkpointed, how wide). For each interior claim
-  *      this round makes, a named probe dumps the exact frame the
-  *      operator materializes — e.g. `updateNearDupReps`' returned
+  *      a named probe dumps the exact frame the operator
+  *      materializes — e.g. `updateNearDupReps`' returned
   *      rows (whose LogicalRDD leaf exposes the checkpointed pair
   *      frame's schema: the r19 change narrows it from carrying both
   *      d-dim vectors to the five decision columns) and `lmDocNll`'s
@@ -22,9 +23,11 @@ import org.apache.spark.sql.functions._
   *   2. FAILURES are tracked and the run exits non-zero, so a stale
   *      or missing dump can no longer masquerade as evidence.
   *
-  * Run: sbt "runMain graft.PlanProbeR19 <outDir> <suffix> [sfDir] [names...]"
+  * Run: sbt "runMain graft.PlanProbe <outDir> <suffix> [sfDir] [names...]"
+  * with the local master sized by SPARK_GRAFT_CPUS (default 4), as
+  * Bench and Verify read it.
   */
-object PlanProbeR19 {
+object PlanProbe {
 
   private def explainStr(df: DataFrame): String =
     df.queryExecution.explainString(
@@ -84,9 +87,10 @@ object PlanProbeR19 {
       "t58_quality_ensemble", "t73_sem_prefilter_10k",
       "s27_stream_graph_lsm", "s28_stream_sem_margin",
       "s10_stream_dedup_index", "v53_graph_salted_build")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.codegen.cache.maxEntries", "20000")
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
