@@ -28,6 +28,11 @@ for t in TABLES:
     con.sql(f"CREATE OR REPLACE VIEW {t} AS FROM read_parquet('{SF}/{t}.parquet')")
 
 oracle = json.load(open(f"{OUT}/oracle_sql.json"))
+# the queries Verify itself recorded as failed (written by every run)
+try:
+    verify_failed = json.load(open(f"{OUT}/verify_failed.json"))
+except FileNotFoundError:
+    verify_failed = None
 # honor the same dev-loop subset filter Verify/Bench use, so a
 # SPARK_GRAFT_ONLY run compares only the queries it actually dumped
 import os
@@ -86,5 +91,10 @@ for name, n in passes:
     print(f"PASS {name} ({n} rows)")
 for name, msg in fails:
     print(f"FAIL {name}: {msg}")
+if verify_failed is None:
+    print(f"\nno {OUT}/verify_failed.json")
+else:
+    print(f"\nVerify recorded {len(verify_failed)} failed queries: "
+          + (", ".join(f["name"] for f in verify_failed) or "none"))
 print(f"\n{len(passes)} pass / {len(fails)} fail / {len(oracle)} total")
 sys.exit(1 if fails else 0)

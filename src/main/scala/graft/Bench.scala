@@ -1,47 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // parity with Verify/ScalingProbe/PlansDump: outside sbt's forked
-      // -D flags, a non-UTC JVM would shift the TIMESTAMP_NTZ events
-      .config("spark.sql.session.timeZone", "UTC")
-      // Static conf sizing CodeGenerator's generated-class cache
-      // (default 100 entries). The interleaved sweep design (below)
-      // visits all 214 queries between two runs of the same query, so
-      // at the default size every timed run pays full Janino
-      // recompilation of every stage — a +0.3-1.0 s tax on nearly
-      // every query (measured: the first interleaved full run came in
-      // at 172.7 s vs 142.9 s consecutive-run, with no early-alphabet
-      // drift but a broad flat inflation). Sized to hold the whole
-      // inventory's generated classes so sweep N+1 re-measures the
-      // query, not the compiler.
-      .config("spark.sql.codegen.cache.maxEntries", "20000")
-      // Injected runtime bloom filters OFF (round-15 measurement, the
-      // true source of the r14 bench tail's 4.1/2.2 MiB task-binary
-      // warnings mis-attributed to v66/v67 literals): localCheckpoint
-      // frames (every beam-walk round) are LogicalRDDs with UNKNOWN
-      // stats, which defeats InjectRuntimeFilter's 10 GiB application-
-      // side threshold, so Spark injected 1 MiB statically-sized
-      // blooms (1M items / 8.4M bits vs 280-row fixture scans) whose
-      // payloads literal-fold into EVERY task binary of every walk
-      // stage. At deployment scale the injection wouldn't fire either
-      // (corpus-scale creation sides exceed the 10 MB
-      // creationSideThreshold); where a runtime filter IS the right
-      // shape, the engine sizes one explicitly from corpus knowledge
-      // (Prefilter.bloomSemiFilter — r31's pattern).
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // local profiling aid; the driver never sets this
-      .config("spark.eventLog.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_EVENTLOG", "false"))
-      .config("spark.eventLog.dir",
-        sys.env.getOrElse("SPARK_GRAFT_EVENTLOG_DIR", "/tmp/spark-events"))
-      .getOrCreate()
+    val spark = SparkEntry.session()
     spark.sparkContext.setLogLevel("WARN")
     // Timed runs per query, report the fastest: the first run of a
     // plan shape pays one-time janino/JIT compilation (seconds of noise

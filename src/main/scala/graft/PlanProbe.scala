@@ -87,15 +87,7 @@ object PlanProbe {
       "t58_quality_ensemble", "t73_sem_prefilter_10k",
       "s27_stream_graph_lsm", "s28_stream_sem_margin",
       "s10_stream_dedup_index", "v53_graph_salted_build")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "20000")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     var failed = List.empty[String]

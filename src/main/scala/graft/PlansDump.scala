@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates PLANS.md: `explain("formatted")` for the headline
   * queries, with a note on why each plan is the one we want at scale.
   * Run: sbt "runMain graft.PlansDump [sfDir]"
@@ -11,15 +9,7 @@ import org.apache.spark.sql.SparkSession
 object PlansDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      // see Bench.scala: injected runtime blooms off (checkpoint
-      // frames' unknown stats defeat the thresholds)
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     val picks: Seq[(String, String)] = Seq(

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.operators.{Dedup, Ingest, Search}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling evidence for the 100 TB story: replicates the sf0.1 corpus
@@ -44,15 +44,7 @@ object ScalingProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      // see Bench.scala: injected runtime blooms off (checkpoint
-      // frames' unknown stats defeat the thresholds)
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     def replicate(df: DataFrame, idCol: String, copies: Int): DataFrame =
@@ -1320,8 +1312,8 @@ object ScalingProbe {
       // while the chooser is free to refine past 20 bits where the
       // 2560× load needs it. Each step measures the sidecar update
       // BOTH ways — at the FROZEN base width (what updateKnnGraph
-      // pays until someone re-buckets) and at the width
-      // maintenanceCheck re-chooses — and additionally verifies the
+      // pays until someone re-buckets) and at the width the drift
+      // verdict re-chooses — and additionally verifies the
       // O(delta) histogram FOLD (the verdict v72 hash-gates at 320×)
       // against the from-scratch re-sketch at every rung, including
       // the ones the fixture query doesn't reach.
@@ -1334,6 +1326,9 @@ object ScalingProbe {
       val bb0 = Ann.occupancyBucketBits(base40, "embedding", 40, 3, 40)
       var hist = Ann.fineOccupancyHistogram(base40, "embedding", 40, 40)
         .localCheckpoint()
+      def verdict(fine: DataFrame): Ann.GraphMaintenance =
+        Ann.maintenanceFromOcc(Ann.occupancyAndCount(fine, 3, 40)._1,
+          currentBits = bb0)
       for (((lo, hi), i) <- Seq((40L, 80L), (80L, 160L), (160L, 320L),
           (320L, 640L), (640L, 1280L), (1280L, 2560L)).zipWithIndex) {
         val prev = all.filter(col("_k") < lo)
@@ -1348,12 +1343,12 @@ object ScalingProbe {
           Ann.updateKnnGraph(prev, delta, "vec_id", "embedding",
             bits = 40, bucketBits = bb0, degree = 8).count()
         }
-        val m = Ann.maintenanceCheck(combined, "embedding", 40,
-          currentBits = bb0, bbMin = 3, bbMax = 40)
+        val m = verdict(
+          Ann.fineOccupancyHistogram(combined, "embedding", 40, 40))
         hist = Ann.foldOccupancyHistogram(hist,
             Ann.fineOccupancyHistogram(delta, "embedding", 40, 40))
           .localCheckpoint()
-        val mFold = Ann.maintenanceCheckFromHistogram(hist, bb0, 3, 40)
+        val mFold = verdict(hist)
         val candC = Ann.knnGraphCandidates(delta, combined,
           "vec_id", "embedding", 40, m.chosenBits,
           Ann.DefaultMaxProbes, Ann.DefaultMaxBucketGroup).count()
@@ -1380,9 +1375,9 @@ object ScalingProbe {
                   |DOUBLES with every batch, and the frozen update's
                   |cand/Δvec follows it up — the round-13 superlinearity
                   |re-opening through the write path. The chosen columns
-                  |are the maintenance fix (Ann.maintenanceCheck /
-                  |updateKnnGraphChecked — one extra sketch pass over the
-                  |combined index per delta batch): re-choosing the width
+                  |are the maintenance fix (Ann.maintenanceFromOcc over
+                  |the combined index's occupancyAndCount — one extra
+                  |sketch pass per delta batch): re-choosing the width
                   |holds the size-biased load ~flat at the target and the
                   |update's cand/Δvec a geometry constant, so the rule a
                   |deployment runs is "update delta-proportionally, re-check
@@ -1423,13 +1418,15 @@ object ScalingProbe {
         "prep (s) | checked update (s) | incremental update (s) | " +
         "sidecars equal |\n|---|---|---|---|---|---|---|\n")
       // FIXED delta (40 clustered copies), GROWING base — the shape
-      // that convicts a base-proportional pass: updateKnnGraphChecked
-      // re-sketches base ∪ delta per batch (its column must grow with
-      // the base), updateKnnGraphIncremental consumes the persisted
-      // bucket index + fine histogram and sketches only the delta
-      // (its column must stay flat). Snapshot prep (index + histogram
-      // build + materialization) is the once-per-compaction cost the
-      // incremental path amortizes across every batch in between.
+      // that convicts a base-proportional pass: the checked update
+      // (updateKnnGraph plus the verdict from a re-sketched
+      // histogram) re-sketches base ∪ delta per batch (its column
+      // must grow with the base), updateKnnGraphIncremental consumes
+      // the persisted bucket index + fine histogram and sketches only
+      // the delta (its column must stay flat). Snapshot prep (index
+      // + histogram build + materialization) is the
+      // once-per-compaction cost the incremental path amortizes
+      // across every batch in between.
       val all = VectorQueries.genRefDimCorpus(spark, copies = 640)
         .filter(col("vec_id") =!= 1000L)
         .withColumn("_k", pmod(col("vec_id"), lit(1000L)))
@@ -1453,14 +1450,16 @@ object ScalingProbe {
         }
         var checkedEdges = 0L
         val (tChecked, _) = time {
-          val (sc, _) = Ann.updateKnnGraphChecked(base, delta,
-            "vec_id", "embedding", bits = 20, bucketBits = bb,
-            degree = 8, bbMin = 3, bbMax = 20)
+          val sc = Ann.updateKnnGraph(base, delta, "vec_id",
+            "embedding", bits = 20, bucketBits = bb, degree = 8)
+          Ann.maintenanceFromOcc(Ann.occupancyAndCount(
+            Ann.fineOccupancyHistogram(base.unionByName(delta),
+              "embedding", 20, 20), 3, 20)._1, currentBits = bb)
           checkedEdges = sc.count(); checkedEdges
         }
         var incEdges = 0L
         val (tInc, _) = time {
-          val (sc, _, _) = Ann.updateKnnGraphIncremental(baseIndex,
+          val (sc, _, _, _, _) = Ann.updateKnnGraphIncremental(baseIndex,
             baseHist, delta, "vec_id", "embedding", bits = 20,
             bucketBits = bb, degree = 8, bbMin = 3, bbMax = 20)
           incEdges = sc.count(); incEdges

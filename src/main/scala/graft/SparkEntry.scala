@@ -20,6 +20,52 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     VectorQueries.knnTopK(spark, "/root/testdata/sf0.001", k = 5)
 
+  /** The local session every graft main runs in (Bench, Verify,
+    * PlansDump, PlanProbe, ScalingProbe). `SPARK_GRAFT_CPUS` (default
+    * 4) sizes both the master and the shuffle partitions; each main
+    * sets its own log level. */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      // outside sbt's forked -D flags, a non-UTC JVM would shift the
+      // TIMESTAMP_NTZ events
+      .config("spark.sql.session.timeZone", "UTC")
+      // Static conf sizing CodeGenerator's generated-class cache
+      // (default 100 entries). Bench's interleaved sweep visits all
+      // 214 queries between two runs of the same query, so at the
+      // default size every timed run pays full Janino recompilation
+      // of every stage — a +0.3-1.0 s tax on nearly every query
+      // (measured: the first interleaved full run came in at 172.7 s
+      // vs 142.9 s consecutive-run, with no early-alphabet drift but a
+      // broad flat inflation). Sized to hold the whole inventory's
+      // generated classes so sweep N+1 re-measures the query, not the
+      // compiler.
+      .config("spark.sql.codegen.cache.maxEntries", "20000")
+      // Injected runtime bloom filters OFF (round-15 measurement, the
+      // true source of the r14 bench tail's 4.1/2.2 MiB task-binary
+      // warnings mis-attributed to v66/v67 literals): localCheckpoint
+      // frames (every beam-walk round) are LogicalRDDs with UNKNOWN
+      // stats, which defeats InjectRuntimeFilter's 10 GiB application-
+      // side threshold, so Spark injected 1 MiB statically-sized
+      // blooms (1M items / 8.4M bits vs 280-row fixture scans) whose
+      // payloads literal-fold into EVERY task binary of every walk
+      // stage. At deployment scale the injection wouldn't fire either
+      // (corpus-scale creation sides exceed the 10 MB
+      // creationSideThreshold); where a runtime filter IS the right
+      // shape, the engine sizes one explicitly from corpus knowledge
+      // (Prefilter.bloomSemiFilter — r31's pattern).
+      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
+      .config("spark.ui.enabled", "false")
+      // local profiling aid; the driver never sets this
+      .config("spark.eventLog.enabled",
+        sys.env.getOrElse("SPARK_GRAFT_EVENTLOG", "false"))
+      .config("spark.eventLog.dir",
+        sys.env.getOrElse("SPARK_GRAFT_EVENTLOG_DIR", "/tmp/spark-events"))
+      .getOrCreate()
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     VectorQueries.queries ++ RelationalQueries.queries ++
       TextQueries.queries ++ IngestQueries.queries ++ StreamingQueries.queries

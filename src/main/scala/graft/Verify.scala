@@ -1,22 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // see Bench.scala: checkpoint frames' unknown stats defeat the
-      // injection thresholds → 1 MiB statically-sized blooms per walk
-      // round riding task binaries; explicit Prefilter blooms instead
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // dev-loop subset filter, IDENTICAL semantics to Bench's (incl. the
@@ -25,15 +14,20 @@ object Verify {
     // runs the full inventory.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").toSeq).getOrElse(Seq(""))
-    SparkEntry.queries.toSeq.sortBy(_._1)
+    val failed = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.exists(n.startsWith) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+      .flatMap { case (name, fn) =>
+      val failure =
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name -> String.valueOf(e.getMessage))
+        }
       spark.catalog.clearCache() // per-call persists must not accumulate
+      failure
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -50,6 +44,12 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // the per-query failures as a list (empty when every query ran);
+    // the exit code does not depend on it
+    Files.writeString(Paths.get(s"$outDir/verify_failed.json"),
+      failed.map { case (n, m) =>
+        s"""{"name": ${q(n)}, "message": ${q(m)}}""" }
+        .mkString("[", ",\n", "]\n"))
     spark.stop()
   }
 }

@@ -23,6 +23,18 @@ import org.apache.spark.sql.functions._
   * [[graphBeamSearchPqRerank]] (one query, on PQ or binary codes),
   * [[graphBeamSearchBatch]], [[graphBeamSearchBatchVarBeam]] and
   * [[graphBeamSearchMultiIndex]] (many queries in one plan per round).
+  *
+  * Graph maintenance keeps one definition per rule. The bucket
+  * occupancy table is computed by [[occupancyTable]] (distributed,
+  * behind [[bucketOccupancy]], [[occupancyFromHistogram]] and
+  * [[occupancyAndCount]]) and by [[occupancyFromCollected]] (the
+  * driver twin for a histogram the caller already holds). Every
+  * verdict collect is [[occupancyAndCount]]; [[chooseFromOcc]] is the
+  * choose rule ([[chooseBucketBits]] applies it to a table the caller
+  * also reports) and [[maintenanceFromOcc]] the verdict rule. Deltas
+  * enter through [[updateKnnGraph]] (re-sketches base ∪ delta) or
+  * [[updateKnnGraphIncremental]] (reads the persisted index and
+  * histogram, returns the verdict and the next snapshot's pieces).
   */
 object Ann {
 
@@ -998,9 +1010,9 @@ object Ann {
 
   /** The occupancy plan over an EXPLICIT width list — the core of
     * [[occupancyFromHistogram]], also consumed with a width-0 pseudo
-    * row by [[maintenanceAndCountFromHistogram]] (at width 0 every fb
-    * masks to one bucket, so that row's max_bucket IS the corpus
-    * total — the count rides the verdict's aggregation for free). */
+    * row by [[occupancyAndCount]] (at width 0 every fb masks to one
+    * bucket, so that row's max_bucket IS the corpus total — the count
+    * rides the verdict's aggregation for free). */
   private def occupancyTable(fine: DataFrame, widths: Seq[Int])
       : DataFrame = {
     // ALL candidate widths in ONE two-aggregation plan: each (fb, cnt)
@@ -1087,9 +1099,12 @@ object Ann {
     rows.find(_._2 <= targetSizeBiased).map(_._1).getOrElse(rows.last._1)
   }
 
-  /** [[maintenanceCheckFromHistogram]]'s verdict over the same
-    * already-collected (bucket_bits, size_biased) table — identical
-    * decision, zero extra jobs. */
+  /** The occupancy-drift verdict rule ([[GraphMaintenance]]) over a
+    * collected (bucket_bits, size_biased) table: the load at the
+    * store's frozen `currentBits` against [[chooseFromOcc]]'s pick.
+    * The table comes from [[occupancyAndCount]] (distributed) or
+    * [[occupancyFromCollected]] (driver-held histogram); requiring
+    * `currentBits` in the table also bounds it to [bbMin, bbMax]. */
   def maintenanceFromOcc(occ: Seq[(Int, Double)], currentBits: Int,
                          targetSizeBiased: Double =
                            DefaultTargetSizeBiased): GraphMaintenance = {
@@ -1133,18 +1148,6 @@ object Ann {
       (bb, m.size.toLong, mx, sb)
     }
   }
-
-  /** [[maintenanceCheckFromHistogram]] over a DRIVER-HELD fine
-    * histogram — the [[occupancyFromCollected]] arithmetic feeding
-    * [[maintenanceFromOcc]]'s decision, zero jobs. */
-  def maintenanceFromCollected(hist: Seq[(Long, Long)], currentBits: Int,
-                               bbMin: Int, bbMax: Int,
-                               targetSizeBiased: Double =
-                                 DefaultTargetSizeBiased)
-      : GraphMaintenance =
-    maintenanceFromOcc(
-      occupancyFromCollected(hist, bbMin, bbMax)
-        .map(r => (r._1, r._4)), currentBits, targetSizeBiased)
 
   /** Calibration target for [[occupancyBucketBits]]: the own-bucket
     * size-biased load the hand-pinned v57 geometry (bucketBits = 5 on
@@ -1284,69 +1287,37 @@ object Ann {
   }
 
   /** The occupancy-drift verdict an LSM graph store consults at
-    * update/compaction time ([[maintenanceCheck]]): the measured
+    * update/compaction time ([[maintenanceFromOcc]]): the measured
     * size-biased bucket load of the COMBINED (base ∪ deltas) index at
     * the width the store currently runs, against the width the
     * occupancy chooser would pick NOW. `rebucket` = the store's frozen
     * geometry has drifted past target — the caller re-buckets (or
     * folds the compaction early, which rebuilds at
-    * [[buildKnnGraphAdaptive]]'s fresh choice). */
+    * [[buildKnnGraphAdaptive]]'s fresh choice).
+    *
+    * Why a long-lived store needs it (the round-14 gap):
+    * [[occupancyBucketBits]] fixes the ONE-SHOT build's geometry, but
+    * a store accreting deltas between compactions densifies IN PLACE
+    * while its `bucketBits` stays at the base-build choice, re-opening
+    * the superlinearity the chooser killed (the salt cap bounds the
+    * hottest bucket, not the aggregate size-biased load). The verdict
+    * reads the combined corpus's fine histogram — re-sketched
+    * ([[fineOccupancyHistogram]]) or folded from the persisted
+    * snapshot's ([[foldOccupancyHistogram]], the O(delta) form; v72
+    * hash-gates fold ≡ re-sketch) — through [[occupancyAndCount]]. */
   case class GraphMaintenance(currentBits: Int, currentLoad: Double,
                               chosenBits: Int, chosenLoad: Double,
                               targetSizeBiased: Double) {
     def rebucket: Boolean = currentLoad > targetSizeBiased
   }
 
-  /** Measure occupancy drift of a combined index — the round-14 gap
-    * the verdict named: [[occupancyBucketBits]] fixed the ONE-SHOT
-    * build's geometry, but a long-lived store accreting deltas between
-    * compactions densifies IN PLACE while its `bucketBits` stays at
-    * the base-build choice, re-opening exactly the superlinearity the
-    * chooser killed (the salt cap bounds the hottest bucket, not the
-    * aggregate size-biased load). One sketch pass over the combined
-    * corpus → the fine histogram → per-width re-aggregations
-    * ([[bucketOccupancy]]'s shape — at 100 TB this is compaction-
-    * cadence planning work, model-sized state end to end); the
-    * decision table is (bbMax−bbMin+1) driver-side rows. Deterministic
-    * (the sketch is), so v71's oracle replays the full decision table
-    * in SQL. */
-  def maintenanceCheck(combined: DataFrame, vecCol: String, bits: Int,
-                       currentBits: Int, bbMin: Int, bbMax: Int,
-                       targetSizeBiased: Double = DefaultTargetSizeBiased)
-      : GraphMaintenance =
-    maintenanceCheckFromHistogram(
-      fineOccupancyHistogram(combined, vecCol, bits, bbMax),
-      currentBits, bbMin, bbMax, targetSizeBiased)
-
-  /** [[maintenanceCheck]] from a fine histogram instead of the corpus
-    * — the O(delta) form: a store that persists its histogram per
-    * snapshot ([[fineOccupancyHistogram]]) and folds each delta in
-    * ([[foldOccupancyHistogram]]) gets the drift verdict from
-    * model-sized state alone, no base re-scan. Identical decision to
-    * [[maintenanceCheck]] on the same corpus — the folded histogram IS
-    * the combined corpus's histogram (v72 hash-gates this end to
-    * end). */
-  def maintenanceCheckFromHistogram(fine: DataFrame, currentBits: Int,
-                                    bbMin: Int, bbMax: Int,
-                                    targetSizeBiased: Double =
-                                      DefaultTargetSizeBiased)
-      : GraphMaintenance = {
-    require(bbMin <= currentBits && currentBits <= bbMax,
-      s"maintenanceCheckFromHistogram: currentBits=$currentBits " +
-        s"outside [$bbMin, $bbMax]")
-    maintenanceFromOcc(
-      occupancyFromHistogram(fine, bbMin, bbMax)
-        .collect()
-        .map(r => (r.getInt(0), r.getDouble(3))).toSeq,
-      currentBits, targetSizeBiased)
-  }
-
   /** The COLLECTED occupancy table plus the corpus total in ONE round
-    * trip (the width-0 pseudo-row trick of
-    * [[maintenanceAndCountFromHistogram]]) — the snapshot-bootstrap
-    * form: a caller choosing geometry ([[chooseFromOcc]]), building
-    * the step-0 verdict ([[maintenanceFromOcc]]) AND reporting n pays
-    * one collect for all three (s27 previously paid three). */
+    * trip: a width-0 pseudo row rides the occupancy aggregation (all
+    * fb mask to one bucket, so its max_bucket = Σcnt) and the table
+    * reads the real widths. Every verdict collect goes through here: a
+    * caller choosing geometry ([[chooseFromOcc]]), building the drift
+    * verdict ([[maintenanceFromOcc]]) AND reporting n pays one collect
+    * for all three. */
   def occupancyAndCount(fine: DataFrame, bbMin: Int, bbMax: Int)
       : (Seq[(Int, Double)], Long) = {
     require(0 < bbMin && bbMin <= bbMax,
@@ -1358,71 +1329,14 @@ object Ann {
       rows.find(_._1 == 0).map(_._2).getOrElse(0L))
   }
 
-  /** [[maintenanceCheckFromHistogram]] PLUS the corpus total in the
-    * SAME collect — a width-0 pseudo row rides the occupancy
-    * aggregation (all fb mask to one bucket, so its max_bucket = Σcnt)
-    * and the verdict reads the real widths: one Spark round trip where
-    * the stream loop (s27) previously paid two per trigger (verdict +
-    * a separate SUM over the folded histogram). Identical verdict,
-    * identical count. */
-  def maintenanceAndCountFromHistogram(fine: DataFrame, currentBits: Int,
-                                       bbMin: Int, bbMax: Int,
-                                       targetSizeBiased: Double =
-                                         DefaultTargetSizeBiased)
-      : (GraphMaintenance, Long) = {
-    require(bbMin <= currentBits && currentBits <= bbMax,
-      s"maintenanceAndCountFromHistogram: currentBits=$currentBits " +
-        s"outside [$bbMin, $bbMax]")
-    require(0 < bbMin,
-      s"maintenanceAndCountFromHistogram: need 0 < bbMin=$bbMin")
-    val rows = occupancyTable(fine, 0 +: (bbMin to bbMax))
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(2), r.getDouble(3)))
-    val n = rows.find(_._1 == 0)
-      .map(_._2)
-      .getOrElse(0L)
-    (maintenanceFromOcc(rows.filter(_._1 > 0).map(r => (r._1, r._3)).toSeq,
-      currentBits, targetSizeBiased), n)
-  }
-
-  /** [[updateKnnGraph]] WITH the occupancy re-check — the maintenance
-    * call a deployed LSM graph store runs per delta batch: the sidecar
-    * edges (delta-proportional, identical to [[updateKnnGraph]] —
-    * same candidates, same ranks) PLUS the [[GraphMaintenance]]
-    * verdict measured on the combined index the sidecar probed. The
-    * check costs one extra sketch pass over base ∪ delta at update
-    * time (the update already pays one for its bucket index); a caller
-    * whose verdict says `rebucket` schedules the compaction fold early
-    * instead of letting walks degrade unmeasured until the calendar
-    * fold. v71 hash-gates the drift table this decision reads on a
-    * delta-accreted corpus. */
-  def updateKnnGraphChecked(baseEmb: DataFrame, delta: DataFrame,
-                            idCol: String, vecCol: String, bits: Int,
-                            bucketBits: Int, degree: Int,
-                            bbMin: Int, bbMax: Int,
-                            targetSizeBiased: Double =
-                              DefaultTargetSizeBiased,
-                            maxProbes: Int = DefaultMaxProbes,
-                            maxBucketGroup: Long = DefaultMaxBucketGroup)
-      : (DataFrame, GraphMaintenance) = {
-    val combined = baseEmb.select(col(idCol), col(vecCol))
-      .unionByName(delta.select(col(idCol), col(vecCol)))
-    val scoredPairs = knnGraphCandidates(delta, combined, idCol, vecCol,
-      bits, bucketBits, maxProbes, maxBucketGroup)
-    val sidecar = Search.topKPerQuery(scoredPairs, "src", idCol, degree)
-      .select(col("src"), col(idCol).as("dst"))
-    (sidecar, maintenanceCheck(combined, vecCol, bits, bucketBits,
-      bbMin, bbMax, targetSizeBiased))
-  }
-
-  /** O(delta) END-TO-END LSM update — [[updateKnnGraphChecked]] with
-    * every base-proportional pass replaced by PERSISTED snapshot
-    * artifacts (the round-15 verdict's What's-wrong #1: the checked
-    * update was delta-proportional in JOIN work but still paid an
-    * O(base∪delta) sketch pass per batch for its bucket index and a
-    * second for the occupancy histogram). Bucket membership of an
-    * existing vector never changes (fixed md5 hyperplanes), so both
-    * passes are avoidable:
+  /** O(delta) END-TO-END LSM update — [[updateKnnGraph]]'s sidecar
+    * plus the drift verdict, with every base-proportional pass
+    * replaced by PERSISTED snapshot artifacts (the round-15 verdict's
+    * What's-wrong #1: re-sketching base ∪ delta per batch paid an
+    * O(base∪delta) pass for the bucket index and a second for the
+    * occupancy histogram). Bucket membership of an existing vector
+    * never changes (fixed md5 hyperplanes), so both passes are
+    * avoidable:
     *
     *   - `baseIndex` = the persisted (bucket, idCol, vecCol) bucket
     *     index of the base at `bucketBits` — v58's sharded store
@@ -1435,56 +1349,32 @@ object Ann {
     * Per delta batch the update then pays: ONE sketch pass over the
     * DELTA (its fine bucket and join bucket are mask-prefixes of the
     * same sketch — one kernel evaluation), a model-sized histogram
-    * fold, and the bucket equi-join of the delta's capped probes
-    * against base∪delta index rows — with a hive-partitioned base
-    * store only the probed bucket directories are read. Nothing scans
-    * the base corpus: at 100 TB with daily deltas this is the
-    * difference between a maintenance job that reads the delta and
-    * one that re-reads the store (SCALING.md measures the wall-time
-    * flat vs base size).
+    * fold, the bucket equi-join of the delta's capped probes against
+    * base∪delta index rows — with a hive-partitioned base store only
+    * the probed bucket directories are read — and one collect for the
+    * verdict and the total ([[occupancyAndCount]]). Nothing scans the
+    * base corpus: at 100 TB with daily deltas this is the difference
+    * between a maintenance job that reads the delta and one that
+    * re-reads the store (SCALING.md measures the wall-time flat vs
+    * base size).
     *
     * Equality contract (AnnSpec-pinned): the sidecar edges are
-    * row-identical to [[updateKnnGraphChecked]]'s — the persisted
-    * index holds exactly the rows the re-sketch would derive
-    * (deterministic sketch), and the salted join's group counts
-    * derived from the folded histogram equal the combined-index
-    * aggregation's. The drift verdict is likewise identical: the
-    * folded histogram IS the combined corpus's fine histogram (v72
-    * hash-gates the decision table end to end).
+    * row-identical to [[updateKnnGraph]]'s over base ∪ delta — the
+    * persisted index holds exactly the rows the re-sketch would
+    * derive (deterministic sketch), and the salted join's group
+    * counts derived from the folded histogram equal the
+    * combined-index aggregation's. The drift verdict is likewise
+    * identical to the one read from a re-sketched histogram: the
+    * folded histogram IS the combined corpus's fine histogram.
     *
     * Returns (sidecar edges, folded fine histogram — persist it as
-    * the next snapshot's `baseHist`, the maintenance verdict).
+    * the next snapshot's `baseHist`, the delta's bucket-index rows
+    * (idCol, vecCol, bucket) — append them to the persisted index
+    * instead of re-sketching the delta with [[srpBucketIndex]],
+    * row-identical by the mask-prefix property, the maintenance
+    * verdict, the post-fold corpus total).
     */
-  def updateKnnGraphIncremental(baseIndex: DataFrame, baseHist: DataFrame,
-                                delta: DataFrame, idCol: String,
-                                vecCol: String, bits: Int,
-                                bucketBits: Int, degree: Int,
-                                bbMin: Int, bbMax: Int,
-                                targetSizeBiased: Double =
-                                  DefaultTargetSizeBiased,
-                                maxProbes: Int = DefaultMaxProbes,
-                                maxBucketGroup: Long = DefaultMaxBucketGroup)
-      : (DataFrame, DataFrame, GraphMaintenance) = {
-    val (sidecar, folded, _, m, _) = updateKnnGraphIncrementalWithIndex(
-      baseIndex, baseHist, delta, idCol, vecCol, bits, bucketBits,
-      degree, bbMin, bbMax, targetSizeBiased, maxProbes, maxBucketGroup)
-    (sidecar, folded, m)
-  }
-
-  /** [[updateKnnGraphIncremental]] that ALSO returns the delta's
-    * bucket-index rows (idCol, vecCol, bucket) and the post-fold
-    * corpus total. The index rows derive from the one delta sketch
-    * pass the update already pays and checkpoints, so a caller
-    * extending its persisted index per batch (s27's stream loop, the
-    * v80 store build) appends these instead of re-sketching the same
-    * delta with [[srpBucketIndex]]: one sketch pass per batch, not
-    * two — row-identical to the re-sketch (the sketch is
-    * deterministic and the join bucket is a mask-prefix of the fine
-    * bucket, the AnnSpec-pinned property). The total rides the
-    * verdict's own collect ([[maintenanceAndCountFromHistogram]]), so
-    * a loop emitting (n_vectors, verdict) rows per trigger pays one
-    * round trip, not three. */
-  def updateKnnGraphIncrementalWithIndex(
+  def updateKnnGraphIncremental(
       baseIndex: DataFrame, baseHist: DataFrame,
       delta: DataFrame, idCol: String,
       vecCol: String, bits: Int,
@@ -1554,9 +1444,9 @@ object Ann {
       .select(col("src"), col(idCol).as("dst"))
     val deltaIdx = deltaFine.select(col(idCol), col(vecCol),
       col("fb").bitwiseAND(bMask).as("bucket"))
-    val (verdict, n) = maintenanceAndCountFromHistogram(folded,
-      bucketBits, bbMin, bbMax, targetSizeBiased)
-    (sidecar, folded, deltaIdx, verdict, n)
+    val (occ, n) = occupancyAndCount(folded, bbMin, bbMax)
+    (sidecar, folded, deltaIdx,
+      maintenanceFromOcc(occ, bucketBits, targetSizeBiased), n)
   }
 
   /** NEAR-DUP COLLAPSE TIER for the graph build — the fix for the

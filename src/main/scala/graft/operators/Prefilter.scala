@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.{BinaryType, LongType}
   * Spark's own AQE runtime filter (spark.sql.optimizer.runtime
   * .bloomFilter.enabled) injects the same construct automatically when
   * its size thresholds are met — the engine's sessions RUN WITH THAT
-  * INJECTION OFF (Bench.scala: localCheckpoint frames' unknown stats
+  * INJECTION OFF (SparkEntry.session: localCheckpoint frames' unknown stats
   * defeat the thresholds, so the injected, statically-sized 1 MiB
   * blooms landed exactly where they cost task-binary weight and
   * pruned nothing); this operator makes the pattern explicit and

@@ -737,14 +737,14 @@ object StreamingQueries {
         .foreachBatch { (batch: DataFrame, _: Long) =>
           ref.updateAndGet { st =>
             // the update's one delta sketch pass also yields the
-            // index extension rows (WithIndex), the folded histogram
+            // index extension rows (deltaIdx), the folded histogram
             // it returns is already checkpointed, and the post-fold
             // total rides the verdict's collect — the previous loop
             // re-sketched the batch for the index, re-checkpointed
             // the fold, and ran a separate SUM per trigger: three
             // extra Spark round trips per micro-batch
             val (sidecar, folded, deltaIdx, m, n) =
-              Ann.updateKnnGraphIncrementalWithIndex(
+              Ann.updateKnnGraphIncremental(
                 st.index, st.hist, batch, "vec_id", "embedding",
                 bits = 20, bucketBits = frozenBits, degree = 8,
                 bbMin = 3, bbMax = 20)

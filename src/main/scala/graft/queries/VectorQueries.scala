@@ -514,8 +514,9 @@ object VectorQueries {
     * artifact name for a self-contained oracle. Because v49 consumes
     * this, the COMPACTION FOLD now re-chooses geometry at fold time —
     * the occupancy-aware maintenance cadence (verdict item 1): deltas
-    * accrete at the base width ([[Ann.updateKnnGraphChecked]] measures
-    * the drift), the fold re-buckets at the fresh choice.
+    * accrete at the base width (v58's [[Ann.maintenanceFromOcc]]
+    * verdict measures the drift), the fold re-buckets at the fresh
+    * choice.
     */
   private val fullKnnGraphCache = scala.collection.concurrent.TrieMap
     .empty[String, DataFrame]
@@ -1624,8 +1625,9 @@ object VectorQueries {
             baseGraph.join(shardOf, Seq("src")), "v58_store", sfDir,
             "shard")
           // the delta lands through the CHECKED update (round 15):
-          // same sidecar, plus the occupancy-drift verdict measured
-          // on the combined index it probed. The fixture deliberately
+          // the sidecar, plus the occupancy-drift verdict measured on
+          // the combined index it probed (corpus = base ∪ delta). The
+          // fixture deliberately
           // KEEPS the bb=6 layout — the shard routing is the store's
           // on-disk contract and the serving pins are the v54
           // operating point — so the verdict is surfaced, not acted
@@ -1635,9 +1637,11 @@ object VectorQueries {
           // early (v49's fold now re-buckets at the fresh occupancy
           // choice); v71 hash-gates the decision table this verdict
           // reads.
-          val (sidecar, drift) = Ann.updateKnnGraphChecked(base, delta,
-            "vec_id", "embedding", bits = 16, bucketBits = 6,
-            degree = 12, bbMin = 3, bbMax = 16)
+          val sidecar = Ann.updateKnnGraph(base, delta, "vec_id",
+            "embedding", bits = 16, bucketBits = 6, degree = 12)
+          val drift = Ann.maintenanceFromOcc(Ann.occupancyAndCount(
+            Ann.fineOccupancyHistogram(corpus, "embedding", 16, 16),
+            bbMin = 3, bbMax = 16)._1, currentBits = 6)
           if (drift.rebucket)
             System.err.println(s"[v58] occupancy drift at update: " +
               s"size-biased load ${drift.currentLoad} at frozen " +
@@ -3702,9 +3706,9 @@ object VectorQueries {
     * re-open the densification between compactions (the salt cap
     * bounds the hottest bucket, not the aggregate size-biased load).
     * This query pins the drift decision table
-    * ([[Ann.maintenanceCheck]] — the verdict
-    * [[Ann.updateKnnGraphChecked]] returns beside each delta's
-    * sidecar) on a DELTA-ACCRETED corpus: base = the 40× fixture
+    * ([[Ann.maintenanceFromOcc]] over [[Ann.occupancyAndCount]] — the
+    * verdict [[Ann.updateKnnGraphIncremental]] returns beside each
+    * delta's sidecar) on a DELTA-ACCRETED corpus: base = the 40× fixture
     * (frozen geometry = the chooser's own base pick, bb 5), then
     * three clustered delta batches double and redouble every replica
     * cluster in place (80× / 160× / 320× — clustered INSERTS, not the
@@ -3739,9 +3743,10 @@ object VectorQueries {
     val steps = Seq((0L, 40L), (1L, 80L), (2L, 160L), (3L, 320L))
     steps.map { case (s, lim) =>
         val combined = all.filter(col("_k") < lim)
-        val n = combined.count()
-        val m = Ann.maintenanceCheck(combined, "embedding", bits = 20,
-          currentBits = frozen, bbMin = 3, bbMax = 20)
+        val (occ, n) = Ann.occupancyAndCount(
+          Ann.fineOccupancyHistogram(combined, "embedding", bits = 20,
+            bbMax = 20), bbMin = 3, bbMax = 20)
+        val m = Ann.maintenanceFromOcc(occ, frozen)
         (s, n, m.currentBits.toLong, m.currentLoad,
           m.chosenBits.toLong, m.chosenLoad,
           if (m.rebucket) 1L else 0L)
@@ -3753,8 +3758,8 @@ object VectorQueries {
 
   /** O(DELTA) MAINTENANCE VIA THE PERSISTED HISTOGRAM FOLD — the
     * round-15 verdict's top item made real: v71 proved the drift
-    * verdict must be re-measured at every delta batch, but its
-    * [[Ann.maintenanceCheck]] re-sketches base ∪ delta per step — an
+    * verdict must be re-measured at every delta batch, but it
+    * re-sketches base ∪ delta per step — an
     * O(base) pass a 100 TB store cannot pay per batch. Bucket
     * membership of an existing vector never changes (fixed md5
     * hyperplanes), so the fine histogram is ADDITIVE: this query
@@ -3763,8 +3768,8 @@ object VectorQueries {
     * model-registry discipline), then per accretion step touches ONLY
     * the delta — sketch the delta's vectors, FOLD its histogram in
     * ([[Ann.foldOccupancyHistogram]]), and read the drift verdict
-    * from the folded model-sized state
-    * ([[Ann.maintenanceCheckFromHistogram]]). The emitted decision
+    * from the folded model-sized state ([[Ann.occupancyAndCount]] →
+    * [[Ann.maintenanceFromOcc]]). The emitted decision
     * table is v71's, column for column — and the ORACLE deliberately
     * replays it FROM SCRATCH in SQL (v71's exact replay: full sketch
     * of the accreted corpus, per-step histograms, per-width loads),
@@ -3775,8 +3780,8 @@ object VectorQueries {
     * nothing rescans the base (SCALING.md's maintenance table
     * measures the wall-time staying flat as the base grows;
     * [[Ann.updateKnnGraphIncremental]] carries the same contract
-    * into the sidecar build, AnnSpec-pinned equal to the checked
-    * update). */
+    * into the sidecar build, AnnSpec-pinned equal to
+    * [[Ann.updateKnnGraph]] plus the re-sketched verdict). */
   def occupancyDriftFold(spark: SparkSession, sfDir: String)
       : DataFrame = {
     import spark.implicits._
@@ -3808,9 +3813,9 @@ object VectorQueries {
                 bbMax = 20))
             .localCheckpoint() // model-sized; next step folds onto it
         }
-        val n = hist.agg(sum("cnt")).head().getLong(0)
-        val m = Ann.maintenanceCheckFromHistogram(hist, frozen,
-          bbMin = 3, bbMax = 20)
+        val (occ, n) = Ann.occupancyAndCount(hist, bbMin = 3,
+          bbMax = 20)
+        val m = Ann.maintenanceFromOcc(occ, frozen)
         (s, n, m.currentBits.toLong, m.currentLoad,
           m.chosenBits.toLong, m.chosenLoad,
           if (m.rebucket) 1L else 0L)
@@ -3862,7 +3867,7 @@ object VectorQueries {
         for ((lo, hi) <- Seq((40L, 80L), (80L, 160L), (160L, 320L))) {
           val delta = all.filter(col("_k") >= lo && col("_k") < hi)
           val (sidecar, folded, deltaIdx, _, _) =
-            Ann.updateKnnGraphIncrementalWithIndex(
+            Ann.updateKnnGraphIncremental(
               index, hist, delta, "vec_id", "embedding", bits = 20,
               bucketBits = frozenBits, degree = 8, bbMin = 3,
               bbMax = 20)
@@ -4907,7 +4912,7 @@ object VectorQueries {
         for (s <- 1 to 3) {
           val delta = deltas.filter(v80Step(col("vec_id")) === s)
           val (sidecar, folded, deltaIdx, _, _) =
-            Ann.updateKnnGraphIncrementalWithIndex(
+            Ann.updateKnnGraphIncremental(
               index, hist, delta, "vec_id", "embedding", bits = 20,
               bucketBits = V74Bb, degree = 8, bbMin = 3, bbMax = 20)
           Artifacts.write(sidecar, s"v80_sc$s", sfDir)
@@ -4979,8 +4984,9 @@ object VectorQueries {
       // re-distributing each fold into a 2-exchange aggregation:
       // 4 Spark round trips of pure fixed overhead removed, same
       // sums, same HALF_UP rounding ([[Ann.occupancyFromCollected]])
-      (s.toLong, Ann.maintenanceFromCollected(folded, V74Bb,
-        bbMin = 3, bbMax = 20))
+      (s.toLong, Ann.maintenanceFromOcc(
+        Ann.occupancyFromCollected(folded, bbMin = 3, bbMax = 20)
+          .map(r => (r._1, r._4)), V74Bb))
     }
     // ALL FOUR snapshots serve in ONE multi-index batched walk
     // (query_id = snapshot): per-snapshot graphs from the persisted
@@ -6531,7 +6537,7 @@ object VectorQueries {
        |       GROUP BY ${p}tp.width, ${p}t.nodes_touched)""".stripMargin
 
   /** The drift-decision replay shared by v71 (from-scratch
-    * maintenanceCheck) and v72 (persisted-histogram fold): the
+    * re-sketch) and v72 (persisted-histogram fold): the
     * 20-plane sketch of the delta-accreted corpus, per-step fine
     * histograms (membership k < step limit), per-width size-biased
     * loads, the base (step-0) frozen choice, each step's fresh choice,
@@ -8125,7 +8131,7 @@ object VectorQueries {
     "v71_occupancy_drift" -> v71DriftOracle,
     // v72 computes the SAME decision table through the persisted
     // histogram FOLD (fineOccupancyHistogram + foldOccupancyHistogram
-    // + maintenanceCheckFromHistogram — zero base re-scans after the
+    // + occupancyAndCount — zero base re-scans after the
     // base snapshot); the oracle deliberately replays it FROM SCRATCH
     // (v71's exact SQL) — the hash match IS the proof that
     // fold ≡ re-sketch on the accreted corpus

@@ -706,16 +706,34 @@ class AnnSpec extends SparkSpec {
     assert(adaptive == manual && adaptive.nonEmpty)
   }
 
-  test("updateKnnGraphChecked: sidecar identical to updateKnnGraph, " +
+  /** The CHECKED update: [[Ann.updateKnnGraph]]'s sidecar plus the
+    * drift verdict over the re-sketched histogram of base ∪ delta. */
+  private def checkedUpdate(base: org.apache.spark.sql.DataFrame,
+                            delta: org.apache.spark.sql.DataFrame,
+                            bucketBits: Int, target: Double)
+      : (org.apache.spark.sql.DataFrame, Ann.GraphMaintenance) =
+    (Ann.updateKnnGraph(base, delta, "vec_id", "embedding", bits = 12,
+        bucketBits = bucketBits, degree = 2),
+      verdictOf(base.unionByName(delta), bucketBits, 1, 12, target))
+
+  /** The drift verdict over `corpus`'s re-sketched fine histogram. */
+  private def verdictOf(corpus: org.apache.spark.sql.DataFrame,
+                        currentBits: Int, bbMin: Int, bbMax: Int,
+                        target: Double = Ann.DefaultTargetSizeBiased)
+      : Ann.GraphMaintenance =
+    Ann.maintenanceFromOcc(Ann.occupancyAndCount(
+        Ann.fineOccupancyHistogram(corpus, "embedding", 12, bbMax),
+        bbMin, bbMax)._1, currentBits, target)
+
+  test("checked update: sidecar identical to updateKnnGraph, " +
       "verdict reads the combined occupancy table") {
     val base = emb // ids 1..6
     val delta = vecsDf((10L, Seq(10f, 0.5f)), (11L, Seq(0.5f, 10f)))
     val plain = Ann.updateKnnGraph(base, delta, "vec_id", "embedding",
         bits = 12, bucketBits = 2, degree = 2)
       .as[(Long, Long)].collect().toSeq.sorted
-    val (sidecar, verdict) = Ann.updateKnnGraphChecked(base, delta,
-      "vec_id", "embedding", bits = 12, bucketBits = 2, degree = 2,
-      bbMin = 1, bbMax = 12, targetSizeBiased = 2.0)
+    val (sidecar, verdict) = checkedUpdate(base, delta, bucketBits = 2,
+      target = 2.0)
     assert(sidecar.as[(Long, Long)].collect().toSeq.sorted == plain)
     // the verdict's numbers ARE the combined index's occupancy rows
     val combined = base.unionByName(delta)
@@ -730,14 +748,12 @@ class AnnSpec extends SparkSpec {
     assert(verdict.chosenBits == wantChosen)
     assert(verdict.rebucket == (occ(2) > 2.0))
     // an in-target frozen width yields a calm verdict
-    val calm = Ann.maintenanceCheck(combined, "embedding", 12,
-      currentBits = 12, bbMin = 1, bbMax = 12,
-      targetSizeBiased = 1e9)
+    val calm = verdictOf(combined, currentBits = 12, bbMin = 1,
+      bbMax = 12, target = 1e9)
     assert(!calm.rebucket && calm.chosenBits == 1)
     // currentBits outside the candidate range fails fast
     intercept[IllegalArgumentException] {
-      Ann.maintenanceCheck(combined, "embedding", 12,
-        currentBits = 13, bbMin = 1, bbMax = 12)
+      verdictOf(combined, currentBits = 13, bbMin = 1, bbMax = 12)
     }
   }
 
@@ -1021,8 +1037,8 @@ class AnnSpec extends SparkSpec {
       bits = 12, bucketBits = 12)
     assert(wideIndex.agg(max("bucket")).head.getLong(0) >= 4L,
       "fixture: wide index must actually exceed 2 bits")
-    val (sc2, _, _) = Ann.updateKnnGraphIncremental(wideIndex, baseHist,
-      delta, "vec_id", "embedding", bits = 12, bucketBits = 2,
+    val (sc2, _, _, _, _) = Ann.updateKnnGraphIncremental(wideIndex,
+      baseHist, delta, "vec_id", "embedding", bits = 12, bucketBits = 2,
       degree = 2, bbMin = 1, bbMax = 12)
     val ei = intercept[Exception] { sc2.count() }
     assert(msgs2(ei).exists(_.contains("built at a different width")),
@@ -1041,13 +1057,13 @@ class AnnSpec extends SparkSpec {
       bits = 12, bucketBits = 2)
     val baseHist = Ann.fineOccupancyHistogram(base, "embedding",
       bits = 12, bbMax = 12)
-    val (incSidecar, folded, incVerdict) = Ann.updateKnnGraphIncremental(
-      baseIndex, baseHist, delta, "vec_id", "embedding",
-      bits = 12, bucketBits = 2, degree = 2, bbMin = 1, bbMax = 12,
-      targetSizeBiased = 2.0)
-    val (sidecar, verdict) = Ann.updateKnnGraphChecked(base, delta,
-      "vec_id", "embedding", bits = 12, bucketBits = 2, degree = 2,
-      bbMin = 1, bbMax = 12, targetSizeBiased = 2.0)
+    val (incSidecar, folded, _, incVerdict, _) =
+      Ann.updateKnnGraphIncremental(
+        baseIndex, baseHist, delta, "vec_id", "embedding",
+        bits = 12, bucketBits = 2, degree = 2, bbMin = 1, bbMax = 12,
+        targetSizeBiased = 2.0)
+    val (sidecar, verdict) = checkedUpdate(base, delta, bucketBits = 2,
+      target = 2.0)
     assert(incSidecar.as[(Long, Long)].collect().toSeq.sorted ==
       sidecar.as[(Long, Long)].collect().toSeq.sorted)
     assert(incVerdict == verdict)
@@ -1073,6 +1089,74 @@ class AnnSpec extends SparkSpec {
     }
   }
 
+  test("updateKnnGraphIncremental: the delta's index rows are " +
+      "srpBucketIndex's and n counts base plus delta") {
+    val base = emb // ids 1..6
+    val delta = vecsDf((10L, Seq(10f, 0.5f)), (11L, Seq(0.5f, 10f)),
+      (12L, Seq(7f, 7f)))
+    val (_, _, deltaIdx, _, n) = Ann.updateKnnGraphIncremental(
+      Ann.srpBucketIndex(base, "vec_id", "embedding", 12, 3),
+      Ann.fineOccupancyHistogram(base, "embedding", 12, 12), delta,
+      "vec_id", "embedding", bits = 12, bucketBits = 3, degree = 2,
+      bbMin = 1, bbMax = 12)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("vec_id", "embedding", "bucket")
+        .as[(Long, Seq[Float], Long)].collect().toSeq.sortBy(_._1)
+    assert(rows(deltaIdx) ==
+      rows(Ann.srpBucketIndex(delta, "vec_id", "embedding", 12, 3)))
+    assert(n == base.count() + delta.count())
+  }
+
+  // ---- the occupancy table's driver twin -------------------------------
+
+  /** Random fine histograms: distinct fb in [0, 2^bbMax), cnt >= 1,
+    * 1 <= bbMin <= bbMax <= 12. */
+  private def fineHists(seed: Int, n: Int)
+      : Seq[(Seq[(Long, Long)], Int, Int)] = {
+    val rng = new scala.util.Random(seed)
+    (1 to n).map { _ =>
+      val bbMax = 1 + rng.nextInt(12)
+      val bbMin = 1 + rng.nextInt(bbMax)
+      val fbs = Seq.fill(1 + rng.nextInt(40))(
+        rng.nextInt(1 << bbMax).toLong).distinct
+      // mostly small counts, some large, so buckets tie and skew
+      (fbs.map(fb => (fb, 1L + (if (rng.nextInt(4) == 0)
+        rng.nextInt(500) else rng.nextInt(4)))), bbMin, bbMax)
+    }
+  }
+
+  private def occRows(df: org.apache.spark.sql.DataFrame)
+      : Seq[(Int, Long, Long, Double)] =
+    df.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
+      r.getDouble(3))).toSeq.sorted
+
+  test("occupancyFromCollected equals the distributed table, and " +
+      "occupancyAndCount reads the same rows and total") {
+    for ((hist, bbMin, bbMax) <- fineHists(seed = 41, n = 25)) {
+      val fine = hist.toDF("fb", "cnt")
+      val want = occRows(Ann.occupancyFromHistogram(fine, bbMin, bbMax))
+      val ctx = s"hist=$hist bb=[$bbMin, $bbMax]"
+      assert(Ann.occupancyFromCollected(hist, bbMin, bbMax).sorted == want,
+        ctx)
+      val (occ, total) = Ann.occupancyAndCount(fine, bbMin, bbMax)
+      assert(occ.sorted == want.map(r => (r._1, r._4)), ctx)
+      assert(total == hist.map(_._2).sum, ctx)
+    }
+  }
+
+  test("occupancy tables round a size-biased tie HALF_UP; empty " +
+      "histograms and tables fail fast") {
+    // buckets {63, 1}: Σb²/Σb = 3970/64 = 62.03125 exactly
+    val hist = Seq((0L, 63L), (1L, 1L))
+    val want = Seq((1, 2L, 63L, 62.0313))
+    assert(Ann.occupancyFromCollected(hist, 1, 1) == want)
+    assert(occRows(Ann.occupancyFromHistogram(hist.toDF("fb", "cnt"),
+      1, 1)) == want)
+    intercept[IllegalArgumentException] {
+      Ann.occupancyFromCollected(Seq.empty, 1, 3)
+    }
+    intercept[IllegalArgumentException] { Ann.chooseFromOcc(Seq.empty) }
+  }
 
   // ---- walk equivalence: seeded random graphs --------------------------
 

@@ -13,7 +13,7 @@ object SparkSpec {
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", 4)
       .config("spark.sql.session.timeZone", "UTC")
-      // see Bench.scala: injected runtime blooms off (checkpoint
+      // see SparkEntry.session: injected runtime blooms off (checkpoint
       // frames' unknown stats defeat the thresholds)
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
       .config("spark.ui.enabled", "false")
