@@ -24,13 +24,13 @@ object Bench {
     // one-time builds in steady state; the phase removes the first-run
     // spikes that made per-run arrays bimodal). Subset runs skip it:
     // a dev loop timing one query shouldn't pay every artifact.
-    val (setup: Double, owners: Seq[(String, Double)]) =
+    val (setup: Double, owners: Seq[SparkEntry.Warmed]) =
       if (sys.env.contains("SPARK_GRAFT_ONLY")) (0.0, Seq.empty)
       else {
         val t0 = System.nanoTime()
         val os = SparkEntry.warm(spark, sfDir)
-        os.foreach { case (n, s) =>
-          System.err.println(f"[warm] $n%-24s ${s}%.2f s")
+        os.foreach { w =>
+          System.err.println(f"[warm] ${w.name}%-24s ${w.seconds}%.2f s")
         }
         spark.catalog.clearCache() // same state every timed query sees
         ((System.nanoTime() - t0) / 1e9, os)
@@ -42,8 +42,11 @@ object Bench {
     // per-owner warm timings as JSON so warm-phase regressions are
     // machine-diffable round-over-round like per-query timings are
     val setupJson = owners
-      .map { case (n, s) => "\"" + n + "\":" + fmt3(s) }
+      .map(w => "\"" + w.name + "\":" + fmt3(w.seconds))
       .mkString("{", ",", "}")
+    // a failed owner's artifact gets built inside its first consumer's
+    // timed run, inflating that query: the failures ride the artifact
+    val setupFailed = owners.flatMap(w => w.failure.map(w.name -> _))
     // INTERLEAVED sweeps: run the whole inventory once per sweep and
     // take each query's min ACROSS sweeps — not N consecutive runs per
     // query. Consecutive runs of a short query all complete inside the
@@ -97,6 +100,7 @@ object Bench {
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
         s""""runs":$runsJson,"setup_sec":$setup,"setup":$setupJson,""" +
+        s""""setup_failed":${SparkEntry.failuresJson(setupFailed)},""" +
         s""""sf":"$sfDir"}"""
     // The FULL artifact (per-query mins + all N per-run times + the
     // per-owner warm map) goes to a file: at 200+ queries the line is
@@ -118,7 +122,9 @@ object Bench {
     println(
       s"""{"metric":"total","value":$total,"unit":"sec",""" +
         s""""n_queries":${results.size},"n_failed":$nFail,""" +
-        s""""setup_sec":${fmt3(setup)},"queries_file":"$outFile",""" +
+        s""""setup_sec":${fmt3(setup)},""" +
+        s""""n_setup_failed":${setupFailed.size},""" +
+        s""""queries_file":"$outFile",""" +
         s""""sf":"$sfDir"}""")
     spark.stop()
   }

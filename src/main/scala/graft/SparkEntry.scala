@@ -154,23 +154,54 @@ object SparkEntry {
   private val warmers: Map[String, (SparkSession, String) => Unit] =
     graft.queries.TextQueries.warmers ++ graft.queries.VectorQueries.warmers
 
+  /** One owner's warm step: its wall time, and the message of the
+    * error it threw, if any. */
+  final case class Warmed(name: String, seconds: Double,
+                          failure: Option[String])
+
   /** Build every shared artifact — via its artifact-only warmer when
-    * one exists, else by running its owner query once (errors logged,
-    * not fatal — a broken owner surfaces in its own timed/verified
-    * run). Returns (owner, seconds) per owner. */
-  def warm(spark: SparkSession, sfDir: String): Seq[(String, Double)] =
+    * one exists, else by running its owner query once. Errors are not
+    * fatal, but each is reported in its owner's [[Warmed]]: a failed
+    * owner's artifact is built inside the first consumer's timed run
+    * instead, so the caller must surface it. */
+  def warm(spark: SparkSession, sfDir: String): Seq[Warmed] =
     artifactOwners.flatMap { name =>
       val step: Option[(SparkSession, String) => Unit] =
         warmers.get(name).orElse(
           queries.get(name).map(fn =>
             (s: SparkSession, d: String) => fn(s, d).count(): Unit))
-      step.map { fn =>
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir)
-        catch { case e: Throwable =>
-          System.err.println(s"[warm] $name failed: ${e.getMessage}")
-        }
-        name -> (System.nanoTime() - t0) / 1e9
-      }
+      step.map(fn => warmStep(name)(fn(spark, sfDir)))
     }
+
+  /** Times one owner's warm step and catches its error into the
+    * returned [[Warmed]]. */
+  def warmStep(name: String)(body: => Unit): Warmed = {
+    val t0 = System.nanoTime()
+    val failure =
+      try { body; None }
+      catch { case e: Throwable =>
+        System.err.println(s"[warm] $name failed: ${e.getMessage}")
+        Some(String.valueOf(e.getMessage))
+      }
+    Warmed(name, (System.nanoTime() - t0) / 1e9, failure)
+  }
+
+  /** (name, message) failures as a JSON list of {"name", "message"}
+    * objects, `[]` when there are none. */
+  def failuresJson(failures: Seq[(String, String)]): String =
+    failures.map { case (n, m) =>
+      s"""{"name": ${jsonString(n)}, "message": ${jsonString(m)}}""" }
+      .mkString("[", ",", "]")
+
+  /** A JSON string literal: escapes the backslash, the quote and every
+    * control character (< 0x20), so any message stays valid JSON. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

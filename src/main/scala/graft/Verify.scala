@@ -29,27 +29,14 @@ object Verify {
       spark.catalog.clearCache() // per-call persists must not accumulate
       failure
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    def q(s: String): String = SparkEntry.jsonString(s)
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // the per-query failures as a list (empty when every query ran);
     // the exit code does not depend on it
     Files.writeString(Paths.get(s"$outDir/verify_failed.json"),
-      failed.map { case (n, m) =>
-        s"""{"name": ${q(n)}, "message": ${q(m)}}""" }
-        .mkString("[", ",\n", "]\n"))
+      SparkEntry.failuresJson(failed) + "\n")
     spark.stop()
   }
 }

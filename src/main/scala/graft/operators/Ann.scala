@@ -15,8 +15,11 @@ import org.apache.spark.sql.functions._
   *
   * The graph index (a persisted k-NN graph, [[buildKnnGraph]]) is
   * served by ONE batched beam-walk loop, [[beamWalk]], and one
-  * ranked-top-k tail, [[walkTopK]]. The public walks are wrappers that
-  * differ only in the entries frame and scorer they pass:
+  * ranked-top-k tail, [[walkTopK]]; the cosine walks over one shared
+  * graph go through [[cosineSearch]], which runs the same walk as one
+  * Spark job over broadcast arrays ([[BroadcastWalk]]) when the graph
+  * and vectors fit the session's broadcast bound. The public walks are
+  * wrappers that differ only in the entries frame and scorer they pass:
   * [[graphBeamSearch]], [[graphBeamSearchPerBucket]] and
   * [[graphBeamSearchFiltered]] (one query, cosine),
   * [[graphBeamWalkPq]], [[graphBeamWalkBq]] and
@@ -529,7 +532,9 @@ object Ann {
     * walk loop: every graph-walk entry point below is a wrapper that
     * builds an `entries` frame of (queryIdCol, idCol) pairs and a
     * `score` function mapping such pairs to (queryIdCol, idCol, score),
-    * larger = closer, then calls this and [[walkTopK]]. The walk is
+    * larger = closer, then calls this and [[walkTopK]] (the cosine
+    * walks through [[cosineSearch]], which may take the one-job
+    * [[BroadcastWalk]] instead). The walk is
     * fully deterministic so an oracle can replay it in SQL: score the
     * entries, and for `rounds` iterations rank each query's scored
     * nodes (score DESC, id ties) as `_r`, keep the rows `beamCut`
@@ -605,22 +610,61 @@ object Ann {
       .select(col(queryIdCol), col(idCol),
         cosineSim(col(vecCol), col("qe")).as("score"))
 
-  /** The cosine walk over ONE shared graph and vector set: every query
-    * of `q` starts at every node of `entryNodes` (one idCol column). */
-  private def cosineWalk(graph: DataFrame, vectors: DataFrame,
-                         q: DataFrame, entryNodes: DataFrame,
-                         queryIdCol: String, idCol: String,
-                         vecCol: String, beamCut: DataFrame => DataFrame,
-                         rounds: Int): DataFrame =
-    beamWalk(graph, entryNodes.join(q.select(col(queryIdCol))),
-      queryIdCol, idCol, beamCut, rounds)(
-      cosineScore(vectors, Seq(idCol), q, queryIdCol, idCol, vecCol))
+  /** The cosine walk over ONE shared graph and vector set with its
+    * top-k tail — what every cosine entry point but
+    * [[graphBeamSearchMultiIndex]] runs. Every query of `q`
+    * (queryIdCol, qe, and the beam column when `beam` is Right) starts
+    * at every entry node: the ids of `entries` present in `vectors`
+    * (Left), or a one-column idCol frame (Right). `beam` is a fixed
+    * width (Left) or the name of `q`'s per-query width column (Right).
+    * With `pred`, top-k ranks only the visited nodes passing it and
+    * each row also carries `passed_visited`.
+    *
+    * THE SIZE SWITCH: with entry ids and a graph plus vectors that fit
+    * the session's broadcast bound, the walk runs as ONE job over
+    * broadcast arrays ([[BroadcastWalk]]); otherwise — the 100 TB
+    * path — it is the per-round loop [[beamWalk]] and [[walkTopK]].
+    * Both give the same rows under the same schema. */
+  private def cosineSearch(graph: DataFrame, vectors: DataFrame,
+                           q: DataFrame, entries: Either[Seq[Long], DataFrame],
+                           queryIdCol: String, idCol: String,
+                           vecCol: String, beam: Either[Int, String],
+                           rounds: Int, k: Int,
+                           pred: Option[Column] = None): DataFrame = {
+    val oneJob = entries.swap.toOption.flatMap(ids =>
+      BroadcastWalk.search(graph, vectors, q, nonEmpty(ids), queryIdCol,
+        idCol, vecCol, beam, rounds, k, pred))
+    oneJob.getOrElse {
+      val entryNodes = entries.fold(literalEntries(vectors, idCol, _),
+        identity)
+      val beamCut: DataFrame => DataFrame = beam.fold(beamOf,
+        b => _.join(q.select(col(queryIdCol), col(b)), Seq(queryIdCol))
+          .filter(col("_r") <= col(b)))
+      val scored = beamWalk(graph, entryNodes.join(q.select(col(queryIdCol))),
+        queryIdCol, idCol, beamCut, rounds)(
+        cosineScore(vectors, Seq(idCol), q.select(col(queryIdCol), col("qe")),
+          queryIdCol, idCol, vecCol))
+      pred match {
+        case None => walkTopK(scored, scored, queryIdCol, idCol, k)
+        case Some(p) =>
+          val passing = scored
+            .join(vectors.filter(p).select(col(idCol)), Seq(idCol))
+          val nPass = passing.groupBy(queryIdCol)
+            .agg(count(lit(1)).as("passed_visited"))
+          walkTopK(scored, passing, queryIdCol, idCol, k)
+            .join(nPass, Seq(queryIdCol))
+      }
+    }
+  }
 
   /** The entry ids present in `nodes`, as a literal isin filter. */
   private def literalEntries(nodes: DataFrame, idCol: String,
-                             entryIds: Seq[Long]): DataFrame = {
+                             entryIds: Seq[Long]): DataFrame =
+    nodes.select(col(idCol)).filter(col(idCol).isin(nonEmpty(entryIds): _*))
+
+  private def nonEmpty(entryIds: Seq[Long]): Seq[Long] = {
     require(entryIds.nonEmpty, "beam walk: entryIds must be non-empty")
-    nodes.select(col(idCol)).filter(col(idCol).isin(entryIds: _*))
+    entryIds
   }
 
   /** The query-id column of a single-query walk: it runs as a batch of
@@ -713,12 +757,9 @@ object Ann {
   def graphBeamSearch(graph: DataFrame, vectors: DataFrame,
                       query: DataFrame, idCol: String, vecCol: String,
                       entryIds: Seq[Long], beam: Int, rounds: Int,
-                      k: Int): DataFrame = {
-    val scored = cosineWalk(graph, vectors, oneQuery(query),
-      literalEntries(vectors, idCol, entryIds), OneQuery, idCol, vecCol,
-      beamOf(beam), rounds)
-    walkTopK(scored, scored, OneQuery, idCol, k).drop(OneQuery)
-  }
+                      k: Int): DataFrame =
+    cosineSearch(graph, vectors, oneQuery(query), Left(entryIds),
+      OneQuery, idCol, vecCol, Left(beam), rounds, k).drop(OneQuery)
 
   /** The per-bucket-entries walk BEHIND THE SIZE SWITCH (the
     * round-17 watch note made structural): derive the per-bucket
@@ -738,14 +779,12 @@ object Ann {
       : DataFrame = {
     val entries =
       if (bucketBits <= EntryLiteralMaxBits)
-        literalEntries(vectors, idCol,
-          topDegreeEntriesPerBucket(graph, index, idCol, perBucket))
-      else vectors.select(col(idCol)).join(
+        Left(topDegreeEntriesPerBucket(graph, index, idCol, perBucket))
+      else Right(vectors.select(col(idCol)).join(
         broadcast(topDegreeEntriesPerBucketFrame(graph, index, idCol,
-          perBucket)), Seq(idCol), "left_semi")
-    val scored = cosineWalk(graph, vectors, oneQuery(query), entries,
-      OneQuery, idCol, vecCol, beamOf(beam), rounds)
-    walkTopK(scored, scored, OneQuery, idCol, k).drop(OneQuery)
+          perBucket)), Seq(idCol), "left_semi"))
+    cosineSearch(graph, vectors, oneQuery(query), entries, OneQuery,
+      idCol, vecCol, Left(beam), rounds, k).drop(OneQuery)
   }
 
   /** FILTERED graph serving — the metadata-constrained search every
@@ -763,17 +802,10 @@ object Ann {
                               query: DataFrame, idCol: String,
                               vecCol: String, entryIds: Seq[Long],
                               beam: Int, rounds: Int, k: Int,
-                              pred: Column): DataFrame = {
-    val scored = cosineWalk(graph, vectors, oneQuery(query),
-      literalEntries(vectors, idCol, entryIds), OneQuery, idCol, vecCol,
-      beamOf(beam), rounds)
-    val passing = scored
-      .join(vectors.filter(pred).select(col(idCol)), Seq(idCol))
-    val nPass = passing.groupBy(OneQuery)
-      .agg(count(lit(1)).as("passed_visited"))
-    walkTopK(scored, passing, OneQuery, idCol, k)
-      .join(nPass, Seq(OneQuery)).drop(OneQuery)
-  }
+                              pred: Column): DataFrame =
+    cosineSearch(graph, vectors, oneQuery(query), Left(entryIds),
+      OneQuery, idCol, vecCol, Left(beam), rounds, k, Some(pred))
+      .drop(OneQuery)
 
   /** Batched [[graphBeamSearch]]: Q queries walk ONE shared graph in a
     * single plan per round — the serving shape a production graph-ANN
@@ -792,13 +824,10 @@ object Ann {
                            queries: DataFrame, idCol: String,
                            vecCol: String, queryIdCol: String,
                            entryIds: Seq[Long], beam: Int, rounds: Int,
-                           k: Int): DataFrame = {
-    val q = broadcast(queries.select(col(queryIdCol), col("qe")))
-    val scored = cosineWalk(graph, vectors, q,
-      literalEntries(vectors, idCol, entryIds), queryIdCol, idCol,
-      vecCol, beamOf(beam), rounds)
-    walkTopK(scored, scored, queryIdCol, idCol, k)
-  }
+                           k: Int): DataFrame =
+    cosineSearch(graph, vectors,
+      broadcast(queries.select(col(queryIdCol), col("qe"))),
+      Left(entryIds), queryIdCol, idCol, vecCol, Left(beam), rounds, k)
 
   /** [[graphBeamSearchBatch]] with a PER-QUERY beam width — the
     * capacity-sweep shape (v50): N operating points walk the one
@@ -813,17 +842,11 @@ object Ann {
                                   queries: DataFrame, idCol: String,
                                   vecCol: String, queryIdCol: String,
                                   beamCol: String, entryIds: Seq[Long],
-                                  rounds: Int, k: Int): DataFrame = {
-    val q = broadcast(
-      queries.select(col(queryIdCol), col("qe"), col(beamCol)))
-    val scored = cosineWalk(graph, vectors,
-      q.select(col(queryIdCol), col("qe")),
-      literalEntries(vectors, idCol, entryIds), queryIdCol, idCol,
-      vecCol, _.join(q.select(col(queryIdCol), col(beamCol)),
-          Seq(queryIdCol))
-        .filter(col("_r") <= col(beamCol)), rounds)
-    walkTopK(scored, scored, queryIdCol, idCol, k)
-  }
+                                  rounds: Int, k: Int): DataFrame =
+    cosineSearch(graph, vectors,
+      broadcast(queries.select(col(queryIdCol), col("qe"), col(beamCol))),
+      Left(entryIds), queryIdCol, idCol, vecCol, Right(beamCol), rounds,
+      k)
 
   /** The MULTI-INDEX batched walk: each query walks ITS OWN graph over
     * ITS OWN vector set — the serving shape of a tier answering across

@@ -36,16 +36,23 @@ object Kernels {
     * at shuffle parallelism, exactly the case the fan-out exists to
     * skip. Exchange-free plans (scans, checkpointed frames, narrow
     * projections — every current call site) keep the exact probe,
-    * which builds the RDD without running any job. */
-  def fanOut(df: DataFrame): DataFrame = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    val planned = df.queryExecution.executedPlan
-    val adaptive = planned.isInstanceOf[
-      org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec]
-    val hasExchange = adaptive || planned.exists(
-      _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange])
-    if (hasExchange) df
-    else if (df.rdd.getNumPartitions < p) df.repartition(p)
-    else df
-  }
+    * which builds the RDD without running any job.
+    *
+    * A frame the optimizer bounds at one row (the query vector of
+    * [[Opq.rotate]]) passes through too: one row has nothing to
+    * spread, and the exchange would only cost a shuffle into every
+    * core. */
+  def fanOut(df: DataFrame): DataFrame =
+    if (df.queryExecution.optimizedPlan.maxRows.exists(_ <= 1)) df
+    else {
+      val p = df.sparkSession.sparkContext.defaultParallelism
+      val planned = df.queryExecution.executedPlan
+      val adaptive = planned.isInstanceOf[
+        org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec]
+      val hasExchange = adaptive || planned.exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange])
+      if (hasExchange) df
+      else if (df.rdd.getNumPartitions < p) df.repartition(p)
+      else df
+    }
 }

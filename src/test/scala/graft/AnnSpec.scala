@@ -978,6 +978,62 @@ class AnnSpec extends SparkSpec {
     assert(msgs(e).exists(_.contains("different width")), msgs(e))
   }
 
+  /** Seeded 8-d vectors with planted near-duplicate CHAINS: each chain
+    * starts at a random point and every link adds a small random step
+    * (of three sizes), so neighbours are near-duplicates at different
+    * thresholds and chain ends may not be; plus unrelated singletons. */
+  private def chainedEmb(seed: Int): org.apache.spark.sql.DataFrame = {
+    val rng = new scala.util.Random(seed)
+    val chains = (0 until 12).flatMap { c =>
+      var v = Array.fill(8)(rng.nextGaussian())
+      (0 until 4).map { j =>
+        val step = Seq(0.05, 0.15, 0.3)(rng.nextInt(3))
+        if (j > 0) v = v.map(_ + rng.nextGaussian() * step)
+        (c * 10L + j, v.map(_.toFloat).toSeq)
+      }
+    }
+    val singles = (0 until 10).map(i =>
+      (500L + i, Seq.fill(8)(rng.nextGaussian().toFloat)))
+    vecsDf(chains ++ singles: _*)
+  }
+
+  test("nearDupRepsFromPairs over fineBucketScoredPairs at tauMin " +
+      "equals fineBucketNearDupReps at every tau >= tauMin") {
+    val emb = chainedEmb(seed = 23)
+    val tauMin = 0.8
+    val pairs = Ann.fineBucketScoredPairs(emb, "vec_id", "embedding",
+      bits = 12, fineBits = 3, tauMin = tauMin).localCheckpoint()
+    val collapsed = for (tau <- Seq(tauMin, 0.9, 0.97)) yield {
+      val got = Ann.nearDupRepsFromPairs(emb.select("vec_id"), pairs,
+        "vec_id", tau).as[(Long, Long)].collect().toMap
+      val want = Ann.fineBucketNearDupReps(emb, "vec_id", "embedding",
+        bits = 12, fineBits = 3, tau = tau).as[(Long, Long)].collect().toMap
+      assert(got == want, s"tau=$tau")
+      got.count { case (id, rep) => id != rep }
+    }
+    // the planted chains make each threshold collapse a different set
+    assert(collapsed == collapsed.sorted.reverse &&
+      collapsed.distinct.size == 3, collapsed)
+  }
+
+  test("fineBucketScoredPairs raises its error when a fine bucket " +
+      "exceeds maxBucketRows, and runs at a bound the largest meets") {
+    val emb = chainedEmb(seed = 23)
+    val largest = Ann.srpBucketIndex(emb, "vec_id", "embedding",
+        bits = 12, bucketBits = 3)
+      .groupBy("bucket").count().agg(max("count")).as[Long].head()
+    def pairs(bound: Long) = Ann.fineBucketScoredPairs(emb, "vec_id",
+      "embedding", bits = 12, fineBits = 3, tauMin = 0.8,
+      maxBucketRows = bound).count()
+    val e = intercept[Exception](pairs(largest - 1))
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    assert(msgs(e).exists(_.contains(
+      s"fineBucketScoredPairs: fine bucket of $largest rows exceeds " +
+        s"maxBucketRows=${largest - 1}")), msgs(e))
+    assert(pairs(largest) > 0)
+  }
+
   test("genRefDimCorpus two-range keying: no aliasing past 1000 " +
       "copies, low range bit-identical to the sealed fixtures") {
     import graft.queries.VectorQueries
@@ -1160,13 +1216,23 @@ class AnnSpec extends SparkSpec {
 
   // ---- walk equivalence: seeded random graphs --------------------------
 
+  /** Runs `body` on both walk paths: under the session's settings,
+    * where these small graphs fit the broadcast bound and take the
+    * one-job walk, and with broadcast joins off, where they take the
+    * per-round loop. */
+  private def onBothPaths(body: String => Unit): Unit = {
+    body("one-job")
+    withBroadcastDisabled(body("loop"))
+  }
+
   /** A plain-Scala beam walk, the rules every graph walk documents:
     * start from the entries present in `score`, then each round keep
-    * the `beam` best of the visited set (score desc, id asc) and add
-    * their out-neighbours. Returns the final visited set. */
-  private def refWalk(adj: Map[Long, Seq[Long]], score: Map[Long, Double],
-                      entries: Seq[Long], beam: Int,
-                      rounds: Int): Set[Long] = {
+    * the `beam` best of the visited set and add their out-neighbours
+    * present in `score`. A None score is a null vector's. Returns the
+    * final visited set. */
+  private def refWalk(adj: Map[Long, Seq[Long]],
+                      score: Map[Long, Option[Double]], entries: Seq[Long],
+                      beam: Int, rounds: Int): Set[Long] = {
     var visited = entries.filter(score.contains).toSet
     for (_ <- 1 to rounds) {
       val b = ranked(visited, score).take(beam)
@@ -1175,10 +1241,43 @@ class AnnSpec extends SparkSpec {
     visited
   }
 
-  /** Ids by score desc, then id asc — the walks' tie rule. */
-  private def ranked(ids: Set[Long], score: Map[Long, Double]): Seq[Long] =
+  /** Ids by score desc with null scores last, then id asc — the walks'
+    * tie rule. */
+  private def ranked(ids: Set[Long], score: Map[Long, Option[Double]])
+      : Seq[Long] =
     ids.toSeq.sortWith { (x, y) =>
-      score(x) > score(y) || (score(x) == score(y) && x < y) }
+      (score(x), score(y)) match {
+        case (Some(a), Some(b)) => a > b || (a == b && x < y)
+        case (Some(_), None)    => true
+        case (None, Some(_))    => false
+        case (None, None)       => x < y
+      }
+    }
+
+  /** The reference answer: (rank, id, score, nodes_touched) of the
+    * `k` best visited nodes passing `pass`, and how many passed. */
+  private def refTopK(adj: Map[Long, Seq[Long]],
+                      score: Map[Long, Option[Double]], entries: Seq[Long],
+                      beam: Int, rounds: Int, k: Int,
+                      pass: Long => Boolean = _ => true)
+      : (Seq[(Long, Long, Option[Double], Long)], Long) = {
+    val visited = refWalk(adj, score, entries, beam, rounds)
+    val passing = visited.filter(pass)
+    (ranked(passing, score).take(k).zipWithIndex.map { case (id, i) =>
+      (i + 1L, id, score(id), visited.size.toLong) }, passing.size.toLong)
+  }
+
+  /** Every query's cosine score per vector id (None for a null
+    * vector), from the same expression the walks use. */
+  private def cosineScores(vecs: org.apache.spark.sql.DataFrame,
+                           qdf: org.apache.spark.sql.DataFrame)
+      : Map[Long, Map[Long, Option[Double]]] =
+    vecs.crossJoin(qdf)
+      .select(col("query_id"), col("vec_id"),
+        graft.functions.VectorFunctions.cosineSim(col("embedding"),
+          col("qe")).as("score"))
+      .as[(Long, Long, Option[Double])].collect().groupBy(_._1)
+      .map { case (q, rs) => q -> rs.map(r => r._2 -> r._3).toMap }
 
   private case class WalkCase(vecs: org.apache.spark.sql.DataFrame,
                               graph: org.apache.spark.sql.DataFrame,
@@ -1218,16 +1317,16 @@ class AnnSpec extends SparkSpec {
   /** (rank, id, score, nodes_touched) rows of a walk result, per
     * query id when the result has a query_id column. */
   private def rows4(df: org.apache.spark.sql.DataFrame)
-      : Seq[(Long, Long, Double, Long)] =
+      : Seq[(Long, Long, Option[Double], Long)] =
     df.select(col("rank").cast("long"), col("vec_id"), col("score"),
         col("nodes_touched"))
-      .as[(Long, Long, Double, Long)].collect().toSeq.sortBy(_._1)
+      .as[(Long, Long, Option[Double], Long)].collect().toSeq.sortBy(_._1)
 
   private def byQuery(df: org.apache.spark.sql.DataFrame)
-      : Map[Long, Seq[(Long, Long, Double, Long)]] =
+      : Map[Long, Seq[(Long, Long, Option[Double], Long)]] =
     df.select(col("query_id"), col("rank").cast("long"), col("vec_id"),
         col("score"), col("nodes_touched"))
-      .as[(Long, Long, Long, Double, Long)].collect().toSeq
+      .as[(Long, Long, Long, Option[Double], Long)].collect().toSeq
       .groupBy(_._1).map { case (q, rs) =>
         q -> rs.map(r => (r._2, r._3, r._4, r._5)).sortBy(_._1) }
 
@@ -1235,44 +1334,186 @@ class AnnSpec extends SparkSpec {
       "multi-index walks equal their slice of graphBeamSearchBatch") {
     for (c <- walkCases(seed = 20261017, n = 4)) {
       val qdf = c.queries.toDF("query_id", "qe")
-      val batch = byQuery(Ann.graphBeamSearchBatch(c.graph, c.vecs, qdf,
-        "vec_id", "embedding", "query_id", c.entries, c.beam, c.rounds,
-        c.k))
-      // the batch itself against the plain-Scala walk over the same
-      // scores (same cosine expression, so bit-identical doubles)
-      val scores = c.vecs.crossJoin(qdf)
-        .select(col("query_id"), col("vec_id"),
-          graft.functions.VectorFunctions.cosineSim(col("embedding"),
-            col("qe")).as("score"))
-        .as[(Long, Long, Double)].collect().groupBy(_._1)
-        .map { case (q, rs) => q -> rs.map(r => r._2 -> r._3).toMap }
-      for ((qid, qe) <- c.queries) {
-        val s = scores(qid)
-        val visited = refWalk(c.adj, s, c.entries, c.beam, c.rounds)
-        val want = ranked(visited, s).take(c.k)
-          .zipWithIndex.map { case (id, i) =>
-            (i + 1L, id, s(id), visited.size.toLong) }
-        assert(batch(qid) == want, s"batch q$qid vs reference")
-        val q1 = Seq(Tuple1(qe)).toDF("qe")
-        assert(rows4(Ann.graphBeamSearch(c.graph, c.vecs, q1, "vec_id",
-          "embedding", c.entries, c.beam, c.rounds, c.k)) == want,
-          s"graphBeamSearch q$qid")
-        assert(rows4(Ann.graphBeamSearchFiltered(c.graph, c.vecs, q1,
-          "vec_id", "embedding", c.entries, c.beam, c.rounds, c.k,
-          pred = lit(true))) == want, s"filtered q$qid")
+      // the plain-Scala walk over the same scores (same cosine
+      // expression, so bit-identical doubles)
+      val scores = cosineScores(c.vecs, qdf)
+      onBothPaths { path =>
+        val batch = byQuery(Ann.graphBeamSearchBatch(c.graph, c.vecs, qdf,
+          "vec_id", "embedding", "query_id", c.entries, c.beam, c.rounds,
+          c.k))
+        for ((qid, qe) <- c.queries) {
+          val (want, _) = refTopK(c.adj, scores(qid), c.entries, c.beam,
+            c.rounds, c.k)
+          assert(batch(qid) == want, s"$path: batch q$qid vs reference")
+          val q1 = Seq(Tuple1(qe)).toDF("qe")
+          assert(rows4(Ann.graphBeamSearch(c.graph, c.vecs, q1, "vec_id",
+            "embedding", c.entries, c.beam, c.rounds, c.k)) == want,
+            s"$path: graphBeamSearch q$qid")
+          assert(rows4(Ann.graphBeamSearchFiltered(c.graph, c.vecs, q1,
+            "vec_id", "embedding", c.entries, c.beam, c.rounds, c.k,
+            pred = lit(true))) == want, s"$path: filtered q$qid")
+        }
+        val varBeam = byQuery(Ann.graphBeamSearchBatchVarBeam(c.graph,
+          c.vecs, qdf.withColumn("beam", lit(c.beam)), "vec_id",
+          "embedding", "query_id", "beam", c.entries, c.rounds, c.k))
+        assert(varBeam == batch, s"$path: var-beam at a uniform beam")
+        // one index, tagged per query: every query walks the same graph
+        val ix = qdf.select(col("query_id"))
+        val multi = byQuery(Ann.graphBeamSearchMultiIndex(
+          c.graph.crossJoin(ix), c.vecs.crossJoin(ix), qdf,
+          c.entries.toDF("vec_id").crossJoin(ix), "vec_id", "embedding",
+          "query_id", c.beam, c.rounds, c.k))
+        assert(multi == batch, s"$path: multi-index over one index")
       }
-      val varBeam = byQuery(Ann.graphBeamSearchBatchVarBeam(c.graph,
-        c.vecs, qdf.withColumn("beam", lit(c.beam)), "vec_id",
-        "embedding", "query_id", "beam", c.entries, c.rounds, c.k))
-      assert(varBeam == batch, "var-beam at a uniform beam")
-      // one index, tagged per query: every query walks the same graph
-      val ix = qdf.select(col("query_id"))
-      val multi = byQuery(Ann.graphBeamSearchMultiIndex(
-        c.graph.crossJoin(ix), c.vecs.crossJoin(ix), qdf,
-        c.entries.toDF("vec_id").crossJoin(ix), "vec_id", "embedding",
-        "query_id", c.beam, c.rounds, c.k))
-      assert(multi == batch, "multi-index over one index")
     }
+  }
+
+  /** Ids 1..12 on three 4-d directions scaled by 1 or 2 (so scores
+    * tie), id 5 with a NULL vector; the graph also reaches 13 and 14,
+    * which have no vector. */
+  private def edgeCase(seed: Int)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
+        Map[Long, Seq[Long]], org.apache.spark.sql.DataFrame) = {
+    val rng = new scala.util.Random(seed)
+    val dirs = Seq(Array(1f, 2f, -1f, 1f), Array(-2f, 1f, 1f, 1f),
+      Array(1f, -1f, -2f, 2f))
+    val vecs = (1L to 12L).map { i =>
+      (i, if (i == 5L) null else dirs((i % 3).toInt).map(_ * (1 + i % 2)))
+    }.toDF("vec_id", "embedding")
+    val nodes = (1L to 14L)
+    val adj = nodes.map(s => s -> rng.shuffle(nodes.filter(_ != s))
+      .take(2 + rng.nextInt(2))).toMap
+    val graph = adj.toSeq.flatMap { case (s, ds) => ds.map(s -> _) }
+      .toDF("src", "dst")
+    val qdf = (1 to 3).map(q => (q.toLong,
+      Array.fill(4)(rng.nextGaussian().toFloat))).toDF("query_id", "qe")
+    (vecs, graph, adj, qdf)
+  }
+
+  test("walk edge cases on both paths: edges to nodes without a " +
+      "vector, an absent entry, a null vector, rounds = 0 and a " +
+      "filter most nodes fail all equal the plain-Scala walk") {
+    val (vecs, graph, adj, qdf) = edgeCase(seed = 11)
+    val scores = cosineScores(vecs, qdf)
+    val qes = qdf.as[(Long, Array[Float])].collect().toSeq
+    // 99 has no vector; 5's vector is null (scored null, ranked last)
+    val entries = Seq(99L, 5L, 2L)
+    val pass = (id: Long) => id % 4 == 0
+    for ((beam, rounds) <- Seq((2, 0), (2, 3), (1, 2), (3, 1))) {
+      onBothPaths { path =>
+        val ctx = s"$path beam=$beam rounds=$rounds"
+        val batch = byQuery(Ann.graphBeamSearchBatch(graph, vecs, qdf,
+          "vec_id", "embedding", "query_id", entries, beam, rounds, 4))
+        for ((qid, qe) <- qes) {
+          val (want, _) = refTopK(adj, scores(qid), entries, beam, rounds, 4)
+          assert(batch(qid) == want, s"$ctx: batch q$qid")
+          val (wantF, nPass) = refTopK(adj, scores(qid), entries, beam,
+            rounds, 4, pass)
+          val filtered = Ann.graphBeamSearchFiltered(graph, vecs,
+              Seq(Tuple1(qe)).toDF("qe"), "vec_id", "embedding", entries,
+              beam, rounds, 4, pred = col("vec_id") % 4 === 0)
+          assert(rows4(filtered) == wantF, s"$ctx: filtered q$qid")
+          assert(filtered.select("passed_visited").as[Long].collect()
+            .forall(_ == nPass), s"$ctx: passed_visited q$qid")
+        }
+      }
+    }
+  }
+
+  test("walk edge cases on both paths: duplicate vector ids give the " +
+      "loop's answer; a width mismatch throws; schemas are identical") {
+    val (vecs, graph, _, qdf) = edgeCase(seed = 12)
+    val dup = vecs.unionByName(
+      Seq((3L, Array(2f, 1f, 0f, 1f))).toDF("vec_id", "embedding"))
+    def walk(v: org.apache.spark.sql.DataFrame) =
+      byQuery(Ann.graphBeamSearchBatch(graph, v, qdf, "vec_id",
+        "embedding", "query_id", Seq(3L, 1L), beam = 2, rounds = 2, k = 5))
+    // id 3 is an entry, so both of its rows are visited
+    assert(walk(dup) == withBroadcastDisabled(walk(dup)))
+
+    def causes(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: causes(t.getCause)
+    val narrow = Seq((1L, Array(1f, 0f, 0f))).toDF("query_id", "qe")
+    onBothPaths { path =>
+      val e = intercept[Exception] {
+        Ann.graphBeamSearchBatch(graph, vecs, narrow, "vec_id",
+          "embedding", "query_id", Seq(1L, 2L), beam = 2, rounds = 1,
+          k = 3).collect()
+      }
+      assert(causes(e).exists {
+        case a: IllegalArgumentException =>
+          a.getMessage.contains("vector dimensions differ: 4 vs 3")
+        case _ => false
+      }, s"$path: ${causes(e).map(_.toString)}")
+    }
+
+    val q1 = qdf.limit(1).select("qe")
+    def walks(): Seq[org.apache.spark.sql.DataFrame] = Seq(
+      Ann.graphBeamSearch(graph, vecs, q1, "vec_id", "embedding",
+        Seq(1L), 2, 1, 3),
+      Ann.graphBeamSearchFiltered(graph, vecs, q1, "vec_id", "embedding",
+        Seq(1L), 2, 1, 3, pred = col("vec_id") > 2),
+      Ann.graphBeamSearchBatch(graph, vecs, qdf, "vec_id", "embedding",
+        "query_id", Seq(1L), 2, 1, 3),
+      Ann.graphBeamSearchBatchVarBeam(graph, vecs,
+        qdf.withColumn("beam", col("query_id").cast("int")), "vec_id",
+        "embedding", "query_id", "beam", Seq(1L), 1, 3))
+    val oneJob = walks().map(_.schema)
+    assert(oneJob == withBroadcastDisabled(walks().map(_.schema)))
+  }
+
+  /** Spark jobs started by `body`, counted by a listener. Listener
+    * events arrive asynchronously but in order, so a marker job run
+    * after `body` flushes every count. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("jobs-of")       => jobs.incrementAndGet()
+          case Some("jobs-of-flush") => flushed.countDown()
+          case _                     =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("jobs-of", "counted")
+      body
+      sc.setJobGroup("jobs-of-flush", "flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a 16-query batch walk over a small graph runs in at most 3 " +
+      "Spark jobs under default settings") {
+    val rng = new scala.util.Random(3)
+    val n = 200
+    val vecs = vecsDf((1 to n).map(i =>
+      (i.toLong, Seq.fill(8)(rng.nextGaussian().toFloat))): _*)
+    val graph = (1 to n).flatMap(s =>
+      Seq.fill(4)((s.toLong, 1L + rng.nextInt(n)))).toDF("src", "dst")
+    val qdf = (1 to 16).map(q =>
+      (q.toLong, Array.fill(8)(rng.nextGaussian().toFloat)))
+      .toDF("query_id", "qe")
+    var answered = 0
+    def walk(): Unit = answered = Ann.graphBeamSearchBatch(graph, vecs,
+        qdf, "vec_id", "embedding", "query_id", Seq(1L, 2L, 3L),
+        beam = 4, rounds = 3, k = 5)
+      .collect().map(_.getLong(0)).distinct.length
+    val oneJob = jobsOf(walk())
+    assert(answered == 16)
+    assert(oneJob <= 3, s"one-job walk ran $oneJob jobs")
+    // the counter sees the loop's one job per round
+    val loop = withBroadcastDisabled(jobsOf(walk()))
+    assert(loop > 3, s"per-round loop ran $loop jobs")
   }
 
   test("walk equivalence: graphBeamWalkPq's scored visited set equals " +
@@ -1286,13 +1527,13 @@ class AnnSpec extends SparkSpec {
       for ((qid, qe) <- c.queries) {
         val s = codes.select(col("vec_id"),
             negate(Pq.adcDistance(col("codes"), qe, model)).as("score"))
-          .as[(Long, Double)].collect().toMap
+          .as[(Long, Option[Double])].collect().toMap
         val want = refWalk(c.adj, s, c.entries, c.beam, c.rounds)
           .toSeq.map(id => id -> s(id)).sortBy(_._1)
         val got = Ann.graphBeamWalkPq(c.graph, codes, qe, model,
             "vec_id", c.entries, c.beam, c.rounds)
           .select(col("vec_id"), col("score"))
-          .as[(Long, Double)].collect().toSeq.sortBy(_._1)
+          .as[(Long, Option[Double])].collect().toSeq.sortBy(_._1)
         assert(got == want, s"pq walk q$qid")
       }
     }

@@ -83,4 +83,19 @@ class ArtifactsSpec extends SparkSpec {
       Artifacts.inputDigest("/tmp/graft_definitely_absent_xyz"): Unit
     } finally java.nio.file.Files.delete(f)
   }
+
+  test("a failed warm step keeps its message, and the failures JSON " +
+      "lists it as valid JSON; a clean step reports none") {
+    val msg = "no \"corpus\"\n\tat step 2"
+    val failed = SparkEntry.warmStep("v00_owner")(
+      throw new IllegalStateException(msg))
+    val ok = SparkEntry.warmStep("v01_owner")(())
+    assert(failed.failure.contains(msg) && ok.failure.isEmpty)
+    def json(ws: SparkEntry.Warmed*) =
+      SparkEntry.failuresJson(ws.flatMap(w => w.failure.map(w.name -> _)))
+    assert(json(ok) == "[]")
+    assert(spark.read.json(Seq(json(ok, failed)).toDS())
+      .select("name", "message")
+      .as[(String, String)].collect().toSeq == Seq(("v00_owner", msg)))
+  }
 }

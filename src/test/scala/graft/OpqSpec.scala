@@ -131,4 +131,13 @@ class OpqSpec extends SparkSpec {
     val back = Opq.loadRotation(spark, dir)
     assert(back.map(_.toSeq).toSeq == rot.map(_.toSeq).toSeq)
   }
+
+  test("fanOut passes a one-row frame through and spreads a small " +
+      "one-partition scan") {
+    val p = spark.sparkContext.defaultParallelism
+    val one = Seq(Tuple1(Array(1f, 2f))).toDF("qe")
+    assert(graft.operators.Kernels.fanOut(one) eq one)
+    val few = Seq(1L, 2L, 3L).toDF("id").coalesce(1)
+    assert(graft.operators.Kernels.fanOut(few).rdd.getNumPartitions == p)
+  }
 }

@@ -237,7 +237,10 @@ class PlanSpec extends SparkSpec {
 
   test("v50 variable-beam sweep: the four widths share one plan per " +
       "round — no cartesian, graph expansion stays an equi-join") {
-    val p = finalPlan(VectorQueries.graphBeamSweep(spark, sf))
+    // broadcast joins off: the walk's inputs would otherwise fit the
+    // one-job path, and this test reads the per-round plan
+    val p = withBroadcastDisabled(
+      finalPlan(VectorQueries.graphBeamSweep(spark, sf)))
     // the sweep's whole economics: frontier expansion joins the graph
     // on src (equi), re-scoring joins vectors on vec_id (equi); the
     // only nested-loop is the deliberate broadcast of the 4-row
@@ -260,20 +263,6 @@ class PlanSpec extends SparkSpec {
     val p = plan(VectorQueries.filteredKnn(spark, sf))
     assert(p.contains("LessThan(label,5)"),
       s"label predicate did not reach PushedFilters:\n$p")
-  }
-
-  /** Pin autoBroadcastJoinThreshold=-1 for `body`, restoring whatever
-    * value (or absence) was there before — set/unset would discard a
-    * value another suite had installed on the shared session. */
-  private def withBroadcastDisabled[T](body: => T): T = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "-1")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
   }
 
   test("i11's bucketed join never exchanges on the join key") {
@@ -547,18 +536,20 @@ class PlanSpec extends SparkSpec {
       s"entry literal leaked into the in-plan form:\n$p0")
     // result equality across the switch: bucketBits = 12 (> the
     // literal max of 11) routes to the frame path; forcing the
-    // literal path on the same inputs must rank identically
+    // literal path on the same inputs must rank identically. Rows are
+    // compared in rank order: the literal side may take the one-job
+    // walk, whose row order differs from the loop's
     val viaSwitch = Ann.graphBeamSearchPerBucket(graph, emb, q,
         "vec_id", "embedding", idx, perBucket = 2, bucketBits = 12,
         beam = 4, rounds = 2, k = 3)
       .select("rank", "vec_id").collect().map(r =>
-        (r.getLong(0), r.getLong(1))).toSeq
+        (r.getLong(0), r.getLong(1))).toSeq.sorted
     val viaLiteral = Ann.graphBeamSearch(graph, emb, q, "vec_id",
         "embedding",
         Ann.topDegreeEntriesPerBucket(graph, idx, "vec_id", 2),
         beam = 4, rounds = 2, k = 3)
       .select("rank", "vec_id").collect().map(r =>
-        (r.getLong(0), r.getLong(1))).toSeq
+        (r.getLong(0), r.getLong(1))).toSeq.sorted
     assert(viaSwitch == viaLiteral && viaSwitch.nonEmpty,
       s"switch=$viaSwitch literal=$viaLiteral")
     assert(Ann.EntryLiteralMaxBits == 11)

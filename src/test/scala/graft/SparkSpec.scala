@@ -32,6 +32,20 @@ abstract class SparkSpec extends AnyFunSuite {
     rows.toSeq.toDF("doc_id", "text")
   }
 
+  /** Pin autoBroadcastJoinThreshold=-1 for `body`, restoring whatever
+    * value (or absence) was there before — set/unset would discard a
+    * value another suite had installed on the shared session. */
+  def withBroadcastDisabled[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
   def vecsDf(rows: (Long, Seq[Float])*): DataFrame = {
     import spark.implicits._
     rows.toSeq.map { case (id, v) => (id, v.toArray) }
