@@ -24,6 +24,18 @@ import org.apache.spark.sql.functions._
   * (doc_id, embedding) projection, rebuilt lazily after each write —
   * synchronizeFAISS parity.
   *
+  * Reads go through one store snapshot ([[documents]]): the store is
+  * listed and its schema inferred once per change, not once per call,
+  * and nothing is persisted for it. A read sees every row committed
+  * before the snapshot was taken. The snapshot and both indexes are
+  * dropped on this engine's writes, and when the store directory's
+  * modification time differs from the one recorded with the snapshot
+  * (one FS status call per read, no Spark job) — that is how a write by
+  * another engine or JVM shows. On file systems without directory
+  * mtimes (object stores), another writer's rows show after this
+  * engine's next write. Writes never read the snapshot: ingest and
+  * delete resolve the store afresh under [[Ingest.withStoreLock]].
+  *
   * All mutation goes through dedup-ingest (INSERT OR IGNORE parity) and
   * contiguous id assignment. Embedding is the deterministic hash
   * embedder ([[graft.expressions.HashEmbed]]); answering is extractive
@@ -48,11 +60,31 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
              distributedIds: Boolean = false,
              embedder: Embedder = HashEmbedder) {
 
+  /** The store as the reads see it: the resolved relation and the store
+    * directory's modification time when it was resolved. */
+  private case class Snapshot(docs: DataFrame, mtime: Option[Long])
+
+  @volatile private var snapshot: Option[Snapshot] = None
   @volatile private var cachedIndex: Option[DataFrame] = None
   @volatile private var cachedLexical
       : Option[graft.operators.TextSearch.Bm25Index] = None
 
-  /** True iff the store path exists and is readable. "Path does not
+  private def storeDir: org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(storePath)
+
+  private def storeFs: org.apache.hadoop.fs.FileSystem =
+    storeDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The store directory's modification time, `None` when it does not
+    * exist: one FS status call, no Spark job. Appends and the delete's
+    * directory swap both move it on file systems that keep directory
+    * mtimes; any other failure propagates.
+    */
+  private def storeMtime(): Option[Long] =
+    try Some(storeFs.getFileStatus(storeDir).getModificationTime)
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** The store resolved now, or `None` when it is empty. "Path does not
     * exist" and "directory exists but holds no files" (a crashed first
     * write can leave one) both mean an empty store — neither has
     * readable doc_ids, so restarting id assignment is safe. Any OTHER
@@ -60,11 +92,11 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
     * treating a real-but-unreadable store as empty would restart doc_id
     * assignment at 0 and append duplicate ids once it becomes readable.
     */
-  private def storeExists: Boolean =
-    try { spark.read.parquet(storePath).schema; true }
+  private def readStore(): Option[DataFrame] =
+    try Some(spark.read.parquet(storePath))
     catch {
       case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" => false
+          if e.getCondition == "PATH_NOT_FOUND" => None
       case e: org.apache.spark.sql.AnalysisException
           if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
         // evaluate the FS listing outside the pattern guard: a listing
@@ -77,7 +109,7 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
           catch {
             case scala.util.control.NonFatal(t) => t.addSuppressed(e); throw t
           }
-        if (onlyMeta) false else throw e
+        if (onlyMeta) None else throw e
     }
 
   /** Hadoop-FS listing (works for HDFS/S3/local alike, unlike
@@ -85,48 +117,67 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
     * classify a real-but-unreadable store as empty). A listing failure
     * propagates — same rationale as the schema-inference guard above.
     */
-  private def storeHoldsOnlyMetadataFiles: Boolean = {
-    val hPath = new org.apache.hadoop.fs.Path(storePath)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(hPath).forall { st =>
+  private def storeHoldsOnlyMetadataFiles: Boolean =
+    storeFs.listStatus(storeDir).forall { st =>
       val n = st.getPath.getName
       n.startsWith("_") || n.startsWith(".")
     }
-  }
 
-  /** Full store scan (GET /documents). */
-  def documents(): DataFrame =
-    if (storeExists) spark.read.parquet(storePath)
-    else spark.emptyDataFrame
-      .select(lit(0L).as("doc_id"), lit("").as("source"),
-        lit(0).as("chunk_ix"), lit("").as("content"),
-        array().cast("array<float>").as("embedding"))
-      .limit(0)
+  private def emptyStore: DataFrame = spark.emptyDataFrame
+    .select(lit(0L).as("doc_id"), lit("").as("source"),
+      lit(0).as("chunk_ix"), lit("").as("content"),
+      array().cast("array<float>").as("embedding"))
+    .limit(0)
+
+  /** Full store scan (GET /documents): the snapshot every read goes
+    * through. It is resolved (listing and schema inference) once per
+    * store change, not per call, and is never persisted. It is dropped
+    * with both indexes on this engine's writes, and when the store
+    * directory's modification time moved since it was taken — another
+    * engine's write.
+    */
+  def documents(): DataFrame = synchronized {
+    // the mtime is read BEFORE the listing: a write landing between the
+    // two leaves a snapshot keyed on the older time, which the next
+    // call re-resolves, never a stale snapshot keyed on the newer one
+    val mtime = storeMtime()
+    snapshot match {
+      case Some(s) if s.mtime == mtime => s.docs
+      case _ =>
+        invalidateIndex()
+        val docs = readStore().getOrElse(emptyStore)
+        snapshot = Some(Snapshot(docs, mtime))
+        docs
+    }
+  }
 
   def countDocuments(): Long = documents().count()
 
   /** The cached (doc_id, embedding) index, built on demand. */
   def index(): DataFrame = synchronized {
+    val docs = documents()
     cachedIndex.getOrElse {
-      val idx = Ingest.buildIndex(documents(), "doc_id", "embedding")
+      val idx = Ingest.buildIndex(docs, "doc_id", "embedding")
       cachedIndex = Some(idx)
       idx
     }
   }
 
   /** The cached BM25 corpus statistics, built on demand and released
-    * together with the vector index on every store write.
+    * together with the vector index whenever the snapshot is dropped.
     */
   def lexicalIndex(): graft.operators.TextSearch.Bm25Index = synchronized {
+    val docs = documents()
     cachedLexical.getOrElse {
       val idx = graft.operators.TextSearch.buildBm25Index(
-        documents().select("doc_id", "content"), "doc_id", "content")
+        docs.select("doc_id", "content"), "doc_id", "content")
       cachedLexical = Some(idx)
       idx
     }
   }
 
   private def invalidateIndex(): Unit = synchronized {
+    snapshot = None
     cachedIndex.foreach(_.unpersist())
     cachedIndex = None
     cachedLexical.foreach(_.release())
@@ -146,7 +197,9 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
     Ingest.withStoreLock(spark, storePath) { ingestLocked(docs) }
 
   private def ingestLocked(docs: DataFrame): Long = {
-    val store = documents()
+    // resolved fresh under the lock, never the snapshot: dedup and id
+    // assignment must see every row another writer committed
+    val store = readStore().getOrElse(emptyStore)
     val chunked = Chunker.chunk(docs, "text", chunkSize, overlap)
       .select(col("source"), col("chunk_ix"), col("chunk").as("content"))
     val embedded = embedder.embed(chunked, "content", dim)
@@ -217,20 +270,22 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
     */
   def deleteDocuments(ids: Seq[Long]): Long = {
     import spark.implicits._
-    if (ids.isEmpty || !storeExists) return 0L
+    if (ids.isEmpty || storeMtime().isEmpty) return 0L
     Ingest.withStoreLock(spark, storePath) {
-      val victims = ids.distinct.toDF("doc_id")
-      val n = documents()
-        .join(broadcast(victims), Seq("doc_id"), "left_semi").count()
-      if (n > 0) {
-        val tmp = storePath + ".delete.tmp"
-        documents().join(broadcast(victims), Seq("doc_id"), "left_anti")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(tmp)
-        Ingest.replaceStoreDir(spark, tmp, storePath)
-        invalidateIndex()
+      readStore().fold(0L) { store =>
+        val victims = ids.distinct.toDF("doc_id")
+        val n = store.join(broadcast(victims), Seq("doc_id"), "left_semi")
+          .count()
+        if (n > 0) {
+          val tmp = storePath + ".delete.tmp"
+          store.join(broadcast(victims), Seq("doc_id"), "left_anti")
+            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+            .option("compression", "zstd").parquet(tmp)
+          Ingest.replaceStoreDir(spark, tmp, storePath)
+          invalidateIndex()
+        }
+        n
       }
-      n
     }
   }
 
@@ -283,9 +338,10 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
       "qe", shortlistSize)
     val ranked = Search.mmrRerank(shortlist, "doc_id", "embedding",
       "score", k, lambda)
+    // k rows: the limit plans the sort as one top-k, not a range exchange
     Search.enrich(ranked, documents().select("doc_id", "content"), "doc_id")
       .select("rank", "doc_id", "mmr", "content")
-      .orderBy("rank")
+      .orderBy("rank").limit(k)
   }
 
   /** Hybrid retrieval: cosine ranking fused with BM25 lexical ranking
@@ -305,7 +361,7 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
     val fused = TextSearch.rrfFuse(lexical, vector, "doc_id", k)
     Search.enrich(fused, documents().select("doc_id", "content"), "doc_id")
       .select("doc_id", "rrf_score", "content")
-      .orderBy(col("rrf_score").desc, col("doc_id"))
+      .orderBy(col("rrf_score").desc, col("doc_id")).limit(k)
   }
 
   /** The reference's context string (server.js:251-254). */

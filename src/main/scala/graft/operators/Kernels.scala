@@ -36,7 +36,9 @@ object Kernels {
     * at shuffle parallelism, exactly the case the fan-out exists to
     * skip. Exchange-free plans (scans, checkpointed frames, narrow
     * projections — every current call site) keep the exact probe,
-    * which builds the RDD without running any job.
+    * which builds the RDD without running any job. It reads the RDD of
+    * the physical plan already built for that check; `df.rdd` would
+    * plan the input a second time.
     *
     * A frame the optimizer bounds at one row (the query vector of
     * [[Opq.rotate]]) passes through too: one row has nothing to
@@ -52,7 +54,7 @@ object Kernels {
       val hasExchange = adaptive || planned.exists(
         _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange])
       if (hasExchange) df
-      else if (df.rdd.getNumPartitions < p) df.repartition(p)
+      else if (df.queryExecution.toRdd.getNumPartitions < p) df.repartition(p)
       else df
     }
 }

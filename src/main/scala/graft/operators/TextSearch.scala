@@ -34,7 +34,8 @@ object TextSearch {
     * expensive narrow pass over every document — runs exactly once per
     * frame here and is persisted, so any number of queries against the
     * same corpus reuse it (the same shape as the persisted vector
-    * index, [[graft.operators.Ingest.buildIndex]]).
+    * index, [[graft.operators.Ingest.buildIndex]]). (N, avgdl) is
+    * collected here once and held as a one-row local frame.
     *
     * OWNERSHIP: the index holds two persisted frames; the caller that
     * built it must call [[Bm25Index.release]] (or clear the session
@@ -56,10 +57,13 @@ object TextSearch {
     // aggregate inside broadcast futures that run concurrently with the
     // main join job; racing readers of a lazily-persisted frame each
     // recompute the full tokenization scan (same fix as
-    // Dedup.ngramJaccardPairs)
-    lens.count()
+    // Dedup.ngramJaccardPairs). The (N, avgdl) collect is the lens
+    // materialization; its one row is kept as a local frame, so no
+    // scoring call re-aggregates the corpus.
+    val stats = lens.agg(count("*").as("n"), avg("dl").as("avgdl"))
+    val corpus = docs.sparkSession.createDataFrame(
+      java.util.Arrays.asList(stats.collect(): _*), stats.schema)
     postings.count()
-    val corpus = lens.agg(count("*").as("n"), avg("dl").as("avgdl"))
     Bm25Index(lens, postings, corpus, idCol)
   }
 

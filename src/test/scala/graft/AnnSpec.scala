@@ -1462,36 +1462,6 @@ class AnnSpec extends SparkSpec {
     assert(oneJob == withBroadcastDisabled(walks().map(_.schema)))
   }
 
-  /** Spark jobs started by `body`, counted by a listener. Listener
-    * events arrive asynchronously but in order, so a marker job run
-    * after `body` flushes every count. */
-  private def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some("jobs-of")       => jobs.incrementAndGet()
-          case Some("jobs-of-flush") => flushed.countDown()
-          case _                     =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("jobs-of", "counted")
-      body
-      sc.setJobGroup("jobs-of-flush", "flush")
-      sc.parallelize(Seq(1), 1).count()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      jobs.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("a 16-query batch walk over a small graph runs in at most 3 " +
       "Spark jobs under default settings") {
     val rng = new scala.util.Random(3)

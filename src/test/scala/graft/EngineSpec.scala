@@ -277,4 +277,78 @@ class EngineSpec extends SparkSpec {
       assert(ids.distinct.length == ids.length)
     } finally pool.shutdown()
   }
+
+  test("reads on a warmed engine reuse the store snapshot: search and " +
+      "searchDiverse run in at most 3 Spark jobs, hybridSearch in 8") {
+    val e = freshEngine
+    e.loadDocuments(corpusDir)
+    e.addDocument("john likes tea")
+    e.addDocument("charts are visual")
+    val q = "a calming cup of tea"
+    def search() = e.search(q, k = 2).collect()
+    def diverse() = e.searchDiverse(q, k = 2).collect()
+    def hybrid() = e.hybridSearch(q, k = 2).collect()
+    // warm: snapshot resolved, both indexes built
+    search(); diverse(); hybrid()
+    val jobs = Seq("search" -> jobsOf(search()),
+      "searchDiverse" -> jobsOf(diverse()),
+      "hybridSearch" -> jobsOf(hybrid())).toMap
+    assert(jobs("search") <= 3, jobs)
+    assert(jobs("searchDiverse") <= 3, jobs)
+    assert(jobs("hybridSearch") <= 8, jobs)
+  }
+
+  test("two engines on one store: each sees the other's appends and " +
+      "deletes on its next read, and writes never read a stale snapshot") {
+    import spark.implicits._
+    val store = Files.createTempDirectory("graft_two").toString + "/store"
+    def engine() = new Engine(spark, store, dim = 64, chunkSize = 40,
+      overlap = 10)
+    val a = engine()
+    val b = engine()
+    val alpha = "alpha body text"
+    val beta = "beta body text"
+    def contents(e: Engine) =
+      e.documents().select("content").as[String].collect().toSet
+    def searched(e: Engine, q: String) =
+      e.search(q, k = 3).select("content").as[String].collect().toSet
+    def ids(e: Engine) = e.documents().select("doc_id").as[Long].collect()
+
+    assert(a.addDocument(alpha, "a") == 1)
+    // A's snapshot is warm before B writes. A holds no cached index yet:
+    // an append through the same session refreshes the file listing
+    // under every cached plan over the path, which would hide a stale
+    // read here
+    assert(a.countDocuments() == 1)
+
+    assert(b.addDocument(beta, "b") == 1)
+    // ingest resolves the store under the lock: B's row is a duplicate
+    // for A although A has not read since B's write
+    assert(a.addDocument(beta, "a") == 0)
+    assert(a.countDocuments() == 2)
+    assert(contents(a) == Set(alpha, beta))
+    assert(searched(a, beta).contains(beta))
+    assert(a.hybridSearch(beta, k = 2).select("content").as[String]
+      .collect().toSet == Set(alpha, beta))
+    // both of A's indexes are now built over B's row
+
+    val betaId = b.documents().filter($"content" === beta)
+      .select("doc_id").as[Long].head()
+    assert(b.deleteDocuments(Seq(betaId)) == 1)
+    // A's snapshot pointed at files the delete removed: the next reads
+    // re-resolve instead of failing with FileNotFoundException
+    assert(a.countDocuments() == 1)
+    assert(contents(a) == Set(alpha))
+    // top-1 reads: a stale index would rank B's deleted row first, and
+    // the enrich join against the fresh snapshot would then drop it
+    assert(a.answer(beta) == alpha)
+    assert(a.hybridSearch(beta, k = 1).select("content").as[String]
+      .collect().toSeq == Seq(alpha))
+
+    // B's snapshot is warm, then A appends: B's next id follows A's
+    assert(b.countDocuments() == 1)
+    assert(a.addDocument("gamma body text", "a") == 1)
+    assert(b.addDocument("delta body text", "b") == 1)
+    assert(ids(a).sorted.toSeq == Seq(1L, 2L, 3L))
+  }
 }

@@ -31,6 +31,46 @@ class TextSearchSpec extends SparkSpec {
     assert(scores(0) / scores(1) < 3.0, "saturation failed")
   }
 
+  test("bm25ScoresIndexed equals a plain-Scala BM25 to the last bit, " +
+      "a zero-token document counting in N and avgdl") {
+    val rng = new scala.util.Random(11)
+    val vocab = Seq("hash", "join", "merge", "sort", "scan", "spill")
+    val texts = (1 to 12).map(_ =>
+      Seq.fill(1 + rng.nextInt(9))(vocab(rng.nextInt(vocab.size)))
+        .mkString(" ")) :+ "   "
+    val corpus = texts.zipWithIndex.map { case (t, i) => (i + 1L, t) }
+    val index = TextSearch.buildBm25Index(docsDf(corpus: _*), "doc_id",
+      "text")
+    try {
+      val k1 = 1.2
+      val b = 0.75
+      val toks = corpus.map { case (id, t) =>
+        id -> t.trim.split("\\s+").filter(_.nonEmpty).toSeq }.toMap
+      val n = toks.size.toLong
+      val avgdl = toks.values.map(_.size.toDouble).sum / n
+      def expected(terms: Seq[String]): Map[Long, Double] =
+        toks.flatMap { case (id, ws) =>
+          val parts = terms.distinct.filter(ws.contains).map { t =>
+            val tf = ws.count(_ == t).toLong
+            val df = toks.values.count(_.contains(t)).toLong
+            // Spark's ln is StrictMath.log; Math.log may differ by an ulp
+            val idf = StrictMath.log(1.0 + ((n - df) + 0.5) / (df + 0.5))
+            idf * (tf * (k1 + 1)) /
+              (tf + k1 * ((1 - b) + b * ws.size.toDouble / avgdl))
+          }
+          // two terms at most: a sum of two doubles is order-free
+          if (parts.isEmpty) None else Some(id -> (0.0 +: parts).reduce(_ + _))
+        }
+      for (terms <- Seq(Seq("hash"), Seq("join", "spill"),
+                        Seq("merge", "absent"))) {
+        val got = TextSearch.bm25ScoresIndexed(index, terms)
+          .as[(Long, Double)].collect().toMap
+        assert(got == expected(terms), terms)
+      }
+      assert(toks(corpus.last._1).isEmpty && n == 13L)
+    } finally index.release()
+  }
+
   test("rrfFuse rewards presence in both rankings") {
     val a = Seq((1L, 0.9), (2L, 0.8), (3L, 0.7)).toDF("doc_id", "score")
     val b = Seq((3L, 0.99), (2L, 0.5)).toDF("doc_id", "score")
