@@ -155,6 +155,7 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
 
   /** The cached (doc_id, embedding) index, built on demand. */
   def index(): DataFrame = synchronized {
+    // first: a moved store mtime drops the stale index here
     val docs = documents()
     cachedIndex.getOrElse {
       val idx = Ingest.buildIndex(docs, "doc_id", "embedding")
@@ -167,6 +168,7 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
     * together with the vector index whenever the snapshot is dropped.
     */
   def lexicalIndex(): graft.operators.TextSearch.Bm25Index = synchronized {
+    // first, as in index()
     val docs = documents()
     cachedLexical.getOrElse {
       val idx = graft.operators.TextSearch.buildBm25Index(
