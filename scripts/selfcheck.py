@@ -5,7 +5,7 @@ tables and compare values AND dtypes strictly.
 
 Usage: python3 scripts/selfcheck.py [sfDir] [outDir] [--skip-verify]
 """
-import json, subprocess, sys
+import atexit, json, shutil, subprocess, sys, tempfile
 
 import duckdb
 import pandas as pd
@@ -23,7 +23,11 @@ if "--skip-verify" not in sys.argv:
         print("VERIFY RUN FAILED:\n", tail)
         sys.exit(1)
 
-con = duckdb.connect()
+# a spill directory under /tmp, so operators larger than DuckDB's memory
+# limit (t73's window over the corpus x eval cross product) can spill
+spill = tempfile.mkdtemp(prefix="selfcheck_duckdb_", dir="/tmp")
+atexit.register(shutil.rmtree, spill, ignore_errors=True)
+con = duckdb.connect(config={"temp_directory": spill})
 for t in TABLES:
     con.sql(f"CREATE OR REPLACE VIEW {t} AS FROM read_parquet('{SF}/{t}.parquet')")
 

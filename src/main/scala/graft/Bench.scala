@@ -35,6 +35,9 @@ object Bench {
         spark.catalog.clearCache() // same state every timed query sees
         ((System.nanoTime() - t0) / 1e9, os)
       }
+    // memo keys built from here on were built inside a timed run: an
+    // artifact no warm owner builds lands on its first consumer's time
+    val builtBeforeTimed = graft.queries.Artifacts.builds.size
     // Locale.ROOT: the f-interpolator uses the JVM default locale, and a
     // comma-decimal locale (de_DE) would render 114,126 — invalid JSON
     def fmt3(d: Double): String =
@@ -94,6 +97,12 @@ object Bench {
       .map { case (k, (_, ts)) =>
         s"\"" + k + "\":" + ts.mkString("[", ",", "]") }
       .mkString("{", ",", "}")
+    val builtInTimedJson = graft.queries.Artifacts.builds
+      .drop(builtBeforeTimed)
+      .map(b => s"""{"name": ${SparkEntry.jsonString(b.name)}, """ +
+        s""""sf_dir": ${SparkEntry.jsonString(b.sfDir)}, """ +
+        s""""seconds": ${fmt3(b.seconds)}}""")
+      .mkString("[", ",", "]")
     // -1 failure markers must not subtract from (and so flatter) the
     // total: sum successful queries only
     val total = results.values.map(_._1).filter(_ >= 0).sum
@@ -101,6 +110,7 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
         s""""runs":$runsJson,"setup_sec":$setup,"setup":$setupJson,""" +
         s""""setup_failed":${SparkEntry.failuresJson(setupFailed)},""" +
+        s""""built_in_timed_runs":$builtInTimedJson,""" +
         s""""sf":"$sfDir"}"""
     // The FULL artifact (per-query mins + all N per-run times + the
     // per-owner warm map) goes to a file: at 200+ queries the line is

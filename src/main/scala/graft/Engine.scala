@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.{Chunker, Ingest, Search}
 import graft.sources.Sources
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The user-facing facade: one method per reference endpoint, so a user
@@ -366,14 +366,10 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
       .orderBy(col("rrf_score").desc, col("doc_id")).limit(k)
   }
 
-  /** The reference's context string (server.js:251-254). */
-  def context(query: String, k: Int): String = {
-    val enriched = search(query, k)
-      .withColumn("query_id", pmod(col("doc_id"), lit(1L)))
-    val rows = Search.contextAgg(enriched, "query_id", "doc_id", "content")
-      .select("context").collect()
-    if (rows.isEmpty) "" else rows(0).getString(0)
-  }
+  /** The reference's context string (server.js:251-254): [[search]]'s
+    * k rows, formatted on the driver by [[Engine.formatContext]]. */
+  def context(query: String, k: Int): String =
+    Engine.formatContext(search(query, k).collect().toSeq)
 
   /** Extractive answer — deterministic stand-in for the reference's
     * chat completion (embed.js:160-180): best-scoring content.
@@ -381,5 +377,29 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
   def answer(query: String): String = {
     val rows = search(query, k = 1).select("content").collect()
     if (rows.isEmpty) "" else rows(0).getString(0)
+  }
+}
+
+object Engine {
+
+  /** [[Search.contextAgg]]'s string for one query's (doc_id, score,
+    * content) rows, built on the driver: rows with null content are
+    * dropped, the rest ranked by score descending in Spark's double
+    * order (-0.0 equals 0.0, NaN ranks first, null last) then doc_id,
+    * and joined as "rank. content" lines. No rows give "". */
+  private[graft] def formatContext(rows: Seq[Row]): String = {
+    def score(r: Row): Option[Double] =
+      if (r.isNullAt(1)) None else Some(r.getDouble(1))
+    val byScoreDesc: Ordering[Option[Double]] = {
+      case (Some(a), Some(b)) =>
+        if (a == b) 0 else java.lang.Double.compare(b, a)
+      case (a, b) => java.lang.Boolean.compare(a.isEmpty, b.isEmpty)
+    }
+    rows.filterNot(_.isNullAt(2))
+      .sortBy(r => (score(r), r.getLong(0)))(
+        Ordering.Tuple2(byScoreDesc, Ordering.Long))
+      .zipWithIndex
+      .map { case (r, i) => s"${i + 1}. ${r.getString(2)}" }
+      .mkString("\n")
   }
 }

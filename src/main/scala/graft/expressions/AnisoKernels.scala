@@ -105,24 +105,11 @@ case class AnisoSubAssign(left: Expression, right: Expression,
 case class AnisoEncode(child: Expression, dsub: Int,
                        codebooks: Array[Array[Array[Float]]],
                        eta: Double)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with VectorInput {
   override def prettyName: String = "aniso_encode"
   override def dataType: DataType =
     ArrayType(IntegerType, containsNull = false)
   override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => TypeCheckSuccess
-      case other => TypeCheckFailure(
-        s"$prettyName requires array<float|double> input, got ${other.sql}")
-    }
-  }
-
-  private lazy val isFloat =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   @transient private lazy val wide: Array[Array[Array[Double]]] =
     codebooks.map(_.map(_.map(_.toDouble)))

@@ -210,24 +210,11 @@ object AqKernels {
 case class AqJointEncode(child: Expression, dsub: Int,
                          cb1: Array[Array[Array[Float]]],
                          cb2: Array[Array[Array[Float]]])
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with VectorInput {
   override def prettyName: String = "aq_joint_encode"
   override def dataType: DataType =
     ArrayType(IntegerType, containsNull = false)
   override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => TypeCheckSuccess
-      case other => TypeCheckFailure(
-        s"$prettyName requires array<float|double> input, got ${other.sql}")
-    }
-  }
-
-  private lazy val isFloat =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   @transient private lazy val pair = new AqPair(dsub, cb1, cb2)
 
@@ -249,24 +236,11 @@ case class AqJointEncode(child: Expression, dsub: Int,
 case class AqJointEncodeBcast(child: Expression,
                               bcast: org.apache.spark.broadcast.Broadcast[
                                 AqPair])
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with VectorInput {
   override def prettyName: String = "aq_joint_encode_bcast"
   override def dataType: DataType =
     ArrayType(IntegerType, containsNull = false)
   override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => TypeCheckSuccess
-      case other => TypeCheckFailure(
-        s"$prettyName requires array<float|double> input, got ${other.sql}")
-    }
-  }
-
-  private lazy val isFloat =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   override def nullSafeEval(input: Any): Any =
     AqKernels.encode(bcast.value, input.asInstanceOf[ArrayData], isFloat,

@@ -1,0 +1,32 @@
+package graft.expressions
+
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
+import org.apache.spark.sql.catalyst.expressions.UnaryExpression
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType}
+
+/** The input check of the unary vector kernels: the child must be
+  * `array<float|double>`, and `isFloat` says which element getter the
+  * kernel reads. */
+trait VectorInput extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    child.dataType match {
+      case ArrayType(FloatType | DoubleType, _) => TypeCheckSuccess
+      case other => TypeCheckFailure(
+        s"$prettyName requires array<float|double> input, got ${other.sql}")
+    }
+
+  protected lazy val isFloat: Boolean =
+    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+}
+
+/** The input check of the kernels over 60-bit token hashes: the child
+  * must be `array<bigint>`. */
+trait LongArrayInput extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    child.dataType match {
+      case ArrayType(LongType, _) => TypeCheckSuccess
+      case other => TypeCheckFailure(
+        s"$prettyName requires array<bigint> input, got ${other.sql}")
+    }
+}

@@ -142,25 +142,12 @@ case class ShingleHashes(child: Expression, n: Int)
   * near-dup search over embeddings the way MinHash bands do for text.
   */
 case class CosineLshBits(child: Expression, bits: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with VectorInput {
   require(bits <= 60, "sketch fits a 60-bit long")
 
   override def prettyName: String = "cosine_lsh_bits"
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => TypeCheckSuccess
-      case other => TypeCheckFailure(
-        s"$prettyName requires array<float|double> input, got ${other.sql}")
-    }
-  }
-
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   // ±1 hyperplane matrix, built on first eval for the observed dim.
   // The null check (not a dim sentinel) guards correctness across task
@@ -229,7 +216,7 @@ case class CosineLshBits(child: Expression, bits: Int)
   */
 case class SrpProbeBucketsCapped(child: Expression, bucketBits: Int,
                                  maxProbes: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with VectorInput {
   require(bucketBits > 0 && bucketBits <= 60,
     "srp_probe_buckets_capped: bucketBits must be in [1, 60]")
   require(maxProbes >= 0, "srp_probe_buckets_capped: maxProbes >= 0")
@@ -237,19 +224,6 @@ case class SrpProbeBucketsCapped(child: Expression, bucketBits: Int,
   override def prettyName: String = "srp_probe_buckets_capped"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => TypeCheckSuccess
-      case other => TypeCheckFailure(
-        s"$prettyName requires array<float|double> input, got ${other.sql}")
-    }
-  }
-
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   // same ±1 rows as CosineLshBits (plane j is a function of (j, i)
   // only), cached per observed dim; null check, not a dim sentinel —
@@ -318,22 +292,12 @@ case class SrpProbeBucketsCapped(child: Expression, bucketBits: Int,
   * bit-vote oracle exactly.
   */
 case class SimHashBits(child: Expression, bits: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with LongArrayInput {
   require(bits <= 60, "simHash uses the 60-bit md5 hash")
 
   override def prettyName: String = "simhash_bits"
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckSuccess
-      case other => TypeCheckFailure(
-        s"$prettyName requires array<bigint> input, got ${other.sql}")
-    }
-  }
 
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]

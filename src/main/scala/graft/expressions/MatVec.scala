@@ -62,24 +62,11 @@ object MatVecKernel {
 }
 
 case class MatVecRotate(child: Expression, rows: Array[Array[Double]])
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with VectorInput {
   override def prettyName: String = "matvec_rotate"
   override def dataType: DataType =
     ArrayType(DoubleType, containsNull = false)
   override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => TypeCheckSuccess
-      case other => TypeCheckFailure(
-        s"$prettyName requires array<float|double> input, got ${other.sql}")
-    }
-  }
-
-  private lazy val isFloat =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   override def nullSafeEval(input: Any): Any =
     MatVecKernel(rows, input.asInstanceOf[ArrayData], isFloat, prettyName)
@@ -102,24 +89,11 @@ case class MatVecRotateBcast(
     child: Expression,
     bcast: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]],
     dim: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with VectorInput {
   override def prettyName: String = "matvec_rotate_bcast"
   override def dataType: DataType =
     ArrayType(DoubleType, containsNull = false)
   override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => TypeCheckSuccess
-      case other => TypeCheckFailure(
-        s"$prettyName requires array<float|double> input, got ${other.sql}")
-    }
-  }
-
-  private lazy val isFloat =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   override def nullSafeEval(input: Any): Any =
     MatVecKernel(bcast.value, input.asInstanceOf[ArrayData], isFloat,

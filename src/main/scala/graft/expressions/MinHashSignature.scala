@@ -18,21 +18,11 @@ import org.apache.spark.sql.types._
   * Longs — 50× slower at corpus scale.
   */
 case class MinHashSignature(child: Expression, numHashes: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with LongArrayInput {
 
   override def prettyName: String = "minhash_signature"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckSuccess
-      case other => TypeCheckFailure(
-        s"$prettyName requires array<bigint> input, got ${other.sql}")
-    }
-  }
 
   @transient private lazy val as: Array[Long] =
     Array.tabulate(numHashes)(affineA)

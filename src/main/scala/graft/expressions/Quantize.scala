@@ -23,23 +23,10 @@ import org.apache.spark.sql.types._
   * element.
   */
 case class Int8Quantize(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with VectorInput {
   override def prettyName: String = "int8_quantize"
   override def dataType: DataType = ArrayType(FloatType, containsNull = false)
   override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => TypeCheckSuccess
-      case other => TypeCheckFailure(
-        s"$prettyName requires array<float|double> input, got ${other.sql}")
-    }
-  }
-
-  private lazy val isFloat =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]

@@ -151,7 +151,7 @@ object Artifacts {
   /** True iff the artifact directory holds a completed build sealed
     * with exactly this fingerprint — the caller may skip rebuilding.
     * Also registers `sfDir` for [[oracleGlob]] like [[write]] does. */
-  def cachedHit(name: String, sfDir: String, fingerprint: String)
+  private def cachedHit(name: String, sfDir: String, fingerprint: String)
       : Boolean = {
     lastSfDir.put(name, sfDir)
     try {
@@ -165,7 +165,8 @@ object Artifacts {
 
   /** Seal a just-written artifact with its fingerprint (call AFTER
     * [[write]] — Overwrite mode cleared any previous marker). */
-  def seal(name: String, sfDir: String, fingerprint: String): Unit =
+  private def seal(name: String, sfDir: String, fingerprint: String)
+      : Unit =
     java.nio.file.Files.write(fpFile(name, sfDir),
       fingerprint.getBytes("UTF-8")): Unit
 
@@ -173,6 +174,7 @@ object Artifacts {
     * in `names` is sealed with exactly `fp`, skip `build` (a fresh JVM
     * adopts the previous run's bit-identical parquet); otherwise run
     * `build` — which must [[write]] every name — and seal them all.
+    * A `build` that throws seals nothing, so the next call rebuilds.
     * Callers fold [[inputDigest]] of the training inputs into `fp` so
     * in-place fixture regeneration forces a rebuild.
     */
@@ -184,7 +186,7 @@ object Artifacts {
     }
 
   /** Content identity of a training INPUT (file or directory), for
-    * folding into a [[cachedHit]] fingerprint — closes the reuse
+    * folding into a [[reuseOrBuild]] fingerprint — closes the reuse
     * contract's blind spot: the directory key carries the input's
     * PATH, so an in-place regeneration of the same path (new fixture
     * bytes, same location) would otherwise be invisible and a stale
@@ -228,5 +230,64 @@ object Artifacts {
   def resolve(name: String, sfDir: String): String = {
     lastSfDir.put(name, sfDir)
     path(name, sfDir)
+  }
+
+  // ---- per-JVM memo (the in-process half of reuse) ------------------
+
+  /** One memo key's first build: its seconds, nested builds included. */
+  final case class Built(name: String, sfDir: String, seconds: Double)
+
+  private val memos =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Any]()
+
+  private val built =
+    new java.util.concurrent.ConcurrentLinkedQueue[Built]()
+
+  /** The value `build` returns for (`name`, `sfDir`), built at most once
+    * per JVM and shared by every later call — the snapshot-time half of
+    * a query (trained models, persisted graphs, staged directories) that
+    * its repeated timed runs then only consume.
+    *
+    *   - `name` is the first artifact directory the memo's
+    *     [[reuseOrBuild]] seals (unique, since two builders sharing one
+    *     would overwrite each other's parquet); a memo that seals
+    *     nothing uses its method's name.
+    *   - Per JVM: the cache is never written to disk; across JVMs,
+    *     [[reuseOrBuild]] inside `build` is what skips retraining.
+    *   - Nested calls are allowed: `build` runs outside any lock and its
+    *     value is then put if absent (not `computeIfAbsent`, which
+    *     throws "Recursive update" when a memo calls another), so a
+    *     memo may call another memo. Two threads racing on one key may
+    *     both build; the first value stored wins. `build` must not
+    *     return null.
+    *   - A `build` that throws caches nothing: the next call retries.
+    *   - A frame value should be `localCheckpoint`ed, not `persist`ed:
+    *     Bench and Verify `clearCache()` between queries, which drops a
+    *     persisted frame's blocks (it then recomputes on every use) but
+    *     not a checkpoint.
+    *
+    * Each key's first-build seconds are recorded in [[builds]].
+    */
+  def memo[V](name: String, sfDir: String)(build: => V): V = {
+    val key = (name, sfDir)
+    Option(memos.get(key)) match {
+      case Some(v) => v.asInstanceOf[V]
+      case None =>
+        val t0 = System.nanoTime()
+        val v = build
+        Option(memos.putIfAbsent(key, v)) match {
+          case Some(first) => first.asInstanceOf[V]
+          case None =>
+            built.add(Built(name, sfDir, (System.nanoTime() - t0) / 1e9))
+            v
+        }
+    }
+  }
+
+  /** Every memo key built so far in this JVM, in the order the builds
+    * finished (a nested memo finishes before the memo that called it). */
+  def builds: Seq[Built] = {
+    import scala.jdk.CollectionConverters._
+    built.asScala.toSeq
   }
 }

@@ -53,34 +53,13 @@ object TextQueries {
       spread(Tables.documents(spark, sfDir), "doc_id"),
       "doc_id", "text", n = 3, threshold = 0.1, maxDf = 1000L))
 
-  /** BUILD-ONCE near-dup artifact: the t03 pair machinery (inverted-
-    * index n-gram-Jaccard pairs) closed into connected components,
-    * PERSISTED and registered per corpus path — the reuse contract a
-    * real curation pipeline needs. Finding near-dup clusters is an
-    * O(corpus) indexing job; deciding what to keep is a cheap gate
-    * composition — so the pair graph is an artifact you build once per
-    * corpus version (at 100 TB: a parquet table keyed by corpus
-    * snapshot, rebuilt on ingest, consumed by every downstream query),
-    * never something recomputed inside each consumer. Both consumers
-    * here (t16's cluster histogram, t20's curation capstone) read this
-    * one persisted frame; repeated invocations in one JVM pay the
-    * machinery once. `spark.catalog.clearCache()` (Verify's per-query
-    * hygiene) drops the materialization but not correctness — the frame
-    * deterministically recomputes on next use.
-    */
-  private val dupComponentCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   /** The near-dup PAIR GRAPH itself as the build-once artifact — the
     * edge list [[dupComponents]] closes and [[pageRankQuery]] ranks
     * (one t03 machinery pass per corpus, shared by both graph
     * consumers). localCheckpoint, not persist: survives Verify's
     * per-query clearCache like the other per-corpus artifacts. */
-  private val dupPairCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   private def dupPairs(spark: SparkSession, sfDir: String): DataFrame =
-    dupPairCache.getOrElseUpdate(sfDir, {
+    Artifacts.memo("shared_dup_pairs", sfDir) {
       // cross-run reuse (the v30 convention): the pair graph is a
       // deterministic function of the corpus + these constants, so a
       // sealed previous run's edge list is bit-identical — the warm
@@ -97,10 +76,25 @@ object TextQueries {
       }
       spark.read.parquet(Artifacts.resolve("shared_dup_pairs", sfDir))
         .localCheckpoint()
-    })
+    }
 
+  /** BUILD-ONCE near-dup artifact: the t03 pair machinery (inverted-
+    * index n-gram-Jaccard pairs) closed into connected components,
+    * PERSISTED and registered per corpus path — the reuse contract a
+    * real curation pipeline needs. Finding near-dup clusters is an
+    * O(corpus) indexing job; deciding what to keep is a cheap gate
+    * composition — so the pair graph is an artifact you build once per
+    * corpus version (at 100 TB: a parquet table keyed by corpus
+    * snapshot, rebuilt on ingest, consumed by every downstream query),
+    * never something recomputed inside each consumer. Both consumers
+    * here (t16's cluster histogram, t20's curation capstone) read this
+    * one persisted frame; repeated invocations in one JVM pay the
+    * machinery once. `spark.catalog.clearCache()` (Verify's per-query
+    * hygiene) drops the materialization but not correctness — the frame
+    * deterministically recomputes on next use.
+    */
   private def dupComponents(spark: SparkSession, sfDir: String): DataFrame =
-    dupComponentCache.getOrElseUpdate(sfDir, {
+    Artifacts.memo("shared_dup_components", sfDir) {
       // localCheckpoint, not persist: Bench clearCache()s between timed
       // runs, and a persist would make every post-clear consumer re-run
       // the iterative closure — the t45 per-run drift round 9's driver
@@ -119,14 +113,7 @@ object TextQueries {
       spark.read.parquet(
           Artifacts.resolve("shared_dup_components", sfDir))
         .localCheckpoint()
-    })
-
-  /** The t31 BASE index, built once per corpus like [[dupComponents]]
-    * — the artifact contract: a pipeline pays index construction at
-    * snapshot time, and what each ingest batch pays is the UPDATE
-    * (which is what repeated t31 timings then measure). */
-  private val jaccardIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, Dedup.JaccardIndex]
+    }
 
   /** The pair-result shaping shared by t03, t31 and s10 — ONE
     * definition of the rounding/ordering contract [[fullPairsOracle]]
@@ -148,7 +135,7 @@ object TextQueries {
     */
   private[queries] def baseJaccardIndex(spark: SparkSession,
                                         sfDir: String): Dedup.JaccardIndex =
-    jaccardIndexCache.getOrElseUpdate(sfDir, {
+    Artifacts.memo("t31_base_postings", sfDir) {
       val fp = "t31base:v1:n=3,th=0.1,maxdf=1000,mod10<8:" +
         Artifacts.inputDigest(sfDir + "/documents.parquet")
       val names = Seq("t31_base_postings", "t31_base_sizes",
@@ -167,7 +154,7 @@ object TextQueries {
         spark.read.parquet(Artifacts.resolve("t31_base_postings", sfDir)),
         spark.read.parquet(Artifacts.resolve("t31_base_sizes", sfDir)),
         spark.read.parquet(Artifacts.resolve("t31_base_pairs", sfDir)))
-    })
+    }
 
   /** INCREMENTAL near-dup maintenance
     * ([[graft.operators.Dedup.updateJaccardIndex]]): 80% of the corpus
@@ -536,12 +523,9 @@ object TextQueries {
     * missing and both oracles reading a nonexistent glob — so
     * exhaustion fails HERE, loudly, instead of as an opaque
     * missing-parquet error in DuckDB. */
-  private val bpeModelCache = scala.collection.concurrent.TrieMap
-    .empty[String, (DataFrame, DataFrame)]
-
   private def bpeModel(spark: SparkSession, sfDir: String)
       : (DataFrame, DataFrame) =
-    bpeModelCache.getOrElseUpdate(sfDir, {
+    Artifacts.memo("t66_seqs_r0", sfDir) {
       // cross-run reuse (the v30 convention): training is a
       // deterministic fold over the corpus word table, every round
       // artifact already persists for the oracle, and the merge table
@@ -573,7 +557,7 @@ object TextQueries {
         spark.read.parquet(
             Artifacts.resolve(s"t66_seqs_r$BpeRounds", sfDir))
           .localCheckpoint())
-    })
+    }
 
   def bpeMerges(spark: SparkSession, sfDir: String): DataFrame =
     bpeModel(spark, sfDir)._1.orderBy("round")
@@ -641,12 +625,9 @@ object TextQueries {
     * the final segmentation table as `t68_vocab` (only the final round
     * matters here — the per-round replay is t66's claim) and returns
     * (ordered merge list, final seqs frame). */
-  private val bpeSplitModelCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[(String, String)], DataFrame)]
-
   private def bpeSplitModel(spark: SparkSession, sfDir: String)
       : (Seq[(String, String)], DataFrame) =
-    bpeSplitModelCache.getOrElseUpdate(sfDir, {
+    Artifacts.memo("t68_vocab", sfDir) {
       // cross-run seal (the v30 convention): the split-trained model
       // is a deterministic function of the train slice + the round
       // count, and BOTH its halves (the final segmentation table and
@@ -673,7 +654,7 @@ object TextQueries {
           s"(< $BpeRounds) on corpus $sfDir")
       (merges.toSeq.map(m => (m.getString(1), m.getString(2))),
         spark.read.parquet(Artifacts.resolve("t68_vocab", sfDir)))
-    })
+    }
 
   /** GENERALIZATION of the trained tokenizer — the evaluation every
     * production tokenizer ships with: train the merges on the 80%
@@ -1409,12 +1390,9 @@ object TextQueries {
     * build is paid at snapshot time; repeated invocations (bench
     * min-of-N) measure the DEDUP PASS, which is the operator.
     */
-  private val semDedupCache = scala.collection.concurrent.TrieMap
-    .empty[String, (DataFrame, DataFrame)]
-
   private def semDedupArtifacts(spark: SparkSession, sfDir: String)
       : (DataFrame, DataFrame) =
-    semDedupCache.getOrElseUpdate(sfDir, {
+    Artifacts.memo("t32_corpus", sfDir) {
       val n = 1500
       val gen0 = spark.range(n).select(col("id").as("vec_id"))
         .withColumn("ctext", concat(lit("sd center "),
@@ -1446,7 +1424,7 @@ object TextQueries {
       }
       (spark.read.parquet(Artifacts.resolve("t32_corpus", sfDir)),
         spark.read.parquet(Artifacts.resolve("t32_centroids", sfDir)))
-    })
+    }
 
   def semanticDedupQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val (corpus, centroids) = semDedupArtifacts(spark, sfDir)
@@ -1855,9 +1833,6 @@ object TextQueries {
     * The corpus DIRECTORY rides along for s11, whose streaming source
     * reads the same persisted corpus the batch query scores.
     */
-  private val classifierCache = scala.collection.concurrent.TrieMap
-    .empty[String, (String, DataFrame, DataFrame)]
-
   /** (corpus dir, corpus, trained class means) for the classifier
     * fixture — shared by t33 (batch) and s11 (streaming twin), so both
     * score the SAME persisted corpus with the SAME persisted model.
@@ -1865,7 +1840,7 @@ object TextQueries {
   private[queries] def classifierArtifacts(spark: SparkSession,
                                            sfDir: String)
       : (String, DataFrame, DataFrame) =
-    classifierCache.getOrElseUpdate(sfDir, {
+    Artifacts.memo("t33_corpus", sfDir) {
       val n = 2000
       val gen0 = spark.range(n).select(col("id").as("vec_id"))
         .withColumn("ctext", concat(lit("cf center "),
@@ -1902,7 +1877,7 @@ object TextQueries {
         spark.read.parquet(corpusDir)
           .withColumn("cls", pmod(col("vec_id"), lit(10))),
         spark.read.parquet(Artifacts.resolve("t33_classmeans", sfDir)))
-    })
+    }
 
   def classifierFilter(spark: SparkSession, sfDir: String): DataFrame = {
     val (_, corpus, means) = classifierArtifacts(spark, sfDir)
@@ -1918,22 +1893,16 @@ object TextQueries {
       .orderBy("cls")
   }
 
-  /** t34's positional-shingle index, built and localCheckpointed once
-    * per (JVM, corpus) — the per-snapshot artifact convention (t31's
-    * JaccardIndex): the index build (one md5 per token position) is
-    * paid at snapshot time, repeated invocations measure the SPAN
+  /** t34's positional-shingle index (doc_id, pos, sh), built and
+    * localCheckpointed once per (JVM, corpus) — shared by t34/t35/t36
+    * and s12's batch-exact leg. The per-snapshot artifact convention
+    * (t31's JaccardIndex): the index build (one md5 per token position)
+    * is paid at snapshot time, repeated invocations measure the SPAN
     * DETECTION pass. localCheckpoint survives clearCache hygiene.
-    */
-  private val posShingleCache = scala.collection.concurrent.TrieMap
-    .empty[String, DataFrame]
-
-  /** The per-corpus positional-shingle index (doc_id, pos, sh), built
-    * and localCheckpointed once — shared by t34/t35/t36 and s12's
-    * batch-exact leg.
     */
   private[queries] def positionalShingleIndex(spark: SparkSession,
                                               sfDir: String): DataFrame =
-    posShingleCache.getOrElseUpdate(sfDir, {
+    Artifacts.memo("shared_pos_shingles", sfDir) {
       // cross-run reuse (the v30 convention): one md5 per token
       // position is deterministic, so later runs read the sealed
       // parquet instead of re-hashing the corpus
@@ -1948,7 +1917,7 @@ object TextQueries {
       }
       spark.read.parquet(Artifacts.resolve("shared_pos_shingles", sfDir))
         .localCheckpoint()
-    })
+    }
 
   /** Exact-substring spans ([[graft.operators.Dedup.substringSpans]])
     * over the documents table: 8-token positional shingles, df ≤ 50,
@@ -1967,12 +1936,9 @@ object TextQueries {
     * per (JVM, corpus) — t31's artifact contract applied to the
     * positional index: snapshot-time construction is paid once, and
     * repeated t47 timings measure the UPDATE path. */
-  private val substrIndexCache = scala.collection.concurrent.TrieMap
-    .empty[String, Dedup.SubstrIndex]
-
   private def baseSubstrIndex(spark: SparkSession,
                               sfDir: String): Dedup.SubstrIndex =
-    substrIndexCache.getOrElseUpdate(sfDir, {
+    Artifacts.memo("shared_substr_base", sfDir) {
       // cross-run reuse: the base index is (positional shingles, full
       // span detection) — both deterministic frames, both persisted,
       // so later runs skip the snapshot-time span pass entirely
@@ -1994,7 +1960,7 @@ object TextQueries {
         spark.read.parquet(
             Artifacts.resolve("shared_substr_spans", sfDir))
           .localCheckpoint(), Nil)
-    })
+    }
 
   /** INCREMENTAL ExactSubstr maintenance
     * ([[graft.operators.Dedup.updateSubstrIndex]]) — t34's t31-style
@@ -2028,13 +1994,10 @@ object TextQueries {
     * convention): detection cost stays represented in t34 itself; t35
     * measures the REMOVAL pass, its own operator.
     */
-  private val spansCache = scala.collection.concurrent.TrieMap
-    .empty[String, DataFrame]
-
   def substringRemovalQuery(spark: SparkSession, sfDir: String)
       : DataFrame = {
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-    val spans = spansCache.getOrElseUpdate(sfDir,
+    val spans = Artifacts.memo("substringRemovalQuery", sfDir)(
       Dedup.substringSpansFrom(positionalShingleIndex(spark, sfDir),
         "doc_id", w = 8, maxDf = 50L, minRunTokens = 16)
         .localCheckpoint())
@@ -2210,9 +2173,6 @@ object TextQueries {
     * dedup corpus, dedup survivors feed span detection, and the
     * removed-token accounting closes the loop.
     */
-  private val curationCache = scala.collection.concurrent.TrieMap
-    .empty[String, (DataFrame, DataFrame)]
-
   /** The curation funnel's first three stages, ONE definition shared
     * by t37 and t46 (and cheap: narrow filters over two scans). */
   private def curationFunnel(spark: SparkSession, sfDir: String)
@@ -2235,7 +2195,7 @@ object TextQueries {
     * clearCache. */
   private def curationKeptSpans(spark: SparkSession, sfDir: String)
       : (DataFrame, DataFrame) =
-    curationCache.getOrElseUpdate(sfDir, {
+    Artifacts.memo("shared_curation_kept", sfDir) {
       // cross-run sealed (the v30 convention): survivor set + span
       // relation are deterministic functions of the two input tables
       // + the funnel's constants, and the warm phase's largest owner
@@ -2263,7 +2223,7 @@ object TextQueries {
           Artifacts.resolve("shared_curation_kept", sfDir)),
         spark.read.parquet(
           Artifacts.resolve("shared_curation_spans", sfDir)))
-    })
+    }
 
   def curationV2(spark: SparkSession, sfDir: String): DataFrame = {
     val (base, langF, qual) = curationFunnel(spark, sfDir)

@@ -98,4 +98,88 @@ class ArtifactsSpec extends SparkSpec {
       .select("name", "message")
       .as[(String, String)].collect().toSeq == Seq(("v00_owner", msg)))
   }
+
+  /** A corpus key no earlier run has used, so no seal or memo from a
+    * previous test run can answer for it. */
+  private def freshSfDir(tag: String): String =
+    s"/tmp/graft_spec_${tag}_${System.nanoTime()}"
+
+  private def deleteArtifacts(sfDir: String, names: String*): Unit =
+    names.foreach { n =>
+      val p = java.nio.file.Paths.get(Artifacts.resolve(n, sfDir))
+      if (java.nio.file.Files.exists(p)) {
+        val s = java.nio.file.Files.walk(p)
+        try {
+          import scala.jdk.CollectionConverters._
+          s.iterator().asScala.toVector.reverse
+            .foreach(java.nio.file.Files.delete)
+        } finally s.close()
+      }
+    }
+
+  test("memo builds once per (name, sfDir), nests, records each first " +
+      "build, and caches nothing when its build throws") {
+    val (a, b) = (freshSfDir("memo_a"), freshSfDir("memo_b"))
+    var outer, inner = 0
+    def innerMemo(sf: String): Int =
+      Artifacts.memo("spec_memo_inner", sf) { inner += 1; 20 }
+    def outerMemo(sf: String): Int =
+      Artifacts.memo("spec_memo_outer", sf) {
+        outer += 1; innerMemo(sf) + 1
+      }
+    assert(outerMemo(a) == 21 && outerMemo(a) == 21 && innerMemo(a) == 20)
+    assert((outer, inner) == ((1, 1)))
+    // another corpus is another key
+    assert(outerMemo(b) == 21 && (outer, inner) == ((2, 2)))
+    // the same corpus under another name is another key, of another type
+    assert(Artifacts.memo("spec_memo_other", a)("x") == "x")
+    val mine = Artifacts.builds.filter(k => k.sfDir == a || k.sfDir == b)
+    assert(mine.map(k => (k.name, k.sfDir)) == Seq(
+      ("spec_memo_inner", a), ("spec_memo_outer", a),
+      ("spec_memo_inner", b), ("spec_memo_outer", b),
+      ("spec_memo_other", a)))
+    assert(mine.forall(_.seconds >= 0.0))
+    // a throwing build stores nothing: the next call builds again
+    var tries = 0
+    def flaky(): Int = Artifacts.memo("spec_memo_flaky", a) {
+      tries += 1
+      if (tries == 1) throw new IllegalStateException("first try fails")
+      tries
+    }
+    assert(intercept[IllegalStateException](flaky()).getMessage ==
+      "first try fails")
+    assert(flaky() == 2 && flaky() == 2 && tries == 2)
+    assert(Artifacts.builds
+      .count(k => k.name == "spec_memo_flaky" && k.sfDir == a) == 1)
+  }
+
+  test("reuseOrBuild skips a build only when every name is sealed with " +
+      "the same fingerprint; a throwing build leaves no seal") {
+    val sf = freshSfDir("reuse")
+    val names = Seq("spec_reuse_a", "spec_reuse_b")
+    try {
+      var builds = 0
+      def reuse(fp: String): Unit = Artifacts.reuseOrBuild(sf, fp, names) {
+        builds += 1
+        names.foreach(n => Artifacts.write(Seq(builds).toDF("x"), n, sf))
+      }
+      reuse("fp1"); assert(builds == 1)
+      reuse("fp1"); assert(builds == 1)   // sealed, same fingerprint
+      reuse("fp2"); assert(builds == 2)   // another fingerprint
+      reuse("fp2"); assert(builds == 2)
+      // one name rewritten without a seal: the set no longer matches
+      Artifacts.write(Seq(0).toDF("x"), "spec_reuse_b", sf)
+      reuse("fp2"); assert(builds == 3)
+      reuse("fp2"); assert(builds == 3)
+      // a build that throws after writing seals nothing
+      intercept[IllegalStateException](
+        Artifacts.reuseOrBuild(sf, "fp3", names) {
+          names.foreach(n => Artifacts.write(Seq(9).toDF("x"), n, sf))
+          throw new IllegalStateException("training diverged")
+        })
+      reuse("fp3"); assert(builds == 4)
+      assert(spark.read.parquet(Artifacts.resolve("spec_reuse_a", sf))
+        .as[Int].collect().toSeq == Seq(4))
+    } finally deleteArtifacts(sf, names: _*)
+  }
 }

@@ -351,4 +351,68 @@ class EngineSpec extends SparkSpec {
     assert(b.addDocument("delta body text", "b") == 1)
     assert(ids(a).sorted.toSeq == Seq(1L, 2L, 3L))
   }
+
+  /** [[graft.operators.Search.contextAgg]]'s string for `rows` of
+    * (doc_id, score, content), through Spark. */
+  private def contextAggOf(rows: Seq[org.apache.spark.sql.Row]): String = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("doc_id", LongType),
+      StructField("score", DoubleType), StructField("content", StringType)))
+    val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows.map(r => Row(r.toSeq: _*)), 2),
+        schema)
+      .withColumn("query_id", lit(0L))
+    val got = graft.operators.Search
+      .contextAgg(df, "query_id", "doc_id", "content")
+      .select("context").collect()
+    if (got.isEmpty) "" else got(0).getString(0)
+  }
+
+  test("formatContext equals contextAgg: tied, NaN, signed-zero and null " +
+      "scores, a null content, and no rows") {
+    import org.apache.spark.sql.Row
+    val rows = Seq(
+      Row(7L, 0.5, "seven"), Row(3L, 0.5, "three"), // tie -> doc_id
+      Row(5L, 0.9, null),                         // dropped, no rank
+      Row(9L, 0.0, "nine"), Row(2L, -0.0, "two"), // -0.0 equals 0.0
+      Row(4L, Double.NaN, "nan"),                 // NaN ranks first
+      Row(8L, null, "null score"),                // null ranks last
+      Row(1L, 0.75, "one"))
+    val want = contextAggOf(rows)
+    assert(want == Seq("1. nan", "2. one", "3. three", "4. seven",
+      "5. two", "6. nine", "7. null score").mkString("\n"))
+    assert(Engine.formatContext(rows) == want)
+    assert(Engine.formatContext(rows.reverse) == want)
+    assert(Engine.formatContext(Seq(Row(5L, 0.9, null))) ==
+      contextAggOf(Seq(Row(5L, 0.9, null))))
+    assert(Engine.formatContext(Seq.empty) == contextAggOf(Seq.empty))
+  }
+
+  test("context on an engine equals contextAgg over its search rows, " +
+      "ties included, and runs no more jobs than search") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    // one-hot on text length: equal-length texts score identically
+    object LengthEmbedder extends Embedder {
+      override def embed(df: DataFrame, textCol: String,
+                         dim: Int): DataFrame =
+        df.withColumn("embedding",
+          transform(sequence(lit(0), lit(dim - 1)),
+            i => when(i === length(col(textCol)) % dim, lit(1.0f))
+              .otherwise(lit(0.0f))))
+    }
+    val store = Files.createTempDirectory("graft_ctx").toString + "/store"
+    val e = new Engine(spark, store, dim = 64, chunkSize = 40,
+      overlap = 10, embedder = LengthEmbedder)
+    assert(e.context("abcde", 3) == "")
+    Seq("bbbbb", "aaaaa", "ccccc", "longer text").foreach(e.addDocument(_))
+    val ctx = e.context("12345", k = 3)
+    assert(ctx == contextAggOf(e.search("12345", k = 3).collect().toSeq))
+    // three docs tie at cosine 1: doc_id order, which is ingest order
+    assert(ctx == "1. bbbbb\n2. aaaaa\n3. ccccc")
+    val searchJobs = jobsOf(e.search("12345", k = 3).collect(): Unit)
+    assert(jobsOf(e.context("12345", k = 3): Unit) <= searchJobs)
+  }
 }

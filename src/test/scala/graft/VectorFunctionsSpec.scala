@@ -145,4 +145,47 @@ class VectorFunctionsSpec extends SparkSpec {
     assert((bytes(0) & 0xff, bytes(1) & 0xff, bytes(2) & 0xff, bytes(3) & 0xff)
       == (0x00, 0x00, 0xc0, 0x3f))
   }
+
+  test("every vector kernel rejects a wrong-typed input at analysis " +
+      "with its own message") {
+    import graft.expressions._
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.graft.Bridge
+    val cb = Array(Array(Array(0f)))
+    val sc = spark.sparkContext
+    val rot = sc.broadcast(Array(Array(1.0)))
+    val pair = sc.broadcast(new AqPair(1, cb, cb))
+    val vectorKernels: Seq[Expression => Expression] = Seq(
+      MatVecRotate(_, Array(Array(1.0))),
+      MatVecRotateBcast(_, rot, 1),
+      Int8Quantize(_),
+      PqEncode(_, 1, cb),
+      CosineLshBits(_, 8),
+      SrpProbeBucketsCapped(_, 4, 2),
+      AqJointEncode(_, 1, cb, cb),
+      AqJointEncodeBcast(_, pair),
+      AnisoEncode(_, 1, cb, 2.0))
+    val hashKernels: Seq[Expression => Expression] = Seq(
+      SimHashBits(_, 8),
+      MinHashSignature(_, 4))
+    val df = Seq(("x", Seq(1))).toDF("s", "ints")
+    def failure(kernel: Expression => Expression, c: String): String = {
+      val k = kernel(Bridge.expression(col(c)))
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        df.select(Bridge.column(k)).queryExecution.assertAnalyzed())
+      assert(e.getMessage.contains(k.prettyName), e.getMessage)
+      e.getMessage
+    }
+    vectorKernels.foreach { kernel =>
+      val name = kernel(Bridge.expression(col("s"))).prettyName
+      assert(failure(kernel, "s").contains(
+        s"$name requires array<float|double> input, got STRING"))
+    }
+    hashKernels.foreach { kernel =>
+      val name = kernel(Bridge.expression(col("ints"))).prettyName
+      assert(failure(kernel, "ints").contains(
+        s"$name requires array<bigint> input, got ARRAY<INT>"))
+    }
+    rot.destroy(); pair.destroy()
+  }
 }
