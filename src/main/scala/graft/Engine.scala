@@ -41,14 +41,7 @@ import org.apache.spark.sql.functions._
   * embedder ([[graft.expressions.HashEmbed]]); answering is extractive
   * (top-1 content) — the two intentional stand-ins for the reference's
   * network LLM calls (SURVEY.md §7.4).
-  */
-/** @param distributedIds id-assignment strategy for ingest: `false`
-  *   (default) keeps strict AUTOINCREMENT parity through the serial
-  *   ranking window — right for request-sized adds; `true` routes
-  *   through [[Ingest.assignIdsDistributed]] (range partition +
-  *   per-partition row_number + prefix offsets), producing the
-  *   IDENTICAL mapping (IngestSpec pins dist ≡ serial) without any
-  *   task ever holding the whole batch — right for bulk loads.
+  *
   * @param embedder the [[Embedder]] serving BOTH ingest and every
   *   query path — the documented seam where a deployment drops in a
   *   network embedding model (the reference's OpenAI flow) in place
@@ -57,7 +50,6 @@ import org.apache.spark.sql.functions._
   */
 class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
              chunkSize: Int = 1000, overlap: Int = 50,
-             distributedIds: Boolean = false,
              embedder: Embedder = HashEmbedder) {
 
   /** The store as the reads see it: the resolved relation and the store
@@ -213,9 +205,7 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
     val novel = Ingest.dedupIngest(embedded,
       store.select("content"), "content", "batch_order")
       .drop("batch_order")
-    val assigned = (if (distributedIds)
-        Ingest.assignIdsDistributed(novel, "content", store, "doc_id")
-      else Ingest.assignIdsAfter(novel, "content", store, "doc_id"))
+    val assigned = Ingest.assignIdsAfter(novel, "content", store, "doc_id")
       .select("doc_id", "source", "chunk_ix", "content", "embedding")
       // count() + write would otherwise run the whole chunk→embed→
       // anti-join→window pipeline twice

@@ -99,59 +99,20 @@ object SparkEntry {
       .replaceAll("(?m)^([a-zA-Z][a-zA-Z0-9_]*) AS \\(",
         "$1 AS MATERIALIZED (")
 
-  /** OWNER queries of the build-once per-corpus artifacts (near-dup
-    * pair graph + components, Jaccard/substring indexes, SemDeDup and
-    * classifier fixtures, curation survivors, BPE model, the trained
-    * IVF-PQ codebooks/indexes). Running each once populates every
-    * shared artifact cache, so a timed sweep afterwards measures
-    * CONSUMPTION in every run of every query — artifact construction
-    * is owned by this named list, not by whichever consumer happens to
-    * run first (the run-order timing noise the round-9 bench showed as
-    * bimodal first-run spikes). Bench executes these as its setup
-    * phase and reports the one-time cost as `setup_sec`.
-    */
-  val artifactOwners: Seq[String] = Seq(
-    "t16_dup_clusters",     // near-dup pair graph + connected components
-    "t31_incremental_dedup",// base Jaccard index
-    "t32_semantic_dedup",   // SemDeDup fixture corpus + centroids
-    "t73_sem_prefilter_10k",// 10k eval set + matched spread corpus
-    "t33_classifier_filter",// classifier fixture corpus + class means
-    "t34_substring_spans",  // positional shingles + substring spans
-    "t47_incremental_substr", // base substring LSM index
-    "t37_curation_v2",      // curation survivor set + span relation
-    "t66_bpe_merges",       // BPE merge table + per-round seq artifacts
-    "t68_bpe_heldout",      // split-trained BPE model + OOV vocab
-    "v25_learned_ivfpq",    // v25 codebooks + centroids
-    "v26_ivfpq_pruned",     // partitioned index + models
-    "v28_clustered_recall", // clustered fixture + centroids
-    "v29_filtered_ivfpq",   // v29 codebooks
-    "v30_ref_ivfpq",        // reference-geometry d=1536 codebooks
-    "v33_batched_ivfpq",    // v33 codebooks
-    "v49_graph_compact",    // compacted + shared LSM base k-NN graphs
-    "v54_graph_clustered",  // clustered corpus + its bb=6 k-NN graph
-    "v57_graph_refdim",     // d=1536 corpus + k-NN graph (shared with v59)
-    "v58_graph_sharded_lsm",// sharded base store + delta sidecar append
-    "v64_opq_recall",       // d=64 OPQ rotation + both codebook sets
-    "v65_opq_refdim",       // d=1536 OPQ rotation + rotated codebooks
-    "v66_residual_pq",      // RVQ stage-2 codebooks (both regimes)
-    "v67_rvq_depth",        // 160x corpus + 3-stage RVQ ladder + codes
-    "v68_aniso_refdim",     // anisotropic (score-aware) codebooks
-    "v70_joint_aq",         // jointly-refined AQ codebook pair
-    "v71_occupancy_drift",  // delta-accreted 320x corpus
-    "v72_hist_fold_drift",  // persisted base fine histogram
-    "v73_drift_serve",      // frozen + rebucketed 320x stores
-    "v74_prefix_rotated",   // graded-spectrum corpus + graph + rotation
-    "v75_neardup_tier",     // shares the v71 accreted corpus
-    "v76_neardup_serve",    // rep graph + (member -> rep) sidecar
-    "v79_neardup_tau_sweep",// per-tau rep graphs + sidecars
-    "v80_prefix_sq8_lsm",   // delta corpus + codes + LSM sidecars
-  )
-
-  /** Artifact-only warmers: per owner, build/seal/load its shared
-    * snapshot artifacts WITHOUT running the owner's serving body (the
-    * queries.warmers contract). Owners without a warmer fall back to
-    * running the full query once. */
-  private val warmers: Map[String, (SparkSession, String) => Unit] =
+  /** Artifact-only warmers, in warm order, named by the OWNER query of
+    * each build-once per-corpus artifact (near-dup pair graph +
+    * components, Jaccard/substring indexes, SemDeDup and classifier
+    * fixtures, curation survivors, BPE model, the trained IVF-PQ
+    * codebooks/indexes). Each builds/seals/loads its owner's shared
+    * snapshot artifacts WITHOUT running the owner's serving body, so a
+    * timed sweep afterwards measures CONSUMPTION in every run of every
+    * query — artifact construction is owned by this named list, not by
+    * whichever consumer happens to run first (the run-order timing
+    * noise the round-9 bench showed as bimodal first-run spikes).
+    * Bench executes these as its setup phase and reports the one-time
+    * cost as `setup_sec`. */
+  private[graft] val warmers
+      : Seq[(String, (SparkSession, String) => Unit)] =
     graft.queries.TextQueries.warmers ++ graft.queries.VectorQueries.warmers
 
   /** One owner's warm step: its wall time, and the message of the
@@ -159,19 +120,12 @@ object SparkEntry {
   final case class Warmed(name: String, seconds: Double,
                           failure: Option[String])
 
-  /** Build every shared artifact — via its artifact-only warmer when
-    * one exists, else by running its owner query once. Errors are not
+  /** Build every shared artifact through [[warmers]]. Errors are not
     * fatal, but each is reported in its owner's [[Warmed]]: a failed
     * owner's artifact is built inside the first consumer's timed run
     * instead, so the caller must surface it. */
   def warm(spark: SparkSession, sfDir: String): Seq[Warmed] =
-    artifactOwners.flatMap { name =>
-      val step: Option[(SparkSession, String) => Unit] =
-        warmers.get(name).orElse(
-          queries.get(name).map(fn =>
-            (s: SparkSession, d: String) => fn(s, d).count(): Unit))
-      step.map(fn => warmStep(name)(fn(spark, sfDir)))
-    }
+    warmers.map { case (name, fn) => warmStep(name)(fn(spark, sfDir)) }
 
   /** Times one owner's warm step and catches its error into the
     * returned [[Warmed]]. */

@@ -197,18 +197,19 @@ private[operators] object BroadcastWalk {
     Some(new Index(ids, isNull, vecOff, f, d, pass, adjOff, adj))
   }
 
-  /** CosineSimilarity's arithmetic for row `i` against query `q`
-    * (already widened): Double accumulation in element order, 0.0
-    * when either norm is 0, and its error on a width mismatch. */
-  private def cosine(ix: Index, i: Int, q: Array[Double]): Double = {
-    val s = ix.vecOff(i)
-    val n = ix.vecOff(i + 1) - s
+  /** CosineSimilarity's arithmetic for the `n` elements of `f` (`d`
+    * when `f` is null) from `off` against query `q` (already widened):
+    * Double accumulation in element order, 0.0 when either norm is 0,
+    * and its error on a width mismatch. */
+  private[operators] def cosine(f: Array[Float], d: Array[Double],
+                                off: Int, n: Int, q: Array[Double])
+      : Double = {
     if (n != q.length) throw new IllegalArgumentException(
       s"cosine_sim: vector dimensions differ: $n vs ${q.length}")
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var j = 0
     while (j < n) {
-      val x = if (ix.f != null) ix.f(s + j).toDouble else ix.d(s + j)
+      val x = if (f != null) f(off + j).toDouble else d(off + j)
       val y = q(j)
       dot += x * y; na += x * x; nb += y * y
       j += 1
@@ -241,7 +242,10 @@ private[operators] object BroadcastWalk {
     def visit(i: Int): Unit = if (!seen.get(i)) {
       seen.set(i); vis += i
       val isNull = qv == null || ix.isNull(i)
-      nul += isNull; score += (if (isNull) 0.0 else cosine(ix, i, qv))
+      val s = ix.vecOff(i)
+      nul += isNull
+      score += (if (isNull) 0.0
+                else cosine(ix.f, ix.d, s, ix.vecOff(i + 1) - s, qv))
     }
     // score desc, nulls last, then id asc (row order is id order)
     def before(a: Int, b: Int): Boolean =

@@ -101,10 +101,10 @@ object Search {
     *
     * Determinism: candidates are processed in (score desc, id) order,
     * ties in the marginal score break on ascending id, and the
-    * candidate-candidate cosine mirrors
-    * [[graft.expressions.CosineSimilarity]] (float→double widening,
-    * sequential accumulation, `dot/(√na·√nb)`) so results are
-    * bit-comparable with a SQL oracle.
+    * candidate-candidate cosine is [[BroadcastWalk.cosine]], the
+    * arithmetic of [[graft.expressions.CosineSimilarity]] (float→double
+    * widening, sequential accumulation, `dot/(√na·√nb)`), so results
+    * are bit-comparable with a SQL oracle.
     */
   def mmrRerank(shortlist: DataFrame, idCol: String, vecCol: String,
                 scoreCol: String, k: Int, lambda: Double): DataFrame = {
@@ -115,20 +115,10 @@ object Search {
         col(vecCol).cast("array<float>"))
       .as[(Long, Double, Array[Float])]
     rows.coalesce(1).mapPartitions { it =>
-      def cosine(a: Array[Float], b: Array[Float]): Double = {
-        var dot = 0.0; var na = 0.0; var nb = 0.0
-        var i = 0
-        while (i < a.length) {
-          val x = a(i).toDouble; val y = b(i).toDouble
-          dot += x * y; na += x * x; nb += y * y
-          i += 1
-        }
-        if (na == 0.0 || nb == 0.0) 0.0
-        else dot / (math.sqrt(na) * math.sqrt(nb))
-      }
       val cand = it.toArray.sortBy { case (id, s, _) => (-s, id) }
       val used = new Array[Boolean](cand.length)
-      val selVecs = scala.collection.mutable.ArrayBuffer.empty[Array[Float]]
+      // selected vectors, widened once
+      val selVecs = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
       val out = scala.collection.mutable.ArrayBuffer
         .empty[(Long, Long, Double)]
       var step = 0
@@ -146,7 +136,8 @@ object Search {
               if (selVecs.isEmpty) 0.0 else Double.NegativeInfinity
             var j = 0
             while (j < selVecs.length) {
-              val s = cosine(v, selVecs(j))
+              val s =
+                BroadcastWalk.cosine(v, null, 0, v.length, selVecs(j))
               if (s > maxSim) maxSim = s
               j += 1
             }
@@ -162,7 +153,7 @@ object Search {
         if (bestIx < 0) exhausted = true
         else {
           used(bestIx) = true
-          selVecs += cand(bestIx)._3
+          selVecs += cand(bestIx)._3.map(_.toDouble)
           out += ((step + 1L, cand(bestIx)._1, bestVal))
           step += 1
         }

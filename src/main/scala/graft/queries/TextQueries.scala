@@ -2471,26 +2471,37 @@ object TextQueries {
       .orderBy("source")
   }
 
-  /** Artifact-only warmers for SparkEntry's warm phase: each builds /
-    * seals / loads the owner's shared snapshot artifacts WITHOUT
-    * running the owner's serving body — "artifacts exist before any
-    * timed run" is satisfied by the cache fill alone, and the first
-    * timed run's plan-compile/JIT cost is absorbed by the interleaved
-    * protocol's min-across-sweeps. */
-  private[graft] val warmers: Map[String, (SparkSession, String) => Unit] =
-    Map(
+  /** Artifact-only warmers for SparkEntry's warm phase, in warm order,
+    * named by the OWNER query of each build-once per-corpus artifact:
+    * each builds / seals / loads the owner's shared snapshot artifacts
+    * WITHOUT running the owner's serving body — "artifacts exist
+    * before any timed run" is satisfied by the cache fill alone, and
+    * the first timed run's plan-compile/JIT cost is absorbed by the
+    * interleaved protocol's min-across-sweeps. */
+  private[graft] val warmers: Seq[(String, (SparkSession, String) => Unit)] =
+    Seq(
+      // near-dup pair graph + connected components
       "t16_dup_clusters" -> ((s, d) => dupComponents(s, d): Unit),
+      // base Jaccard index
       "t31_incremental_dedup" -> ((s, d) => baseJaccardIndex(s, d): Unit),
+      // SemDeDup fixture corpus + centroids
       "t32_semantic_dedup" -> ((s, d) => semDedupArtifacts(s, d): Unit),
+      // 10k eval set + matched spread corpus
+      "t73_sem_prefilter_10k" -> ((s, d) => t73Fixture(s, d): Unit),
+      // classifier fixture corpus + class means
       "t33_classifier_filter" ->
         ((s, d) => classifierArtifacts(s, d): Unit),
+      // positional shingles + substring spans
       "t34_substring_spans" ->
         ((s, d) => positionalShingleIndex(s, d): Unit),
+      // base substring LSM index
       "t47_incremental_substr" -> ((s, d) => baseSubstrIndex(s, d): Unit),
+      // curation survivor set + span relation
       "t37_curation_v2" -> ((s, d) => curationKeptSpans(s, d): Unit),
+      // BPE merge table + per-round seq artifacts
       "t66_bpe_merges" -> ((s, d) => bpeModel(s, d): Unit),
-      "t68_bpe_heldout" -> ((s, d) => bpeSplitModel(s, d): Unit),
-      "t73_sem_prefilter_10k" -> ((s, d) => t73Fixture(s, d): Unit))
+      // split-trained BPE model + OOV vocab
+      "t68_bpe_heldout" -> ((s, d) => bpeSplitModel(s, d): Unit))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "t64_mixing_plan" -> (mixingPlan(_, _)),
@@ -3493,17 +3504,15 @@ object TextQueries {
     // threshold, rounding
     // the 10k hamming-margin replay: BOTH 56-plane sketches from the
     // floats, the 4sigma margin re-derived in SQL from the same
-    // closed form (acos/ceil/sqrt), the popcount pair join, both
-    // argmaxes, strata, recalls, candidate meters
+    // closed form (acos/ceil/sqrt), the popcount pair join, the
+    // prefilter's argmax, strata, recalls, candidate meters. The exact
+    // flag needs only the best score, so `ef` takes a grouped max over
+    // all corpus x eval pairs instead of ranking them in a window
     "t73_sem_prefilter_10k" ->
       s"""WITH $semMarginOracleCtes,
          |pf AS (SELECT vec_id FROM pb WHERE rn = 1 AND s >= 0.95),
-         |eb AS (SELECT v.vec_id, list_cosine_similarity(v.e, ev.q) AS s,
-         |         row_number() OVER (PARTITION BY v.vec_id
-         |           ORDER BY list_cosine_similarity(v.e, ev.q) DESC,
-         |                    ev.eval_id) AS rn
-         |       FROM v, ev),
-         |ef AS (SELECT vec_id FROM eb WHERE rn = 1 AND s >= 0.95)
+         |ef AS (SELECT v.vec_id FROM v, ev GROUP BY v.vec_id
+         |       HAVING max(list_cosine_similarity(v.e, ev.q)) >= 0.95)
          |SELECT v.vec_id % 5 AS stratum, count(*) AS n_docs,
          |       CAST(sum(CASE WHEN ef.vec_id IS NOT NULL THEN 1 ELSE 0 END)
          |            AS BIGINT) AS n_exact,

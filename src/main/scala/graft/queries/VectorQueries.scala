@@ -5465,7 +5465,7 @@ object VectorQueries {
     }
 
   /** v54's artifact writes + entry derivation, once per (JVM, corpus)
-    * — the snapshot-time half (the artifactOwners warm phase pays it);
+    * — the snapshot-time half (SparkEntry's warm phase pays it);
     * repeated timed invocations measure SERVING. */
   private def v54Artifacts(spark: SparkSession, sfDir: String)
       : (String, String, Seq[Long]) =
@@ -9850,38 +9850,50 @@ object VectorQueries {
         |SELECT centroid_id, count(*) AS n_vectors, CAST(sum(vec_id) AS BIGINT) AS sum_ids
         |FROM assigned GROUP BY centroid_id ORDER BY centroid_id""".stripMargin)
 
-  /** Artifact-only warmers (the TextQueries.warmers contract): build
-    * each owner's shared snapshot artifacts without running its
-    * serving body. */
-  private[graft] val warmers: Map[String, (SparkSession, String) => Unit] =
-    Map(
+  /** Artifact-only warmers (the TextQueries.warmers contract), in warm
+    * order: build each owner's shared snapshot artifacts without
+    * running its serving body. */
+  private[graft] val warmers: Seq[(String, (SparkSession, String) => Unit)] =
+    Seq(
+      // v25 codebooks + centroids
       "v25_learned_ivfpq" -> ((s, d) => ivfPqModels(s, d): Unit),
+      // partitioned index + models
       "v26_ivfpq_pruned" -> ((s, d) => prunedIndexArtifacts(s, d): Unit),
+      // clustered fixture + centroids
       "v28_clustered_recall" ->
         ((s, d) => clusteredRecallArtifacts(s, d): Unit),
+      // v29 codebooks
       "v29_filtered_ivfpq" -> ((s, d) => filteredIvfPqModel(s, d): Unit),
+      // reference-geometry d=1536 codebooks
       "v30_ref_ivfpq" -> ((s, d) => refDimModels(s, d): Unit),
+      // v33 codebooks
       "v33_batched_ivfpq" -> ((s, d) => batchedIvfPqModel(s, d): Unit),
+      // compacted + shared LSM base k-NN graphs
       "v49_graph_compact" -> ((s, d) => {
         fullKnnGraph(s, d)
         lsmBaseGraph(s, d): Unit
       }),
+      // clustered corpus + its bb=6 k-NN graph
       "v54_graph_clustered" -> ((s, d) => v54Artifacts(s, d): Unit),
+      // d=1536 corpus + k-NN graph (shared with v59)
       "v57_graph_refdim" -> ((s, d) => v57Artifacts(s, d): Unit),
+      // sharded base store + delta sidecar append
       "v58_graph_sharded_lsm" -> ((s, d) => v58Routed(s, d): Unit),
+      // d=64 OPQ rotation + both codebook sets
       "v64_opq_recall" -> ((s, d) => v64Models(s, d): Unit),
+      // d=1536 OPQ rotation + rotated codebooks
       "v65_opq_refdim" -> ((s, d) => v65Models(s, d): Unit),
+      // RVQ stage-2 codebooks (both regimes)
       "v66_residual_pq" -> ((s, d) => v66Models(s, d): Unit),
+      // 160x corpus + 3-stage RVQ ladder + codes
       "v67_rvq_depth" -> ((s, d) => v67Codes(s, d): Unit),
+      // anisotropic (score-aware) codebooks
       "v68_aniso_refdim" -> ((s, d) => v68Models(s, d): Unit),
+      // jointly-refined AQ codebook pair
       "v70_joint_aq" -> ((s, d) => v70Models(s, d): Unit),
+      // delta-accreted 320x corpus
       "v71_occupancy_drift" -> ((s, d) => v71Corpus(s, d): Unit),
-      "v73_drift_serve" -> ((s, d) => v73Stores(s, d): Unit),
-      "v74_prefix_rotated" -> ((s, d) => v74Fixture(s, d): Unit),
-      "v75_neardup_tier" -> ((s, d) => v71Corpus(s, d): Unit),
-      "v76_neardup_serve" -> ((s, d) => v76Store(s, d): Unit),
-      "v79_neardup_tau_sweep" -> ((s, d) => v79Stores(s, d): Unit),
-      "v80_prefix_sq8_lsm" -> ((s, d) => v80Store(s, d): Unit),
+      // persisted base fine histogram
       "v72_hist_fold_drift" -> ((s, d) => {
         val all = s.read.parquet(v71Corpus(s, d))
           .filter(col("vec_id") =!= 1000L)
@@ -9894,7 +9906,19 @@ object VectorQueries {
               all.filter(col("_k") < 40), "embedding", bits = 20,
               bbMax = 20), "v72_hist_base", d): Unit
         }
-      }))
+      }),
+      // frozen + rebucketed 320x stores
+      "v73_drift_serve" -> ((s, d) => v73Stores(s, d): Unit),
+      // graded-spectrum corpus + graph + rotation
+      "v74_prefix_rotated" -> ((s, d) => v74Fixture(s, d): Unit),
+      // shares the v71 accreted corpus
+      "v75_neardup_tier" -> ((s, d) => v71Corpus(s, d): Unit),
+      // rep graph + (member -> rep) sidecar
+      "v76_neardup_serve" -> ((s, d) => v76Store(s, d): Unit),
+      // per-tau rep graphs + sidecars
+      "v79_neardup_tau_sweep" -> ((s, d) => v79Stores(s, d): Unit),
+      // delta corpus + codes + LSM sidecars
+      "v80_prefix_sq8_lsm" -> ((s, d) => v80Store(s, d): Unit))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "v01_knn_topk" -> ((s, d) => knnTopK(s, d)),

@@ -29,16 +29,52 @@ object SqliteReader {
     * values (null | Long | Double | String | Array[Byte]). */
   final case class Row(rowid: Long, values: IndexedSeq[Any])
 
-  /** The unrestricted rowid interval — [[readTableProjected]]'s
-    * default and the identity element of range pushdown. */
+  /** The unrestricted rowid interval — the identity element of range
+    * pushdown. */
   val FullRange: IndexedSeq[(Long, Long)] =
     IndexedSeq((Long.MinValue, Long.MaxValue))
 
+  /** (value, bytesConsumed) of the varint at `off` in `b`: big-endian
+    * 7-bit groups, the 9th byte contributing all 8 bits. */
+  private[graft] def varintAt(b: Array[Byte], off: Int): (Long, Int) = {
+    var v = 0L
+    var i = 0
+    while (i < 8) {
+      val x = b(off + i) & 0xff
+      v = (v << 7) | (x & 0x7f)
+      i += 1
+      if ((x & 0x80) == 0) return (v, i)
+    }
+    ((v << 8) | (b(off + 8) & 0xff), 9)
+  }
+
+  /** Bytes of a `payloadLen`-byte cell payload stored on the B-tree page
+    * itself; the rest spills to an overflow chain of (usable − 4)-byte
+    * pages. The documented split: table leaves keep up to usable − 35
+    * bytes local, index cells up to (usable − 12)·64/255 − 23; past
+    * that, the local part is K = minLocal + (payloadLen − minLocal) mod
+    * (usable − 4), or minLocal when K exceeds the maximum. */
+  private[graft] def localSize(payloadLen: Long, usable: Int,
+                               index: Boolean): Int = {
+    val maxLocal =
+      if (index) (usable - 12) * 64 / 255 - 23 else usable - 35
+    if (payloadLen <= maxLocal) payloadLen.toInt
+    else {
+      val minLocal = (usable - 12) * 32 / 255 - 23
+      val k = minLocal + ((payloadLen - minLocal) % (usable - 4)).toInt
+      if (k > maxLocal) minLocal else k
+    }
+  }
+
+  private def inRanges(ranges: IndexedSeq[(Long, Long)], r: Long): Boolean =
+    ranges.exists(t => t._1 <= r && r <= t._2)
+
   private final class Db(bytes: Array[Byte]) {
-    /** B-tree pages visited by [[tableRows]] walks (interior + leaf;
-      * overflow pages excluded — their count is proportional to rows
-      * RETURNED, not rows pruned). The rowid-range pushdown's spec
-      * pins a 1-row lookup at O(depth) via this counter. */
+    /** B-tree pages visited by data walks (interior + leaf; overflow
+      * pages excluded — their count is proportional to rows RETURNED,
+      * not rows pruned; the sqlite_master read at open excluded). The
+      * rowid-range pushdown's spec pins a 1-row lookup at O(depth) via
+      * this counter. */
     var btreePagesVisited: Long = 0L
     require(bytes.length >= 100 &&
       new String(bytes, 0, 16, "ISO-8859-1").startsWith("SQLite format 3"),
@@ -67,124 +103,147 @@ object SqliteReader {
       ((n - 1) * pageSize).toInt
     }
 
-    /** (value, bytesConsumed) of the varint at `off`. */
-    def varint(off: Int): (Long, Int) = {
-      var v = 0L
-      var i = 0
-      while (i < 8) {
-        val b = u8(off + i)
-        v = (v << 7) | (b & 0x7f)
-        i += 1
-        if ((b & 0x80) == 0) return (v, i)
-      }
-      ((v << 8) | u8(off + 8), 9) // 9th byte contributes all 8 bits
+    /** sqlite_master's rows (type, name, tbl_name, rootpage, sql): the
+      * table B-tree at page 1, read once at open. */
+    private val master: Vector[Row] = {
+      val rows = tableRows(1L).toVector
+      btreePagesVisited = 0L
+      rows
     }
 
-    /** Walk the table B-tree rooted at `root`, decoding every leaf cell
-      * (payload reassembled across overflow chains).
-      */
-    def tableRows(root: Long): Iterator[Row] =
-      tableRows(root, _ => true)
-
-    def tableRows(root: Long, keep: Int => Boolean): Iterator[Row] =
-      tableRows(root, keep, FullRange)
-
-    /** The range-pruned walk: `ranges` is a sorted-disjoint set of
-      * inclusive rowid intervals. Interior cells carry (child page,
-      * max rowid in child) — child i covers (key(i-1), key(i)], the
-      * rightmost pointer (key(n-1), +inf) — so whole subtrees outside
-      * every range are SKIPPED without reading their pages; at the
-      * leaf, excluded cells skip the payload decode entirely (the
-      * rowid varint is the only thing read). With [[FullRange]] the
-      * traversal is exactly the unpruned walk. */
-    def tableRows(root: Long, keep: Int => Boolean,
-                  ranges: IndexedSeq[(Long, Long)]): Iterator[Row] = {
+    /** The range-pruned walk of the table B-tree rooted at `root`,
+      * handing each kept leaf page's (page offset, header offset) to
+      * `leaf`. `ranges` is a sorted-disjoint set of inclusive rowid
+      * intervals; whole subtrees outside every range are SKIPPED
+      * without reading their pages ([[keptChildren]]). With
+      * [[FullRange]] the traversal is exactly the unpruned walk. */
+    private def walk[A](root: Long, ranges: IndexedSeq[(Long, Long)])(
+        leaf: (Int, Int) => Iterator[A]): Iterator[A] = {
       btreePagesVisited += 1
       val off = pageOff(root)
       val hdr = off + (if (root == 1L) 100 else 0)
-      def anyAbove(prevKey: Long): Boolean = // (prevKey, +inf) hits?
-        ranges.exists(_._2 > prevKey)
-      // `incl` marks the FIRST child, whose coverage is [-inf, key]:
-      // prev is seeded at Long.MinValue, and a range whose upper
-      // bound IS MinValue (filter id = Long.MinValue) must still
-      // select it — the strict `> prevKey` alone would skip every
-      // child on a multi-level tree while a single-leaf table's
-      // inRanges check returned the row (depth-dependent results)
-      def anySpan(prevKey: Long, key: Long, incl: Boolean): Boolean =
-        ranges.exists(r => r._1 <= key &&
-          (r._2 > prevKey || (incl && r._2 == prevKey)))
-      def inRanges(r: Long): Boolean =
-        ranges.exists(t => t._1 <= r && r <= t._2)
       u8(hdr) match {
-        case 0x05 => // interior table page: recurse into kept children
-          val nCells = u16(hdr + 3)
-          // cell pointer array starts after the 12-byte interior header;
-          // each cell = 4-byte child page + varint key (child's max)
-          var prev = Long.MinValue
-          var first = true
-          val picked = Vector.newBuilder[Long]
-          (0 until nCells).foreach { i =>
-            val cellOff = off + u16(hdr + 12 + 2 * i)
-            val key = varint(cellOff + 4)._1
-            if (anySpan(prev, key, first)) picked += u32(cellOff)
-            prev = key
-            first = false
-          }
-          // right-most child: (prev, +inf) — or everything, when the
-          // page somehow has no separator cells
-          if (anyAbove(prev) || (first && ranges.nonEmpty))
-            picked += u32(hdr + 8)
-          picked.result().iterator.flatMap(tableRows(_, keep, ranges))
-        case 0x0d => // leaf table page
-          val nCells = u16(hdr + 3)
-          (0 until nCells).iterator.flatMap { i =>
-            val cellOff = off + u16(hdr + 8 + 2 * i)
-            val (_, n1) = varint(cellOff)
-            val (rowid, _) = varint(cellOff + n1)
-            if (inRanges(rowid)) Some(readLeafCell(cellOff, keep))
-            else None // payload never decoded
-          }
+        case 0x05 =>
+          keptChildren(off, hdr, ranges).iterator.flatMap(walk(_, ranges)(leaf))
+        case 0x0d => leaf(off, hdr)
         case t => throw new IllegalStateException(
           s"unexpected b-tree page type 0x${t.toHexString} at page $root")
       }
     }
 
-    private def readLeafCell(cellOff: Int, keep: Int => Boolean): Row = {
-      val (payloadLen, n1) = varint(cellOff)
-      val (rowid, n2) = varint(cellOff + n1)
-      val payloadOff = cellOff + n1 + n2
-      val maxLocal = usable - 35
-      val payload: Array[Byte] =
-        if (payloadLen <= maxLocal) {
-          // copyOfRange zero-pads past end-of-array; a corrupt cell
-          // pointer must fail loudly, not fabricate zero bytes
-          require(payloadOff + payloadLen <= bytes.length,
-            s"cell payload at $payloadOff+$payloadLen overruns " +
-              s"${bytes.length}-byte file (corrupt cell pointer?)")
-          java.util.Arrays.copyOfRange(bytes, payloadOff,
-            payloadOff + payloadLen.toInt)
-        } else {
-          // overflow: the documented local-size formula, then a chain of
-          // overflow pages each holding (usable - 4) payload bytes
-          val minLocal = (usable - 12) * 32 / 255 - 23
-          val k = minLocal + ((payloadLen - minLocal) % (usable - 4)).toInt
-          val local = if (k > maxLocal) minLocal else k
-          val out = new Array[Byte](payloadLen.toInt)
-          System.arraycopy(bytes, payloadOff, out, 0, local)
-          var written = local
-          var page = u32(payloadOff + local)
-          while (page != 0L && written < payloadLen) {
-            val po = pageOff(page)
-            val take = math.min(usable - 4, payloadLen.toInt - written)
-            System.arraycopy(bytes, po + 4, out, written, take)
-            written += take
-            page = u32(po)
-          }
-          require(written == payloadLen,
-            s"overflow chain ended early: $written of $payloadLen bytes")
-          out
+    /** Child pages of the interior table page at `hdr` that may hold a
+      * rowid in `ranges`. Interior cells carry (child page, max rowid
+      * in child) after the 12-byte header — child i covers (key(i-1),
+      * key(i)], the rightmost pointer (key(n-1), +inf). */
+    private def keptChildren(off: Int, hdr: Int,
+                             ranges: IndexedSeq[(Long, Long)]): Vector[Long] = {
+      val nCells = u16(hdr + 3)
+      val picked = Vector.newBuilder[Long]
+      var prev = Long.MinValue
+      (0 until nCells).foreach { i =>
+        val cellOff = off + u16(hdr + 12 + 2 * i)
+        val key = varintAt(bytes, cellOff + 4)._1
+        // the FIRST child covers [-inf, key]: prev is seeded at
+        // Long.MinValue, and a range whose upper bound IS MinValue
+        // (filter id = Long.MinValue) must still select it — the strict
+        // `> prev` alone would skip every child on a multi-level tree
+        // while a single-leaf table returned the row
+        if (ranges.exists(r => r._1 <= key &&
+            (r._2 > prev || (i == 0 && r._2 == prev))))
+          picked += u32(cellOff)
+        prev = key
+      }
+      // right-most child: (prev, +inf) — or everything, when the page
+      // somehow has no separator cells
+      if (ranges.exists(_._2 > prev) || (nCells == 0 && ranges.nonEmpty))
+        picked += u32(hdr + 8)
+      picked.result()
+    }
+
+    /** Offsets of the cells on the leaf table page at `hdr` whose rowid
+      * lies in `ranges` — the rowid varint is the only thing read. */
+    private def leafCells(off: Int, hdr: Int,
+                          ranges: IndexedSeq[(Long, Long)]): Iterator[Int] =
+      (0 until u16(hdr + 3)).iterator
+        .map(i => off + u16(hdr + 8 + 2 * i))
+        .filter { c =>
+          val (_, n1) = varintAt(bytes, c) // payload length, then rowid
+          inRanges(ranges, varintAt(bytes, c + n1)._1)
         }
-      Row(rowid, decodeRecord(payload, keep))
+
+    /** The rows in `ranges` of the table B-tree at `root`, payloads
+      * reassembled across overflow chains; excluded cells skip the
+      * payload decode entirely. */
+    def tableRows(root: Long, keep: Int => Boolean = _ => true,
+                  ranges: IndexedSeq[(Long, Long)] = FullRange)
+        : Iterator[Row] =
+      walk(root, ranges)((off, hdr) =>
+        leafCells(off, hdr, ranges).map(readLeafCell(_, keep)))
+
+    /** COUNT the rows in `ranges` WITHOUT decoding any payload: leaves
+      * only read cell counts (full range: the page header's cell count
+      * — zero varint reads) or rowid varints (pruned range). Overflow
+      * chains are never followed, so a table of 6 KiB blobs counts at
+      * pure b-tree-page cost. */
+    def countRows(root: Long, ranges: IndexedSeq[(Long, Long)]): Long =
+      walk(root, ranges)((off, hdr) => Iterator.single(
+        if (ranges == FullRange) u16(hdr + 3).toLong
+        else leafCells(off, hdr, ranges).size.toLong)).sum
+
+    /** [[tableRows]] decoding only `ordinals` (indexes into the
+      * table's stored column order), values in `ordinals` order; a NULL
+      * at ordinal 0 is the INTEGER PRIMARY KEY rowid alias and reads as
+      * the rowid. */
+    def projected(root: Long, ordinals: Array[Int],
+                  ranges: IndexedSeq[(Long, Long)])
+        : Iterator[IndexedSeq[Any]] = {
+      val keep = ordinals.toSet
+      tableRows(root, keep.contains, ranges).map { r =>
+        ordinals.toIndexedSeq.map { o =>
+          val v = r.values.lift(o).orNull
+          if (o == 0 && v == null) r.rowid else v
+        }
+      }
+    }
+
+    private def readLeafCell(cellOff: Int, keep: Int => Boolean): Row = {
+      val (payloadLen, n1) = varintAt(bytes, cellOff)
+      val (rowid, n2) = varintAt(bytes, cellOff + n1)
+      Row(rowid, decodeRecord(
+        payload(cellOff + n1 + n2, payloadLen, index = false), keep))
+    }
+
+    /** The `payloadLen`-byte payload whose local part starts at
+      * `payloadOff`, reassembled across its overflow chain (each page:
+      * 4-byte next pointer, then usable − 4 payload bytes). */
+    private def payload(payloadOff: Int, payloadLen: Long,
+                        index: Boolean): Array[Byte] = {
+      val kind = if (index) "index cell" else "table cell"
+      val local = localSize(payloadLen, usable, index)
+      if (local == payloadLen) {
+        // copyOfRange zero-pads past end-of-array; a corrupt cell
+        // pointer must fail loudly, not fabricate zero bytes
+        require(payloadOff + payloadLen <= bytes.length,
+          s"$kind payload at $payloadOff+$payloadLen overruns " +
+            s"${bytes.length}-byte file (corrupt cell pointer?)")
+        java.util.Arrays.copyOfRange(bytes, payloadOff,
+          payloadOff + payloadLen.toInt)
+      } else {
+        val out = new Array[Byte](payloadLen.toInt)
+        System.arraycopy(bytes, payloadOff, out, 0, local)
+        var written = local
+        var page = u32(payloadOff + local)
+        while (page != 0L && written < payloadLen) {
+          val po = pageOff(page)
+          val take = math.min(usable - 4, payloadLen.toInt - written)
+          System.arraycopy(bytes, po + 4, out, written, take)
+          written += take
+          page = u32(po)
+        }
+        require(written == payloadLen,
+          s"$kind overflow chain ended early: $written of $payloadLen bytes")
+        out
+      }
     }
 
     /** Decode a record payload: header of serial types, then values.
@@ -194,22 +253,11 @@ object SqliteReader {
       * allocations), and a null placeholder keeps ordinals stable. */
     private def decodeRecord(p: Array[Byte],
                              keep: Int => Boolean): IndexedSeq[Any] = {
-      def pVarint(off: Int): (Long, Int) = {
-        var v = 0L
-        var i = 0
-        while (i < 8) {
-          val b = p(off + i) & 0xff
-          v = (v << 7) | (b & 0x7f)
-          i += 1
-          if ((b & 0x80) == 0) return (v, i)
-        }
-        ((v << 8) | (p(off + 8) & 0xff), 9)
-      }
-      val (hdrLen, n0) = pVarint(0)
+      val (hdrLen, n0) = varintAt(p, 0)
       var off = n0
       val types = scala.collection.mutable.ArrayBuffer.empty[Long]
       while (off < hdrLen) {
-        val (t, n) = pVarint(off)
+        val (t, n) = varintAt(p, off)
         types += t
         off += n
       }
@@ -265,64 +313,43 @@ object SqliteReader {
       }.toIndexedSeq
     }
 
-    /** rootpage of `table` from sqlite_master (B-tree at page 1; its
-      * rows are (type, name, tbl_name, rootpage, sql)). */
-    def rootPageOf(table: String): Long =
-      if (table == "sqlite_master") 1L // the master table IS page 1
-      else tableRows(1L)
-        .collectFirst {
-          case Row(_, vs)
-              if vs.lift(0).contains("table") && vs.lift(1).contains(table) =>
-            vs(3).asInstanceOf[Long]
-        }
-        .getOrElse(throw new NoSuchElementException(
-          s"table '$table' not found in sqlite_master"))
-
-    /** rootpage of `table`'s UNIQUE-constraint autoindex
-      * (`sqlite_autoindex_<table>_1`) — the index b-tree a stock
-      * sqlite3 probes for its duplicate check (reference
-      * server.js:198) and [[SqliteWriter.writeFull]] bulk-loads. */
-    def indexRootOf(table: String): Option[Long] =
-      tableRows(1L).collectFirst {
+    /** rootpage of the sqlite_master entry of type `kind` named `name`. */
+    private def masterRoot(kind: String, name: String): Option[Long] =
+      master.collectFirst {
         case Row(_, vs)
-            if vs.lift(0).contains("index") &&
-              vs.lift(1).contains(s"sqlite_autoindex_${table}_1") =>
+            if vs.lift(0).contains(kind) && vs.lift(1).contains(name) =>
           vs(3).asInstanceOf[Long]
       }
 
-    /** Reassemble the payload of an INDEX cell whose payload-length
-      * varint starts at `off`. Index pages use their own local-size
-      * split (X = (usable−12)·64/255 − 23, vs usable−35 for table
-      * leaves); the overflow chain walk is the same. */
-    private def indexPayload(off: Int): Array[Byte] = {
-      val (payloadLen, n1) = varint(off)
-      val payloadOff = off + n1
-      val maxLocal = (usable - 12) * 64 / 255 - 23
-      if (payloadLen <= maxLocal) {
-        require(payloadOff + payloadLen <= bytes.length,
-          s"index cell payload at $payloadOff+$payloadLen overruns " +
-            s"${bytes.length}-byte file (corrupt cell pointer?)")
-        java.util.Arrays.copyOfRange(bytes, payloadOff,
-          payloadOff + payloadLen.toInt)
-      } else {
-        val minLocal = (usable - 12) * 32 / 255 - 23
-        val k = minLocal + ((payloadLen - minLocal) % (usable - 4)).toInt
-        val local = if (k > maxLocal) minLocal else k
-        val out = new Array[Byte](payloadLen.toInt)
-        System.arraycopy(bytes, payloadOff, out, 0, local)
-        var written = local
-        var page = u32(payloadOff + local)
-        while (page != 0L && written < payloadLen) {
-          val po = pageOff(page)
-          val take = math.min(usable - 4, payloadLen.toInt - written)
-          System.arraycopy(bytes, po + 4, out, written, take)
-          written += take
-          page = u32(po)
-        }
-        require(written == payloadLen,
-          s"index overflow chain ended early: $written of $payloadLen")
-        out
-      }
+    def rootPageOf(table: String): Long =
+      if (table == "sqlite_master") 1L // the master table IS page 1
+      else masterRoot("table", table).getOrElse(
+        throw new NoSuchElementException(
+          s"table '$table' not found in sqlite_master"))
+
+    /** Rowids (sorted, distinct) of the rows in `ranges` whose UNIQUE
+      * column is one of `keys`: ONE batched descent of `table`'s
+      * UNIQUE-constraint autoindex (`sqlite_autoindex_<table>_1`) — the
+      * index b-tree a stock sqlite3 probes for its duplicate check
+      * (reference server.js:198) and [[SqliteWriter.writeFull]]
+      * bulk-loads. Throws NoSuchElementException when the file has no
+      * such index — callers must not silently fall back, the pushdown
+      * contract is exactness. */
+    def contentRowids(table: String, keys: Seq[String],
+                      ranges: IndexedSeq[(Long, Long)]): IndexedSeq[Long] = {
+      val idxRoot = masterRoot("index", s"sqlite_autoindex_${table}_1")
+        .getOrElse(throw new NoSuchElementException(
+          s"no sqlite_autoindex_${table}_1 in sqlite_master — " +
+            "content-keyed reads need the UNIQUE autoindex"))
+      indexHits(idxRoot, keys.distinct.map(_.getBytes("UTF-8")).toIndexedSeq)
+        .map(_._2).filter(inRanges(ranges, _)).distinct.sorted
+    }
+
+    /** The payload of the INDEX cell whose payload-length varint
+      * starts at `off` (index cells carry no rowid varint). */
+    private def indexCell(off: Int): Array[Byte] = {
+      val (payloadLen, n1) = varintAt(bytes, off)
+      payload(off + n1, payloadLen, index = true)
     }
 
     /** Batched equality lookup in an index b-tree: ONE descent for
@@ -333,7 +360,7 @@ object SqliteReader {
       * equality can hit mid-descent. Keys compare as unsigned
       * byte-wise UTF-8 — SQLite's BINARY collation, the autoindex's
       * default. Returns decoded (key, rowid) hits. */
-    def indexHits(root: Long, probes: IndexedSeq[Array[Byte]])
+    private def indexHits(root: Long, probes: IndexedSeq[Array[Byte]])
         : IndexedSeq[(String, Long)] =
       if (probes.isEmpty) IndexedSeq.empty
       else {
@@ -353,7 +380,7 @@ object SqliteReader {
             (0 until nCells).foreach { i =>
               if (remaining.nonEmpty) {
                 val cellOff = off + u16(hdr + 12 + 2 * i)
-                val (keyStr, rowid) = entryOf(indexPayload(cellOff + 4))
+                val (keyStr, rowid) = entryOf(indexCell(cellOff + 4))
                 val kb = keyStr.getBytes("UTF-8")
                 val (below, rest) = remaining.partition(p =>
                   java.util.Arrays.compareUnsigned(p, kb) < 0)
@@ -372,7 +399,7 @@ object SqliteReader {
             val nCells = u16(hdr + 3)
             (0 until nCells).flatMap { i =>
               val cellOff = off + u16(hdr + 8 + 2 * i)
-              val (keyStr, rowid) = entryOf(indexPayload(cellOff))
+              val (keyStr, rowid) = entryOf(indexCell(cellOff))
               val kb = keyStr.getBytes("UTF-8")
               if (probes.exists(java.util.Arrays.equals(_, kb)))
                 Some((keyStr, rowid))
@@ -382,92 +409,25 @@ object SqliteReader {
             s"unexpected index page type 0x${t.toHexString} at $root")
         }
       }
-
-    /** COUNT the rows in `ranges` WITHOUT decoding any payload: the
-      * interior pruning of [[tableRows]], but leaves only read cell
-      * counts (full range: the page header's cell count — zero varint
-      * reads) or rowid varints (pruned range). Overflow chains are
-      * never followed, so a table of 6 KiB blobs counts at pure
-      * b-tree-page cost. */
-    def countRowsWalk(root: Long,
-                      ranges: IndexedSeq[(Long, Long)]): Long = {
-      btreePagesVisited += 1
-      val off = pageOff(root)
-      val hdr = off + (if (root == 1L) 100 else 0)
-      val full = ranges == FullRange
-      def anyAbove(prevKey: Long): Boolean =
-        ranges.exists(_._2 > prevKey)
-      def anySpan(prevKey: Long, key: Long, incl: Boolean): Boolean =
-        ranges.exists(r => r._1 <= key &&
-          (r._2 > prevKey || (incl && r._2 == prevKey)))
-      def inRanges(r: Long): Boolean =
-        ranges.exists(t => t._1 <= r && r <= t._2)
-      u8(hdr) match {
-        case 0x05 =>
-          val nCells = u16(hdr + 3)
-          var prev = Long.MinValue
-          var first = true
-          var n = 0L
-          (0 until nCells).foreach { i =>
-            val cellOff = off + u16(hdr + 12 + 2 * i)
-            val key = varint(cellOff + 4)._1
-            if (anySpan(prev, key, first))
-              n += countRowsWalk(u32(cellOff), ranges)
-            prev = key
-            first = false
-          }
-          if (anyAbove(prev) || (first && ranges.nonEmpty))
-            n += countRowsWalk(u32(hdr + 8), ranges)
-          n
-        case 0x0d =>
-          val nCells = u16(hdr + 3)
-          if (full) nCells.toLong
-          else (0 until nCells).count { i =>
-            val cellOff = off + u16(hdr + 8 + 2 * i)
-            val (_, n1) = varint(cellOff)
-            inRanges(varint(cellOff + n1)._1)
-          }.toLong
-        case t => throw new IllegalStateException(
-          s"unexpected b-tree page type 0x${t.toHexString} at $root")
-      }
-    }
   }
 
-  /** All rows of `table`, rowid-aliased NULL integer-primary-key
-    * columns resolved to the rowid.
-    */
-  /** Projected read for the DSv2 scan: decode ONLY `ordinals`
-    * (indexes into the table's stored column order) — other columns'
-    * bodies are cursor-skipped, never materialized. Values come back
-    * in `ordinals` order; the INTEGER-PRIMARY-KEY rowid alias applies
-    * to ordinal 0 exactly as in [[readTable]]. */
-  def readTableProjected(bytes: Array[Byte], table: String,
-                         ordinals: Array[Int])
-      : Iterator[IndexedSeq[Any]] =
-    readTableRanges(bytes, table, ordinals, FullRange)._1
-
-  /** [[readTableProjected]] with rowid-range pruning (the DSv2 filter
-    * pushdown): only subtrees intersecting `ranges` (sorted disjoint
-    * inclusive intervals over the rowid) are read — interior-page
-    * separators bound each child, so a 1-row lookup visits O(tree
-    * depth) pages, not the table. Returns the row iterator plus a
-    * pages-visited thunk (valid after the iterator is consumed) so
-    * the claim is measurable, not asserted. */
+  /** Rows of `table` in `ranges` (sorted disjoint inclusive intervals
+    * over the rowid — the DSv2 filter pushdown), decoding ONLY
+    * `ordinals` (indexes into the table's stored column order; other
+    * columns' bodies are cursor-skipped, never materialized). Values
+    * come back in `ordinals` order, a NULL at ordinal 0 read as the
+    * INTEGER PRIMARY KEY rowid alias. Only subtrees intersecting
+    * `ranges` are read — interior-page separators bound each child, so
+    * a 1-row lookup visits O(tree depth) pages, not the table. Returns
+    * the row iterator plus a pages-visited thunk (valid after the
+    * iterator is consumed) so the claim is measurable, not asserted. */
   def readTableRanges(bytes: Array[Byte], table: String,
                       ordinals: Array[Int],
                       ranges: IndexedSeq[(Long, Long)])
       : (Iterator[IndexedSeq[Any]], () => Long) = {
     val db = new Db(bytes)
-    val root = db.rootPageOf(table)
-    db.btreePagesVisited = 0L // count the data walk, not the master's
-    val keep = ordinals.toSet
-    val it = db.tableRows(root, keep.contains, ranges).map { r =>
-      ordinals.toIndexedSeq.map { o =>
-        val v = r.values.lift(o).orNull
-        if (o == 0 && v == null) r.rowid else v
-      }
-    }
-    (it, () => db.btreePagesVisited)
+    (db.projected(db.rootPageOf(table), ordinals, ranges),
+      () => db.btreePagesVisited)
   }
 
   /** CONTENT-KEYED lookup through the UNIQUE autoindex — the
@@ -480,34 +440,17 @@ object SqliteReader {
     * outside them is dropped before any table page is read). Returns
     * the projected rows plus a pages-visited thunk spanning BOTH
     * walks. Throws NoSuchElementException when the file has no
-    * autoindex for `table` — callers must not silently fall back,
-    * the pushdown contract is exactness. */
+    * autoindex for `table`. */
   def readTableByContent(bytes: Array[Byte], table: String,
                          ordinals: Array[Int], keys: Seq[String],
                          ranges: IndexedSeq[(Long, Long)] = FullRange)
       : (Iterator[IndexedSeq[Any]], () => Long) = {
     val db = new Db(bytes)
-    val idxRoot = db.indexRootOf(table).getOrElse(
-      throw new NoSuchElementException(
-        s"no sqlite_autoindex_${table}_1 in sqlite_master — " +
-          "content-keyed lookup needs the UNIQUE autoindex"))
+    val rowids = db.contentRowids(table, keys, ranges)
     val tblRoot = db.rootPageOf(table)
-    db.btreePagesVisited = 0L
-    def inRanges(r: Long): Boolean =
-      ranges.exists(t => t._1 <= r && r <= t._2)
-    val rowids = db.indexHits(idxRoot,
-        keys.distinct.map(_.getBytes("UTF-8")).toIndexedSeq)
-      .map(_._2).filter(inRanges).distinct.sorted
-    val keep = ordinals.toSet
     val it =
       if (rowids.isEmpty) Iterator.empty
-      else db.tableRows(tblRoot, keep.contains,
-          rowids.map(r => (r, r))).map { r =>
-        ordinals.toIndexedSeq.map { o =>
-          val v = r.values.lift(o).orNull
-          if (o == 0 && v == null) r.rowid else v
-        }
-      }
+      else db.projected(tblRoot, ordinals, rowids.map(r => (r, r)))
     (it, () => db.btreePagesVisited)
   }
 
@@ -521,8 +464,7 @@ object SqliteReader {
       : (Long, Long) = {
     val db = new Db(bytes)
     val root = db.rootPageOf(table)
-    db.btreePagesVisited = 0L
-    val n = if (ranges.isEmpty) 0L else db.countRowsWalk(root, ranges)
+    val n = if (ranges.isEmpty) 0L else db.countRows(root, ranges)
     (n, db.btreePagesVisited)
   }
 
@@ -534,19 +476,12 @@ object SqliteReader {
                      ranges: IndexedSeq[(Long, Long)] = FullRange)
       : (Long, Long) = {
     val db = new Db(bytes)
-    val idxRoot = db.indexRootOf(table).getOrElse(
-      throw new NoSuchElementException(
-        s"no sqlite_autoindex_${table}_1 in sqlite_master — " +
-          "content-keyed count needs the UNIQUE autoindex"))
-    db.btreePagesVisited = 0L
-    def inRanges(r: Long): Boolean =
-      ranges.exists(t => t._1 <= r && r <= t._2)
-    val n = db.indexHits(idxRoot,
-        keys.distinct.map(_.getBytes("UTF-8")).toIndexedSeq)
-      .map(_._2).filter(inRanges).distinct.size.toLong
+    val n = db.contentRowids(table, keys, ranges).size.toLong
     (n, db.btreePagesVisited)
   }
 
+  /** All rows of `table`, rowid-aliased NULL integer-primary-key
+    * columns resolved to the rowid. */
   def readTable(bytes: Array[Byte], table: String): Iterator[Row] = {
     val db = new Db(bytes)
     db.tableRows(db.rootPageOf(table)).map { r =>

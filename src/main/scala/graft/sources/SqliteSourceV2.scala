@@ -2,6 +2,7 @@ package graft.sources
 
 import java.util
 
+import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -46,9 +47,6 @@ class SqliteTableProvider extends TableProvider with DataSourceRegister {
 
   override def supportsExternalMetadata(): Boolean = true
 
-  private def tableName(options: CaseInsensitiveStringMap): String =
-    Option(options.get("table")).getOrElse("documents")
-
   override def inferSchema(options: CaseInsensitiveStringMap)
       : StructType = {
     val files = SqliteSourceV2.resolveFiles(options)
@@ -56,7 +54,7 @@ class SqliteTableProvider extends TableProvider with DataSourceRegister {
       s"sqlite source: no .db files at '${options.get("path")}'")
     SqliteSourceV2.schemaOf(
       SqliteSourceV2.readBytes(files.head,
-        SqliteSourceV2.driverHadoopConf()), tableName(options))
+        SqliteSourceV2.driverHadoopConf()), SqliteSourceV2.tableOf(options))
   }
 
   override def getTable(schema: StructType,
@@ -71,7 +69,7 @@ private[sources] class SqliteTable(schema: StructType,
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
   override def name(): String =
-    s"sqlite:${Option(options.get("table")).getOrElse("documents")}"
+    s"sqlite:${SqliteSourceV2.tableOf(options)}"
   override def schema(): StructType = schema
   override def capabilities(): util.Set[TableCapability] =
     // BATCH_WRITE admits the table into DataFrameWriter.save()'s V2
@@ -167,17 +165,6 @@ private[sources] class SqliteScanBuilder(full: StructType,
     required = StructType(
       full.fields.filter(f => requiredSchema.fieldNames.contains(f.name)))
 
-  /** ROWID pushdown (the reference's own access pattern — its
-    * `WHERE id IN (?,...)` point lookups): equality / IN / range
-    * filters on the rowid-alias column become sorted-disjoint rowid
-    * intervals the reader prunes whole b-tree subtrees with (interior
-    * pages carry per-child max-rowid separators, so a 1-row lookup
-    * reads O(depth) pages — SqliteSourceV2Spec pins it via the
-    * pages-visited meter). Pushdown engages ONLY when the stored DDL
-    * declares the FIRST column `INTEGER PRIMARY KEY` (the rowid
-    * alias: SQLite stores NULL and the value IS the rowid, which is
-    * what makes rowid pruning equal value filtering); otherwise every
-    * filter stays residual and Spark evaluates them post-scan. */
   /** Equality / IN keys over column `c` — the shape the autoindex
     * serves. Non-string or null values stay residual. */
   private def contentKeysOf(f: org.apache.spark.sql.sources.Filter,
@@ -192,6 +179,20 @@ private[sources] class SqliteScanBuilder(full: StructType,
     }
   }
 
+  /** ROWID pushdown (the reference's own access pattern — its
+    * `WHERE id IN (?,...)` point lookups): equality / IN / range
+    * filters on the rowid-alias column become sorted-disjoint rowid
+    * intervals the reader prunes whole b-tree subtrees with (interior
+    * pages carry per-child max-rowid separators, so a 1-row lookup
+    * reads O(depth) pages — SqliteSourceV2Spec pins it via the
+    * pages-visited meter). Pushdown engages ONLY when the stored DDL
+    * declares the FIRST column `INTEGER PRIMARY KEY` (the rowid
+    * alias: SQLite stores NULL and the value IS the rowid, which is
+    * what makes rowid pruning equal value filtering); otherwise every
+    * filter stays residual and Spark evaluates them post-scan.
+    * CONTENT-KEY pushdown likewise engages only when the head DDL
+    * declares a UNIQUE text column with its autoindex present, for
+    * equality / IN filters on exactly that column. */
   override def pushFilters(
       filters: Array[org.apache.spark.sql.sources.Filter])
       : Array[org.apache.spark.sql.sources.Filter] = {
@@ -208,9 +209,6 @@ private[sources] class SqliteScanBuilder(full: StructType,
       ranges = SqliteSourceV2.intersectRanges(ranges,
         SqliteSourceV2.filterRanges(f, rowidCol.get).get)
     }
-    // content-key pushdown: engages only when the head DDL declares a
-    // UNIQUE text column with its autoindex present, and a filter is
-    // an equality/IN on exactly that column
     val shaped = filters.exists(f => full.fields.drop(1).exists(fl =>
       fl.dataType == StringType && contentKeysOf(f, fl.name).isDefined))
     uniqueCol =
@@ -250,8 +248,7 @@ private[sources] class SqliteScanBuilder(full: StructType,
   }
 
   override def build(): Scan =
-    new SqliteScan(full, required,
-      Option(options.get("table")).getOrElse("documents"),
+    new SqliteScan(full, required, SqliteSourceV2.tableOf(options),
       SqliteSourceV2.resolveFiles(options), ranges, contentKeys,
       uniqueCol, countCols)
 }
@@ -443,7 +440,7 @@ private[graft] object SqliteSourceV2 {
       s"sqlite write: only local paths are supported (got '$rawPath')" +
         " — the single-file final stream is a local java.io write")
     val local = rawPath.stripPrefix("file:")
-    val table = Option(options.get("table")).getOrElse("documents")
+    val table = tableOf(options)
     val unique = Option(options.get("unique"))
     unique.foreach(u => require(schema.fieldNames.contains(u),
       s"sqlite write: unique column '$u' not in schema " +
@@ -511,8 +508,10 @@ private[graft] object SqliteSourceV2 {
       .getOrElse(throw new NoSuchElementException(
         s"table '$table' not found in sqlite_master"))
 
-  /** The stored DDL's verdict on file `bytes` — shared by the
-    * planning-time head-file check and the per-file reader guard. */
+  /** True iff `table`'s stored DDL in file `bytes` declares the FIRST
+    * column `INTEGER PRIMARY KEY` — the rowid alias (SQLite stores
+    * NULL; the value IS the b-tree rowid). Shared by the planning-time
+    * head-file check and the per-file reader guard. */
   def ddlFirstColIsRowidAlias(bytes: Array[Byte],
                               table: String): Boolean = {
     val sql = createSqlOf(bytes, table)
@@ -545,53 +544,43 @@ private[graft] object SqliteSourceV2 {
     }
   }
 
-  /** Planning-time DDL verdicts, keyed by (head file, table, length,
-    * mtime) — pushFilters runs once per filtered query, and reading
-    * the whole head .db just to parse sqlite_master is driver work
-    * worth paying once per file version, not per plan. */
-  private val aliasCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Long, Long), Boolean]
+  /** The `table` option, `documents` when unset. */
+  def tableOf(options: CaseInsensitiveStringMap): String =
+    Option(options.get("table")).getOrElse("documents")
 
-  private val uniqueColCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Long, Long), Option[String]]
+  private type FileVersion = (String, String, Long, Long)
 
-  /** [[ddlUniqueIndexCol]] on the HEAD resolved file, cached per file
-    * version (the [[firstColIsRowidAlias]] discipline). */
-  def uniqueIndexCol(options: CaseInsensitiveStringMap)
-      : Option[String] = {
-    val files = resolveFiles(options)
-    if (files.isEmpty) None
-    else {
-      val table = Option(options.get("table")).getOrElse("documents")
+  /** `verdict` of the stored DDL on the HEAD resolved file, `none` when
+    * no file resolves. pushFilters runs once per filtered query, and
+    * reading the whole head .db just to parse sqlite_master is driver
+    * work worth paying once per file version — so each verdict is
+    * memoized in `cache` by (head file, table, length, mtime). Every
+    * OTHER file of a directory scan is re-validated executor-side by
+    * the partition reader before the pushdown applies to it. */
+  private def headVerdict[A](options: CaseInsensitiveStringMap, none: A,
+                             cache: TrieMap[FileVersion, A])(
+      verdict: (Array[Byte], String) => A): A =
+    resolveFiles(options).headOption.fold(none) { head =>
+      val table = tableOf(options)
       val conf = driverHadoopConf()
-      val hp = new org.apache.hadoop.fs.Path(files.head)
+      val hp = new org.apache.hadoop.fs.Path(head)
       val st = hp.getFileSystem(conf).getFileStatus(hp)
-      uniqueColCache.getOrElseUpdate(
-        (files.head, table, st.getLen, st.getModificationTime),
-        ddlUniqueIndexCol(readBytes(files.head, conf), table))
+      cache.getOrElseUpdate((head, table, st.getLen, st.getModificationTime),
+        verdict(readBytes(head, conf), table))
     }
-  }
 
-  /** True iff the stored DDL declares the FIRST column `INTEGER
-    * PRIMARY KEY` — the rowid alias (SQLite stores NULL; the value IS
-    * the b-tree rowid), which is the precondition for rowid-range
-    * filter pushdown to equal value filtering. Reads the head file's
-    * master table (one driver-side read, same as inferSchema; cached
-    * per file version). Every OTHER file of a directory scan is
-    * re-validated executor-side by the partition reader before its
-    * pushed ranges apply. */
-  def firstColIsRowidAlias(options: CaseInsensitiveStringMap): Boolean = {
-    val files = resolveFiles(options)
-    files.nonEmpty && {
-      val table = Option(options.get("table")).getOrElse("documents")
-      val conf = driverHadoopConf()
-      val hp = new org.apache.hadoop.fs.Path(files.head)
-      val st = hp.getFileSystem(conf).getFileStatus(hp)
-      aliasCache.getOrElseUpdate(
-        (files.head, table, st.getLen, st.getModificationTime),
-        ddlFirstColIsRowidAlias(readBytes(files.head, conf), table))
-    }
-  }
+  private val aliasCache = TrieMap.empty[FileVersion, Boolean]
+  private val uniqueColCache = TrieMap.empty[FileVersion, Option[String]]
+
+  /** [[ddlUniqueIndexCol]] on the head file. */
+  def uniqueIndexCol(options: CaseInsensitiveStringMap): Option[String] =
+    headVerdict(options, Option.empty[String], uniqueColCache)(
+      ddlUniqueIndexCol)
+
+  /** [[ddlFirstColIsRowidAlias]] on the head file: the precondition for
+    * rowid-range filter pushdown to equal value filtering. */
+  def firstColIsRowidAlias(options: CaseInsensitiveStringMap): Boolean =
+    headVerdict(options, false, aliasCache)(ddlFirstColIsRowidAlias)
 
   /** Translate one Spark source filter over the rowid-alias column to
     * a sorted-disjoint set of inclusive rowid intervals; None = not

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
+import SqliteReader.localSize
+
 /** Distributed writer for the SQLite database file format (format 3,
   * sqlite.org/fileformat2) — the inverse of [[SqliteReader]], closing
   * the reference's store loop in BOTH directions: the engine can read
@@ -217,22 +219,23 @@ object SqliteWriter {
   }
 
   /** Serialize a leaf page of the given type (0x0d table / 0x0a
-    * index) from pre-built cells; returns (page bytes, page-relative
-    * fix-up offsets). */
-  private def leafFromCells(pageType: Int, cells: Seq[Cell])
+    * index) from pre-built cells, its page header at `hdr` (100 on
+    * page 1, after the file header); returns (page bytes,
+    * page-relative fix-up offsets). */
+  private def leafFromCells(pageType: Int, cells: Seq[Cell], hdr: Int = 0)
       : (Array[Byte], Array[Int]) = {
     val page = new Array[Byte](PageSize)
-    page(0) = pageType.toByte
-    u16(page, 3, cells.length)
+    page(hdr) = pageType.toByte
+    u16(page, hdr + 3, cells.length)
     var content = Usable
     val fixups = ArrayBuffer.empty[Int]
     cells.zipWithIndex.foreach { case (c, i) =>
       content -= c.bytes.length
       System.arraycopy(c.bytes, 0, page, content, c.bytes.length)
-      u16(page, 8 + 2 * i, content)
+      u16(page, hdr + 8 + 2 * i, content)
       if (c.fixupInCell >= 0) fixups += content + c.fixupInCell
     }
-    u16(page, 5, content) // 4096-B pages: start always fits u16
+    u16(page, hdr + 5, content) // 4096-B pages: start always fits u16
     (page, fixups.toArray)
   }
 
@@ -266,18 +269,6 @@ object SqliteWriter {
       leafIdx = -1
     }
 
-    /** Local-payload split per the documented thresholds (the exact
-      * formulas [[SqliteReader.readLeafCell]] inverts). */
-    private def localLen(p: Int): Int = {
-      val maxLocal = Usable - 35
-      if (p <= maxLocal) p
-      else {
-        val minLocal = (Usable - 12) * 32 / 255 - 23
-        val k = minLocal + (p - minLocal) % (Usable - 4)
-        if (k > maxLocal) minLocal else k
-      }
-    }
-
     private def addRow(rowid: Long, values: IndexedSeq[Any]): Unit = {
       require(rowid > lastRowid,
         s"rowids must be strictly increasing within the sorted input " +
@@ -285,7 +276,7 @@ object SqliteWriter {
           "would produce a malformed B-tree")
       lastRowid = rowid
       val payload = encodeRecord(values)
-      val local = localLen(payload.length)
+      val local = localSize(payload.length, Usable, index = false)
       val overflows = local < payload.length
       val cellLen = varintLen(payload.length.toLong) + varintLen(rowid) +
         local + (if (overflows) 4 else 0)
@@ -340,18 +331,6 @@ object SqliteWriter {
   // ONCE in the whole tree: the classic bulk-load promotes the next
   // key each time a leaf fills (and each partition > 0 promotes its
   // first key as the cross-partition separator).
-
-  /** Index pages use a larger local-payload threshold than table
-    * leaves (the documented 64/255 fraction vs 35 bytes). */
-  private def indexLocalLen(p: Int): Int = {
-    val maxLocal = (Usable - 12) * 64 / 255 - 23
-    if (p <= maxLocal) p
-    else {
-      val minLocal = (Usable - 12) * 32 / 255 - 23
-      val k = minLocal + (p - minLocal) % (Usable - 4)
-      if (k > maxLocal) minLocal else k
-    }
-  }
 
   private[sources] sealed trait IndexOut extends Serializable
   private[sources] final case class IndexPageOut(page: LocalPage)
@@ -428,7 +407,7 @@ object SqliteWriter {
         out += IndexSepOut(-1, e)
         return
       }
-      val local = indexLocalLen(e.length)
+      val local = localSize(e.length, Usable, index = true)
       val cellLen = varintLen(e.length.toLong) + local +
         (if (local < e.length) 4 else 0)
       if (leafIdx >= 0 &&
@@ -492,7 +471,7 @@ object SqliteWriter {
       : (IndexedSeq[Array[Byte]], IndexedSeq[Long],
          IndexedSeq[Array[Byte]]) = {
     def cellLenOf(key: Array[Byte]): Int = {
-      val local = indexLocalLen(key.length)
+      val local = localSize(key.length, Usable, index = true)
       4 + varintLen(key.length.toLong) + local +
         (if (local < key.length) 4 else 0)
     }
@@ -527,7 +506,7 @@ object SqliteWriter {
       var chainNo = pageNo + 1
       (a until b).zipWithIndex.foreach { case (i, ci) =>
         val key = seps(i)
-        val local = indexLocalLen(key.length)
+        val local = localSize(key.length, Usable, index = true)
         val len = cellLenOf(key)
         content -= len
         u32(page, content, children(i))
@@ -566,24 +545,6 @@ object SqliteWriter {
     b(off + 1) = ((v >>> 16) & 0xff).toByte
     b(off + 2) = ((v >>> 8) & 0xff).toByte
     b(off + 3) = (v & 0xff).toByte
-  }
-
-  /** One leaf page holding `cells` (pre-serialized, non-overflowing),
-    * with the 100-byte file header carved out when `isPage1`. */
-  private def leafPageOf(cellsB: Seq[Array[Byte]], isPage1: Boolean)
-      : Array[Byte] = {
-    val page = new Array[Byte](PageSize)
-    val hdr = if (isPage1) 100 else 0
-    page(hdr) = 0x0d
-    u16(page, hdr + 3, cellsB.length)
-    var content = Usable
-    cellsB.zipWithIndex.foreach { case (c, i) =>
-      content -= c.length
-      System.arraycopy(c, 0, page, content, c.length)
-      u16(page, hdr + 8 + 2 * i, content)
-    }
-    u16(page, hdr + 5, content) // 4096-B pages: start always fits u16
-    page
   }
 
   /** Interior level over `children` = (pageNo, maxRowid) in key order:
@@ -639,7 +600,7 @@ object SqliteWriter {
 
   /** A non-overflowing table-leaf cell (driver-built pages:
     * sqlite_master rows, the sqlite_sequence row). */
-  private def rowCell(rowid: Long, values: IndexedSeq[Any]): Array[Byte] = {
+  private def rowCell(rowid: Long, values: IndexedSeq[Any]): Cell = {
     val rec = encodeRecord(values)
     require(rec.length <= Usable - 35 - 100,
       s"driver-built record (${rec.length} B) would overflow its page " +
@@ -649,7 +610,7 @@ object SqliteWriter {
     var off = putVarint(cell, 0, rec.length.toLong)
     off += putVarint(cell, off, rowid)
     System.arraycopy(rec, 0, cell, off, rec.length)
-    cell
+    Cell(cell, -1)
   }
 
   /** sqlite_master rows: the table, its automatic UNIQUE index (NULL
@@ -657,7 +618,7 @@ object SqliteWriter {
     * and the AUTOINCREMENT bookkeeping table. */
   private def masterCells(schema: ExportSchema, rootTable: Long,
                           rootIndex: Long, rootSeq: Long)
-      : Seq[Array[Byte]] = {
+      : Seq[Cell] = {
     val t = schema.table
     val rows = ArrayBuffer[IndexedSeq[Any]](
       IndexedSeq("table", t, t, rootTable, schema.createSql))
@@ -858,7 +819,7 @@ object SqliteWriter {
       var levels = 1
       var rootTable = tiFirst
       if (leafDir.isEmpty) {
-        tableInteriors += leafPageOf(Nil, isPage1 = false)
+        tableInteriors += leafFromCells(0x0d, Nil)._1
       } else if (leafDir.length == 1) {
         rootTable = leafDir.head._1
       } else {
@@ -882,9 +843,7 @@ object SqliteWriter {
       if (schema.uniqueTextCol.isDefined) {
         indexLevels = 1
         if (idxLeaves.isEmpty) {
-          // empty 0x0a root leaf
-          val (pg, _) = leafFromCells(0x0a, Nil)
-          indexInteriors += pg
+          indexInteriors += leafFromCells(0x0a, Nil)._1 // empty root leaf
         } else if (idxLeaves.length == 1) {
           rootIndex = idxLeaves.head
         } else {
@@ -906,10 +865,8 @@ object SqliteWriter {
       val seqPageNo = iiFirst + indexInteriors.length
       val seqPage: Option[Array[Byte]] =
         if (!schema.autoincrement) None
-        else if (leafDir.isEmpty) Some(leafPageOf(Nil, isPage1 = false))
-        else Some(leafPageOf(
-          Seq(rowCell(1L, IndexedSeq(schema.table, leafDir.last._2))),
-          isPage1 = false))
+        else Some(leafFromCells(0x0d, leafDir.lastOption.toSeq.map(l =>
+          rowCell(1L, IndexedSeq(schema.table, l._2))))._1)
 
       val dbPages = seqPageNo - 1 + (if (seqPage.isDefined) 1L else 0L)
 
@@ -917,9 +874,8 @@ object SqliteWriter {
         new java.io.FileOutputStream(out), 1 << 16)
       try {
         // page 1: file header + sqlite_master leaf
-        val p1 = leafPageOf(
-          masterCells(schema, rootTable, rootIndex, seqPageNo),
-          isPage1 = true)
+        val (p1, _) = leafFromCells(0x0d,
+          masterCells(schema, rootTable, rootIndex, seqPageNo), hdr = 100)
         System.arraycopy(fileHeader(dbPages), 0, p1, 0, 100)
         os.write(p1)
         // distributed pages stream through in partition order; every

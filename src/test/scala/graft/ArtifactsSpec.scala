@@ -182,4 +182,10 @@ class ArtifactsSpec extends SparkSpec {
         .as[Int].collect().toSeq == Seq(4))
     } finally deleteArtifacts(sf, names: _*)
   }
+
+  test("warmer names are distinct, and each names a registered query") {
+    val names = SparkEntry.warmers.map(_._1)
+    assert(names.distinct == names)
+    assert(names.filterNot(SparkEntry.queries.contains).isEmpty)
+  }
 }

@@ -236,20 +236,6 @@ class EngineSpec extends SparkSpec {
     assert(!fs.exists(lock))
   }
 
-  test("distributedIds engine assigns the same ids as the serial one") {
-    import spark.implicits._
-    def run(dist: Boolean): Map[Long, String] = {
-      val store = Files.createTempDirectory("graft_distids").toString + "/store"
-      val e = new Engine(spark, store, dim = 64, chunkSize = 40,
-        overlap = 10, distributedIds = dist)
-      e.loadDocuments(corpusDir)
-      e.addDocument("an extra pasted document body", "inline")
-      e.documents().select("doc_id", "content")
-        .as[(Long, String)].collect().toMap
-    }
-    assert(run(dist = false) == run(dist = true))
-  }
-
   test("two concurrent writers never corrupt the store") {
     import spark.implicits._
     val store = Files.createTempDirectory("graft_race").toString + "/store"

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   * with [[Sources.fromSqliteDocumentsRaw]]) and the engine's own
   * full-schema export (write → DSv2 read round-trip). Column pruning
   * is asserted at the plan level (the scan's readSchema) AND at the
-  * decode level ([[SqliteReader.readTableProjected]] skips bodies).
+  * decode level ([[SqliteReader.readTableRanges]] skips bodies).
   */
 class SqliteSourceV2Spec extends SparkSpec {
 
@@ -54,8 +54,8 @@ class SqliteSourceV2Spec extends SparkSpec {
       "and the rowid alias") {
     val bytes = Files.readAllBytes(Paths.get(RefDb))
     val full = SqliteReader.readTable(bytes, "documents").toSeq
-    val proj = SqliteReader
-      .readTableProjected(bytes, "documents", Array(2, 0)).toSeq
+    val proj = SqliteReader.readTableRanges(bytes, "documents",
+      Array(2, 0), SqliteReader.FullRange)._1.toSeq
     assert(proj.length == full.length)
     proj.zip(full).foreach { case (p, f) =>
       assert(p(1) == f.values(0)) // rowid alias on ordinal 0

@@ -309,16 +309,82 @@ class SqliteWriterSpec extends SparkSpec {
       val buf = new Array[Byte](9)
       val n = SqliteWriter.putVarint(buf, 0, v)
       assert(n == SqliteWriter.varintLen(v))
-      // decode with the reader's varint (private → replicate the loop)
-      var got = 0L; var i = 0; var done = false
-      while (i < 8 && !done) {
-        val b = buf(i) & 0xff
-        got = (got << 7) | (b & 0x7f)
-        if ((b & 0x80) == 0) done = true
-        i += 1
-      }
-      if (!done) got = (got << 8) | (buf(8) & 0xff)
-      assert(got == v, s"varint round-trip failed for $v")
+      val (got, used) = SqliteReader.varintAt(buf, 0)
+      assert(got == v && used == n, s"varint round-trip failed for $v")
+    }
+  }
+
+  test("localSize splits table and index payloads at the documented " +
+      "boundaries, and the writer's cells read back through the reader") {
+    import SqliteReader.localSize
+    // 4096-byte pages: maxLocal 4061 (table) / 1002 (index), minLocal
+    // 489; past maxLocal, K = 489 + (len - 489) % 4092, or 489 when K
+    // exceeds maxLocal
+    val u = SqliteWriter.Usable
+    assert(localSize(4061, u, index = false) == 4061)
+    assert(localSize(4062, u, index = false) == 489)  // K = 4062
+    assert(localSize(6200, u, index = false) == 2108) // K fits
+    assert(localSize(8154, u, index = false) == 489)  // K = 4062
+    assert(localSize(1002, u, index = true) == 1002)
+    assert(localSize(1003, u, index = true) == 489)   // K = 1003
+    assert(localSize(4681, u, index = true) == 589)   // K fits
+    assert(localSize(5181, u, index = true) == 489)   // K = 1089
+    // a text of n ASCII bytes makes a table record of n + 4 bytes
+    // (NULL rowid alias) and an index record of n + 5 (rowid < 128),
+    // so these contents put cells at every length above
+    val lens = Seq(4057, 4058, 6196, 8150, 997, 998, 4676, 5176)
+    val texts = lens.zipWithIndex.map { case (n, i) =>
+      ('a' + i).toChar.toString + "x" * (n - 1) }
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("content", StringType, nullable = false)))
+    val rows = texts.zipWithIndex.map { case (t, i) => Row(i + 1L, t) }
+    val out = tmp("split.db")
+    SqliteWriter.writeFull(
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema),
+      out, SqliteWriter.ExportSchema("t",
+        "CREATE TABLE t (id INTEGER PRIMARY KEY, content TEXT UNIQUE)",
+        uniqueTextCol = Some(1)), numPartitions = 1)
+    val bytes = Files.readAllBytes(Paths.get(out))
+    assert(SqliteReader.readTable(bytes, "t").map(_.values(1)).toSeq ==
+      texts)
+    val (hits, _) = SqliteReader.readTableByContent(bytes, "t",
+      Array(0, 1), texts)
+    assert(hits.map(r => (r(0), r(1))).toSeq ==
+      texts.zipWithIndex.map { case (t, i) => (i + 1L, t) })
+  }
+
+  test("countRows and readTableRanges visit the same pages on a " +
+      "multi-level file, for seeded random rowid ranges") {
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("pad", StringType, nullable = false)))
+    val rows = (1L to 3000L).map(i => Row(i, s"row-$i-" + ("p" * 910)))
+    val out = tmp("deep_ranges.db")
+    val stats = SqliteWriter.write(spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 8), schema), out, "t",
+      "CREATE TABLE t (id INTEGER PRIMARY KEY, pad TEXT)",
+      numPartitions = 8)
+    assert(stats.levels >= 3, s"expected a multi-level tree, got $stats")
+    val bytes = Files.readAllBytes(Paths.get(out))
+    val rnd = new scala.util.Random(11)
+    val random = (1 to 40).map { _ =>
+      // strictly increasing endpoints pair into sorted-disjoint ranges
+      Iterator.continually(rnd.nextInt(3040) - 20L).distinct
+        .take(2 * (1 + rnd.nextInt(3))).toSeq.sorted
+        .grouped(2).map(p => (p(0), p(1))).toIndexedSeq
+    }
+    (SqliteReader.FullRange +: IndexedSeq((Long.MinValue, Long.MinValue)) +:
+        random).foreach { ranges =>
+      val (it, readPages) =
+        SqliteReader.readTableRanges(bytes, "t", Array(0), ranges)
+      val ids = it.map(_(0)).toVector
+      val (n, countPages) = SqliteReader.countRows(bytes, "t", ranges)
+      assert(ids == (1L to 3000L).filter(id =>
+        ranges.exists(r => r._1 <= id && id <= r._2)))
+      assert(n == ids.size && countPages == readPages(),
+        s"$ranges: counted $n rows over $countPages pages, read " +
+          s"${ids.size} over ${readPages()}")
     }
   }
 }
