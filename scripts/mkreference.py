@@ -32,11 +32,13 @@ DIM = 1536
 # squared weights: shared 0.72, group 0.12, own 0.16 (sum 1)
 W_SHARED, W_GROUP, W_OWN = math.sqrt(0.72), math.sqrt(0.12), math.sqrt(0.16)
 
+# the reference server's CREATE TABLE text, indentation included, as
+# sqlite_master stores it (graft.sources.Sources.RefCreateSql)
 DDL = """CREATE TABLE documents (
-    id INTEGER PRIMARY KEY AUTOINCREMENT,
-    content TEXT UNIQUE,
-    vector BLOB
-  )"""
+                id INTEGER PRIMARY KEY AUTOINCREMENT,
+                content TEXT UNIQUE,
+                vector BLOB
+            )"""
 
 TRANSCRIPTS = [
     ("AADataStudio001.txt", 2294,

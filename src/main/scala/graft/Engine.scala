@@ -61,59 +61,17 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
   @volatile private var cachedLexical
       : Option[graft.operators.TextSearch.Bm25Index] = None
 
-  private def storeDir: org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(storePath)
-
-  private def storeFs: org.apache.hadoop.fs.FileSystem =
-    storeDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** The store directory's modification time, `None` when it does not
     * exist: one FS status call, no Spark job. Appends and the delete's
     * directory swap both move it on file systems that keep directory
     * mtimes; any other failure propagates.
     */
-  private def storeMtime(): Option[Long] =
-    try Some(storeFs.getFileStatus(storeDir).getModificationTime)
+  private def storeMtime(): Option[Long] = {
+    val dir = new org.apache.hadoop.fs.Path(storePath)
+    try Some(dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(dir).getModificationTime)
     catch { case _: java.io.FileNotFoundException => None }
-
-  /** The store resolved now, or `None` when it is empty. "Path does not
-    * exist" and "directory exists but holds no files" (a crashed first
-    * write can leave one) both mean an empty store — neither has
-    * readable doc_ids, so restarting id assignment is safe. Any OTHER
-    * failure (corrupt or partial files, permissions) must propagate —
-    * treating a real-but-unreadable store as empty would restart doc_id
-    * assignment at 0 and append duplicate ids once it becomes readable.
-    */
-  private def readStore(): Option[DataFrame] =
-    try Some(spark.read.parquet(storePath))
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" => None
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
-        // evaluate the FS listing outside the pattern guard: a listing
-        // failure (store deleted between Spark's inference attempt and
-        // this probe, transient FS error) must not REPLACE the original
-        // AnalysisException — attach it as suppressed so the root cause
-        // survives the rethrow
-        val onlyMeta =
-          try storeHoldsOnlyMetadataFiles
-          catch {
-            case scala.util.control.NonFatal(t) => t.addSuppressed(e); throw t
-          }
-        if (onlyMeta) None else throw e
-    }
-
-  /** Hadoop-FS listing (works for HDFS/S3/local alike, unlike
-    * java.io.File which would return null off the local FS and silently
-    * classify a real-but-unreadable store as empty). A listing failure
-    * propagates — same rationale as the schema-inference guard above.
-    */
-  private def storeHoldsOnlyMetadataFiles: Boolean =
-    storeFs.listStatus(storeDir).forall { st =>
-      val n = st.getPath.getName
-      n.startsWith("_") || n.startsWith(".")
-    }
+  }
 
   private def emptyStore: DataFrame = spark.emptyDataFrame
     .select(lit(0L).as("doc_id"), lit("").as("source"),
@@ -137,7 +95,7 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
       case Some(s) if s.mtime == mtime => s.docs
       case _ =>
         invalidateIndex()
-        val docs = readStore().getOrElse(emptyStore)
+        val docs = Ingest.readStore(spark, storePath).getOrElse(emptyStore)
         snapshot = Some(Snapshot(docs, mtime))
         docs
     }
@@ -193,7 +151,7 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
   private def ingestLocked(docs: DataFrame): Long = {
     // resolved fresh under the lock, never the snapshot: dedup and id
     // assignment must see every row another writer committed
-    val store = readStore().getOrElse(emptyStore)
+    val store = Ingest.readStore(spark, storePath).getOrElse(emptyStore)
     val chunked = Chunker.chunk(docs, "text", chunkSize, overlap)
       .select(col("source"), col("chunk_ix"), col("chunk").as("content"))
     val embedded = embedder.embed(chunked, "content", dim)
@@ -264,7 +222,7 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
     import spark.implicits._
     if (ids.isEmpty || storeMtime().isEmpty) return 0L
     Ingest.withStoreLock(spark, storePath) {
-      readStore().fold(0L) { store =>
+      Ingest.readStore(spark, storePath).fold(0L) { store =>
         val victims = ids.distinct.toDF("doc_id")
         val n = store.join(broadcast(victims), Seq("doc_id"), "left_semi")
           .count()

@@ -1,13 +1,16 @@
 package graft.operators
 
+import graft.operators.Multimodal.{ascii, le16, le32, mapMedia,
+  riffChunks, riffForm}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** REAL audio SAMPLE decode — the audio half of the boundary
   * [[ImagePixels]] closed for images: PCM in a WAV container is
   * UNCOMPRESSED, so the JDK needs no codec library to read it — the
-  * RIFF walk [[Multimodal.HeaderCodec]] already does for `fmt `
-  * extends to the `data` chunk and plain little-endian int16 reads.
+  * one RIFF chunk walk ([[Multimodal.riffChunks]]) that
+  * [[Multimodal.HeaderCodec]] runs for `fmt ` extends to the `data`
+  * chunk and plain little-endian int16 reads. The fixtures are written
+  * by the one WAV writer, [[Multimodal.SynthMedia.wavBytes]].
   * On top of the decoded samples, the integer-exact features an audio
   * curation gate runs: sample count, energy (Σs², the RMS numerator),
   * zero-crossing count (the classic cheap pitch/noisiness signal),
@@ -17,8 +20,8 @@ import org.apache.spark.sql.functions._
   * convention).
   *
   * What stays out: compressed codecs (MP3/AAC/Opus) — those need
-  * libraries this container lacks; the mapPartitions body here is the
-  * seam they drop into, exactly like ffmpeg in
+  * libraries this container lacks; [[decodePcm16Mono]] is the one
+  * decode seam they drop into, exactly like ffmpeg in
   * [[Multimodal.frameSample]]. FFT-domain features are IN:
   * [[spectralFeatures]] computes the discrete Fourier spectrum with
   * fixed-point twiddle tables, no library needed.
@@ -29,19 +32,9 @@ import org.apache.spark.sql.functions._
   */
 object Audio {
 
-  case class AudioRow(doc_id: Long, payload: Array[Byte])
   case class PcmFeatures(doc_id: Long, sample_rate: Int, n_samples: Long,
                          energy: Long, zero_crossings: Long,
                          clip_count: Long)
-
-  private def le16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def le32(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) |
-      ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-  private def ascii(b: Array[Byte], i: Int, s: String): Boolean =
-    i + s.length <= b.length &&
-      s.indices.forall(k => (b(i + k) & 0xff) == s.charAt(k))
 
   /** Decode 16-bit mono PCM from a WAV payload: (sampleRate, samples).
     * None for anything else — non-WAV, compressed, non-16-bit, >1
@@ -51,33 +44,22 @@ object Audio {
     */
   def decodePcm16Mono(b: Array[Byte]): Option[(Int, Array[Short])] =
     try {
-      if (!(b.length >= 12 && ascii(b, 0, "RIFF") && ascii(b, 8, "WAVE")))
-        return None
-      var i = 12
-      var rate = -1
-      var ok = false
-      while (i + 8 <= b.length) {
-        val size = le32(b, i + 4)
-        if (size < 0) return None
+      if (!riffForm(b, "WAVE")) return None
+      var rate: Option[Int] = None
+      val chunks = riffChunks(b, 12, b.length)
+      while (chunks.hasNext) {
+        val (i, size) = chunks.next()
         if (ascii(b, i, "fmt ") && size >= 16 && i + 8 + 16 <= b.length) {
           val fmt = le16(b, i + 8)
           val channels = le16(b, i + 10)
           val bits = le16(b, i + 22)
           if (fmt != 1 || channels != 1 || bits != 16) return None
-          rate = le32(b, i + 12)
-          ok = true
-        } else if (ascii(b, i, "data")) {
-          if (!ok) return None // data before fmt: malformed
-          val n = math.min(size, b.length - i - 8) / 2
-          val out = new Array[Short](n)
-          var k = 0
-          while (k < n) {
-            out(k) = le16(b, i + 8 + 2 * k).toShort
-            k += 1
-          }
-          return Some((rate, out))
-        }
-        i += 8 + size + (size & 1) // RIFF chunks are word-aligned
+          rate = Some(le32(b, i + 12))
+        } else if (ascii(b, i, "data"))
+          // no rate yet: data before fmt is malformed
+          return rate.map(r => (r, Array.tabulate(
+            math.min(size, b.length - i - 8) / 2)(k =>
+            le16(b, i + 8 + 2 * k).toShort)))
       }
       None
     } catch { case _: IndexOutOfBoundsException => None }
@@ -87,32 +69,25 @@ object Audio {
     * undecodable rows yield nothing. `clipAt` = |s| ≥ clipAt counts
     * as clipped (the rail test; 30000 ≈ 0.92 full scale default).
     */
-  def pcmFeatures(df: DataFrame, clipAt: Int = 30000): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col("doc_id"), col("payload")).as[AudioRow]
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          decodePcm16Mono(r.payload).map { case (rate, s) =>
-            var energy = 0L
-            var zc = 0L
-            var clip = 0L
-            var i = 0
-            while (i < s.length) {
-              val v = s(i).toLong
-              energy += v * v
-              if (math.abs(v) >= clipAt) clip += 1
-              // strict sign flip — zeros break a crossing, exactly as
-              // the SQL replay's s(i)*s(i+1) < 0 does
-              if (i > 0 && s(i - 1).toLong * v < 0) zc += 1
-              i += 1
-            }
-            PcmFeatures(r.doc_id, rate, s.length.toLong, energy, zc, clip)
-          }
+  def pcmFeatures(df: DataFrame, clipAt: Int = 30000): DataFrame =
+    mapMedia(df) { () => r =>
+      decodePcm16Mono(r.payload).map { case (rate, s) =>
+        var energy = 0L
+        var zc = 0L
+        var clip = 0L
+        var i = 0
+        while (i < s.length) {
+          val v = s(i).toLong
+          energy += v * v
+          if (math.abs(v) >= clipAt) clip += 1
+          // strict sign flip — zeros break a crossing, exactly as
+          // the SQL replay's s(i)*s(i+1) < 0 does
+          if (i > 0 && s(i - 1).toLong * v < 0) zc += 1
+          i += 1
         }
+        PcmFeatures(r.doc_id, rate, s.length.toLong, energy, zc, clip)
       }
-      .toDF()
-  }
+    }
 
   case class FrameRow(doc_id: Long, frame_ix: Long, n: Long,
                       energy: Long, peak: Long)
@@ -128,23 +103,17 @@ object Audio {
     */
   def frameFeatures(df: DataFrame, frameLen: Int = 500): DataFrame = {
     require(frameLen >= 1, s"frameLen=$frameLen must be >= 1")
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col("doc_id"), col("payload")).as[AudioRow]
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          decodePcm16Mono(r.payload).toSeq.flatMap { case (_, s) =>
-            s.iterator.zipWithIndex
-              .map { case (v, i) => (i / frameLen, v.toLong) }
-              .toSeq.groupBy(_._1).toSeq.map { case (fix, vs) =>
-                FrameRow(r.doc_id, fix.toLong, vs.size.toLong,
-                  vs.map(t => t._2 * t._2).sum,
-                  vs.map(t => math.abs(t._2)).max)
-              }
+    mapMedia(df) { () => r =>
+      decodePcm16Mono(r.payload).toSeq.flatMap { case (_, s) =>
+        s.iterator.zipWithIndex
+          .map { case (v, i) => (i / frameLen, v.toLong) }
+          .toSeq.groupBy(_._1).toSeq.map { case (fix, vs) =>
+            FrameRow(r.doc_id, fix.toLong, vs.size.toLong,
+              vs.map(t => t._2 * t._2).sum,
+              vs.map(t => math.abs(t._2)).max)
           }
-        }
       }
-      .toDF()
+    }
   }
 
   case class SpectralRow(doc_id: Long, frame_ix: Long, dom_bin: Long,
@@ -184,47 +153,41 @@ object Audio {
   def spectralFeatures(df: DataFrame, frameLen: Int = 64): DataFrame = {
     require(frameLen >= 2 && frameLen <= 64,
       s"frameLen=$frameLen outside [2, 64] (Long-exact power bound)")
-    val spark = df.sparkSession
-    import spark.implicits._
     val n = frameLen
-    df.select(col("doc_id"), col("payload")).as[AudioRow]
-      .mapPartitions { rows =>
-        val cosT = Array.tabulate(n)(j =>
-          math.round(math.cos(2.0 * math.Pi * j / n) * 1000.0))
-        val sinT = Array.tabulate(n)(j =>
-          math.round(math.sin(2.0 * math.Pi * j / n) * 1000.0))
-        rows.flatMap { r =>
-          decodePcm16Mono(r.payload).toSeq.flatMap { case (_, s) =>
-            (0 until s.length / n).map { fix =>
-              val off = fix * n
-              var domBin = 0L; var domP = 0L; var totP = 0L; var wSum = 0L
-              var k = 1
-              while (k <= n / 2) {
-                var re = 0L; var im = 0L; var i = 0
-                while (i < n) {
-                  val v = s(off + i).toLong
-                  val j = (k * i) % n
-                  re += v * cosT(j)
-                  im += v * sinT(j)
-                  i += 1
-                }
-                val p = (re * re + im * im) / 1000000L
-                if (p > domP) { domP = p; domBin = k.toLong }
-                totP += p
-                wSum += k.toLong * p
-                k += 1
-              }
-              // centroid left UNROUNDED: query layers round(…, 6) on
-              // both engines (the t19 convention) — the division here
-              // is exact-int inputs, identical IEEE op either side
-              if (totP == 0L) SpectralRow(r.doc_id, fix.toLong, 0L, 0L, 0L, 0.0)
-              else SpectralRow(r.doc_id, fix.toLong, domBin, domP, totP,
-                wSum.toDouble / totP.toDouble)
+    mapMedia(df) { () =>
+      val cosT = Array.tabulate(n)(j =>
+        math.round(math.cos(2.0 * math.Pi * j / n) * 1000.0))
+      val sinT = Array.tabulate(n)(j =>
+        math.round(math.sin(2.0 * math.Pi * j / n) * 1000.0))
+      r => decodePcm16Mono(r.payload).toSeq.flatMap { case (_, s) =>
+        (0 until s.length / n).map { fix =>
+          val off = fix * n
+          var domBin = 0L; var domP = 0L; var totP = 0L; var wSum = 0L
+          var k = 1
+          while (k <= n / 2) {
+            var re = 0L; var im = 0L; var i = 0
+            while (i < n) {
+              val v = s(off + i).toLong
+              val j = (k * i) % n
+              re += v * cosT(j)
+              im += v * sinT(j)
+              i += 1
             }
+            val p = (re * re + im * im) / 1000000L
+            if (p > domP) { domP = p; domBin = k.toLong }
+            totP += p
+            wSum += k.toLong * p
+            k += 1
           }
+          // centroid left UNROUNDED: query layers round(…, 6) on
+          // both engines (the t19 convention) — the division here
+          // is exact-int inputs, identical IEEE op either side
+          if (totP == 0L) SpectralRow(r.doc_id, fix.toLong, 0L, 0L, 0L, 0.0)
+          else SpectralRow(r.doc_id, fix.toLong, domBin, domP, totP,
+            wSum.toDouble / totP.toDouble)
         }
       }
-      .toDF()
+    }
   }
 
   /** Deterministic REAL-PCM fixture generator (the
@@ -260,26 +223,11 @@ object Audio {
         if ((i / 500) % 3 == 2) 0.toShort else base(i))
     }
 
-    def wavFramedForId(id: Long): Array[Byte] =
-      wavFromSamples(8000 + 1000 * (id % 5).toInt, samplesFramedForId(id))
+    def wavFramedForId(id: Long): Array[Byte] = mono(id, samplesFramedForId(id))
 
-    def wavForId(id: Long): Array[Byte] =
-      wavFromSamples(8000 + 1000 * (id % 5).toInt, samplesForId(id))
+    def wavForId(id: Long): Array[Byte] = mono(id, samplesForId(id))
 
-    private def wavFromSamples(rate: Int, s: Array[Short]): Array[Byte] = {
-      val dataLen = s.length * 2
-      val buf = java.nio.ByteBuffer.allocate(44 + dataLen)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      buf.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-      buf.put("WAVE".getBytes("US-ASCII"))
-      buf.put("fmt ".getBytes("US-ASCII")).putInt(16)
-      buf.putShort(1) // PCM
-      buf.putShort(1).putInt(rate) // mono
-      buf.putInt(rate * 2) // byte rate
-      buf.putShort(2).putShort(16) // block align, bits
-      buf.put("data".getBytes("US-ASCII")).putInt(dataLen)
-      s.foreach(v => buf.putShort(v))
-      buf.array()
-    }
+    private def mono(id: Long, s: Array[Short]): Array[Byte] =
+      Multimodal.SynthMedia.wavBytes(8000 + 1000 * (id % 5).toInt, 1, s)
   }
 }

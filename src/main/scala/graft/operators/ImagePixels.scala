@@ -1,7 +1,7 @@
 package graft.operators
 
+import graft.operators.Multimodal.{l2Floats, mapMedia}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** REAL pixel-level image processing — the layer the header-only
   * [[Multimodal]] codec deliberately stopped short of, closed here with
@@ -28,9 +28,10 @@ import org.apache.spark.sql.functions._
   *    floor(Σmeans / 64); dHash bit (y·8+x) set iff md(x+1,y) >
   *    md(x,y) over a 9×8 grid.
   *
-  * Scale shape: decode+hash is a NARROW mapPartitions kernel (one
-  * decoder context per partition, the [[Multimodal.decodeBatch]]
-  * convention) — at 100 TB it pipelines behind the binary-file scan
+  * Scale shape: decode+hash is a NARROW mapPartitions kernel over the
+  * shared media scaffold ([[Multimodal.mapMedia]], reading
+  * [[Multimodal.MediaRow]]s) with [[decodeGray]] as the one decode
+  * seam — at 100 TB it pipelines behind the binary-file scan
   * with zero shuffle; only the 16-byte (id, ahash, dhash) rows move.
   * Near-dup pairing then reuses the pigeonhole block join
   * ([[Dedup.simHashNearDupPairs]] — candidates bounded, hot-bucket
@@ -41,7 +42,7 @@ object ImagePixels {
   case class HashRow(doc_id: Long, width: Int, height: Int,
                      ahash: Long, dhash: Long)
   case class PixelRow(doc_id: Long, x: Int, y: Int, v: Int)
-  case class MediaRow(doc_id: Long, payload: Array[Byte])
+  case class FeatureRow(doc_id: Long, features: Array[Float])
 
   /** Decode any ImageIO-supported payload (PNG here; JPEG/GIF/BMP ride
     * free) to an integer luma grid. None for undecodable payloads — at
@@ -142,41 +143,27 @@ object ImagePixels {
     * PARTITION; undecodable rows yield nothing. Narrow (no shuffle):
     * the scan → decode → hash pipeline is one codegen-adjacent stage.
     */
-  def imageHashes(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col("doc_id"), col("payload")).as[MediaRow]
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          decodeGray(r.payload).map { case (w, h, g) =>
-            HashRow(r.doc_id, w, h,
-              aHash64(blockMeans(g, w, h, 8, 8)),
-              dHash64(blockMeans(g, w, h, 9, 8)))
-          }
-        }
+  def imageHashes(df: DataFrame): DataFrame =
+    mapMedia(df) { () => r =>
+      decodeGray(r.payload).map { case (w, h, g) =>
+        HashRow(r.doc_id, w, h,
+          aHash64(blockMeans(g, w, h, 8, 8)),
+          dHash64(blockMeans(g, w, h, 9, 8)))
       }
-      .toDF()
-  }
+    }
 
   /** The decoded pixel relation itself — (doc_id, x, y, v) — the
     * golden-pixel artifact shape: what the hashes derive from, exposed
     * so oracles and downstream feature extractors see the REAL decode
     * output, not a reimplementation.
     */
-  def pixelGrid(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col("doc_id"), col("payload")).as[MediaRow]
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          decodeGray(r.payload).toSeq.flatMap { case (w, h, g) =>
-            for (y <- 0 until h; x <- 0 until w)
-              yield PixelRow(r.doc_id, x, y, g(y * w + x))
-          }
-        }
+  def pixelGrid(df: DataFrame): DataFrame =
+    mapMedia(df) { () => r =>
+      decodeGray(r.payload).toSeq.flatMap { case (w, h, g) =>
+        for (y <- 0 until h; x <- 0 until w)
+          yield PixelRow(r.doc_id, x, y, g(y * w + x))
       }
-      .toDF()
-  }
+    }
 
   /** REAL pixel content features: the L2-normalized gw×gh block-mean
     * vector — the upgrade over [[Multimodal.HeaderCodec.features]]'s
@@ -185,27 +172,13 @@ object ImagePixels {
     * the v24 features→retrieval composition unchanged. Rows that fail
     * to decode are dropped.
     */
-  def pixelFeatures(df: DataFrame, gw: Int, gh: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col("doc_id"), col("payload")).as[MediaRow]
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          decodeGray(r.payload).map { case (w, h, g) =>
-            val m = blockMeans(g, w, h, gw, gh)
-            var sq = 0.0
-            var i = 0
-            while (i < m.length) { sq += m(i).toDouble * m(i); i += 1 }
-            val norm = math.sqrt(sq)
-            val f =
-              if (norm == 0.0) new Array[Float](m.length)
-              else Array.tabulate(m.length)(j => (m(j) / norm).toFloat)
-            (r.doc_id, f)
-          }
-        }
+  def pixelFeatures(df: DataFrame, gw: Int, gh: Int): DataFrame =
+    mapMedia(df) { () => r =>
+      decodeGray(r.payload).map { case (w, h, g) =>
+        FeatureRow(r.doc_id,
+          l2Floats(blockMeans(g, w, h, gw, gh).map(_.toDouble)))
       }
-      .toDF("doc_id", "features")
-  }
+    }
 
   /** Deterministic REAL-PNG fixture generator — full files with
     * zlib-compressed IDAT and checked CRCs (`ImageIO.write`), not just

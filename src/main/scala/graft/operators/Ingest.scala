@@ -359,8 +359,50 @@ object Ingest {
       .bucketBy(buckets, bucketCol).sortBy(bucketCol)
       .saveAsTable(table)
 
-  def readStore(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** The plain-parquet store at `path` resolved now, or `None` when it
+    * is empty. "Path does not exist" and "directory exists but holds
+    * no data files" (made ahead of time, or left by a crashed first
+    * write) both mean an empty store — neither has readable rows, so
+    * restarting doc_id assignment, or deduplicating against nothing, is
+    * safe. Any OTHER failure (corrupt or partial files, permissions)
+    * must propagate — treating a real-but-unreadable store as empty
+    * would restart doc_id assignment at 0 and append duplicate ids once
+    * it becomes readable.
+    */
+  def readStore(spark: SparkSession, path: String): Option[DataFrame] =
+    try Some(spark.read.parquet(path))
+    catch {
+      case e: org.apache.spark.sql.AnalysisException
+          if e.getCondition == "PATH_NOT_FOUND" => None
+      case e: org.apache.spark.sql.AnalysisException
+          if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
+        // evaluate the FS listing outside the pattern guard: a listing
+        // failure (store deleted between Spark's inference attempt and
+        // this probe, transient FS error) must not REPLACE the original
+        // AnalysisException — attach it as suppressed so the root cause
+        // survives the rethrow
+        val onlyMeta =
+          try holdsOnlyMetadataFiles(spark, path)
+          catch {
+            case scala.util.control.NonFatal(t) => t.addSuppressed(e); throw t
+          }
+        if (onlyMeta) None else throw e
+    }
+
+  /** Hadoop-FS listing (works for HDFS/S3/local alike, unlike
+    * java.io.File which would return null off the local FS and silently
+    * classify a real-but-unreadable store as empty). A listing failure
+    * propagates — same rationale as the schema-inference guard above.
+    */
+  private def holdsOnlyMetadataFiles(spark: SparkSession,
+                                     path: String): Boolean = {
+    val dir = new org.apache.hadoop.fs.Path(path)
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(dir).forall { st =>
+        val n = st.getPath.getName
+        n.startsWith("_") || n.startsWith(".")
+      }
+  }
 
   /** Store Z-ORDERED on two columns — `OPTIMIZE ZORDER BY (x, y)` as a
     * writer, completing [[graft.operators.Layout]]'s scorecard (i15

@@ -1,8 +1,8 @@
 package graft.operators
 
-import graft.functions.HashFunctions.md5Long
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Multimodal column plumbing: image/audio/video payloads ride through
   * the engine as opaque `binary` columns plus a typed metadata struct —
@@ -10,22 +10,28 @@ import org.apache.spark.sql.functions._
   * Spark's own `binaryFile` source).
   *
   * Header DECODE is real: [[HeaderCodec]] parses PNG (IHDR), JPEG
-  * (marker walk to SOFn), GIF (logical screen descriptor) and WAV
-  * (RIFF `fmt ` chunk) with plain JVM byte inspection — no native
-  * codec libraries. Feature extraction is real too, at the level a
-  * codec-free container permits: the L2-normalized byte histogram
-  * ([[HeaderCodec.features]]) — a learned image/audio embedding would
-  * replace that one method without touching shape or plumbing.
-  * IMAGE pixel decode is now real as well — [[ImagePixels]] decodes
-  * PNG (and any other ImageIO-supported format) to pixel grids,
-  * extracts real pixel features and perceptual hashes (t49/v32/v34).
-  * The remaining boundary is audio SAMPLE and video FRAME decode
-  * (mel-spectrogram, frame pixels): those need codecs the JDK lacks;
-  * [[frameSample]]'s mapPartitions body is the documented seam an
-  * ffmpeg call drops into. Unknown or MALFORMED payloads never
-  * throw: they fall back to [[StubCodec]] hash-derived metadata
-  * under format "bin" — at 100 TB a corrupt shard must skip, not
-  * kill the job.
+  * (marker walk to SOFn), GIF (logical screen descriptor), WAV
+  * (RIFF `fmt ` chunk) and AVI (`LIST hdrl` → `avih`) with plain JVM
+  * byte inspection — no native codec libraries. Each container rule
+  * has one definition here: one set of byte readers ([[le16]],
+  * [[le32]], [[be16]], [[be32]], [[ascii]]), one RIFF chunk walker
+  * ([[riffChunks]], shared with [[Audio.decodePcm16Mono]]), one WAV
+  * writer ([[SynthMedia.wavBytes]], shared with [[Audio.SynthAudio]]),
+  * one `(doc_id, payload)` row ([[MediaRow]]) and one per-partition
+  * scaffold ([[mapMedia]]) for every media operator here and in
+  * [[Audio]] and [[ImagePixels]]. Feature extraction is real too, at
+  * the level a codec-free container permits: the L2-normalized byte
+  * histogram ([[HeaderCodec.features]]) — a learned image/audio
+  * embedding would replace that one method without touching shape or
+  * plumbing. IMAGE pixel decode is real as well — [[ImagePixels]]
+  * decodes PNG (and any other ImageIO-supported format) to pixel
+  * grids, extracts real pixel features and perceptual hashes
+  * (t49/v32/v34). The remaining boundary is video FRAME decode (frame
+  * pixels): that needs codecs the JDK lacks; [[frameSample]]'s
+  * per-row body is the documented seam an ffmpeg call drops into.
+  * Unknown or MALFORMED payloads never throw: they fall back to
+  * [[StubCodec]] hash-derived metadata under format "bin" — at 100 TB
+  * a corrupt shard must skip, not kill the job.
   */
 object Multimodal {
 
@@ -42,65 +48,98 @@ object Multimodal {
       encode(col(textCol), "UTF-8").as("payload"),
       lit("application/octet-stream").as("mime"))
 
-  /** Columnar STUB decoder (kept as the no-codec baseline and the
-    * fallback-parity reference): deterministic fake metadata carved out
-    * of the md5 of the bytes — a pure function of the payload, so tests
-    * and oracles stay deterministic.
+  /** One media payload keyed by its document: the row every media
+    * operator reads. */
+  case class MediaRow(doc_id: Long, payload: Array[Byte])
+
+  /** The per-partition scaffold of every media operator: the
+    * (doc_id, payload) rows of `df`, mapped one partition at a time.
+    * `init` runs once per PARTITION and returns the per-row function
+    * (real decoders — libjpeg, ffmpeg contexts — are expensive to init
+    * and not serializable, so they must be constructed inside
+    * mapPartitions, not per row and not on the driver); a row may yield
+    * any number of output rows, none for a payload it skips.
     */
-  def decodeStub(df: DataFrame): DataFrame = {
-    val h = md5Long(col("payload").cast("string"))
-    df
-      .withColumn("byte_len", octet_length(col("payload")))
-      .withColumn("meta", struct(
-        (pmod(h, lit(1280)) + 1).cast("int").as("width"),
-        (pmod(shiftright(h, 16), lit(720)) + 1).cast("int").as("height"),
-        element_at(
-          array(lit("jpeg"), lit("png"), lit("webp"), lit("wav")),
-          (pmod(shiftright(h, 32), lit(4)) + 1).cast("int")).as("format")))
+  private[operators] def mapMedia[R <: Product : TypeTag](df: DataFrame)(
+      init: () => MediaRow => IterableOnce[R]): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(col("doc_id"), col("payload")).as[MediaRow]
+      .mapPartitions(rows => rows.flatMap(init()))
+      .toDF()
   }
 
-  /** STUB feature extractor: stands in for resize / frame-sample /
-    * mel-spectrogram. Emits a fixed-length feature vector derived from
-    * byte statistics — the signature (binary → array<float>) is what a
-    * real kernel would keep.
-    */
-  def featureStub(df: DataFrame, dim: Int): DataFrame =
-    df.withColumn("features",
-      transform(sequence(lit(0), lit(dim - 1)), i =>
-        (pmod(md5Long(concat(col("payload").cast("string"), lit(":"),
-          i.cast("string"))), lit(1000)).cast("double") / 1000.0)
-          .cast("float")))
+  private[operators] def be16(b: Array[Byte], i: Int): Int =
+    ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
+  private[operators] def be32(b: Array[Byte], i: Int): Int =
+    ((b(i) & 0xff) << 24) | ((b(i + 1) & 0xff) << 16) |
+      ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
+  private[operators] def le16(b: Array[Byte], i: Int): Int =
+    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
+  private[operators] def le32(b: Array[Byte], i: Int): Int =
+    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) |
+      ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
+  /** Whether `s` is spelled at `b(i)`; false when it runs off the end. */
+  private[operators] def ascii(b: Array[Byte], i: Int, s: String): Boolean =
+    i + s.length <= b.length &&
+      s.indices.forall(k => (b(i + k) & 0xff) == s.charAt(k))
 
-  case class MediaRow(doc_id: Long, payload: Array[Byte])
+  /** `RIFF....<form>`: the 12-byte header every RIFF file opens with. */
+  private[operators] def riffForm(b: Array[Byte], form: String): Boolean =
+    b.length >= 12 && ascii(b, 0, "RIFF") && ascii(b, 8, form)
+
+  /** The one RIFF chunk walk: (offset, size) of each `id(4) size(4le)
+    * data` chunk header in `b`, starting at `from`, while a header fits
+    * before `end`. Chunks are word-aligned — an odd size is followed by
+    * one pad byte. The walk stops at a negative size: later chunks of
+    * such a container cannot be located. A size large enough to
+    * overflow the next offset makes a later read throw
+    * `IndexOutOfBoundsException`, which every caller catches.
+    */
+  private[operators] def riffChunks(b: Array[Byte], from: Int,
+                                    end: Int): Iterator[(Int, Int)] =
+    new Iterator[(Int, Int)] {
+      private var i = from
+      def hasNext: Boolean = i + 8 <= end && le32(b, i + 4) >= 0
+      def next(): (Int, Int) = {
+        val size = le32(b, i + 4)
+        val chunk = (i, size)
+        i += 8 + size + (size & 1)
+        chunk
+      }
+    }
+
+  /** `v / ‖v‖₂` as float32; the zero vector stays zero (no NaN). */
+  private[operators] def l2Floats(v: Array[Double]): Array[Float] = {
+    var sq = 0.0
+    var i = 0
+    while (i < v.length) { sq += v(i) * v(i); i += 1 }
+    val norm = math.sqrt(sq)
+    if (norm == 0.0) new Array[Float](v.length)
+    else v.map(x => (x / norm).toFloat)
+  }
+
   case class DecodedRow(doc_id: Long, byte_len: Int, width: Int,
                         height: Int, format: String,
                         features: Array[Float])
 
   /** Batch-shaped decode+extract: the Scala analog of a pandas-UDF
-    * `mapInPandas` media pipeline. One CODEC handle per PARTITION (real
-    * decoders — libjpeg, ffmpeg contexts — are expensive to init and not
-    * serializable, so they must be constructed inside mapPartitions, not
-    * per row and not on the driver), then a streaming iterator over the
-    * partition's rows. Header metadata AND the byte-histogram content
-    * features are real ([[HeaderCodec]]); pass `featureDim = 0` to
-    * skip feature extraction entirely (metadata-only scans must not
-    * pay a per-row histogram pass for a column they drop).
+    * `mapInPandas` media pipeline — one [[HeaderCodec]] per PARTITION
+    * ([[mapMedia]]), then a streaming iterator over the partition's
+    * rows. Header metadata AND the byte-histogram content features are
+    * real; pass `featureDim = 0` to skip feature extraction entirely
+    * (metadata-only scans must not pay a per-row histogram pass for a
+    * column they drop).
     */
-  def decodeBatch(df: DataFrame, featureDim: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col("doc_id"), col("payload")).as[MediaRow]
-      .mapPartitions { rows =>
-        // per-partition codec init happens HERE, once
-        val codec = new HeaderCodec(featureDim)
-        rows.map { r =>
-          val m = codec.decode(r.payload)
-          DecodedRow(r.doc_id, r.payload.length, m.width, m.height,
-            m.format, codec.features(r.payload))
-        }
+  def decodeBatch(df: DataFrame, featureDim: Int): DataFrame =
+    mapMedia(df) { () =>
+      val codec = new HeaderCodec(featureDim)
+      r => {
+        val m = codec.decode(r.payload)
+        Some(DecodedRow(r.doc_id, r.payload.length, m.width, m.height,
+          m.format, codec.features(r.payload)))
       }
-      .toDF()
-  }
+    }
 
   case class FrameRow(doc_id: Long, n_frames: Int, frame_ix: Int)
 
@@ -113,27 +152,21 @@ object Multimodal {
     * 2*target-1 whenever target < n < 2*target), exact for the SQL
     * oracle — no RNG. The decode of the sampled
     * frame's PIXELS is the documented stub boundary (a real pipeline
-    * drops an ffmpeg call into the mapPartitions body below, where the
+    * drops an ffmpeg call into the per-row body below, where the
     * per-partition codec handle already lives); everything around it —
     * schema, per-partition batching, the explode shape, the sampling
     * rule — is real and oracle-gated. Non-AVI/malformed payloads yield
     * no rows (a corrupt shard skips, never kills).
     */
   def frameSample(df: DataFrame, target: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     require(target >= 1, s"target=$target must be >= 1")
-    df.select(col("doc_id"), col("payload")).as[MediaRow]
-      .mapPartitions { rows =>
-        val codec = new HeaderCodec(0) // init-once per partition
-        rows.flatMap { r =>
-          codec.aviFrames(r.payload).toSeq.flatMap { n =>
-            val stride = math.max(1, (n + target - 1) / target)
-            (0 until n by stride).map(ix => FrameRow(r.doc_id, n, ix))
-          }
-        }
+    mapMedia(df) { () =>
+      val codec = new HeaderCodec(0)
+      r => codec.aviFrames(r.payload).toSeq.flatMap { n =>
+        val stride = math.max(1, (n + target - 1) / target)
+        (0 until n by stride).map(ix => FrameRow(r.doc_id, n, ix))
       }
-      .toDF()
+    }
   }
 
   /** Pure-JVM container-header parser. Only HEADERS are decoded (the
@@ -147,21 +180,7 @@ object Multimodal {
     * one metadata struct across modalities.
     */
   final class HeaderCodec(featureDim: Int) {
-    private val stub = new StubCodec(featureDim)
-
-    private def be16(b: Array[Byte], i: Int): Int =
-      ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-    private def be32(b: Array[Byte], i: Int): Int =
-      ((b(i) & 0xff) << 24) | ((b(i + 1) & 0xff) << 16) |
-        ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-    private def le16(b: Array[Byte], i: Int): Int =
-      (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-    private def le32(b: Array[Byte], i: Int): Int =
-      (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) |
-        ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-    private def ascii(b: Array[Byte], i: Int, s: String): Boolean =
-      i + s.length <= b.length &&
-        s.indices.forall(k => (b(i + k) & 0xff) == s.charAt(k))
+    private val stub = new StubCodec
 
     private val PngMagic =
       Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
@@ -208,24 +227,16 @@ object Multimodal {
         Some(MediaMeta(le16(b, 6), le16(b, 8), "gif"))
       else None
 
-    /** RIFF....WAVE, then chunk walk (id(4) size(4le) data) to `fmt `:
+    /** RIFF....WAVE, then the [[riffChunks]] walk to the first `fmt `:
       * channels at data+2, sample rate at data+4. */
-    private def wav(b: Array[Byte]): Option[MediaMeta] = {
-      if (!(b.length >= 12 && ascii(b, 0, "RIFF") && ascii(b, 8, "WAVE")))
-        return None
-      var i = 12
-      while (i + 8 <= b.length) {
-        val size = le32(b, i + 4)
-        if (size < 0) return None
-        if (ascii(b, i, "fmt ")) {
-          return if (size >= 8 && i + 8 + 8 <= b.length)
+    private def wav(b: Array[Byte]): Option[MediaMeta] =
+      if (!riffForm(b, "WAVE")) None
+      else riffChunks(b, 12, b.length).find(c => ascii(b, c._1, "fmt "))
+        .flatMap { case (i, size) =>
+          if (size >= 8 && i + 8 + 8 <= b.length)
             Some(MediaMeta(le32(b, i + 12), le16(b, i + 10), "wav"))
           else None
         }
-        i += 8 + size + (size & 1) // RIFF chunks are word-aligned
-      }
-      None
-    }
 
     /** RIFF....AVI , then the chunk walk DESCENDS into the `LIST hdrl`
       * container to the `avih` main header, whose payload carries
@@ -242,35 +253,22 @@ object Multimodal {
 
     /** The full avih read: (dwWidth, dwHeight, dwTotalFrames) —
       * [[avi]] keeps the cross-modal MediaMeta shape; frame-level
-      * consumers ([[aviFrames]], the t49 sampler) need the count. */
-    private def aviHeader(b: Array[Byte]): Option[(Int, Int, Int)] = {
-      if (!(b.length >= 12 && ascii(b, 0, "RIFF") && ascii(b, 8, "AVI ")))
-        return None
-      var i = 12
-      while (i + 8 <= b.length) {
-        val size = le32(b, i + 4)
-        if (size < 0) return None
-        if (ascii(b, i, "LIST") && ascii(b, i + 8, "hdrl")) {
+      * consumers ([[aviFrames]], i19's [[frameSample]]) need the count. */
+    private def aviHeader(b: Array[Byte]): Option[(Int, Int, Int)] =
+      if (!riffForm(b, "AVI ")) None
+      else riffChunks(b, 12, b.length)
+        .find(c => ascii(b, c._1, "LIST") && ascii(b, c._1 + 8, "hdrl"))
+        .flatMap { case (i, size) =>
           // descend: subchunks start after the 4-byte list type
-          var j = i + 12
-          val end = math.min(b.length, i + 8 + size)
-          while (j + 8 <= end) {
-            val ssize = le32(b, j + 4)
-            if (ssize < 0) return None
-            if (ascii(b, j, "avih")) {
-              return if (ssize >= 40 && j + 8 + 40 <= b.length)
-                Some((le32(b, j + 8 + 32), le32(b, j + 8 + 36),
-                  le32(b, j + 8 + 16)))
-              else None
-            }
-            j += 8 + ssize + (ssize & 1)
-          }
-          return None
+          riffChunks(b, i + 12, math.min(b.length, i + 8 + size))
+            .find(c => ascii(b, c._1, "avih"))
         }
-        i += 8 + size + (size & 1)
-      }
-      None
-    }
+        .flatMap { case (j, size) =>
+          if (size >= 40 && j + 8 + 40 <= b.length)
+            Some((le32(b, j + 8 + 32), le32(b, j + 8 + 36),
+              le32(b, j + 8 + 16)))
+          else None
+        }
 
     /** dwTotalFrames of an AVI payload; None for non-AVI/malformed. */
     def aviFrames(payload: Array[Byte]): Option[Int] =
@@ -302,12 +300,7 @@ object Multimodal {
         counts((payload(i) & 0xff) % featureDim) += 1.0
         i += 1
       }
-      var sq = 0.0
-      var b = 0
-      while (b < featureDim) { sq += counts(b) * counts(b); b += 1 }
-      val norm = math.sqrt(sq)
-      if (norm == 0.0) new Array[Float](featureDim)
-      else Array.tabulate(featureDim)(b => (counts(b) / norm).toFloat)
+      l2Floats(counts)
     }
   }
 
@@ -315,13 +308,12 @@ object Multimodal {
     * scratch state a real decoder would (buffers, contexts) — hence one
     * instance per partition.
     */
-  final class StubCodec(dim: Int) {
+  final class StubCodec {
     private val digest = java.security.MessageDigest.getInstance("MD5")
 
-    private def h60(bytes: Array[Byte], salt: String): Long = {
+    private def h60(bytes: Array[Byte]): Long = {
       digest.reset()
       digest.update(bytes)
-      digest.update(salt.getBytes("UTF-8"))
       val h = digest.digest()
       var acc = 0L
       var i = 0
@@ -332,15 +324,10 @@ object Multimodal {
     private val formats = Array("jpeg", "png", "webp", "wav")
 
     def decode(payload: Array[Byte]): MediaMeta = {
-      val h = h60(payload, "")
+      val h = h60(payload)
       MediaMeta((h % 1280 + 1).toInt, ((h >> 16) % 720 + 1).toInt,
         formats(((h >> 32) % 4).toInt))
     }
-
-    def features(payload: Array[Byte]): Array[Float] =
-      if (dim == 0) Array.empty
-      else Array.tabulate(dim)(i =>
-        (h60(payload, s":$i") % 1000).toFloat / 1000.0f)
   }
 
   /** Deterministic minimal-but-REAL container headers, synthesized from
@@ -358,7 +345,7 @@ object Multimodal {
     def jpegForId(id: Long): Array[Byte] =
       jpegBytes((id * 11 % 640).toInt + 1, (id * 13 % 480).toInt + 1)
     def wavForId(id: Long): Array[Byte] =
-      wavBytes(8000 + 1000 * (id % 5).toInt, (id % 2).toInt + 1)
+      wavBytes(8000 + 1000 * (id % 5).toInt, (id % 2).toInt + 1, Array.empty)
     def aviForId(id: Long): Array[Byte] =
       aviBytes((id * 17 % 1920).toInt + 1, (id * 19 % 1080).toInt + 1,
         (id * 7 % 300).toInt + 1)
@@ -409,17 +396,23 @@ object Multimodal {
       buf.array()
     }
 
-    def wavBytes(sampleRate: Int, channels: Int): Array[Byte] = {
+    /** The one WAV writer: RIFF/WAVE, a 16-byte `fmt ` chunk for
+      * 16-bit PCM, and a `data` chunk holding `samples` as
+      * little-endian int16 (interleaved when `channels` > 1). */
+    def wavBytes(sampleRate: Int, channels: Int,
+                 samples: Array[Short]): Array[Byte] = {
+      val dataLen = samples.length * 2
       val buf = java.nio.ByteBuffer
-        .allocate(44).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      buf.put("RIFF".getBytes("US-ASCII")).putInt(36)
+        .allocate(44 + dataLen).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      buf.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
       buf.put("WAVE".getBytes("US-ASCII"))
       buf.put("fmt ".getBytes("US-ASCII")).putInt(16)
       buf.putShort(1) // PCM
       buf.putShort(channels.toShort).putInt(sampleRate)
       buf.putInt(sampleRate * channels * 2) // byte rate
       buf.putShort((channels * 2).toShort).putShort(16) // align, bits
-      buf.put("data".getBytes("US-ASCII")).putInt(0)
+      buf.put("data".getBytes("US-ASCII")).putInt(dataLen)
+      samples.foreach(v => buf.putShort(v))
       buf.array()
     }
   }

@@ -367,10 +367,9 @@ object IngestQueries {
   }
 
   /** binaryFile-source media scan, oracle-gated: real container FILES
-    * on disk (one PNG/JPEG/WAV per doc, [[graft.operators.Multimodal
-    * .SynthMedia]] bytes — the write half of the round-trip; the
-    * binaryFile source has no DataFrame writer, so fixture files are
-    * materialized directly) → [[graft.sources.Sources.binaryDir]] →
+    * on disk (one PNG/JPEG/WAV/AVI per doc, [[MediaFixtures.stage]] of
+    * [[MediaFixtures.mixFile]] — the write half of the round-trip) →
+    * [[graft.sources.Sources.binaryDir]] →
     * per-partition header decode. The oracle recomputes what every
     * header must parse to from the id formulas, so the whole
     * files-on-disk → distributed binary scan → codec pipeline is in
@@ -379,25 +378,8 @@ object IngestQueries {
     */
   def binaryMediaScan(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.Multimodal
-    import graft.operators.Multimodal.SynthMedia
-    val dir = roundtripDir(spark, "graft_i12_media")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    Tables.documents(spark, sfDir).select("doc_id")
-      .filter(col("doc_id") < 60)
-      .collect().map(_.getLong(0))
-      .foreach { id =>
-        val (bytes, ext) = (id % 4) match {
-          case 0 => (SynthMedia.pngForId(id), "png")
-          case 1 => (SynthMedia.jpegForId(id), "jpg")
-          case 2 => (SynthMedia.wavForId(id), "wav")
-          case _ => (SynthMedia.aviForId(id), "avi")
-        }
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(dir, f"doc_$id%05d.$ext"), bytes): Unit
-      }
-    val media = graft.sources.Sources.binaryDir(spark, dir)
-      .select(regexp_extract(col("source"), "doc_(\\d+)", 1)
-        .cast("long").as("doc_id"), col("payload"))
+    val media = MediaFixtures.files(spark, MediaFixtures.stage(spark, sfDir,
+      roundtripDir(spark, "graft_i12_media"))(MediaFixtures.mixFile))
     Multimodal.decodeBatch(media, featureDim = 0)
       .select(col("doc_id"), col("byte_len").cast("long").as("byte_len"),
         col("width"), col("height"), col("format"))
@@ -419,25 +401,8 @@ object IngestQueries {
     */
   def frameSampleQuery(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.Multimodal
-    import graft.operators.Multimodal.SynthMedia
-    val dir = roundtripDir(spark, "graft_i19_frames")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    Tables.documents(spark, sfDir).select("doc_id")
-      .filter(col("doc_id") < 60)
-      .collect().map(_.getLong(0))
-      .foreach { id =>
-        val (bytes, ext) = (id % 4) match {
-          case 0 => (SynthMedia.pngForId(id), "png")
-          case 1 => (SynthMedia.jpegForId(id), "jpg")
-          case 2 => (SynthMedia.wavForId(id), "wav")
-          case _ => (SynthMedia.aviForId(id), "avi")
-        }
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(dir, f"doc_$id%05d.$ext"), bytes): Unit
-      }
-    val media = graft.sources.Sources.binaryDir(spark, dir)
-      .select(regexp_extract(col("source"), "doc_(\\d+)", 1)
-        .cast("long").as("doc_id"), col("payload"))
+    val media = MediaFixtures.files(spark, MediaFixtures.stage(spark, sfDir,
+      roundtripDir(spark, "graft_i19_frames"))(MediaFixtures.mixFile))
     Multimodal.frameSample(media, target = 8)
       .select(col("doc_id"),
         col("n_frames").cast("long").as("n_frames"),
@@ -469,7 +434,7 @@ object IngestQueries {
         store)
     }
     Ingest.compactStore(spark, store, numFiles = 2)
-    Ingest.readStore(spark, store)
+    spark.read.parquet(store)
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum("doc_id").as("sum_ids"),
         sum("n_chars").as("sum_chars"))

@@ -839,28 +839,13 @@ object StreamingQueries {
   }
 
   /** s16's staged media directory, written once per (JVM, corpus) —
-    * the same id-derived REAL container fixtures as i12 (shared
-    * SynthMedia formulas, so the oracle replays from the documents
-    * table), laid out as files for the streaming binaryFile source. */
+    * i12's media mix ([[MediaFixtures.mixFile]], so the oracle replays
+    * from the documents table), laid out as files for the streaming
+    * binaryFile source. */
   private def mediaStage(spark: SparkSession, sfDir: String): String =
     Artifacts.memo("mediaStage", sfDir) {
-      import graft.operators.Multimodal.SynthMedia
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_s16_media").toString
-      graft.Tables.documents(spark, sfDir).select("doc_id")
-        .filter(col("doc_id") < 60)
-        .collect().map(_.getLong(0))
-        .foreach { id =>
-          val (bytes, ext) = (id % 4) match {
-            case 0 => (SynthMedia.pngForId(id), "png")
-            case 1 => (SynthMedia.jpegForId(id), "jpg")
-            case 2 => (SynthMedia.wavForId(id), "wav")
-            case _ => (SynthMedia.aviForId(id), "avi")
-          }
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(dir, f"doc_$id%05d.$ext"), bytes): Unit
-        }
-      dir
+      MediaFixtures.stage(spark, sfDir, java.nio.file.Files
+        .createTempDirectory("graft_s16_media").toString)(MediaFixtures.mixFile)
     }
 
   /** CONTINUOUS MULTIMODAL INGEST — i12's binary scan as a stream, the
@@ -878,12 +863,7 @@ object StreamingQueries {
     */
   def streamMedia(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.Multimodal
-    val dir = mediaStage(spark, sfDir)
-    val schema = spark.read.format("binaryFile").load(dir).schema
-    val raw = spark.readStream.schema(schema)
-      .format("binaryFile").load(dir)
-      .select(regexp_extract(col("path"), "doc_(\\d+)", 1)
-        .cast("long").as("doc_id"), col("content").as("payload"))
+    val raw = MediaFixtures.fileStream(spark, mediaStage(spark, sfDir))
     val agg = Multimodal.decodeBatch(raw, featureDim = 0)
       .groupBy("format")
       .agg(count(lit(1)).as("n"),
@@ -899,17 +879,9 @@ object StreamingQueries {
   private def pcmStage(spark: SparkSession, sfDir: String): String =
     Artifacts.memo("pcmStage", sfDir) {
       import graft.operators.Audio.SynthAudio
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_s17_pcm").toString
-      graft.Tables.documents(spark, sfDir).select("doc_id")
-        .filter(col("doc_id") < 60)
-        .collect().map(_.getLong(0))
-        .foreach { id =>
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(dir, f"doc_$id%05d.wav"),
-            SynthAudio.wavForId(id)): Unit
-        }
-      dir
+      MediaFixtures.stage(spark, sfDir, java.nio.file.Files
+        .createTempDirectory("graft_s17_pcm").toString)(
+        id => (SynthAudio.wavForId(id), "wav"))
     }
 
   /** CONTINUOUS AUDIO INGEST with REAL sample decode — s16 upgraded
@@ -924,12 +896,7 @@ object StreamingQueries {
     */
   def streamAudioPcm(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.Audio
-    val dir = pcmStage(spark, sfDir)
-    val schema = spark.read.format("binaryFile").load(dir).schema
-    val raw = spark.readStream.schema(schema)
-      .format("binaryFile").load(dir)
-      .select(regexp_extract(col("path"), "doc_(\\d+)", 1)
-        .cast("long").as("doc_id"), col("content").as("payload"))
+    val raw = MediaFixtures.fileStream(spark, pcmStage(spark, sfDir))
     val feats = Audio.pcmFeatures(raw)
       .select(col("doc_id"),
         col("sample_rate").cast("long").as("sample_rate"),

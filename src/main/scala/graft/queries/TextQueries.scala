@@ -442,13 +442,9 @@ object TextQueries {
     * shuffle; at 100 TB only the 16-byte hash rows leave the scan.
     */
   def imagePerceptualHash(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     import graft.operators.ImagePixels
-    val media = Tables.documents(spark, sfDir).select("doc_id")
-      .filter(col("doc_id") < 60).as[Long]
-      .map(id =>
-        ImagePixels.MediaRow(id, ImagePixels.SynthImages.pngForId(id)))
-      .toDF()
+    val media = MediaFixtures.frame(spark, sfDir)(
+      ImagePixels.SynthImages.pngForId)
     ImagePixels.imageHashes(media)
       .select(col("doc_id"),
         col("width").cast("long").as("width"),
@@ -475,17 +471,10 @@ object TextQueries {
     */
   def imagePerceptualHashMixed(spark: SparkSession,
                                sfDir: String): DataFrame = {
-    import spark.implicits._
+    import graft.operators.ImagePixels.SynthImages
     import graft.operators.ImagePixels
-    val media = Tables.documents(spark, sfDir).select("doc_id")
-      .filter(col("doc_id") < 60).as[Long]
-      .map { id =>
-        val payload =
-          if (id % 3 == 2) ImagePixels.SynthImages.jpegForId(id)
-          else ImagePixels.SynthImages.pngForId(id)
-        ImagePixels.MediaRow(id, payload)
-      }
-      .toDF()
+    val media = MediaFixtures.frame(spark, sfDir)(id =>
+      if (id % 3 == 2) SynthImages.jpegForId(id) else SynthImages.pngForId(id))
     Artifacts.write(
       ImagePixels.pixelGrid(media.filter(col("doc_id") % 3 === 2)),
       "t65_jpeg_pixels", sfDir)
@@ -724,12 +713,8 @@ object TextQueries {
     * kernel; ~40 bytes per file leave the scan.
     */
   def audioPcmFeatures(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     import graft.operators.Audio
-    val media = Tables.documents(spark, sfDir).select("doc_id")
-      .filter(col("doc_id") < 60).as[Long]
-      .map(id => Audio.AudioRow(id, Audio.SynthAudio.wavForId(id)))
-      .toDF()
+    val media = MediaFixtures.frame(spark, sfDir)(Audio.SynthAudio.wavForId)
     Audio.pcmFeatures(media)
       .select(col("doc_id"),
         col("sample_rate").cast("long").as("sample_rate"),
@@ -748,12 +733,8 @@ object TextQueries {
     * frames → aggregates from the closed-form formulas.
     */
   def audioFrameFeatures(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     import graft.operators.Audio
-    val media = Tables.documents(spark, sfDir).select("doc_id")
-      .filter(col("doc_id") < 60).as[Long]
-      .map(id => Audio.AudioRow(id, Audio.SynthAudio.wavFramedForId(id)))
-      .toDF()
+    val media = MediaFixtures.frame(spark, sfDir)(Audio.SynthAudio.wavFramedForId)
     Audio.frameFeatures(media, frameLen = 500)
       .select(col("doc_id"), col("frame_ix"), col("n"),
         col("energy"), col("peak"),
@@ -770,12 +751,8 @@ object TextQueries {
     * Long arithmetic; the oracle recomputes it from the sample
     * formulas, gating decode → window → DFT → reduce end-to-end. */
   def audioSpectral(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     import graft.operators.Audio
-    val media = Tables.documents(spark, sfDir).select("doc_id")
-      .filter(col("doc_id") < 60).as[Long]
-      .map(id => Audio.AudioRow(id, Audio.SynthAudio.wavFramedForId(id)))
-      .toDF()
+    val media = MediaFixtures.frame(spark, sfDir)(Audio.SynthAudio.wavFramedForId)
     Audio.spectralFeatures(media, frameLen = 64)
       .select(col("doc_id"), col("frame_ix"), col("dom_bin"),
         col("dom_power"), col("total_power"),

@@ -5565,13 +5565,9 @@ object VectorQueries {
     * shuffle into the block join.
     */
   def imageNearDup(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     import graft.operators.{Dedup, ImagePixels}
-    val media = Tables.documents(spark, sfDir).select("doc_id")
-      .filter(col("doc_id") < 60).as[Long]
-      .map(id =>
-        ImagePixels.MediaRow(id, ImagePixels.SynthImages.pngForId(id)))
-      .toDF()
+    val media = MediaFixtures.frame(spark, sfDir)(
+      ImagePixels.SynthImages.pngForId)
     val fp = ImagePixels.imageHashes(media)
       .select(col("doc_id"), col("ahash").as("simhash"))
     Dedup.simHashNearDupPairs(fp, "doc_id", bits = 64, maxHamming = 3)
@@ -5591,13 +5587,9 @@ object VectorQueries {
     * each closure round is one equi-join + min-aggregate on node id.
     */
   def imageDupGroups(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     import graft.operators.{Dedup, ImagePixels}
-    val media = Tables.documents(spark, sfDir).select("doc_id")
-      .filter(col("doc_id") < 60).as[Long]
-      .map(id =>
-        ImagePixels.MediaRow(id, ImagePixels.SynthImages.pngForId(id)))
-      .toDF()
+    val media = MediaFixtures.frame(spark, sfDir)(
+      ImagePixels.SynthImages.pngForId)
     val fp = ImagePixels.imageHashes(media)
       .select(col("doc_id"), col("ahash").as("simhash"))
     val pairs = Dedup.simHashNearDupPairs(fp, "doc_id",
@@ -5622,17 +5614,10 @@ object VectorQueries {
     * in SQL over both ([[graft.queries.TextQueries.imageMixedPxCtes]]).
     */
   def crossFormatNearDup(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     import graft.operators.{Dedup, ImagePixels}
-    val media = Tables.documents(spark, sfDir).select("doc_id")
-      .filter(col("doc_id") < 60).as[Long]
-      .map { id =>
-        val payload =
-          if (id % 5 == 4) ImagePixels.SynthImages.jpegForId(id)
-          else ImagePixels.SynthImages.pngForId(id)
-        ImagePixels.MediaRow(id, payload)
-      }
-      .toDF()
+    import graft.operators.ImagePixels.SynthImages
+    val media = MediaFixtures.frame(spark, sfDir)(id =>
+      if (id % 5 == 4) SynthImages.jpegForId(id) else SynthImages.pngForId(id))
     Artifacts.write(
       ImagePixels.pixelGrid(media.filter(col("doc_id") % 5 === 4)),
       "v46_jpeg_pixels", sfDir)
@@ -5654,13 +5639,9 @@ object VectorQueries {
     * identical float32 rounding (CAST AS REAL) and replays the search.
     */
   def pixelSearch(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     import graft.operators.ImagePixels
-    val media = Tables.documents(spark, sfDir).select("doc_id")
-      .filter(col("doc_id") < 60).as[Long]
-      .map(id =>
-        ImagePixels.MediaRow(id, ImagePixels.SynthImages.pngForId(id)))
-      .toDF()
+    val media = MediaFixtures.frame(spark, sfDir)(
+      ImagePixels.SynthImages.pngForId)
     val feats = ImagePixels.pixelFeatures(media, 4, 4)
     // filter BEFORE the typed mapPartitions on the query side (the
     // v24 lesson: a filter cannot push below it)
@@ -5696,13 +5677,10 @@ object VectorQueries {
     * sketch → probe → scoped ranking in SQL.
     */
   def crossModalSearch(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     import graft.operators.{ImagePixels, Ingest}
     val docs = Tables.documents(spark, sfDir)
-    val media = docs.select("doc_id").filter(col("doc_id") < 60).as[Long]
-      .map(id =>
-        ImagePixels.MediaRow(id, ImagePixels.SynthImages.pngForId(id)))
-      .toDF()
+    val media = MediaFixtures.frame(spark, sfDir)(
+      ImagePixels.SynthImages.pngForId)
     val img = ImagePixels.pixelFeatures(media, 4, 4)
       .select((col("doc_id") + 1000000L).as("item_id"),
         lit("image").as("modality"), col("features").as("embedding"))

@@ -177,7 +177,8 @@ object Streaming {
     * — the right trade when batches are seconds apart, the wrong one at
     * per-event latencies (use [[streamingDedup]] there).
     *
-    * Only "store does not exist yet" falls back to an empty store; any
+    * Only an empty store — no directory yet, or one without data files
+    * ([[graft.operators.Ingest.readStore]]) — falls back to no keys; any
     * other read failure PROPAGATES and fails the batch (the checkpoint
     * retries it) — swallowing it would silently disable dedup and
     * append duplicates.
@@ -195,13 +196,9 @@ object Streaming {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
         import org.apache.spark.sql.functions.lit
-        val storeKeys =
-          try spark.read.parquet(storePath).select("content_key")
-          catch {
-            case e: org.apache.spark.sql.AnalysisException
-                if e.getCondition == "PATH_NOT_FOUND" =>
-              batch.select(lit(0L).as("content_key")).limit(0)
-          }
+        val storeKeys = graft.operators.Ingest.readStore(spark, storePath)
+          .fold(batch.select(lit(0L).as("content_key")).limit(0))(
+            _.select("content_key"))
         val novel = graft.operators.Ingest
           .dedupIngestKeyed(batch, storeKeys, contentCol, orderCol)
         graft.operators.Ingest.writeStore(novel, storePath)

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.Audio
 import graft.operators.Audio.SynthAudio
+import graft.operators.Multimodal.MediaRow
 
 /** PCM decode contracts: golden samples through a hand-built WAV,
   * the refuse-don't-guess policy for non-PCM16-mono payloads, the
@@ -43,7 +44,7 @@ class AudioSpec extends SparkSpec {
     // header-only (the t11 fixture shape: data size 0) decodes to
     // ZERO samples — valid, just silent
     val empty = Audio.decodePcm16Mono(
-      graft.operators.Multimodal.SynthMedia.wavBytes(8000, 1))
+      graft.operators.Multimodal.SynthMedia.wavBytes(8000, 1, Array.empty))
     assert(empty.exists(_._2.isEmpty))
   }
 
@@ -60,7 +61,7 @@ class AudioSpec extends SparkSpec {
 
   test("frameFeatures: consecutive frames, partial tail, exact " +
       "aggregates; framed fixture plants true digital silence") {
-    val rows = Seq(Audio.AudioRow(1L,
+    val rows = Seq(MediaRow(1L,
       wav(8000, 1, 16, Seq[Short](10, -20, 30, 0, 5)))).toDF()
     val got = Audio.frameFeatures(rows, frameLen = 2)
       .as[(Long, Long, Long, Long, Long)].collect()
@@ -81,9 +82,9 @@ class AudioSpec extends SparkSpec {
   test("pcmFeatures: integer-exact energy / crossings / clip count; " +
       "undecodable rows drop") {
     val rows = Seq(
-      Audio.AudioRow(1L, wav(8000, 1, 16,
+      MediaRow(1L, wav(8000, 1, 16,
         Seq[Short](100, -200, 300, 0, -400, 31000))),
-      Audio.AudioRow(2L, "garbage".getBytes("UTF-8")))
+      MediaRow(2L, "garbage".getBytes("UTF-8")))
       .toDF()
     val got = Audio.pcmFeatures(rows)
       .as[(Long, Int, Long, Long, Long, Long)].collect()
@@ -104,9 +105,9 @@ class AudioSpec extends SparkSpec {
     val tone = (0 until 128).map(i =>
       math.round(1000.0 * math.cos(2.0 * math.Pi * 4 * i / 64)).toShort)
     val rows = Seq(
-      Audio.AudioRow(1L, wav(8000, 1, 16, tone ++ Seq.fill(64)(0.toShort))),
+      MediaRow(1L, wav(8000, 1, 16, tone ++ Seq.fill(64)(0.toShort))),
       // 65 samples: one full frame + a dropped partial tail
-      Audio.AudioRow(2L, wav(8000, 1, 16, tone.take(65))))
+      MediaRow(2L, wav(8000, 1, 16, tone.take(65))))
       .toDF()
     val got = Audio.spectralFeatures(rows, frameLen = 64)
       .as[(Long, Long, Long, Long, Long, Double)].collect()
@@ -130,7 +131,7 @@ class AudioSpec extends SparkSpec {
   test("spectralFeatures: DC-only input has zero AC spectrum") {
     // constant signal: every k>=1 bin of a full period sums to zero
     // EXACTLY in milli-unit trig (Σcos/Σsin over a full cycle is 0)
-    val rows = Seq(Audio.AudioRow(7L,
+    val rows = Seq(MediaRow(7L,
       wav(8000, 1, 16, Seq.fill(64)(500.toShort)))).toDF()
     val got = Audio.spectralFeatures(rows, frameLen = 64)
       .as[(Long, Long, Long, Long, Long, Double)].collect()

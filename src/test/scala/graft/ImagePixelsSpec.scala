@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.ImagePixels
+import graft.operators.{ImagePixels, Multimodal}
 import graft.operators.ImagePixels.SynthImages
 import org.apache.spark.sql.functions._
 
@@ -106,8 +106,8 @@ class ImagePixelsSpec extends SparkSpec {
   test("imageHashes: per-partition decode drops undecodable rows, " +
       "keeps (id, dims, hashes)") {
     val rows = Seq(
-      ImagePixels.MediaRow(7L, SynthImages.pngForId(7L)),
-      ImagePixels.MediaRow(99L, "garbage".getBytes("UTF-8")))
+      Multimodal.MediaRow(7L, SynthImages.pngForId(7L)),
+      Multimodal.MediaRow(99L, "garbage".getBytes("UTF-8")))
       .toDF()
     val got = ImagePixels.imageHashes(rows)
       .as[(Long, Int, Int, Long, Long)].collect().toMap2
@@ -180,7 +180,7 @@ class ImagePixelsSpec extends SparkSpec {
   }
 
   test("pixelFeatures: L2-normalized block means as float32") {
-    val rows = Seq(ImagePixels.MediaRow(3L, SynthImages.pngForId(3L))).toDF()
+    val rows = Seq(Multimodal.MediaRow(3L, SynthImages.pngForId(3L))).toDF()
     val feats = ImagePixels.pixelFeatures(rows, 4, 4)
       .select(col("features")).as[Array[Float]].collect()
     assert(feats.length == 1)

@@ -418,7 +418,7 @@ class IngestSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_store").toString + "/docs"
     val df = Ingest.hashEmbed(docsDf((1L, "x y z"), (2L, "p q r")), "text", 16)
     Ingest.writeStore(df, dir)
-    val back = Ingest.readStore(spark, dir)
+    val Some(back) = Ingest.readStore(spark, dir): @unchecked
     assert(back.count() == 2)
     val a = df.orderBy("doc_id").select("embedding").as[Seq[Float]].collect()
     val b = back.orderBy("doc_id").select("embedding").as[Seq[Float]].collect()

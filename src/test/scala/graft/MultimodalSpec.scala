@@ -53,7 +53,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("WAV: sample rate and channels from the fmt chunk") {
-    assert(codec.decode(SynthMedia.wavBytes(44100, 2)) ==
+    assert(codec.decode(SynthMedia.wavBytes(44100, 2, Array.empty)) ==
       MediaMeta(44100, 2, "wav"))
   }
 
@@ -120,7 +120,7 @@ class MultimodalSpec extends SparkSpec {
   test("decodeBatch: real headers + fallback in one partition-mapped pass") {
     val media = Seq(
       Multimodal.MediaRow(1L, SynthMedia.pngBytes(100, 50)),
-      Multimodal.MediaRow(2L, SynthMedia.wavBytes(16000, 1)),
+      Multimodal.MediaRow(2L, SynthMedia.wavBytes(16000, 1, Array.empty)),
       Multimodal.MediaRow(3L, "opaque".getBytes("UTF-8"))).toDF()
     val out = Multimodal.decodeBatch(media, featureDim = 4)
       .select("doc_id", "width", "height", "format", "features")

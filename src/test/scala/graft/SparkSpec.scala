@@ -4,20 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session — Spark
-  * startup costs ~5s, so suites must not each build their own).
+  * startup costs ~5s, so suites must not each build their own), built
+  * by the same [[SparkEntry.session]] factory as the mains.
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      // see SparkEntry.session: injected runtime blooms off (checkpoint
-      // frames' unknown stats defeat the thresholds)
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = SparkEntry.session()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -97,6 +97,22 @@ class StreamingIngestSpec extends SparkSpec {
       Set("first doc", "second doc"))
   }
 
+  test("upsertToStore: an existing but file-less store directory is empty") {
+    // made ahead of time, or left by a crashed first write: the store
+    // read must resolve it as empty, not fail the micro-batch
+    val in = Files.createTempDirectory("graft_upe_in").toString
+    val store = Files.createTempDirectory("graft_upe_store").toString
+    val chk = Files.createTempDirectory("graft_upe_chk").toString
+    Files.writeString(java.nio.file.Paths.get(in, "a.txt"), "only doc")
+    val stream = spark.readStream
+      .option("wholetext", "true").text(in)
+      .select(col("value").as("text"), lit(0L).as("batch_order"))
+    graft.streaming.Streaming.upsertToStore(
+      stream, store, chk, "text", "batch_order").awaitTermination()
+    assert(spark.read.parquet(store).select("text").as[String].collect()
+      .toSeq == Seq("only doc"))
+  }
+
   test("upsertToStore keeper rule: first batch wins, min order within batch") {
     val in = Files.createTempDirectory("graft_upk_in").toString
     val store = Files.createTempDirectory("graft_upk_store").toString + "/docs"
