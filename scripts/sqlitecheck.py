@@ -3,8 +3,8 @@
 sqlite3 C library (via Python's bundled binding — the library the
 zero-dependency sbt build cannot link).
 
-The i26/i27 queries leave their exported .db files in the artifacts
-dir; this script opens each with stock sqlite3 and verifies:
+The i26/i27/i29 queries leave their exported .db files in the
+artifacts dir; this script opens each with stock sqlite3 and verifies:
   - PRAGMA integrity_check == 'ok' (b-tree structure, page layout,
     overflow chains, header, AND the index-vs-table cross-audit —
     sqlite's own full structural validation)
@@ -20,14 +20,18 @@ dir; this script opens each with stock sqlite3 and verifies:
     QUERY PLAN); integrity still 'ok' after the mutation.
 
 Run AFTER a Verify/Bench pass has executed i26/i27 (any SF):
-    python3 scripts/sqlitecheck.py [REFERENCE_DIR]
+    python3 scripts/sqlitecheck.py [REFERENCE_DIR [ARTIFACTS_DIR]]
 
 REFERENCE_DIR is the directory the run read as -Dgraft.reference.dir;
 it defaults to that setting's default, the committed fixture
-src/test/resources/graft/reference.
+src/test/resources/graft/reference. ARTIFACTS_DIR is the run's
+-Dgraft.artifacts.dir; it defaults to that setting's default,
+/tmp/graft_artifacts_<user> (graft.queries.Artifacts).
 """
 import glob
 import os
+import pwd
+import re
 import shutil
 import sqlite3
 import struct
@@ -40,6 +44,13 @@ REF_DB = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "src", "test", "resources", "graft", "reference"),
     "vectors.db")
+ARTIFACTS = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
+    "/tmp", "graft_artifacts_" + re.sub(
+        r"[^A-Za-z0-9._-]", "_", pwd.getpwuid(os.getuid()).pw_name))
+
+
+def exports(query, file):
+    return sorted(glob.glob(os.path.join(ARTIFACTS, f"{query}_*", file)))
 
 
 def check_integrity(path):
@@ -91,10 +102,11 @@ def check_write_continuation(path):
           "index-backed lookup, integrity ok after mutation")
 
 
-i26 = sorted(glob.glob("/tmp/graft_artifacts_*/i26_export_db_*/vectors_export.db"))
-i27 = sorted(glob.glob("/tmp/graft_artifacts_*/i27_export_db_*/embeddings_export.db"))
+i26 = exports("i26_export_db", "vectors_export.db")
+i27 = exports("i27_export_db", "embeddings_export.db")
 if not i26 and not i27:
-    print("no exported .db artifacts found — run the i26/i27 queries first")
+    print(f"no exported .db artifacts under {ARTIFACTS} — run the i26/i27 "
+          "queries first")
     sys.exit(1)
 
 for path in i26:
@@ -154,8 +166,7 @@ for path in i27:
 # shape as i27 but DDL derived from the DataFrame schema (INTEGER
 # PRIMARY KEY rowid alias + UNIQUE on content, no AUTOINCREMENT), so
 # validate structure + UNIQUE enforcement through the shipped index
-i29 = sorted(glob.glob(
-    "/tmp/graft_artifacts_*/i29_export_db_*/embeddings_dsv2w.db"))
+i29 = exports("i29_export_db", "embeddings_dsv2w.db")
 for path in i29:
     print(f"[i29] {path}")
     con = check_integrity(path)

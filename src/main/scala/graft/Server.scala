@@ -37,15 +37,7 @@ final class Server(engine: Engine, port: Int = 0) {
 
   // ---- minimal JSON ---------------------------------------------------
 
-  private def esc(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c    => c.toString
-  }
+  import SparkEntry.{jsonString => quoted}
 
   /** Extract a string field from a one-level JSON object, honoring
     * standard escapes. None when absent or not a string. */
@@ -110,7 +102,8 @@ final class Server(engine: Engine, port: Int = 0) {
         try f(ex)
         catch { // a failed request must answer, not hang the client
           case t: Throwable =>
-            json(ex, 500, s"""{"error":"${esc(t.getMessage)}"}""")
+            val msg = Option(t.getMessage).getOrElse(t.getClass.getName)
+            json(ex, 500, s"""{"error":${quoted(msg)}}""")
         }
     }
 
@@ -158,11 +151,11 @@ final class Server(engine: Engine, port: Int = 0) {
         val k = jsonInt(body, "k").getOrElse(1) // reference default k=1
         val hits = engine.search(q, k).collect().map { r =>
           s"""{"doc_id":${r.getLong(0)},"score":${r.getDouble(1)},""" +
-            s""""content":"${esc(r.getString(2))}"}"""
+            s""""content":${quoted(r.getString(2))}}"""
         }
         val answer = engine.answer(q)
         json(ex, 200,
-          s"""{"query":"${esc(q)}","answer":"${esc(answer)}",""" +
+          s"""{"query":${quoted(q)},"answer":${quoted(answer)},""" +
             s""""results":[${hits.mkString(",")}]}""")
     }
   })
@@ -174,9 +167,9 @@ final class Server(engine: Engine, port: Int = 0) {
       .select("doc_id", "source", "chunk_ix", "content")
       .orderBy("doc_id").limit(1000).collect()
       .map { r =>
-        s"""{"doc_id":${r.getLong(0)},"source":"${esc(r.getString(1))}",""" +
+        s"""{"doc_id":${r.getLong(0)},"source":${quoted(r.getString(1))},""" +
           s""""chunk_ix":${r.get(2)},""" +
-          s""""content":"${esc(r.getString(3))}"}"""
+          s""""content":${quoted(r.getString(3))}}"""
       }
     json(ex, 200, s"[${rows.mkString(",")}]")
   })

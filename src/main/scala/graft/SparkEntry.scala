@@ -21,7 +21,7 @@ object SparkEntry {
     VectorQueries.knnTopK(spark, "/root/testdata/sf0.001", k = 5)
 
   /** The local session every graft main runs in (Bench, Verify,
-    * PlansDump, PlanProbe, ScalingProbe). `SPARK_GRAFT_CPUS` (default
+    * PlansDump, PlanProbe). `SPARK_GRAFT_CPUS` (default
     * 4) sizes both the master and the shuffle partitions; each main
     * sets its own log level. */
   def session(): SparkSession = {

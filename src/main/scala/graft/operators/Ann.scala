@@ -885,8 +885,8 @@ object Ann {
     * GEOMETRY CONTRACT: `bucketBits` must scale with the corpus
     * (bucketBits ≈ log2(n / targetBucketSize), the SemDeDup k ∝ n
     * rule) — held fixed, |bucket| grows ∝ n and the blocked self-join
-    * goes quadratic. ScalingProbe measures the scaled geometry;
-    * the bench queries pin bucketBits=4 for their fixed corpora.
+    * goes quadratic. The bench queries pin bucketBits=4 for their
+    * fixed corpora.
     *
     * PROBE CONTRACT: the per-vector probe count is capped at
     * 1 + `maxProbes` buckets regardless of bucketBits
@@ -923,10 +923,8 @@ object Ann {
       .select(col("src"), col(idCol).as("dst"))
   }
 
-  /** The probe fan-out of [[buildKnnGraph]]/[[updateKnnGraph]] — one
-    * constant referenced by the builders' defaults AND ScalingProbe's
-    * cand/vec diagnostic, so the diagnostic can never silently measure
-    * a different probe set than the timed build it attributes. */
+  /** The probe fan-out of [[buildKnnGraph]]/[[updateKnnGraph]]: one
+    * constant for both builders' defaults. */
   val DefaultMaxProbes: Int = 4
 
   /** Default bucket-group cap for [[saltedBucketJoin]]: 2× the ~128-row
@@ -1189,10 +1187,10 @@ object Ann {
     * each surviving (src, candidate) pair scored by exact cosine.
     * Factored out so [[buildKnnGraph]] (probeFrom = indexFrom = corpus),
     * [[updateKnnGraph]] (probeFrom = delta, indexFrom = base ∪ delta)
-    * and ScalingProbe's cand/vec diagnostic all consume the IDENTICAL
-    * candidate set — a diagnostic that re-derived the probes with its
-    * own constants could silently measure a different join than the
-    * build it claims to attribute.
+    * and the v53 salting diagnostic all consume the IDENTICAL candidate
+    * set — a diagnostic that re-derived the probes with its own
+    * constants could silently measure a different join than the build
+    * it claims to attribute.
     */
   def knnGraphCandidates(probeFrom: DataFrame, indexFrom: DataFrame,
                          idCol: String, vecCol: String, bits: Int,

@@ -539,6 +539,19 @@ object IngestQueries {
       .orderBy("ref")
   }
 
+  /** i16's CDC mutation mix (its oracle mirrors it in SQL): deletes
+    * doc_id % 97 = 0, updates % 13 = 0 (text suffixed " v2"), inserts
+    * % 31 = 0 at ids shifted by 1,000,000.
+    */
+  private def cdcMutation(docs: DataFrame): DataFrame =
+    docs.filter(pmod(col("doc_id"), lit(97)) =!= 0)
+      .select(col("doc_id"),
+        when(pmod(col("doc_id"), lit(13)) === 0,
+          concat(col("text"), lit(" v2")))
+          .otherwise(col("text")).as("text"))
+      .unionByName(docs.filter(pmod(col("doc_id"), lit(31)) === 0)
+        .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
+
   /** SNAPSHOT DIFF (CDC) through the manifest store: snapshot 1 is
     * the corpus, snapshot 2 applies deletes (doc_id % 97 = 0),
     * updates (% 13 = 0, text suffixed) and inserts (% 31 = 0, shifted
@@ -553,20 +566,6 @@ object IngestQueries {
     * SQL, so a commit/diff bug that drops, duplicates or misclassifies
     * a row flips the per-class aggregates.
     */
-  /** The CDC mutation mix — ONE definition of the delete/update/insert
-    * rule shared by i16 and ScalingProbe's CDC table (the i16 oracle
-    * mirrors it in SQL): deletes doc_id % 97 = 0, updates % 13 = 0
-    * (text suffixed " v2"), inserts % 31 = 0 at `shift`-ed ids.
-    */
-  private[graft] def cdcMutation(docs: DataFrame, shift: Long): DataFrame =
-    docs.filter(pmod(col("doc_id"), lit(97)) =!= 0)
-      .select(col("doc_id"),
-        when(pmod(col("doc_id"), lit(13)) === 0,
-          concat(col("text"), lit(" v2")))
-          .otherwise(col("text")).as("text"))
-      .unionByName(docs.filter(pmod(col("doc_id"), lit(31)) === 0)
-        .select((col("doc_id") + shift).as("doc_id"), col("text")))
-
   def snapshotDiffQuery(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.Ingest
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
@@ -577,7 +576,7 @@ object IngestQueries {
         Ingest.writeStore(docs, d)
       }
       Ingest.commitStoreSnapshot(spark, store) { d =>
-        Ingest.writeStore(cdcMutation(docs, shift = 1000000L), d)
+        Ingest.writeStore(cdcMutation(docs), d)
       }
     } + "/store"
     val snaps = Ingest.listSnapshots(spark, root)

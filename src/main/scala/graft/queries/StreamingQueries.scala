@@ -16,7 +16,7 @@ object StreamingQueries {
     * r12_hourly_events. */
   def streamHourly(spark: SparkSession, sfDir: String): DataFrame = {
     val agg = Streaming.hourlyCounts(Streaming.eventsStream(spark, sfDir))
-    Streaming.runAvailableNow(spark, agg, "graft_s01")
+    Streaming.runAvailableNow(spark, agg, "graft_s01", "complete")
       .select(col("hour"), col("event_type"), col("n"),
         round(col("sum_value"), 4).as("sum_value"))
       .orderBy("hour", "event_type")
@@ -32,7 +32,7 @@ object StreamingQueries {
     val deduped = Streaming
       .streamingDedup(Streaming.eventsStream(spark, sfDir), "user_id")
       .select("user_id")
-    Streaming.runAvailableNowAppend(spark, deduped, "graft_s02")
+    Streaming.runAvailableNow(spark, deduped, "graft_s02", "append")
       // countDistinct, not count(*): the watermark-BOUNDED dedup
       // re-emits a key whose state was evicted (multi-batch inputs), so
       // raw sink rows could overcount vs the batch answer
@@ -51,7 +51,7 @@ object StreamingQueries {
   def streamSessions(spark: SparkSession, sfDir: String): DataFrame = {
     val sess = Streaming
       .sessionCounts(Streaming.eventsStream(spark, sfDir)).toDF()
-    Streaming.runAvailableNowUpdate(spark, sess, "graft_s03")
+    Streaming.runAvailableNow(spark, sess, "graft_s03", "update")
       .groupBy("user_id", "seg_start")
       .agg(max_by(struct(col("n_sessions"), col("n_events")),
         col("n_events")).as("f"))
@@ -76,7 +76,7 @@ object StreamingQueries {
       .agg(count("*").as("n"), sum("value").as("sum_value"))
       .select(col("c_mktsegment"), col("n"),
         round(col("sum_value"), 4).as("sum_value"))
-    Streaming.runAvailableNow(spark, agg, "graft_s04")
+    Streaming.runAvailableNow(spark, agg, "graft_s04", "complete")
       .orderBy("c_mktsegment")
   }
 
@@ -122,7 +122,7 @@ object StreamingQueries {
       expr("""user_id = p_user AND
               p_ts >= click_ts AND
               p_ts <= click_ts + interval 30 minutes"""))
-    Streaming.runAvailableNowAppend(spark, pairs, "graft_s06")
+    Streaming.runAvailableNow(spark, pairs, "graft_s06", "append")
       .groupBy("user_id")
       .agg(count("*").as("n_pairs"), round(sum("value"), 4).as("sum_value"))
       .orderBy("user_id")
@@ -159,7 +159,7 @@ object StreamingQueries {
     graft.operators.TopKAggregator
       .explodeHits(
         Streaming.runAvailableNow(spark, streamSearchAgg(spark, sfDir),
-          "graft_s07"),
+          "graft_s07", "complete"),
         "query_id")
       .orderBy("query_id", "rank")
 
@@ -225,7 +225,7 @@ object StreamingQueries {
     val counts = graft.operators.Dedup
       .decontaminate(corpusStream, eval, "doc_id", "text", n = 3)
     TextQueries.decontaminateSelect(
-      Streaming.runAvailableNow(spark, counts, "graft_s09"))
+      Streaming.runAvailableNow(spark, counts, "graft_s09", "complete"))
   }
 
   /** CONTINUOUS near-dup index maintenance — t31's streaming form and
@@ -321,7 +321,7 @@ object StreamingQueries {
       .select(col("vec_id"),
         graft.operators.Classify
           .nearestClassLit(col("embedding"), model).as("pred"))
-    Streaming.runAvailableNowAppend(spark, scored, "graft_s11")
+    Streaming.runAvailableNow(spark, scored, "graft_s11", "append")
       .withColumn("actual", pmod(col("vec_id"), lit(10)))
       .groupBy(col("actual").as("cls"))
       .agg(count(lit(1)).as("n_eval"),
@@ -358,7 +358,7 @@ object StreamingQueries {
     // |langs| × 64 rows — register-sized, the whole point.
     val regs = Streaming.runAvailableNow(spark,
         Sketch.hllRegistersFromHash(sh, Seq("lang"), col("sh"), 6),
-        "graft_s12")
+        "graft_s12", "complete")
       .localCheckpoint()
     val batchSh = TextQueries.positionalShingleIndex(spark, sfDir)
       .join(docs.select("doc_id", "lang"), Seq("doc_id"))
@@ -399,7 +399,7 @@ object StreamingQueries {
     // lineage before the broadcast probe join (s12's convention)
     val cms = Streaming.runAvailableNow(spark,
         Sketch.cmsTable(toks, Nil, col("tok"), depth = 3, width = 1024),
-        "graft_s13")
+        "graft_s13", "complete")
       .localCheckpoint()
     val top = docs.select(explode(
         graft.functions.TextFunctions.words(col("text"))).as("tok"))
@@ -436,7 +436,7 @@ object StreamingQueries {
     // the incoming-delta sketch, folded continuously; localCheckpoint
     // cuts the memory-sink lineage before the comparison join
     val deltaCells = Streaming.runAvailableNow(spark,
-        cells(stream, _ >= 8), "graft_s14")
+        cells(stream, _ >= 8), "graft_s14", "complete")
       .localCheckpoint()
     val baseCells = cells(docs, _ < 8)
     val ns = baseCells.agg(sum("cnt").as("n_base"))
@@ -490,7 +490,7 @@ object StreamingQueries {
       .agg(count(lit(1)).as("n_shingles"),
         sum(col("is_member")).as("bloom_hits"),
         count(col("hit")).as("exact_hits"))
-    Streaming.runAvailableNow(spark, counts, "graft_s15")
+    Streaming.runAvailableNow(spark, counts, "graft_s15", "complete")
       .filter(col("bloom_hits") >= 1)
       .select(col("doc_id"), col("n_shingles"), col("bloom_hits"),
         col("exact_hits"),
@@ -543,7 +543,7 @@ object StreamingQueries {
       .select(col("vec_id"),
         col("best").getField("eval_id").as("eval_id"),
         round(col("best").getField("s"), 6).as("sim"))
-    Streaming.runAvailableNowAppend(spark, flagged, "graft_s26")
+    Streaming.runAvailableNow(spark, flagged, "graft_s26", "append")
       .orderBy("vec_id")
   }
 
@@ -615,7 +615,7 @@ object StreamingQueries {
       .select(col("vec_id"),
         col("best").getField("eval_id").as("eval_id"),
         round(col("best").getField("s"), 6).as("sim"))
-    Streaming.runAvailableNowAppend(spark, flagged, "graft_s28")
+    Streaming.runAvailableNow(spark, flagged, "graft_s28", "append")
       .orderBy("vec_id")
   }
 
@@ -818,7 +818,7 @@ object StreamingQueries {
       .join(broadcast(modelDf), "b")
       .groupBy("doc_id")
       .agg(sum("lwu").as("lw_units"))
-    Streaming.runAvailableNow(spark, scored, "graft_s18")
+    Streaming.runAvailableNow(spark, scored, "graft_s18", "complete")
       .orderBy("doc_id")
   }
 
@@ -832,7 +832,7 @@ object StreamingQueries {
   def streamSessionWindows(spark: SparkSession, sfDir: String): DataFrame = {
     val sess = Streaming
       .sessionWindowCounts(Streaming.eventsStream(spark, sfDir))
-    Streaming.runAvailableNow(spark, sess, "graft_s08")
+    Streaming.runAvailableNow(spark, sess, "graft_s08", "complete")
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_sessions"), sum("n_events").as("n_events"))
       .orderBy("user_id")
@@ -870,7 +870,7 @@ object StreamingQueries {
         sum(col("width").cast("long")).as("sum_w"),
         sum(col("height").cast("long")).as("sum_h"),
         sum(col("byte_len").cast("long")).as("sum_bytes"))
-    Streaming.runAvailableNow(spark, agg, "graft_s16")
+    Streaming.runAvailableNow(spark, agg, "graft_s16", "complete")
       .orderBy("format")
   }
 
@@ -902,7 +902,7 @@ object StreamingQueries {
         col("sample_rate").cast("long").as("sample_rate"),
         col("n_samples"), col("energy"),
         col("zero_crossings"), col("clip_count"))
-    Streaming.runAvailableNowAppend(spark, feats, "graft_s17")
+    Streaming.runAvailableNow(spark, feats, "graft_s17", "append")
       .orderBy("doc_id")
   }
 
@@ -1110,7 +1110,7 @@ object StreamingQueries {
               p_ts >= click_ts AND
               p_ts <= click_ts + interval 30 minutes"""),
       "left_outer")
-    Streaming.runAvailableNowAppend(spark, joined, "graft_s22")
+    Streaming.runAvailableNow(spark, joined, "graft_s22", "append")
       .groupBy("user_id")
       .agg(sum(when(col("p_ts").isNotNull, 1L).otherwise(0L))
         .as("n_matched"),
@@ -1150,7 +1150,8 @@ object StreamingQueries {
     val topk = graft.operators.TopKAggregator.topKUdaf(10)
     val agg = scored.groupBy("qid")
       .agg(topk(col("vec_id"), col("score")).as("hits"))
-    val deltaTop = Streaming.runAvailableNow(spark, agg, "graft_s23")
+    val deltaTop =
+      Streaming.runAvailableNow(spark, agg, "graft_s23", "complete")
       .select(posexplode(col("hits")).as(Seq("pos", "hit")))
       .select(col("hit._1").as("vec_id"), col("hit._2").as("score"))
     VectorQueries.graphLsmMerge(spark, sfDir, "s23_base_graph", deltaTop)
@@ -1174,7 +1175,7 @@ object StreamingQueries {
     val agg = TextQueries.bpeTokenSums(docsStream,
       TextQueries.bpeVocab(spark, sfDir))
     TextQueries.bpeRatiosSelect(
-      Streaming.runAvailableNow(spark, agg, "graft_s24"))
+      Streaming.runAvailableNow(spark, agg, "graft_s24", "complete"))
   }
 
   /** CONTINUOUS QUANTIZED-STORE BUILD → compressed serving — the
@@ -1209,7 +1210,8 @@ object StreamingQueries {
       .groupBy("pos")
       .agg(greatest(max(abs(col("x"))).cast("double"),
         lit(graft.operators.Sq8.DeadDimFloor)).as("s"))
-    val scales = Streaming.runAvailableNow(spark, dimMax, "graft_s25")
+    val scales =
+      Streaming.runAvailableNow(spark, dimMax, "graft_s25", "complete")
       .agg(array_sort(collect_list(struct(col("pos"), col("s"))))
         .as("ps"))
       .select(transform(col("ps"), p => p.getField("s")).as("scales"))

@@ -1354,7 +1354,7 @@ object VectorQueries {
     // aggregates, the full frame two — persisted here, released by the
     // evaluating caller via spark.catalog.clearCache (the
     // simHashNearDupPairs convention; every harness — Bench, Verify,
-    // PlansDump, ScalingProbe — clears cache between queries, so
+    // PlansDump — clears cache between queries, so
     // corpus-scale candidate frames never accumulate across calls)
     val salted = cands(16L).persist()
     val saltedEdges = Search.topKPerQuery(salted, "src", "vec_id", 3)
@@ -1990,17 +1990,8 @@ object VectorQueries {
     */
   def refDimSearch(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.VectorFunctions.floatVectorFromBinary
-    import graft.sources.SqliteReader
-    import spark.implicits._
-    val raw = spark.read.format("binaryFile").load(RefDb)
-      .select("content").as[Array[Byte]]
-      .flatMap { bytes =>
-        SqliteReader.readTable(bytes, "documents").map { r =>
-          (r.values(0).asInstanceOf[Long],
-            r.values(2).asInstanceOf[Array[Byte]])
-        }
-      }
-      .toDF("doc_id", "vector_blob")
+    val raw = graft.sources.Sources.fromSqliteDocumentsRaw(spark, RefDb)
+      .select("doc_id", "vector_blob")
     val dir = Artifacts.write(raw, "v27_refblobs", sfDir)
     val vecs = spark.read.parquet(dir)
       .select(col("doc_id"),
@@ -2058,76 +2049,31 @@ object VectorQueries {
       .orderBy("query_id", "rank")
   }
 
-  /** v30's corpus/centroids/codebooks, once per (JVM, corpus) — v25's
-    * artifact contract at reference geometry. */
-  /** LEARNED IVF-PQ AT THE REFERENCE'S GEOMETRY (d = 1536, the
-    * text-embedding-3-small width v27 proves exact search on): the
-    * SqliteReader corpus is too small to train on, so it is replicated
-    * to trainable size with the engine's own deterministic kernel —
-    * point(seed, j) = l2-normalize(seed + 0.5 · hashEmbed("pt <id>"))
-    * (v28's clustered-corpus recipe) — and the whole pipeline then
-    * runs at width 1536: k-means coarse centroids, PQ codebooks with
-    * m = 8 → dsub = 192 (the subspace width untested anywhere else —
-    * v16/v22/v25 all train at dsub = 8), IVF-PQ index, probe → ADC
-    * shortlist → exact rerank. Corpus, centroids and codebooks persist
-    * as [[Artifacts]] parquet and the oracle replays assignment,
-    * encode, LUT, ADC and rerank in SQL at the full 1536 width — the
-    * dsub generalization is inside the hash gate, not asserted.
-    */
-  /** The shared d=1536 fixture (corpus, centroids, PQ model) — v30's
-    * cache block factored out so v57 (the graph family at the
-    * reference dimension) builds on the SAME corpus without
-    * duplicating acquisition or training. */
   /** The d=1536 corpus GENERATOR — the reference blobs replicated
     * `copies`× by the deterministic kernel point(seed, j) =
     * l2-normalize(seed + 0.5 · hashEmbed("pt <id>")) (v28's recipe at
-    * the reference width). Factored out of [[refDimModels]] so
-    * ScalingProbe can generate the SAME corpus at larger copy counts
-    * for the d=1536 graph scaling row. Pure generation, no artifacts.
+    * the reference width). Shared by [[refDimModels]] (40×), v67
+    * (160×) and v71 (320×). Pure generation, no
+    * artifacts.
+    *
+    * vec_id = doc·1000 + k for copy k, so embeddings are a pure
+    * function of (vec_id, seed) and a smaller corpus is the k < copies
+    * prefix of a larger one. The keying aliases from k = 1000 on (doc
+    * 1, k 1000 would be doc 2, k 0: same vec_id, different seed), so
+    * `copies` is capped there.
     */
-  /** Recover the copy index k from a [[genRefDimCorpus]] vec_id under
-    * the two-range keying: low range (k < 1000) is doc·1000 + k, high
-    * range is 10^10 + doc·10^7 + k (both 10^10 and doc·10^7 vanish
-    * mod 10^7 since 10^10 = 10^7·10^3). */
-  private[graft] def refDimK(c: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column =
-    when(c >= 10_000_000_000L, pmod(c, lit(10_000_000L)))
-      .otherwise(pmod(c, lit(1000L)))
-
   private[graft] def genRefDimCorpus(spark: SparkSession,
                                      copies: Int): DataFrame = {
     import graft.operators.Ingest
     import graft.functions.VectorFunctions.floatVectorFromBinary
-    import graft.sources.SqliteReader
-    import spark.implicits._
-    val raw = spark.read.format("binaryFile").load(RefDb)
-      .select("content").as[Array[Byte]]
-      .flatMap { bytes =>
-        SqliteReader.readTable(bytes, "documents").map { r =>
-          (r.values(0).asInstanceOf[Long],
-            r.values(2).asInstanceOf[Array[Byte]])
-        }
-      }
-      .toDF("doc_id", "vector_blob")
+    require(copies <= 1000, s"genRefDimCorpus: copies = $copies > 1000 " +
+      "would alias vec_id = doc·1000 + k across documents")
+    val raw = graft.sources.Sources.fromSqliteDocumentsRaw(spark, RefDb)
       .select(col("doc_id"),
         floatVectorFromBinary(col("vector_blob")).as("seed"))
-    // keying v2 (round 17): k < 1000 keeps vec_id = doc·1000 + k, so
-    // every sealed fixture (copies ≤ 640) and every historical sweep
-    // rung is BIT-IDENTICAL by construction (embeddings are a pure
-    // function of vec_id + seed, and neither changes below the
-    // boundary); k ≥ 1000 moves to the DISJOINT range
-    // 10^10 + doc·10^7 + k — the round-16 sweep found the old single
-    // formula silently DOUBLE-COUNTS at copies ≥ 1000 (doc 1, k 1000
-    // aliases doc 2, k 0: same vec_id, same noise text, different
-    // seed — duplicate ids corrupting every id-keyed join), which
-    // capped the accretion family at 640×. The new range aliases
-    // nothing until k = 10^7. k recovers as [[refDimK]].
     val gen0 = raw
       .crossJoin(spark.range(copies).select(col("id").as("k")))
-      .select(when(col("k") < 1000L,
-          col("doc_id") * lit(1000L) + col("k"))
-        .otherwise(lit(10_000_000_000L) +
-          col("doc_id") * lit(10_000_000L) + col("k")).as("vec_id"),
+      .select((col("doc_id") * lit(1000L) + col("k")).as("vec_id"),
         col("seed"))
       .withColumn("ptext", concat(lit("pt "), col("vec_id")))
     Ingest.hashEmbedRaw(gen0, "ptext", 1536)
@@ -2146,6 +2092,21 @@ object VectorQueries {
           (x, n) => (x / n).cast("float")).as("embedding"))
   }
 
+  /** LEARNED IVF-PQ AT THE REFERENCE'S GEOMETRY (d = 1536, the
+    * text-embedding-3-small width v27 proves exact search on): the
+    * SqliteReader corpus is too small to train on, so it is replicated
+    * to trainable size by [[genRefDimCorpus]] and the whole pipeline
+    * then runs at width 1536: k-means coarse centroids, PQ codebooks
+    * with m = 8 → dsub = 192 (the subspace width untested anywhere
+    * else — v16/v22/v25 all train at dsub = 8), IVF-PQ index, probe →
+    * ADC shortlist → exact rerank. Corpus, centroids and codebooks
+    * persist as [[Artifacts]] parquet and the oracle replays
+    * assignment, encode, LUT, ADC and rerank in SQL at the full 1536
+    * width — the dsub generalization is inside the hash gate, not
+    * asserted. Memoized once per (JVM, corpus); v57 (the graph family
+    * at the reference dimension) builds on the SAME corpus without
+    * duplicating acquisition or training.
+    */
   private def refDimModels(spark: SparkSession, sfDir: String)
       : (DataFrame, DataFrame, graft.operators.Pq.PqModel) = {
     import graft.operators.{Ingest, Pq}

@@ -82,33 +82,20 @@ object Streaming {
     }
   }
 
-  /** Run a finite (available-now) streaming aggregation to a memory
-    * sink and return the result table. `complete` output keeps the full
-    * aggregate, so the result equals the batch computation.
+  /** Run a finite (available-now) stream to a memory sink and return
+    * the result table. `outputMode` is "complete" for aggregations (the
+    * full aggregate, so the result equals the batch computation),
+    * "append" for stateful row-level operators (dedup) whose results
+    * accrete, and "update" for mapGroupsWithState, which emits one
+    * refreshed row per touched group per micro-batch.
     */
-  def runAvailableNow(spark: SparkSession, aggregated: DataFrame,
-                      queryName: String): DataFrame =
-    withStatePartitions(spark) {
-      val q = aggregated.writeStream
-        .format("memory")
-        .queryName(queryName)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(queryName)
-    }
-
-  /** Same as [[runAvailableNow]] but append output — for stateful
-    * row-level operators (dedup) whose results accrete rather than
-    * update. */
-  def runAvailableNowAppend(spark: SparkSession, rows: DataFrame,
-                            queryName: String): DataFrame =
+  def runAvailableNow(spark: SparkSession, rows: DataFrame,
+                      queryName: String, outputMode: String): DataFrame =
     withStatePartitions(spark) {
       val q = rows.writeStream
         .format("memory")
         .queryName(queryName)
-        .outputMode("append")
+        .outputMode(outputMode)
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
@@ -149,22 +136,6 @@ object Streaming {
                      delay: String = "3 hours"): DataFrame =
     stream.withWatermark(tsCol, delay)
       .dropDuplicatesWithinWatermark(keyCol)
-
-  /** Same as [[runAvailableNow]] but update output — for
-    * mapGroupsWithState, which emits one refreshed row per touched group
-    * per micro-batch. */
-  def runAvailableNowUpdate(spark: SparkSession, rows: DataFrame,
-                            queryName: String): DataFrame =
-    withStatePartitions(spark) {
-      val q = rows.writeStream
-        .format("memory")
-        .queryName(queryName)
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(queryName)
-    }
 
   /** Store-backed streaming upsert: each micro-batch anti-joins against
     * the DURABLE STORE ([[graft.operators.Ingest.dedupIngestKeyed]])

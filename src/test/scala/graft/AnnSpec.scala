@@ -1034,33 +1034,26 @@ class AnnSpec extends SparkSpec {
     assert(pairs(largest) > 0)
   }
 
-  test("genRefDimCorpus two-range keying: no aliasing past 1000 " +
-      "copies, low range bit-identical to the sealed fixtures") {
+  test("genRefDimCorpus keying: distinct ids up to 1000 copies, " +
+      "prefix-stable, and a loud failure past the aliasing bound") {
     import graft.queries.VectorQueries
-    // 1050 copies crosses the k = 1000 boundary where the old
-    // vec_id = doc·1000 + k formula aliased (doc 1, k 1000 = doc 2,
-    // k 0 — the cc33253 sweep ceiling): every id must be distinct now
-    val g1050 = VectorQueries.genRefDimCorpus(spark, copies = 1050)
+    // vec_id = doc·1000 + k: k = 999 is the last copy index that
+    // cannot collide with the next document's k = 0
+    val g1000 = VectorQueries.genRefDimCorpus(spark, copies = 1000)
       .localCheckpoint()
-    val n = g1050.count()
-    assert(n == g1050.select("vec_id").distinct().count(),
-      "vec_id aliasing across the keying boundary")
-    // the accretion-prefix property ACROSS the boundary: the k < 40
-    // slice is row-identical to the 40-copy corpus — the sealed
-    // fixtures' generator output is untouched by the re-key
+    assert(g1000.count() == g1000.select("vec_id").distinct().count(),
+      "vec_id aliasing at 1000 copies")
+    // the accretion-prefix property: the k < 40 slice is row-identical
+    // to the 40-copy corpus the sealed fixtures were generated from
     val g40 = VectorQueries.genRefDimCorpus(spark, copies = 40)
       .localCheckpoint()
-    val low = g1050.filter(VectorQueries.refDimK(col("vec_id")) < 40)
+    val low = g1000.filter(pmod(col("vec_id"), lit(1000L)) < 40)
     assert(low.exceptAll(g40).isEmpty && g40.exceptAll(low).isEmpty)
-    // refDimK inverts both ranges: ids at k >= 1000 live in the
-    // disjoint high range and recover their copy index mod 10^7
-    val hi = g1050.filter(col("vec_id") >= 10_000_000_000L)
-    assert(hi.count() == n - g1050
-      .filter(col("vec_id") < 10_000_000_000L).count())
-    val ks = hi.select(VectorQueries.refDimK(col("vec_id")))
-      .distinct().as[Long].collect().sorted
-    assert(ks.head == 1000L && ks.last == 1049L && ks.length == 50,
-      ks.toSeq.take(5).toString)
+    // one more copy would alias doc 1, k 1000 onto doc 2, k 0
+    val e = intercept[IllegalArgumentException] {
+      VectorQueries.genRefDimCorpus(spark, copies = 1001)
+    }
+    assert(e.getMessage.contains("copies = 1001"), e.getMessage)
   }
 
   test("updateKnnGraphIncremental: wrong-width persisted artifacts " +

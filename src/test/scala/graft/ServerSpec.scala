@@ -3,7 +3,7 @@ package graft
 /** The demo HTTP facade end-to-end on a loopback port: route parity
   * with the reference service (add / count / load / search / documents
   * / UI), JSON escaping both directions, and the reference's error
-  * shapes (400 on missing content/query).
+  * shapes (400 on missing content/query, 500 on a failed request).
   */
 class ServerSpec extends SparkSpec
     with org.scalatest.BeforeAndAfterAll {
@@ -77,6 +77,32 @@ class ServerSpec extends SparkSpec
     assert(post("/search", """{"k":3}""") ==
       (400, """{"error":"Query is required"}"""))
     assert(get("/load-documents")._1 == 400)
+  }
+
+  test("a failure without a message still answers 500 with a JSON " +
+      "error body") {
+    // a network embedder can fail with a bare EOFException: no message
+    val failing = new Embedder {
+      override def embed(df: org.apache.spark.sql.DataFrame,
+                         textCol: String, dim: Int)
+          : org.apache.spark.sql.DataFrame =
+        throw new IllegalStateException()
+    }
+    val store = java.nio.file.Files
+      .createTempDirectory("graft_server_fail").toString + "/store"
+    val broken = new Server(new Engine(spark, store, dim = 32,
+      embedder = failing)).start()
+    try {
+      val r = client.send(
+        java.net.http.HttpRequest.newBuilder(java.net.URI.create(
+            s"http://127.0.0.1:${broken.boundPort}/search"))
+          .POST(java.net.http.HttpRequest.BodyPublishers
+            .ofString("""{"query":"tea"}"""))
+          .build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      assert((r.statusCode(), r.body()) ==
+        (500, """{"error":"java.lang.IllegalStateException"}"""))
+    } finally broken.stop()
   }
 
   test("the UI page serves; unknown routes 404") {

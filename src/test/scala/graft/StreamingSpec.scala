@@ -32,7 +32,7 @@ class StreamingSpec extends SparkSpec {
 
   test("windowed hourly aggregation drains to the batch answer") {
     val got = Streaming.runAvailableNow(spark,
-        Streaming.hourlyCounts(stream), "graft_test_hourly")
+        Streaming.hourlyCounts(stream), "graft_test_hourly", "complete")
       .orderBy("hour", "event_type")
       .select("hour", "event_type", "n", "sum_value")
       .as[(String, String, Long, Double)].collect().toSeq
@@ -43,9 +43,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming dropDuplicates keeps one row per key") {
-    val got = Streaming.runAvailableNowAppend(spark,
+    val got = Streaming.runAvailableNow(spark,
         Streaming.streamingDedup(stream, "event_type").select("event_type"),
-        "graft_test_dedup")
+        "graft_test_dedup", "append")
       .as[String].collect().toSeq.sorted
     assert(got == Seq("click", "view"))
   }
@@ -65,8 +65,9 @@ class StreamingSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$d/ev")
     val schema = spark.read.parquet(s"$d/ev").schema
     val stream = spark.readStream.schema(schema).parquet(s"$d/ev")
-    val got = sessionTotals(Streaming.runAvailableNowUpdate(spark,
-        Streaming.sessionCounts(stream).toDF(), "graft_test_sessions"))
+    val got = sessionTotals(Streaming.runAvailableNow(spark,
+        Streaming.sessionCounts(stream).toDF(), "graft_test_sessions",
+        "update"))
       .as[(Long, Long, Long)].collect().toSeq
     assert(got == Seq((1L, 2L, 3L), (2L, 2L, 3L)))
   }
@@ -116,10 +117,10 @@ class StreamingSpec extends SparkSpec {
     val schema = batch(Nil).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(d)
-    val got = Streaming.runAvailableNowAppend(spark,
+    val got = Streaming.runAvailableNow(spark,
         Streaming.streamingDedup(stream, "k", "ts", "10 minutes")
           .select("k"),
-        "graft_test_dedup_evict")
+        "graft_test_dedup_evict", "append")
       .as[String].collect().toSeq
     // bounded-state contract: the recurrence past the watermark horizon
     // is emitted again — state for A was genuinely evicted
@@ -145,8 +146,9 @@ class StreamingSpec extends SparkSpec {
     val schema = batch(Nil).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(d)
-    val raw = Streaming.runAvailableNowUpdate(spark,
-      Streaming.sessionCounts(stream).toDF(), "graft_test_sess_evict")
+    val raw = Streaming.runAvailableNow(spark,
+      Streaming.sessionCounts(stream).toDF(), "graft_test_sess_evict",
+      "update")
     // u1 must appear under TWO distinct segments: state was removed
     // between its 10:10 and 20:30 events
     val segs = raw.filter(col("user_id") === 1)
@@ -187,7 +189,8 @@ class StreamingSpec extends SparkSpec {
     val pairs = clicks.join(purchases,
       expr("""user_id = p_user AND p_ts >= click_ts AND
               p_ts <= click_ts + interval 30 minutes"""))
-    val got = Streaming.runAvailableNowAppend(spark, pairs, "graft_test_ssj")
+    val got =
+      Streaming.runAvailableNow(spark, pairs, "graft_test_ssj", "append")
       .select("user_id", "value").as[(Long, Double)].collect().toSeq
     assert(got == Seq((1L, 5.0)),
       s"expected only the in-window cross-batch pair: $got")
@@ -231,7 +234,7 @@ class StreamingSpec extends SparkSpec {
               p_ts <= click_ts + interval 30 minutes"""),
       "left_outer")
     val got = Streaming
-      .runAvailableNowAppend(spark, pairs, "graft_test_ssj_outer")
+      .runAvailableNow(spark, pairs, "graft_test_ssj_outer", "append")
       .filter(col("user_id") <= 2)
       .select("user_id", "value")
       .as[(Long, Option[Double])].collect().toSet
