@@ -268,8 +268,8 @@ object PlansDump {
           "recall/nodes reduce per width in a final aggregate."),
       "v64_opq_recall" ->
         ("OPQ vs PQ at one code budget: the rotation is ONE narrow " +
-          "MatVecRotate projection (the matrix rides the plan like PQ " +
-          "codebooks — no join, no shuffle to change basis), both " +
+          "MatVecRotateBcast projection (the matrix rides a cached " +
+          "broadcast — no join, no shuffle to change basis), both " +
           "encodes are narrow kernel passes, the batched 8-query ADC " +
           "is a codes×LUT broadcast join, and the only corpus-scale " +
           "exchange is the per-query rank window. Distortion meters " +
@@ -300,7 +300,7 @@ object PlansDump {
           "100 TB."),
       "v70_joint_aq" ->
         ("Joint-AQ rungs: each encode is one narrow kernel pass " +
-          "(AqJointEncode's per-executor codebook tables — the k1×k2 " +
+          "(AqJointEncodeBcast's per-executor codebook tables — the k1×k2 " +
           "enumeration is index arithmetic inside the kernel, never a " +
           "plan-level join), query-ADC scores are literal-table " +
           "lookups, and the MSE meters are zip_with arithmetic over " +

@@ -28,12 +28,13 @@ object AdcTerm {
   *
   *   Σ_{j=0..m-1} Σ_terms coef·table_j[code…]
   *
-  * with the tables behind an explicit Broadcast — the
-  * [[MatVecRotateBcast]] transport applied to the k1·k2 cross-term
-  * tables that v66/v67/v70's serving rungs previously shipped as
-  * boxed nested-Seq `typedlit`s (2–4 MiB of task binary RE-SHIPPED
-  * per stage; the broadcast ships the primitive doubles once per
-  * executor and the serialized expression carries only the handle).
+  * with the tables (built by [[PqTables]]) behind an explicit
+  * Broadcast — the [[MatVecRotateBcast]] transport applied to the
+  * k1·k2 cross-term tables that v66/v67/v70's serving rungs previously
+  * shipped as boxed nested-Seq `typedlit`s (2–4 MiB of task binary
+  * RE-SHIPPED per stage; the broadcast ships the primitive doubles
+  * once per executor and the serialized expression carries only the
+  * handle).
   *
   * Arithmetic contract (what the SQL oracles replay, unchanged from
   * the literal `aggregate`/`transform`/`element_at` form this

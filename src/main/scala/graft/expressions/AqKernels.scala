@@ -6,14 +6,11 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** The two-stage codebook pair + its query-independent decomposed
-  * tables, as ONE value both transports share: the literal expressions
-  * hold an instance built from their constructor arrays; the Bcast
-  * twins hold a `Broadcast[AqPair]`, whose value is EXECUTOR-shared —
-  * so the k1·k2 table build ([[tables]], transient lazy) runs once per
-  * executor there, where the literal transport rebuilds it per
-  * deserialized task closure. Table arithmetic is unchanged from the
-  * round-14 in-expression form: i-ascending double dot products over
-  * the persisted floats. */
+  * tables, as ONE value behind the AQ expressions' `Broadcast[AqPair]`
+  * (the handle is cached per pair in [[graft.operators.Aq]]): the
+  * value is EXECUTOR-shared, so the k1·k2 table build ([[tables]],
+  * transient lazy) runs once per executor, not once per task. Tables
+  * are the [[PqTables]] rules over the persisted floats. */
 final class AqPair(val dsub: Int,
                    val cb1: Array[Array[Array[Float]]],
                    val cb2: Array[Array[Array[Float]]])
@@ -22,61 +19,17 @@ final class AqPair(val dsub: Int,
   val k1: Int = cb1(0).length
   val k2: Int = cb2(0).length
 
-  /** Serialized float payload of the pair — what a literal transport
-    * ships per stage; [[AqKernels.BcastBytes]] switches on it. */
-  def codebookBytes: Long =
-    4L * m * (k1.toLong + k2.toLong) * dsub
-
-  // codebook-only tables: n1(j)(a) = Σᵢ U², n2(j)(b) = Σᵢ V²,
-  // ab(j)(a)(b) = Σᵢ U·V — all i-ascending
+  // n1(j)(a) = Σᵢ U², n2(j)(b) = Σᵢ V², ab(j)(a)(b) = Σᵢ U·V
   @transient lazy val tables
       : (Array[Array[Double]], Array[Array[Double]],
-         Array[Array[Array[Double]]]) = {
-    val n1 = Array.tabulate(m, k1) { (j, a) =>
-      var acc = 0.0
-      var i = 0
-      while (i < dsub) {
-        val u = cb1(j)(a)(i).toDouble
-        acc += u * u
-        i += 1
-      }
-      acc
-    }
-    val n2 = Array.tabulate(m, k2) { (j, b) =>
-      var acc = 0.0
-      var i = 0
-      while (i < dsub) {
-        val v = cb2(j)(b)(i).toDouble
-        acc += v * v
-        i += 1
-      }
-      acc
-    }
-    val ab = Array.tabulate(m, k1, k2) { (j, a, b) =>
-      var acc = 0.0
-      var i = 0
-      while (i < dsub) {
-        acc += cb1(j)(a)(i).toDouble * cb2(j)(b)(i).toDouble
-        i += 1
-      }
-      acc
-    }
-    (n1, n2, ab)
-  }
+         Array[Array[Array[Double]]]) =
+    (PqTables.normTable(cb1), PqTables.normTable(cb2),
+      PqTables.crossTable(cb1, cb2))
 }
 
-/** The shared eval kernels — both transports delegate here, so the
-  * arithmetic contract cannot fork (the [[MatVecKernel]] convention).
-  */
+/** The eval kernels of [[AqJointEncodeBcast]] and
+  * [[AqReconErrorBcast]]. */
 object AqKernels {
-
-  /** Codebook payload above which the AQ expressions ride an explicit
-    * Broadcast instead of the expression tree: the v70 pair at
-    * d = 1536 / k = 128 is ~1.6 MiB of floats PER EXPRESSION and two
-    * of them meet in one stage (encode + recon-error — the round-14
-    * bench tail's 2.1–2.8 MiB task binaries); below this the AqSpec
-    * fixtures stay on the zero-moving-parts literal path. */
-  val BcastBytes: Long = 512L * 1024
 
   /** Joint E-step: per subspace j, argmin over all k1·k2 pairs of the
     * decomposed score n1[c1] + n2[c2] + 2·ab[c1][c2] − 2·xa[c1]
@@ -88,43 +41,24 @@ object AqKernels {
     val dsub = p.dsub
     if (arr.numElements() != m * dsub) throw new IllegalArgumentException(
       s"$name: vector dim ${arr.numElements()} != $m×$dsub")
-    @inline def at(i: Int): Double =
-      if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
+    val x = Array.tabulate(m * dsub)(i =>
+      if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i))
     val (n1, n2, ab) = p.tables
-    val (cb1, cb2) = (p.cb1, p.cb2)
+    val (xa, xb) = (PqTables.ipLut(x, p.cb1), PqTables.ipLut(x, p.cb2))
     val (k1, k2) = (p.k1, p.k2)
     val out = new Array[Int](2 * m)
-    val xa = new Array[Double](k1)
-    val xb = new Array[Double](k2)
     var j = 0
     while (j < m) {
-      val off = j * dsub
-      var a = 0
-      while (a < k1) {
-        var acc = 0.0
-        var i = 0
-        while (i < dsub) { acc += at(off + i) * cb1(j)(a)(i); i += 1 }
-        xa(a) = acc
-        a += 1
-      }
-      var b = 0
-      while (b < k2) {
-        var acc = 0.0
-        var i = 0
-        while (i < dsub) { acc += at(off + i) * cb2(j)(b)(i); i += 1 }
-        xb(b) = acc
-        b += 1
-      }
       var best1 = 0
       var best2 = 0
       var bestScore = Double.MaxValue
-      a = 0
+      var a = 0
       while (a < k1) {
         val abRow = ab(j)(a)
-        b = 0
+        var b = 0
         while (b < k2) {
           val score = n1(j)(a) + n2(j)(b) + 2.0 * abRow(b) -
-            2.0 * xa(a) - 2.0 * xb(b)
+            2.0 * xa(j)(a) - 2.0 * xb(j)(b)
           if (score < bestScore) { bestScore = score; best1 = a; best2 = b }
           b += 1
         }
@@ -191,8 +125,8 @@ object AqKernels {
   *   score(c1, c2) = n1[c1] + n2[c2] + 2·ab[c1][c2]
   *                   − 2·xa[c1] − 2·xb[c2]
   *
-  * with every table built by i-ascending double dot products over the
-  * persisted float codebooks (n1 = Σa·a, ab = Σa·b, xa = Σx·a, …) and
+  * with every table a [[PqTables]] rule over the persisted float
+  * codebooks (n1 = Σa·a, ab = Σa·b, xa = Σx·a, …) and
   * the sum combined LEFT-ASSOCIATIVELY in exactly that term order.
   * Ties break to the lower (c1, c2) lexicographically. Output:
   * array<int> of length 2m — codes1 ++ codes2.
@@ -204,35 +138,12 @@ object AqKernels {
   * score evaluations per subspace at the v70 geometry; an encoder at
   * larger k pays that enumeration or moves to beam search (LSQ §4).
   *
-  * Transport: codebooks above [[AqKernels.BcastBytes]] ride
-  * [[AqJointEncodeBcast]] instead — same kernel, bit-identical.
+  * Transport: the codebook pair rides an explicit Broadcast (the
+  * [[MatVecRotateBcast]] pattern) — the serialized expression carries
+  * only the handle, executors fetch the floats once, and the
+  * executor-shared [[AqPair]] builds its k1·k2 tables once instead of
+  * per task. Arithmetic: [[AqKernels.encode]].
   */
-case class AqJointEncode(child: Expression, dsub: Int,
-                         cb1: Array[Array[Array[Float]]],
-                         cb2: Array[Array[Array[Float]]])
-    extends UnaryExpression with CodegenFallback with VectorInput {
-  override def prettyName: String = "aq_joint_encode"
-  override def dataType: DataType =
-    ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  @transient private lazy val pair = new AqPair(dsub, cb1, cb2)
-
-  override def nullSafeEval(input: Any): Any =
-    AqKernels.encode(pair, input.asInstanceOf[ArrayData], isFloat,
-      prettyName)
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : Expression = copy(child = newChild)
-}
-
-/** [[AqJointEncode]] with the codebook pair behind an explicit
-  * Broadcast — the transport for pairs too big to ride the task
-  * binary (the [[MatVecRotateBcast]] pattern): the serialized
-  * expression carries only the handle, executors fetch the floats
-  * once, and the per-executor-shared [[AqPair]] builds its k1·k2
-  * tables once instead of per task. Arithmetic is the shared
-  * [[AqKernels.encode]] — bit-identical to the literal transport. */
 case class AqJointEncodeBcast(child: Expression,
                               bcast: org.apache.spark.broadcast.Broadcast[
                                 AqPair])
@@ -253,48 +164,9 @@ case class AqJointEncodeBcast(child: Expression,
 /** (vector, codes1 ++ codes2) → total two-stage reconstruction error
   * — v70's distortion meter as a kernel instead of plan-riding
   * nested-Seq literals (the boxed double Seqs cost ~12 MiB of task
-  * binary; the primitive float codebooks here serialize compactly).
-  * Arithmetic: [[AqKernels.reconError]]. Transport: codebooks above
-  * [[AqKernels.BcastBytes]] ride [[AqReconErrorBcast]] instead.
+  * binary). Arithmetic: [[AqKernels.reconError]]; transport: the
+  * [[AqJointEncodeBcast]] broadcast pair.
   */
-case class AqReconError(left: Expression, right: Expression,
-                        dsub: Int,
-                        cb1: Array[Array[Array[Float]]],
-                        cb2: Array[Array[Array[Float]]])
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with CodegenFallback {
-  override def prettyName: String = "aq_recon_error"
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType | DoubleType, _),
-            ArrayType(IntegerType, _)) => TypeCheckSuccess
-      case other => TypeCheckFailure(
-        s"$prettyName requires (array<float|double>, array<int>), " +
-          s"got $other")
-    }
-  }
-
-  private lazy val isFloat =
-    left.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  @transient private lazy val pair = new AqPair(dsub, cb1, cb2)
-
-  override def nullSafeEval(vecAny: Any, codesAny: Any): Any =
-    AqKernels.reconError(pair, vecAny.asInstanceOf[ArrayData],
-      codesAny.asInstanceOf[ArrayData], isFloat, prettyName)
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** [[AqReconError]] on the Broadcast transport — shared
-  * [[AqKernels.reconError]] kernel, bit-identical values. */
 case class AqReconErrorBcast(left: Expression, right: Expression,
                              bcast: org.apache.spark.broadcast.Broadcast[
                                AqPair])

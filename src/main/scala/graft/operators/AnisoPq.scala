@@ -144,7 +144,7 @@ object AnisoPq {
                 i = 0
                 while (i < dsub) { a(i * dsub + i) += n.toDouble; i += 1 }
                 val rhs = s.map(_ * eta)
-                choleskySolve(a, rhs, dsub)
+                choleskySolve(a, dsub, 1, (_, r) => rhs(r))(0)
                   .map(v => math.rint(v * 1e6) / 1e6)
             }
           }
@@ -155,11 +155,14 @@ object AnisoPq {
     } finally { subRows.unpersist(): Unit }
   }
 
-  /** In-place Cholesky factorization + solve of the SPD system
-    * `a`x = `b` (row-major dsub×dsub) — driver-local model math, no
-    * library dependency, deterministic. */
-  private[graft] def choleskySolve(a: Array[Double], b: Array[Double],
-                                   n: Int): Array[Double] = {
+  /** Cholesky solve of the SPD system `a`·x = rhs (row-major n×n):
+    * factor once, then forward/back-substitute `nRhs` right-hand sides,
+    * rhs(t, row) supplying element `row` of system t. Returns
+    * sol(t)(row). Driver-local model math ([[Aq.refine]]'s M-step
+    * shares it), no library dependency, deterministic. */
+  private[graft] def choleskySolve(a: Array[Double], n: Int, nRhs: Int,
+                                   rhs: (Int, Int) => Double)
+      : Array[Array[Double]] = {
     val l = new Array[Double](n * n)
     var i = 0
     while (i < n) {
@@ -177,25 +180,27 @@ object AnisoPq {
       }
       i += 1
     }
-    val y = new Array[Double](n)
-    i = 0
-    while (i < n) {
-      var acc = b(i)
-      var t = 0
-      while (t < i) { acc -= l(i * n + t) * y(t); t += 1 }
-      y(i) = acc / l(i * n + i)
-      i += 1
+    Array.tabulate(nRhs) { t =>
+      val y = new Array[Double](n)
+      var r = 0
+      while (r < n) {
+        var acc = rhs(t, r)
+        var s = 0
+        while (s < r) { acc -= l(r * n + s) * y(s); s += 1 }
+        y(r) = acc / l(r * n + r)
+        r += 1
+      }
+      val x = new Array[Double](n)
+      r = n - 1
+      while (r >= 0) {
+        var acc = y(r)
+        var s = r + 1
+        while (s < n) { acc -= l(s * n + r) * x(s); s += 1 }
+        x(r) = acc / l(r * n + r)
+        r -= 1
+      }
+      x
     }
-    val x = new Array[Double](n)
-    i = n - 1
-    while (i >= 0) {
-      var acc = y(i)
-      var t = i + 1
-      while (t < n) { acc -= l(t * n + i) * x(t); t += 1 }
-      x(i) = acc / l(i * n + i)
-      i -= 1
-    }
-    x
   }
 
   /** The serving-side anisotropic encode as a column ([[AnisoEncode]]

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.expressions.AqJointEncode
+import graft.expressions.{AqJointEncodeBcast, AqPair, AqReconErrorBcast}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
@@ -11,7 +11,7 @@ import org.apache.spark.sql.graft.Bridge
   * cut distortion with recall FLAT because each stage minimizes its
   * own residual energy and cannot ADDRESS the combinatorial code
   * space. With exactly two stages the joint E-step is EXACT by
-  * enumeration ([[graft.expressions.AqJointEncode]]: per-subspace
+  * enumeration ([[graft.expressions.AqJointEncodeBcast]]: per-subspace
   * argmin over all k1·k2 code pairs via decomposed tables), and the
   * M-step — codebooks re-fit with assignments FIXED — is a linear
   * least squares that decomposes per subspace and is SHARED across
@@ -117,7 +117,7 @@ object Aq {
           a((k1 + q) * n + p) = n12(p * k2 + q).toDouble
         }
         // one Cholesky factorization, dsub right-hand sides
-        val sol = choleskyMultiSolve(a, n, dsub, (t, row) => {
+        val sol = AnisoPq.choleskySolve(a, n, dsub, (t, row) => {
           if (row < k1) s1(row * dsub + t) else s2((row - k1) * dsub + t)
         })
         for (p <- 0 until k1)
@@ -133,52 +133,7 @@ object Aq {
     (u, v)
   }
 
-  /** Factor once, back-substitute `nRhs` right-hand sides; rhs(t, row)
-    * supplies element `row` of system t. Returns sol(t)(row). */
-  private def choleskyMultiSolve(a: Array[Double], n: Int, nRhs: Int,
-                                 rhs: (Int, Int) => Double)
-      : Array[Array[Double]] = {
-    val l = new Array[Double](n * n)
-    var i = 0
-    while (i < n) {
-      var j = 0
-      while (j <= i) {
-        var acc = a(i * n + j)
-        var t = 0
-        while (t < j) { acc -= l(i * n + t) * l(j * n + t); t += 1 }
-        if (i == j) {
-          require(acc > 0.0,
-            s"choleskyMultiSolve: not positive definite at $i")
-          l(i * n + i) = math.sqrt(acc)
-        } else l(i * n + j) = acc / l(j * n + j)
-        j += 1
-      }
-      i += 1
-    }
-    Array.tabulate(nRhs) { t =>
-      val y = new Array[Double](n)
-      var r = 0
-      while (r < n) {
-        var acc = rhs(t, r)
-        var s = 0
-        while (s < r) { acc -= l(r * n + s) * y(s); s += 1 }
-        y(r) = acc / l(r * n + r)
-        r += 1
-      }
-      val x = new Array[Double](n)
-      r = n - 1
-      while (r >= 0) {
-        var acc = y(r)
-        var s = r + 1
-        while (s < n) { acc -= l(s * n + r) * x(s); s += 1 }
-        x(r) = acc / l(r * n + r)
-        r -= 1
-      }
-      x
-    }
-  }
-
-  /** The joint E-step as a column ([[AqJointEncode]]): (idCol, vecCol,
+  /** The joint E-step as a column ([[AqJointEncodeBcast]]): (idCol, vecCol,
     * codes) with codes = codes1 ++ codes2, length 2m. vecCol is kept
     * so the M-step reads subvectors without a second scan.
     *
@@ -189,8 +144,8 @@ object Aq {
     * after the one-off per-executor table build folds the dsub-wide
     * dot products into the k1·k2 cross table. That is the price of
     * exactness over the greedy two-stage encode (m·(k1+k2) per
-    * vector) and the reason the cross table rides a Broadcast, not a
-    * literal. */
+    * vector) and the reason the cross table is built once per
+    * executor behind the pair's Broadcast. */
   def encodeJoint(emb: DataFrame, idCol: String, vecCol: String,
                   cb1: Pq.PqModel, cb2: Pq.PqModel): DataFrame =
     // fan out first: the k1·k2 enumeration is the costliest encode in
@@ -204,8 +159,7 @@ object Aq {
     * — repeated encode/meter calls over one pair share one
     * executor-resident copy AND one per-executor k1·k2 table build. */
   private val pairCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.broadcast.Broadcast[
-      graft.expressions.AqPair]]()
+    String, org.apache.spark.broadcast.Broadcast[AqPair]]()
 
   private def digest(md: java.security.MessageDigest,
                      cb: Array[Array[Array[Float]]]): Unit = {
@@ -218,48 +172,28 @@ object Aq {
   }
 
   private def pairBcast(cb1: Pq.PqModel, cb2: Pq.PqModel)
-      : org.apache.spark.broadcast.Broadcast[graft.expressions.AqPair] = {
+      : org.apache.spark.broadcast.Broadcast[AqPair] = {
     val md = java.security.MessageDigest.getInstance("MD5")
     digest(md, cb1.codebooks)
     digest(md, cb2.codebooks)
     val key = cb1.dsub + ":" + md.digest().map("%02x".format(_)).mkString
     pairCache.computeIfAbsent(key,
       _ => org.apache.spark.sql.SparkSession.active.sparkContext
-        .broadcast(new graft.expressions.AqPair(cb1.dsub,
-          cb1.codebooks, cb2.codebooks)))
+        .broadcast(new AqPair(cb1.dsub, cb1.codebooks, cb2.codebooks)))
   }
 
-  /** Transport switch ([[graft.expressions.AqKernels.BcastBytes]]):
-    * small pairs (the spec fixtures) ride the expression literal,
-    * large ones (v70's d = 1536 / k = 128 pair, ~1.6 MiB of floats)
-    * an explicit cached Broadcast — identical arithmetic (one shared
-    * kernel), so the switch is invisible to every oracle. */
+  /** The joint encode column: the pair always rides its digest-keyed
+    * cached Broadcast ([[pairBcast]]). */
   def encodeJointCol(vec: Column, cb1: Pq.PqModel,
-                     cb2: Pq.PqModel): Column = {
-    import graft.expressions.{AqJointEncodeBcast, AqKernels, AqPair}
-    if (new AqPair(cb1.dsub, cb1.codebooks, cb2.codebooks).codebookBytes
-        < AqKernels.BcastBytes)
-      Bridge.column(AqJointEncode(Bridge.expression(vec), cb1.dsub,
-        cb1.codebooks, cb2.codebooks))
-    else
-      Bridge.column(AqJointEncodeBcast(Bridge.expression(vec),
-        pairBcast(cb1, cb2)))
-  }
+                     cb2: Pq.PqModel): Column =
+    Bridge.column(AqJointEncodeBcast(Bridge.expression(vec),
+      pairBcast(cb1, cb2)))
 
   /** The two-stage reconstruction error as a column
-    * ([[graft.expressions.AqReconError]] / its Bcast twin — v70's
-    * distortion meter), same transport switch as [[encodeJointCol]]. */
+    * ([[graft.expressions.AqReconErrorBcast]] — v70's distortion
+    * meter), over the same cached pair broadcast as [[encodeJointCol]]. */
   def reconErrorCol(vec: Column, codes: Column, cb1: Pq.PqModel,
-                    cb2: Pq.PqModel): Column = {
-    import graft.expressions.{AqKernels, AqPair, AqReconError,
-      AqReconErrorBcast}
-    if (new AqPair(cb1.dsub, cb1.codebooks, cb2.codebooks).codebookBytes
-        < AqKernels.BcastBytes)
-      Bridge.column(AqReconError(Bridge.expression(vec),
-        Bridge.expression(codes), cb1.dsub, cb1.codebooks,
-        cb2.codebooks))
-    else
-      Bridge.column(AqReconErrorBcast(Bridge.expression(vec),
-        Bridge.expression(codes), pairBcast(cb1, cb2)))
-  }
+                    cb2: Pq.PqModel): Column =
+    Bridge.column(AqReconErrorBcast(Bridge.expression(vec),
+      Bridge.expression(codes), pairBcast(cb1, cb2)))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.expressions.MatVecRotate
+import graft.expressions.MatVecRotateBcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
@@ -33,11 +33,10 @@ import org.apache.spark.sql.graft.Bridge
   *    eigendecomposition is driver-local, the same split MLlib's own
   *    PCA uses;
   *  - the trained R is model-sized (d² doubles) and rides the
-  *    [[MatVecRotate]] kernel — as an expression literal below
-  *    [[graft.expressions.MatVecKernel.BcastDim]] dims (the PQ-codebook
-  *    transport), as an explicit cached Broadcast above it (d = 1536 is
-  *    ~18 MiB: a literal re-ships per stage, the broadcast once per
-  *    executor) — applying it is one narrow map-stage pass, no shuffle;
+  *    [[MatVecRotateBcast]] kernel behind an explicit cached Broadcast
+  *    (d = 1536 is ~18 MiB: a literal would re-ship per stage, the
+  *    broadcast ships once per executor) — applying it is one narrow
+  *    map-stage pass, no shuffle;
   *  - everything downstream (codebook training, encode, ADC, IVF
   *    routing, graph walks) is [[Pq]]/[[Ann]] machinery unchanged —
   *    OPQ composes as a pre-transform, which is why serving stacks
@@ -205,8 +204,8 @@ object Opq {
     String, org.apache.spark.broadcast.Broadcast[Array[Array[Double]]]]()
 
   /** md5 over the matrix bytes — ~30 ms at d = 1536, paid once per
-    * [[rotateCol]] call on the large-matrix path (vs re-shipping 18 MiB
-    * per stage without the cache). */
+    * [[rotateCol]] call (vs re-shipping 18 MiB per stage without the
+    * cache). */
   private def rotDigest(rot: Array[Array[Double]]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val buf = java.nio.ByteBuffer.allocate(8)
@@ -221,22 +220,16 @@ object Opq {
   }
 
   /** R·x as a column — raw dots; wrap rank-sensitive consumers in
-    * `round` (see [[MatVecRotate]]'s arithmetic contract). Transport
-    * switches on dimension ([[graft.expressions.MatVecKernel.BcastDim]]):
-    * small matrices ride the expression literal (the PQ-codebook
-    * shape), large ones an explicit cached Broadcast — identical
-    * arithmetic (one shared kernel), so the switch is invisible to
-    * every oracle. */
-  def rotateCol(vecCol: Column, rot: Array[Array[Double]]): Column =
-    if (rot.length < graft.expressions.MatVecKernel.BcastDim)
-      Bridge.column(MatVecRotate(Bridge.expression(vecCol), rot))
-    else {
-      val bc = bcastCache.computeIfAbsent(rotDigest(rot),
-        _ => org.apache.spark.sql.SparkSession.active
-          .sparkContext.broadcast(rot))
-      Bridge.column(graft.expressions.MatVecRotateBcast(
-        Bridge.expression(vecCol), bc, rot.length))
-    }
+    * `round` (see [[MatVecRotateBcast]]'s arithmetic contract). The
+    * matrix rides the digest-keyed cached Broadcast ([[bcastCache]])
+    * at every dimension. */
+  def rotateCol(vecCol: Column, rot: Array[Array[Double]]): Column = {
+    val bc = bcastCache.computeIfAbsent(rotDigest(rot),
+      _ => org.apache.spark.sql.SparkSession.active
+        .sparkContext.broadcast(rot))
+    Bridge.column(MatVecRotateBcast(Bridge.expression(vecCol), bc,
+      rot.length))
+  }
 
   /** (idCol, vecCol → R·x rounded to 1e-6) — the rotated frame
     * codebook training, encode and LUTs consume; the 1e-6 quantization

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.expressions.{PqAdcDistance, PqEncode}
+import graft.expressions.{PqAdcDistance, PqEncode, PqTables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
@@ -158,18 +158,8 @@ object Pq {
       s"query dim ${query.length} != ${model.m}×${model.dsub}")
     // double end-to-end (see PqAdcDistance): widen BEFORE subtracting,
     // exactly as a SQL replay over the persisted float codebooks would
-    val lut = Array.tabulate(model.m, model.k) { (j, c) =>
-      var acc = 0.0
-      var i = 0
-      while (i < model.dsub) {
-        val d = query(j * model.dsub + i) -
-          model.codebooks(j)(c)(i).toDouble
-        acc += d * d
-        i += 1
-      }
-      acc
-    }
-    Bridge.column(PqAdcDistance(Bridge.expression(codesCol), lut))
+    Bridge.column(PqAdcDistance(Bridge.expression(codesCol),
+      PqTables.l2Lut(query, model.codebooks)))
   }
 
   /** Approximate INNER PRODUCT ⟨query, reconstruction⟩ via per-subspace
@@ -183,17 +173,8 @@ object Pq {
                       model: PqModel): Column = {
     require(query.length == model.m * model.dsub,
       s"query dim ${query.length} != ${model.m}×${model.dsub}")
-    val lut = Array.tabulate(model.m, model.k) { (j, c) =>
-      var acc = 0.0
-      var i = 0
-      while (i < model.dsub) {
-        acc += query(j * model.dsub + i) *
-          model.codebooks(j)(c)(i).toDouble
-        i += 1
-      }
-      acc
-    }
-    Bridge.column(PqAdcDistance(Bridge.expression(codesCol), lut))
+    Bridge.column(PqAdcDistance(Bridge.expression(codesCol),
+      PqTables.ipLut(query, model.codebooks)))
   }
 
   /** Top-k nearest by PQ asymmetric distance (ascending, ties to lower
@@ -368,20 +349,9 @@ object Pq {
     // subtracting — bit-identical to the single-query adcDistance and
     // to the oracle's replay over the persisted float codebooks
     val qFrame = queries.map { case (qid, qv) =>
-      val lut: Seq[Seq[Double]] =
-        for (j <- 0 until model.m) yield
-          for (c <- 0 until model.k) yield {
-            var acc = 0.0
-            var i = 0
-            while (i < model.dsub) {
-              val d = qv(j * model.dsub + i).toDouble -
-                model.codebooks(j)(c)(i).toDouble
-              acc += d * d
-              i += 1
-            }
-            acc
-          }
-      (qid, qv.toSeq, lut)
+      (qid, qv.toSeq,
+        PqTables.l2Lut(qv.map(_.toDouble), model.codebooks).toSeq
+          .map(_.toSeq))
     }.toDF("query_id", "qe", "lut").localCheckpoint()
     val probes = centroids
       .crossJoin(broadcast(qFrame.select("query_id", "qe")))

@@ -193,11 +193,11 @@ object Artifacts {
     * model adopted — with the oracle replaying downstream from the
     * same artifact, correctness would still report a match, hiding
     * the drift. Digest = md5 over every regular file's (relative
-    * path, size, mtime), sorted — metadata, not bytes: O(files) stat
-    * calls instead of a re-read of corpus-scale parquet, and any
-    * rewrite (even byte-identical) bumps mtime → a spurious REBUILD,
-    * never a spurious reuse, which is the safe direction. Cached per
-    * (JVM, path): inputs are immutable within a run.
+    * path, size, content md5), sorted — bytes, not mtimes, so a fresh
+    * clone or copy of the same fixture reuses every artifact built
+    * from it, while any content change rebuilds. The inputs are
+    * fixture-sized (at most 780 KB at sf0.1), so reading them is
+    * cheap. Cached per (JVM, path): inputs are immutable within a run.
     */
   def inputDigest(inputPaths: String*): String = {
     val key = inputPaths.mkString("\u0000")
@@ -213,7 +213,9 @@ object Artifacts {
               .filter(java.nio.file.Files.isRegularFile(_))
               .map(f => root.relativize(f).toString + ":" +
                 java.nio.file.Files.size(f) + ":" +
-                java.nio.file.Files.getLastModifiedTime(f).toMillis)
+                java.security.MessageDigest.getInstance("MD5")
+                  .digest(java.nio.file.Files.readAllBytes(f))
+                  .map(b => f"${b & 0xff}%02x").mkString)
               .toVector.sorted
           } finally s.close()
         }

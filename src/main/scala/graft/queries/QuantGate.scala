@@ -72,9 +72,7 @@ object QuantGate {
         recon.select(col(idCol), l2Dist(c, qLit).as("_d"))
           .orderBy(col("_d").asc, col(idCol)).limit(10)
           .select(idCol).collect().map(_.getLong(0)).toSet
-      val exact = top10(col("_x"))
-      if (exact.isEmpty) 1.0
-      else top10(col("_recon")).intersect(exact).size.toDouble / exact.size
+      ServeGate.recallOf(top10(col("_recon")), top10(col("_x")))
     }
     recalls.sum / recalls.size
   }

@@ -24,12 +24,12 @@ import org.apache.spark.sql.functions._
   */
 object ServeGate {
 
-  private def exactTop10(serving: DataFrame, qDf: DataFrame,
+  private[queries] def exactTop10(serving: DataFrame, qDf: DataFrame,
                          idCol: String, vecCol: String): Set[Long] =
     Search.topK(serving, qDf, idCol, vecCol, "qe", 10)
       .select(idCol).collect().map(_.getLong(0)).toSet
 
-  private def recallOf(approx: Set[Long], exact: Set[Long]): Double =
+  private[queries] def recallOf(approx: Set[Long], exact: Set[Long]): Double =
     if (exact.isEmpty) 1.0
     else approx.intersect(exact).size.toDouble / exact.size
 

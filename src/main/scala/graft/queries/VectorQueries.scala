@@ -2875,7 +2875,7 @@ object VectorQueries {
     * corpus second-moment matrix (public MLlib `RowMatrix.computeSVD`,
     * Gramian cost d², not corpus-sized), eigenvalue allocation
     * balancing the spectrum product across the m subspaces, applied
-    * as one [[graft.expressions.MatVecRotate]] kernel pass. Fixture:
+    * as one [[graft.expressions.MatVecRotateBcast]] kernel pass. Fixture:
     * v28's 8-cluster corpus — REAL anisotropy (16 hash-spike
     * directions carry the cluster identity), exactly the geometry
     * plain PQ's contiguous blocks mishandle: the measured per-block
@@ -2926,20 +2926,8 @@ object VectorQueries {
     def lutFor(model: graft.operators.Pq.PqModel,
                qs: Seq[(Long, Array[Double])]): DataFrame =
       qs.map { case (qid, qv) =>
-        val lut: Seq[Seq[Double]] =
-          for (j <- 0 until model.m) yield
-            for (c <- 0 until model.k) yield {
-              var acc = 0.0
-              var i = 0
-              while (i < model.dsub) {
-                val d = qv(j * model.dsub + i) -
-                  model.codebooks(j)(c)(i).toDouble
-                acc += d * d
-                i += 1
-              }
-              acc
-            }
-        (qid, lut)
+        (qid, graft.expressions.PqTables.l2Lut(qv, model.codebooks).toSeq
+          .map(_.toSeq))
       }.toDF("query_id", "lut")
     def top10(vecs: DataFrame, model: graft.operators.Pq.PqModel,
               luts: DataFrame): DataFrame =
@@ -3248,47 +3236,15 @@ object VectorQueries {
     // transport = [[adcLookupSum]]'s broadcast (the k1×k2 cross table
     // rode the plan as a boxed typedlit literal through round 14)
     val dsub = stage1.dsub
-    def l2Of(cb2: Pq.PqModel): Array[Array[Double]] =
-      Array.tabulate(8, cb2.k) { (j, c) =>
-        var acc = 0.0
-        var i = 0
-        while (i < dsub) {
-          val ctr = cb2.codebooks(j)(c)(i).toDouble
-          acc += ctr * ctr - 2.0 * q(j * dsub + i) * ctr
-          i += 1
-        }
-        acc
-      }
-    def crossOf(cb2: Pq.PqModel): Array[Array[Array[Double]]] =
-      Array.tabulate(8, stage1.k, cb2.k) { (j, c1, c2) =>
-        var acc = 0.0
-        var i = 0
-        while (i < dsub) {
-          acc += stage1.codebooks(j)(c1)(i).toDouble *
-            cb2.codebooks(j)(c2)(i).toDouble
-          i += 1
-        }
-        acc
-      }
-    val l1: Array[Array[Double]] =
-      Array.tabulate(8, stage1.k) { (j, c) =>
-        var acc = 0.0
-        var i = 0
-        while (i < dsub) {
-          val d = q(j * dsub + i) - stage1.codebooks(j)(c)(i).toDouble
-          acc += d * d
-          i += 1
-        }
-        acc
-      }
+    import graft.expressions.{AdcTerm, PqTables}
+    val l1 = PqTables.l2Lut(q, stage1.codebooks)
     def rqAdc(c2Col: String, cb2: Pq.PqModel)
-        : org.apache.spark.sql.Column = {
-      import graft.expressions.AdcTerm
+        : org.apache.spark.sql.Column =
       adcLookupSum(Seq(col("codes1"), col(c2Col)), Seq(0, 0),
         Array(AdcTerm.ofLut(1.0, 0, l1),
-          AdcTerm.ofLut(1.0, 1, l2Of(cb2)),
-          AdcTerm.ofCross(2.0, 0, 1, crossOf(cb2))), 8)
-    }
+          AdcTerm.ofLut(1.0, 1, PqTables.expandedL2Lut(q, cb2.codebooks)),
+          AdcTerm.ofCross(2.0, 0, 1,
+            PqTables.crossTable(stage1.codebooks, cb2.codebooks))), 8)
     val joined = codes1
       .join(codes2(cb2Split, "codes2s"), Seq("vec_id"))
       .join(codes2(cb2Corpus, "codes2c"), Seq("vec_id"))
@@ -3452,49 +3408,19 @@ object VectorQueries {
       .select(col("embedding").as("qe"))
     val q = qDf.head().getSeq[Float](0).map(_.toDouble).toArray
     val dsub = cb1.dsub
-    def lutQ(cb: Pq.PqModel): Array[Array[Double]] =
-      Array.tabulate(8, cb.k) { (j, c) =>
-        var acc = 0.0
-        var i = 0
-        while (i < dsub) {
-          val ctr = cb.codebooks(j)(c)(i).toDouble
-          acc += ctr * ctr - 2.0 * q(j * dsub + i) * ctr
-          i += 1
-        }
-        acc
-      }
-    def crossT(a: Pq.PqModel, b: Pq.PqModel): Array[Array[Array[Double]]] =
-      Array.tabulate(8, a.k, b.k) { (j, ca, cbi) =>
-        var acc = 0.0
-        var i = 0
-        while (i < dsub) {
-          acc += a.codebooks(j)(ca)(i).toDouble *
-            b.codebooks(j)(cbi)(i).toDouble
-          i += 1
-        }
-        acc
-      }
-    val l1: Array[Array[Double]] =
-      Array.tabulate(8, cb1.k) { (j, c) =>
-        var acc = 0.0
-        var i = 0
-        while (i < dsub) {
-          val d = q(j * dsub + i) - cb1.codebooks(j)(c)(i).toDouble
-          acc += d * d
-          i += 1
-        }
-        acc
-      }
-    val l2 = lutQ(cb2)
-    val l3 = lutQ(cb3)
-    val (x12, x13, x23) =
-      (crossT(cb1, cb2), crossT(cb1, cb3), crossT(cb2, cb3))
+    import graft.expressions.{AdcTerm, PqTables}
+    val l1 = PqTables.l2Lut(q, cb1.codebooks)
+    val l2 = PqTables.expandedL2Lut(q, cb2.codebooks)
+    val l3 = PqTables.expandedL2Lut(q, cb3.codebooks)
+    val (x12, x13, x23) = (
+      PqTables.crossTable(cb1.codebooks, cb2.codebooks),
+      PqTables.crossTable(cb1.codebooks, cb3.codebooks),
+      PqTables.crossTable(cb2.codebooks, cb3.codebooks))
     // the 2-stage and 3-stage ADC terms, summed j ascending; the
     // declared term order mirrors the oracle's left-associative sum,
     // and the tables (x23 is the 8×128×128 table the round-14 bench
     // tail shipped as a 4.1 MiB boxed literal) ride [[adcLookupSum]]'s
     // broadcast
-    import graft.expressions.AdcTerm
     val codeCols = Seq(col("codes1"), col("codes2"), col("codes3"))
     val adc2 = adcLookupSum(codeCols.take(2), Seq(0, 0),
       Array(AdcTerm.ofLut(1.0, 0, l1), AdcTerm.ofLut(1.0, 1, l2),
@@ -4994,10 +4920,8 @@ object VectorQueries {
         Pq.adcInnerProduct(col("codes"), q, model).as("ip"))
       .orderBy(col("ip").desc, col("vec_id")).limit(10)
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    val exact = Search.topK(serving, qDf, "vec_id", "embedding", "qe", 10)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    if (exact.isEmpty) 1.0
-    else approx.intersect(exact).size.toDouble / exact.size
+    ServeGate.recallOf(approx,
+      ServeGate.exactTop10(serving, qDf, "vec_id", "embedding"))
   }
 
   /** v68's trained models + their sealed gates — [[graft.operators
@@ -5207,31 +5131,13 @@ object VectorQueries {
                          m1: graft.operators.Pq.PqModel,
                          m2: graft.operators.Pq.PqModel,
                          q: Array[Double]): org.apache.spark.sql.Column = {
-    import graft.expressions.AdcTerm
+    import graft.expressions.{AdcTerm, PqTables}
     val m = m1.m
-    val dsub = m1.dsub
-    def dotD(a: Array[Float], b: Array[Float]): Double = {
-      var acc = 0.0
-      var i = 0
-      while (i < a.length) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
-      acc
-    }
-    def dotQ(j: Int, a: Array[Float]): Double = {
-      var acc = 0.0
-      var i = 0
-      while (i < dsub) { acc += q(j * dsub + i) * a(i); i += 1 }
-      acc
-    }
-    val n1 = Array.tabulate(m, m1.k)((j, c) =>
-      dotD(m1.codebooks(j)(c), m1.codebooks(j)(c)))
-    val n2 = Array.tabulate(m, m2.k)((j, c) =>
-      dotD(m2.codebooks(j)(c), m2.codebooks(j)(c)))
-    val ab = Array.tabulate(m, m1.k, m2.k)((j, a, b) =>
-      dotD(m1.codebooks(j)(a), m2.codebooks(j)(b)))
-    val qa = Array.tabulate(m, m1.k)((j, c) =>
-      dotQ(j, m1.codebooks(j)(c)))
-    val qb = Array.tabulate(m, m2.k)((j, c) =>
-      dotQ(j, m2.codebooks(j)(c)))
+    val n1 = PqTables.normTable(m1.codebooks)
+    val n2 = PqTables.normTable(m2.codebooks)
+    val ab = PqTables.crossTable(m1.codebooks, m2.codebooks)
+    val qa = PqTables.ipLut(q, m1.codebooks)
+    val qb = PqTables.ipLut(q, m2.codebooks)
     adcLookupSum(Seq(codesCol, codesCol), Seq(0, m),
       Array(AdcTerm.ofLut(1.0, 0, n1), AdcTerm.ofLut(1.0, 1, n2),
         AdcTerm.ofCross(2.0, 0, 1, ab), AdcTerm.ofLut(-2.0, 0, qa),
@@ -5239,11 +5145,10 @@ object VectorQueries {
   }
 
   /** Direct two-stage reconstruction MSE of a (codes1 ++ codes2)
-    * column via the [[graft.expressions.AqReconError]] kernel
+    * column via the [[graft.expressions.AqReconErrorBcast]] kernel
     * (res = (x − u) − v per subspace, Σ res², i- then j-ascending;
-    * broadcast transport above the size switch — see
-    * [[graft.operators.Aq.reconErrorCol]]), averaged over the corpus
-    * (round 6). */
+    * see [[graft.operators.Aq.reconErrorCol]]), averaged over the
+    * corpus (round 6). */
   private def aqMse(joined: DataFrame,
                     m1: graft.operators.Pq.PqModel,
                     m2: graft.operators.Pq.PqModel): DataFrame =
@@ -5292,10 +5197,8 @@ object VectorQueries {
       .select(col("vec_id"), aqScoreCol(col("codes"), m1, m2, q).as("s"))
       .orderBy(col("s").asc, col("vec_id")).limit(10)
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    val exact = Search.topK(serving, qDf, "vec_id", "embedding", "qe", 10)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    if (exact.isEmpty) 1.0
-    else approx.intersect(exact).size.toDouble / exact.size
+    ServeGate.recallOf(approx,
+      ServeGate.exactTop10(serving, qDf, "vec_id", "embedding"))
   }
 
   /** JOINTLY-REFINED ADDITIVE QUANTIZATION AT THE CAPACITY CLIFF —
@@ -5869,7 +5772,7 @@ object VectorQueries {
   /** The exact joint two-stage argmin as prefixed CTEs (v70's E-step
     * replay): per-(vec, j, code) dot tables, then the full k1×k2
     * enumeration reduced by a lexicographic struct-min — ties to the
-    * lower (c1, c2), the [[graft.expressions.AqJointEncode]] rule.
+    * lower (c1, c2), the [[graft.expressions.AqJointEncodeBcast]] rule.
     * `tp` = the table prefix ([[aqTableCtes]]). */
   private def aqJointCodesCtes(p: String, tp: String, ca: String,
                                cb: String): String =

@@ -10,8 +10,31 @@ class AnisoPqSpec extends SparkSpec {
     val a = Array(4.0, 1.0, 0.0, 1.0, 3.0, 1.0, 0.0, 1.0, 2.0)
     val x = Array(1.0, -2.0, 3.0)
     val b = Array(4 * 1 + 1 * -2 + 0.0, 1 - 6 + 3.0, 0 - 2 + 6.0)
-    val got = AnisoPq.choleskySolve(a.clone(), b, 3)
+    val got = AnisoPq.choleskySolve(a.clone(), 3, 1, (_, r) => b(r))(0)
     x.zip(got).foreach { case (w, g) => assert(math.abs(w - g) < 1e-12) }
+    // seeded SPD system A = BᵀB + n·I, several right-hand sides: one
+    // factorisation serving all of them equals one solve per side, bit
+    // for bit, and each solution reproduces its side
+    val rng = new scala.util.Random(77)
+    val n = 7
+    val bm = Array.fill(n, n)(rng.nextGaussian())
+    val spd = Array.tabulate(n * n) { e =>
+      val (r, c) = (e / n, e % n)
+      (0 until n).map(t => bm(t)(r) * bm(t)(c)).sum +
+        (if (r == c) n.toDouble else 0.0)
+    }
+    val sides = Array.fill(5, n)(rng.nextGaussian())
+    val multi = AnisoPq.choleskySolve(spd, n, sides.length,
+      (t, r) => sides(t)(r))
+    sides.indices.foreach { t =>
+      val one = AnisoPq.choleskySolve(spd, n, 1, (_, r) => sides(t)(r))(0)
+      assert(multi(t).map(java.lang.Double.doubleToRawLongBits).toSeq ==
+        one.map(java.lang.Double.doubleToRawLongBits).toSeq)
+      (0 until n).foreach { r =>
+        val ax = (0 until n).map(c => spd(r * n + c) * multi(t)(c)).sum
+        assert(math.abs(ax - sides(t)(r)) < 1e-9)
+      }
+    }
   }
 
   test("anisotropic assignment prefers the parallel-accurate codeword " +

@@ -84,6 +84,35 @@ class ArtifactsSpec extends SparkSpec {
     } finally java.nio.file.Files.delete(f)
   }
 
+  test("inputDigest hashes content, not mtimes: the same bytes under " +
+      "different mtimes digest equal, a one-byte change differs") {
+    import java.nio.file.{Files, Path}
+    import java.nio.file.attribute.FileTime
+    def tree(bytes: Array[Byte], mtime: Long): Path = {
+      val d = Files.createTempDirectory("graft_digest_tree")
+      Files.createDirectories(d.resolve("sub"))
+      Seq(d.resolve("a.dat"), d.resolve("sub/b.dat")).foreach { f =>
+        Files.write(f, bytes)
+        Files.setLastModifiedTime(f, FileTime.fromMillis(mtime))
+      }
+      d
+    }
+    val bytes = "graft fixture".getBytes("UTF-8")
+    val changed = bytes.clone()
+    changed(3) = (changed(3) + 1).toByte
+    val dirs = Seq(tree(bytes, 1000000000000L),
+      tree(bytes, 1600000000000L), tree(changed, 1000000000000L))
+    try {
+      val Seq(d1, d2, d3) = dirs.map(d => Artifacts.inputDigest(d.toString))
+      assert(d1 == d2)
+      assert(d1 != d3)
+    } finally dirs.foreach { d =>
+      Seq("a.dat", "sub/b.dat", "sub").foreach(p =>
+        Files.delete(d.resolve(p)))
+      Files.delete(d)
+    }
+  }
+
   test("a failed warm step keeps its message, and the failures JSON " +
       "lists it as valid JSON; a clean step reports none") {
     val msg = "no \"corpus\"\n\tat step 2"

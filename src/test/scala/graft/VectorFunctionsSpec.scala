@@ -156,13 +156,11 @@ class VectorFunctionsSpec extends SparkSpec {
     val rot = sc.broadcast(Array(Array(1.0)))
     val pair = sc.broadcast(new AqPair(1, cb, cb))
     val vectorKernels: Seq[Expression => Expression] = Seq(
-      MatVecRotate(_, Array(Array(1.0))),
       MatVecRotateBcast(_, rot, 1),
       Int8Quantize(_),
       PqEncode(_, 1, cb),
       CosineLshBits(_, 8),
       SrpProbeBucketsCapped(_, 4, 2),
-      AqJointEncode(_, 1, cb, cb),
       AqJointEncodeBcast(_, pair),
       AnisoEncode(_, 1, cb, 2.0))
     val hashKernels: Seq[Expression => Expression] = Seq(
