@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Chunker, Ingest, Search}
+import graft.operators.{Chunker, Ingest, Search, ServeBlock}
 import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -20,20 +20,30 @@ import org.apache.spark.sql.functions._
   * The store is parquet at `storePath` with schema
   * (doc_id, source, chunk_ix, content, embedding) — unlike the reference
   * we keep chunk provenance (its `chunkName` is silently dropped,
-  * server.js:191; SURVEY.md §2.1). The "index" is the cached
-  * (doc_id, embedding) projection, rebuilt lazily after each write —
-  * synchronizeFAISS parity.
+  * server.js:191; SURVEY.md §2.1). The "index" is rebuilt lazily after
+  * each write — synchronizeFAISS parity — in one of two forms:
+  *  - When the snapshot fits (the optimizer's size estimate of its
+  *    (doc_id, content, embedding) is at most
+  *    `spark.sql.autoBroadcastJoinThreshold`; judging it runs no job),
+  *    it is a driver-held [[graft.operators.ServeBlock]] built by one
+  *    collect, as the reference holds its `FAISS` object in process.
+  *    Every read then ranks on the driver and returns a local frame
+  *    with the plans' rows and schema: no Spark job per read.
+  *  - Otherwise (a bound of -1, a store too big, or one with a null or
+  *    repeated doc_id or a null vector element) it is the cached
+  *    (doc_id, embedding) projection and the BM25 frames, and each read
+  *    runs its Spark plan.
   *
   * Reads go through one store snapshot ([[documents]]): the store is
   * listed and its schema inferred once per change, not once per call,
   * and nothing is persisted for it. A read sees every row committed
-  * before the snapshot was taken. The snapshot and both indexes are
-  * dropped on this engine's writes, and when the store directory's
-  * modification time differs from the one recorded with the snapshot
-  * (one FS status call per read, no Spark job) — that is how a write by
-  * another engine or JVM shows. On file systems without directory
-  * mtimes (object stores), another writer's rows show after this
-  * engine's next write. Writes never read the snapshot: ingest and
+  * before the snapshot was taken. The snapshot, its block and both
+  * indexes are dropped on this engine's writes, and when the store
+  * directory's modification time differs from the one recorded with the
+  * snapshot (one FS status call per read, no Spark job) — that is how a
+  * write by another engine or JVM shows. On file systems without
+  * directory mtimes (object stores), another writer's rows show after
+  * this engine's next write. Writes never read the snapshot: ingest and
   * delete resolve the store afresh under [[Ingest.withStoreLock]].
   *
   * All mutation goes through dedup-ingest (INSERT OR IGNORE parity) and
@@ -52,9 +62,15 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
              chunkSize: Int = 1000, overlap: Int = 50,
              embedder: Embedder = HashEmbedder) {
 
-  /** The store as the reads see it: the resolved relation and the store
-    * directory's modification time when it was resolved. */
-  private case class Snapshot(docs: DataFrame, mtime: Option[Long])
+  /** The store as the reads see it: the resolved relation, the store
+    * directory's modification time when it was resolved, and the
+    * driver-held block, collected on first use. */
+  private case class Snapshot(docs: DataFrame, mtime: Option[Long]) {
+    /** The optimizer's size estimate of the block's columns (no job);
+      * None when their types keep every read on the plans. */
+    lazy val size: Option[BigInt] = ServeBlock.size(docs)
+    lazy val block: Option[ServeBlock] = ServeBlock.collect(docs)
+  }
 
   @volatile private var snapshot: Option[Snapshot] = None
   @volatile private var cachedIndex: Option[DataFrame] = None
@@ -86,43 +102,59 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
     * directory's modification time moved since it was taken — another
     * engine's write.
     */
-  def documents(): DataFrame = synchronized {
+  def documents(): DataFrame = current().docs
+
+  private def current(): Snapshot = synchronized {
     // the mtime is read BEFORE the listing: a write landing between the
     // two leaves a snapshot keyed on the older time, which the next
     // call re-resolves, never a stale snapshot keyed on the newer one
     val mtime = storeMtime()
     snapshot match {
-      case Some(s) if s.mtime == mtime => s.docs
+      case Some(s) if s.mtime == mtime => s
       case _ =>
         invalidateIndex()
-        val docs = Ingest.readStore(spark, storePath).getOrElse(emptyStore)
-        snapshot = Some(Snapshot(docs, mtime))
-        docs
+        val s = Snapshot(
+          Ingest.readStore(spark, storePath).getOrElse(emptyStore), mtime)
+        snapshot = Some(s)
+        s
     }
   }
 
-  def countDocuments(): Long = documents().count()
+  /** The snapshot's driver-held block, when its size estimate is within
+    * the session's broadcast bound now (-1 keeps every read on the
+    * plans). The first call per snapshot collects it: one job. */
+  private def held(s: Snapshot = current()): Option[ServeBlock] =
+    synchronized {
+      if (s.size.exists(ServeBlock.fits(s.docs, _))) s.block else None
+    }
 
-  /** The cached (doc_id, embedding) index, built on demand. */
+  /** GET /count-documents: the held block's row count (no job), else
+    * a count of the snapshot. */
+  def countDocuments(): Long = held().fold(documents().count())(_.count)
+
+  /** The (doc_id, embedding) index, built on demand: a local frame of
+    * the held block, else the cached projection of the snapshot. */
   def index(): DataFrame = synchronized {
     // first: a moved store mtime drops the stale index here
-    val docs = documents()
+    val s = current()
     cachedIndex.getOrElse {
-      val idx = Ingest.buildIndex(docs, "doc_id", "embedding")
+      val idx = held(s).fold(
+        Ingest.buildIndex(s.docs, "doc_id", "embedding"))(_.index)
       cachedIndex = Some(idx)
       idx
     }
   }
 
-  /** The cached BM25 corpus statistics, built on demand and released
+  /** The BM25 corpus statistics, built on demand — local frames of the
+    * held block, else cached frames over the snapshot — and released
     * together with the vector index whenever the snapshot is dropped.
     */
   def lexicalIndex(): graft.operators.TextSearch.Bm25Index = synchronized {
     // first, as in index()
-    val docs = documents()
+    val s = current()
     cachedLexical.getOrElse {
-      val idx = graft.operators.TextSearch.buildBm25Index(
-        docs.select("doc_id", "content"), "doc_id", "content")
+      val idx = held(s).fold(graft.operators.TextSearch.buildBm25Index(
+        s.docs.select("doc_id", "content"), "doc_id", "content"))(_.bm25Index)
       cachedLexical = Some(idx)
       idx
     }
@@ -239,16 +271,31 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
     }
   }
 
+  /** The query embedded through the [[Embedder]] seam, as `qe` of a
+    * one-row local frame. */
+  private def queryFrame(query: String): DataFrame = {
+    import spark.implicits._
+    embedder.embed(Seq(query).toDF("text"), "text", dim)
+      .select(col("embedding").as("qe"))
+  }
+
+  /** `read` ranked on the driver, when the block is held and takes the
+    * query frame `q` (see [[ServeBlock.queries]]); None sends the
+    * read to the plans. */
+  private def served[T](q: DataFrame)(
+      read: (ServeBlock, ServeBlock.Queries) => Option[T]): Option[T] =
+    held().flatMap(b => ServeBlock.queries(q).flatMap(read(b, _)))
+
   /** POST /search — embed the query, cosine top-k over the index,
     * enrich with content: (doc_id, score, content).
     */
   def search(query: String, k: Int = 1): DataFrame = {
-    import spark.implicits._
-    val qv = embedder.embed(Seq(query).toDF("text"), "text", dim)
-      .select(col("embedding").as("qe"))
-    val hits = Search.topK(index(), qv, "doc_id", "embedding", "qe", k)
-    Search.enrich(hits, documents().select("doc_id", "content"), "doc_id")
-      .select("doc_id", "score", "content")
+    val q = queryFrame(query)
+    served(q)(_.search(_, k)).getOrElse {
+      val hits = Search.topK(index(), q, "doc_id", "embedding", "qe", k)
+      Search.enrich(hits, documents().select("doc_id", "content"), "doc_id")
+        .select("doc_id", "score", "content")
+    }
   }
 
   /** Batched search: many queries in ONE plan — per-query top-k via the
@@ -262,14 +309,16 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
         queryTexts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
           .toDF("query_id", "text"), "text", dim)
       .select(col("query_id"), col("embedding").as("qe"))
-    val scored = Search.scoreAll(index(), qs, "doc_id", "embedding",
-      "query_id", "qe")
-    val hits = Search.topKPerQuery(scored, "query_id", "doc_id", k)
-    // hits are queries×k rows — broadcast THEM into the corpus join
-    documents().select("doc_id", "content")
-      .join(broadcast(hits), Seq("doc_id"))
-      .select("query_id", "rank", "doc_id", "score", "content")
-      .orderBy("query_id", "rank")
+    served(qs)((b, q) => Some(b.searchAll(q, k))).getOrElse {
+      val scored = Search.scoreAll(index(), qs, "doc_id", "embedding",
+        "query_id", "qe")
+      val hits = Search.topKPerQuery(scored, "query_id", "doc_id", k)
+      // hits are queries×k rows — broadcast THEM into the corpus join
+      documents().select("doc_id", "content")
+        .join(broadcast(hits), Seq("doc_id"))
+        .select("query_id", "rank", "doc_id", "score", "content")
+        .orderBy("query_id", "rank")
+    }
   }
 
   /** Diversified search: cosine retrieval narrows the corpus to a
@@ -281,17 +330,18 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
     */
   def searchDiverse(query: String, k: Int, lambda: Double = 0.5,
                     shortlistSize: Int = 50): DataFrame = {
-    import spark.implicits._
-    val qv = embedder.embed(Seq(query).toDF("text"), "text", dim)
-      .select(col("embedding").as("qe"))
-    val shortlist = Search.topKWithVec(index(), qv, "doc_id", "embedding",
-      "qe", shortlistSize)
-    val ranked = Search.mmrRerank(shortlist, "doc_id", "embedding",
-      "score", k, lambda)
-    // k rows: the limit plans the sort as one top-k, not a range exchange
-    Search.enrich(ranked, documents().select("doc_id", "content"), "doc_id")
-      .select("rank", "doc_id", "mmr", "content")
-      .orderBy("rank").limit(k)
+    val q = queryFrame(query)
+    served(q)(_.searchDiverse(_, k, lambda, shortlistSize)).getOrElse {
+      val shortlist = Search.topKWithVec(index(), q, "doc_id",
+        "embedding", "qe", shortlistSize)
+      val ranked = Search.mmrRerank(shortlist, "doc_id", "embedding",
+        "score", k, lambda)
+      // k rows: the limit plans the sort as one top-k, not a range exchange
+      Search.enrich(ranked, documents().select("doc_id", "content"),
+          "doc_id")
+        .select("rank", "doc_id", "mmr", "content")
+        .orderBy("rank").limit(k)
+    }
   }
 
   /** Hybrid retrieval: cosine ranking fused with BM25 lexical ranking
@@ -299,19 +349,21 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
     * input and term bag). Returns (doc_id, rrf_score, content).
     */
   def hybridSearch(query: String, k: Int): DataFrame = {
-    import spark.implicits._
     import graft.operators.TextSearch
-    val qv = embedder.embed(Seq(query).toDF("text"), "text", dim)
-      .select(lit(0L).as("query_id"), col("embedding").as("qe"))
-    val vector = Search
-      .scoreAll(index(), qv, "doc_id", "embedding", "query_id", "qe")
-      .select("doc_id", "score")
-    val lexical = TextSearch.bm25ScoresIndexed(lexicalIndex(),
-      query.toLowerCase.trim.split("\\s+").toSeq)
-    val fused = TextSearch.rrfFuse(lexical, vector, "doc_id", k)
-    Search.enrich(fused, documents().select("doc_id", "content"), "doc_id")
-      .select("doc_id", "rrf_score", "content")
-      .orderBy(col("rrf_score").desc, col("doc_id")).limit(k)
+    val q = queryFrame(query)
+    val terms = query.toLowerCase.trim.split("\\s+").toSeq
+    served(q)(_.hybrid(_, terms, k)).getOrElse {
+      val vector = Search
+        .scoreAll(index(), q.select(lit(0L).as("query_id"), col("qe")),
+          "doc_id", "embedding", "query_id", "qe")
+        .select("doc_id", "score")
+      val lexical = TextSearch.bm25ScoresIndexed(lexicalIndex(), terms)
+      val fused = TextSearch.rrfFuse(lexical, vector, "doc_id", k)
+      Search.enrich(fused, documents().select("doc_id", "content"),
+          "doc_id")
+        .select("doc_id", "rrf_score", "content")
+        .orderBy(col("rrf_score").desc, col("doc_id")).limit(k)
+    }
   }
 
   /** The reference's context string (server.js:251-254): [[search]]'s

@@ -13,7 +13,7 @@ import scala.jdk.CollectionConverters._
   * fit the session's `spark.sql.autoBroadcastJoinThreshold` — judged
   * by the optimizer's size estimate, the test the planner uses to pick
   * a broadcast join, which runs no job — both are collected once into
-  * primitive arrays (vectors sorted by id with CSR offsets, adjacency
+  * primitive arrays (the vectors as a [[VectorBlock]], adjacency
   * as CSR over the vectors' row indices), broadcast, and every query
   * row walks inside one `mapPartitions` job. A walk is then three
   * jobs (two collects and the walk) instead of one `localCheckpoint`
@@ -30,13 +30,10 @@ import scala.jdk.CollectionConverters._
   */
 private[operators] object BroadcastWalk {
 
-  /** Vectors sorted by id (row index order = id order), one CSR slice
-    * of `f` (float vectors) or `d` (double vectors) per row; `pass` is
-    * the filter flag per row (null when unfiltered); `adj` holds each
-    * row's out-neighbours that have a vector, as row indices. */
-  final class Index(val ids: Array[Long], val isNull: Array[Boolean],
-                    val vecOff: Array[Int], val f: Array[Float],
-                    val d: Array[Double], val pass: Array[Boolean],
+  /** The vectors' [[VectorBlock]]; `pass` is the filter flag per row
+    * (null when unfiltered); `adj` holds each row's out-neighbours that
+    * have a vector, as row indices. */
+  final class Index(val v: VectorBlock, val pass: Array[Boolean],
                     val adjOff: Array[Int], val adj: Array[Int])
       extends Serializable
 
@@ -77,7 +74,7 @@ private[operators] object BroadcastWalk {
     if (!shapes || !fits(graph, vectors, idCol, vecCol)) return None
     collectIndex(graph, vectors, idCol, vecCol, pred).map { ix =>
       val entries = entryIds.distinct
-        .map(id => java.util.Arrays.binarySearch(ix.ids, id))
+        .map(id => java.util.Arrays.binarySearch(ix.v.ids, id))
         .filter(_ >= 0).sorted.toArray
       val spark = vectors.sparkSession
       val bc = spark.sparkContext.broadcast(ix)
@@ -108,12 +105,9 @@ private[operators] object BroadcastWalk {
     * at most the session's broadcast bound (-1 turns the path off). */
   private def fits(graph: DataFrame, vectors: DataFrame, idCol: String,
                    vecCol: String): Boolean = {
-    val bound = vectors.queryExecution.sparkSession.sessionState.conf
-      .autoBroadcastJoinThreshold
-    def size(df: DataFrame): BigInt =
-      df.queryExecution.optimizedPlan.stats.sizeInBytes
-    bound >= 0 && size(graph.select(col("src"), col("dst"))) +
-      size(vectors.select(col(idCol), col(vecCol))) <= bound
+    val bound = VectorBlock.bound(vectors)
+    bound >= 0 && VectorBlock.sizeOf(graph.select(col("src"), col("dst"))) +
+      VectorBlock.sizeOf(vectors.select(col(idCol), col(vecCol))) <= bound
   }
 
   /** Collects the vectors (one job) and, unless an id repeats, the
@@ -147,29 +141,14 @@ private[operators] object BroadcastWalk {
       Iterator.single(new Chunk(ids.result(), nul.result(), lens.result(),
         f.result(), d.result(), pass.result()))
     }.collect()
-    val ids0 = Array.concat(chunks.map(_.ids).toSeq: _*)
-    val lens0 = Array.concat(chunks.map(_.lens).toSeq: _*)
-    val n = ids0.length
-    val order = Array.range(0, n).sortBy(ids0(_))
-    if ((1 until n).exists(j => ids0(order(j)) == ids0(order(j - 1))))
-      return None
-    val start0 = lens0.scanLeft(0)(_ + _)
-    val vecOff = new Array[Int](n + 1)
-    for (j <- 0 until n) vecOff(j + 1) = vecOff(j) + lens0(order(j))
-    def gather[T: scala.reflect.ClassTag](vals: Array[T]): Array[T] = {
-      val out = new Array[T](vecOff(n))
-      for (j <- 0 until n) System.arraycopy(vals, start0(order(j)), out,
-        vecOff(j), lens0(order(j)))
-      out
-    }
-    val ids = order.map(ids0)
-    val isNull = order.map(Array.concat(chunks.map(_.isNull).toSeq: _*))
-    val pass = pred.map(_ => order.map(
-      Array.concat(chunks.map(_.pass).toSeq: _*))).orNull
-    val f = if (isFloat) gather(Array.concat(chunks.map(_.f).toSeq: _*))
-      else null
-    val d = if (isFloat) null
-      else gather(Array.concat(chunks.map(_.d).toSeq: _*))
+    def concat[T: scala.reflect.ClassTag](part: Chunk => Array[T]) =
+      Array.concat(chunks.map(part).toSeq: _*)
+    val (v, order) = VectorBlock.byId(concat(_.ids), concat(_.isNull),
+      concat(_.lens), if (isFloat) concat(_.f) else null,
+      if (isFloat) null else concat(_.d)).getOrElse(return None)
+    val n = v.size
+    val ids = v.ids
+    val pass = pred.map(_ => order.map(concat(_.pass))).orNull
 
     val gsel = graph.select(col("src"), col("dst"))
     val srcInt = gsel.schema(0).dataType == IntegerType
@@ -194,7 +173,7 @@ private[operators] object BroadcastWalk {
     val fill = adjOff.clone()
     val adj = new Array[Int](pairs.length)
     pairs.foreach { case (s, t) => adj(fill(s)) = t; fill(s) += 1 }
-    Some(new Index(ids, isNull, vecOff, f, d, pass, adjOff, adj))
+    Some(new Index(v, pass, adjOff, adj))
   }
 
   /** CosineSimilarity's arithmetic for the `n` elements of `f` (`d`
@@ -235,17 +214,15 @@ private[operators] object BroadcastWalk {
       else if (r.isNullAt(2)) 0
       else math.max(0L, math.min(Int.MaxValue.toLong,
         r.get(2).asInstanceOf[Number].longValue)).toInt
-    val seen = new java.util.BitSet(ix.ids.length)
+    val seen = new java.util.BitSet(ix.v.size)
     val vis = scala.collection.mutable.ArrayBuffer.empty[Int]
     val score = scala.collection.mutable.ArrayBuffer.empty[Double]
     val nul = scala.collection.mutable.ArrayBuffer.empty[Boolean]
     def visit(i: Int): Unit = if (!seen.get(i)) {
       seen.set(i); vis += i
-      val isNull = qv == null || ix.isNull(i)
-      val s = ix.vecOff(i)
+      val isNull = qv == null || ix.v.isNull(i)
       nul += isNull
-      score += (if (isNull) 0.0
-                else cosine(ix.f, ix.d, s, ix.vecOff(i + 1) - s, qv))
+      score += (if (isNull) 0.0 else ix.v.cosine(i, qv))
     }
     // score desc, nulls last, then id asc (row order is id order)
     def before(a: Int, b: Int): Boolean =
@@ -268,7 +245,7 @@ private[operators] object BroadcastWalk {
     val touched = vis.length.toLong
     candidates.sortWith(before).take(k).iterator.zipWithIndex.map {
       case (p, rank) =>
-        val id = ix.ids(vis(p))
+        val id = ix.v.ids(vis(p))
         Row.fromSeq(Seq(r.get(0), rank + 1L,
           if (idIsInt) id.toInt else id,
           if (nul(p)) null else score(p), touched) ++

@@ -114,52 +114,58 @@ object Search {
       .select(col(idCol).cast("long"), col(scoreCol).cast("double"),
         col(vecCol).cast("array<float>"))
       .as[(Long, Double, Array[Float])]
-    rows.coalesce(1).mapPartitions { it =>
-      val cand = it.toArray.sortBy { case (id, s, _) => (-s, id) }
-      val used = new Array[Boolean](cand.length)
-      // selected vectors, widened once
-      val selVecs = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
-      val out = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, Long, Double)]
-      var step = 0
-      var exhausted = false
-      while (step < math.min(k, cand.length) && !exhausted) {
-        var bestIx = -1; var bestVal = Double.NegativeInfinity
-        var i = 0
-        while (i < cand.length) {
-          if (!used(i)) {
-            val (_, rel, v) = cand(i)
-            // empty selection → pure relevance; otherwise the TRUE max
-            // (cosines can be negative — clamping at 0 would diverge
-            // from SQL max())
-            var maxSim =
-              if (selVecs.isEmpty) 0.0 else Double.NegativeInfinity
-            var j = 0
-            while (j < selVecs.length) {
-              val s =
-                BroadcastWalk.cosine(v, null, 0, v.length, selVecs(j))
-              if (s > maxSim) maxSim = s
-              j += 1
-            }
-            val value = lambda * rel - (1.0 - lambda) * maxSim
-            // strict >: on ties the earlier (higher-rel / lower-id)
-            // candidate wins — the same tie-break the sort pinned
-            if (value > bestVal) { bestVal = value; bestIx = i }
+    rows.coalesce(1)
+      .mapPartitions(it => mmrPicks(it.toArray, k, lambda).iterator)
+      .toDF("rank", idCol, "mmr")
+  }
+
+  /** [[mmrRerank]]'s greedy loop over one shortlist of (id, relevance,
+    * vector) candidates, in any order: the (rank, id, mmr) picks. */
+  private[operators] def mmrPicks(
+      shortlist: Array[(Long, Double, Array[Float])], k: Int, lambda: Double)
+      : Seq[(Long, Long, Double)] = {
+    val cand = shortlist.sortBy { case (id, s, _) => (-s, id) }
+    val used = new Array[Boolean](cand.length)
+    // selected vectors, widened once
+    val selVecs = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
+    var step = 0
+    var exhausted = false
+    while (step < math.min(k, cand.length) && !exhausted) {
+      var bestIx = -1; var bestVal = Double.NegativeInfinity
+      var i = 0
+      while (i < cand.length) {
+        if (!used(i)) {
+          val (_, rel, v) = cand(i)
+          // empty selection → pure relevance; otherwise the TRUE max
+          // (cosines can be negative — clamping at 0 would diverge
+          // from SQL max())
+          var maxSim =
+            if (selVecs.isEmpty) 0.0 else Double.NegativeInfinity
+          var j = 0
+          while (j < selVecs.length) {
+            val s = BroadcastWalk.cosine(v, null, 0, v.length, selVecs(j))
+            if (s > maxSim) maxSim = s
+            j += 1
           }
-          i += 1
+          val value = lambda * rel - (1.0 - lambda) * maxSim
+          // strict >: on ties the earlier (higher-rel / lower-id)
+          // candidate wins — the same tie-break the sort pinned
+          if (value > bestVal) { bestVal = value; bestIx = i }
         }
-        // every remaining marginal compared false (NaN scores/vectors):
-        // stop with the clean prefix rather than indexing at -1
-        if (bestIx < 0) exhausted = true
-        else {
-          used(bestIx) = true
-          selVecs += cand(bestIx)._3.map(_.toDouble)
-          out += ((step + 1L, cand(bestIx)._1, bestVal))
-          step += 1
-        }
+        i += 1
       }
-      out.iterator
-    }.toDF("rank", idCol, "mmr")
+      // every remaining marginal compared false (NaN scores/vectors):
+      // stop with the clean prefix rather than indexing at -1
+      if (bestIx < 0) exhausted = true
+      else {
+        used(bestIx) = true
+        selVecs += cand(bestIx)._3.map(_.toDouble)
+        out += ((step + 1L, cand(bestIx)._1, bestVal))
+        step += 1
+      }
+    }
+    out.toSeq
   }
 
   /** Enrich hits with document content — broadcast the (tiny) hit set

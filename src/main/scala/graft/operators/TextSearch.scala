@@ -50,8 +50,7 @@ object TextSearch {
       : Bm25Index = {
     // lens kept separately from postings: zero-token docs still count
     // toward N and avgdl but have no postings rows
-    val lens = docs.select(col(idCol),
-      size(words(lower(col(textCol)))).cast("double").as("dl")).persist()
+    val lens = docLengths(docs, idCol, textCol).persist()
     val postings = termFrequencies(docs, idCol, textCol).persist()
     // materialize NOW: scoring evaluates corpus stats and the df
     // aggregate inside broadcast futures that run concurrently with the
@@ -60,12 +59,22 @@ object TextSearch {
     // Dedup.ngramJaccardPairs). The (N, avgdl) collect is the lens
     // materialization; its one row is kept as a local frame, so no
     // scoring call re-aggregates the corpus.
-    val stats = lens.agg(count("*").as("n"), avg("dl").as("avgdl"))
+    val stats = corpusStats(lens)
     val corpus = docs.sparkSession.createDataFrame(
       java.util.Arrays.asList(stats.collect(): _*), stats.schema)
     postings.count()
     Bm25Index(lens, postings, corpus, idCol)
   }
+
+  /** [[buildBm25Index]]'s per-doc lengths, (idCol, dl). */
+  private[operators] def docLengths(docs: DataFrame, idCol: String,
+                                    textCol: String): DataFrame =
+    docs.select(col(idCol),
+      size(words(lower(col(textCol)))).cast("double").as("dl"))
+
+  /** [[buildBm25Index]]'s one-row (n, avgdl) summary of `lens`. */
+  private[operators] def corpusStats(lens: DataFrame): DataFrame =
+    lens.agg(count("*").as("n"), avg("dl").as("avgdl"))
 
   /** BM25 scores for one tokenized query against a prebuilt index.
     *
@@ -96,6 +105,15 @@ object TextSearch {
       .agg(sum("term_score").as("score"))
   }
 
+  /** One term's score in [[bm25ScoresIndexed]], in driver arithmetic:
+    * the same operations in the same order, with `StrictMath.log`,
+    * which is Spark's `ln`. */
+  private[operators] def bm25Term(n: Long, df: Long, tf: Long, dl: Double,
+                                  avgdl: Double, k1: Double = 1.2,
+                                  b: Double = 0.75): Double =
+    StrictMath.log(1.0 + ((n - df) + 0.5) / (df + 0.5)) *
+      (tf * (k1 + 1)) / (tf + k1 * ((1 - b) + b * dl / avgdl))
+
   /** One-shot convenience over [[buildBm25Index]] +
     * [[bm25ScoresIndexed]]. OWNERSHIP: persists the transient index's
     * two frames; the caller evaluates the result and then clears them
@@ -113,6 +131,10 @@ object TextSearch {
       .orderBy(col("score").desc, col(idCol))
       .limit(k)
 
+  /** [[rrfFuse]]'s default rank offset and per-ranking depth. */
+  private[operators] val RrfC = 60
+  private[operators] val RrfDepth = 1000
+
   /** Reciprocal-rank fusion of two rankings of the same id space:
     * rrf(d) = Σ_r 1/(c + rank_r(d)), missing-from-a-ranking contributes
     * nothing. The standard score-scale-free hybridizer.
@@ -125,7 +147,7 @@ object TextSearch {
     * smaller depths are the standard top-m approximation.
     */
   def rrfFuse(a: DataFrame, b: DataFrame, idCol: String, k: Int,
-              c: Int = 60, depth: Int = 1000): DataFrame = {
+              c: Int = RrfC, depth: Int = RrfDepth): DataFrame = {
     def ranked(df: DataFrame): DataFrame =
       df.orderBy(col("score").desc, col(idCol)).limit(depth)
         .withColumn("rrf",

@@ -21,26 +21,30 @@ class EngineSpec extends SparkSpec {
     d.toString
   }
 
-  private def freshEngine: Engine = {
-    val store = Files.createTempDirectory("graft_engine").toString + "/store"
-    new Engine(spark, store, dim = 64, chunkSize = 40, overlap = 10)
+  private def freshStore(): String =
+    Files.createTempDirectory("graft_engine").toString + "/store"
+
+  private def freshEngine: Engine =
+    new Engine(spark, freshStore(), dim = 64, chunkSize = 40, overlap = 10)
+
+  /** One-hot on text length: equal-length texts score identically. */
+  private object LengthEmbedder extends Embedder {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    override def embed(df: DataFrame, textCol: String,
+                       dim: Int): DataFrame =
+      df.withColumn("embedding",
+        transform(sequence(lit(0), lit(dim - 1)),
+          i => when(i === length(col(textCol)) % dim, lit(1.0f))
+            .otherwise(lit(0.0f))))
   }
 
   test("the Embedder seam: a custom embedder serves ingest AND query " +
       "paths; the store carries its vectors") {
-    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions._
-    // mock of a network embedder: deterministic per text like a pinned
-    // model version, but nothing like HashEmbed — one-hot on text
-    // length so retrieval outcomes prove WHICH embedder ran
-    object LengthEmbedder extends Embedder {
-      override def embed(df: DataFrame, textCol: String,
-                         dim: Int): DataFrame =
-        df.withColumn("embedding",
-          transform(sequence(lit(0), lit(dim - 1)),
-            i => when(i === length(col(textCol)) % dim, lit(1.0f))
-              .otherwise(lit(0.0f))))
-    }
+    // LengthEmbedder mocks a network embedder: deterministic per text
+    // like a pinned model version, but nothing like HashEmbed, so
+    // retrieval outcomes prove WHICH embedder ran
     val store = Files.createTempDirectory("graft_mock").toString + "/store"
     val e = new Engine(spark, store, dim = 64, chunkSize = 40,
       overlap = 10, embedder = LengthEmbedder)
@@ -264,30 +268,185 @@ class EngineSpec extends SparkSpec {
     } finally pool.shutdown()
   }
 
-  test("reads on a warmed engine reuse the store snapshot: search and " +
-      "searchDiverse run in at most 3 Spark jobs, hybridSearch in 8") {
+  /** Spark jobs of each read on a warmed engine over a small store. */
+  private def warmReadJobs(): Map[String, Int] = {
     val e = freshEngine
     e.loadDocuments(corpusDir)
     e.addDocument("john likes tea")
     e.addDocument("charts are visual")
     val q = "a calming cup of tea"
-    def search() = e.search(q, k = 2).collect()
-    def diverse() = e.searchDiverse(q, k = 2).collect()
-    def hybrid() = e.hybridSearch(q, k = 2).collect()
+    val reads = Seq[(String, () => Unit)](
+      "search" -> (() => e.search(q, k = 2).collect()),
+      "answer" -> (() => e.answer(q)),
+      "context" -> (() => e.context(q, k = 2)),
+      "searchDiverse" -> (() => e.searchDiverse(q, k = 2).collect()),
+      "hybridSearch" -> (() => e.hybridSearch(q, k = 2).collect()),
+      "countDocuments" -> (() => e.countDocuments()))
     // warm: snapshot resolved, both indexes built
-    search(); diverse(); hybrid()
-    val jobs = Seq("search" -> jobsOf(search()),
-      "searchDiverse" -> jobsOf(diverse()),
-      "hybridSearch" -> jobsOf(hybrid())).toMap
+    reads.foreach(_._2())
+    reads.map { case (name, read) => name -> jobsOf(read()) }.toMap
+  }
+
+  test("reads on a warmed engine reuse the store snapshot: search and " +
+      "searchDiverse run in at most 3 Spark jobs, hybridSearch in 8") {
+    // the plans, which serve every read under a broadcast bound of -1
+    val jobs = withBroadcastDisabled(warmReadJobs())
     assert(jobs("search") <= 3, jobs)
     assert(jobs("searchDiverse") <= 3, jobs)
     assert(jobs("hybridSearch") <= 8, jobs)
   }
 
+  test("reads on a warmed engine over a store that fits run no Spark job") {
+    val jobs = warmReadJobs()
+    assert(jobs.values.forall(_ == 0), jobs)
+  }
+
+  test("the query side runs no job: HashEmbedder over a one-row local " +
+      "frame, collected") {
+    import spark.implicits._
+    assert(jobsOf(HashEmbedder.embed(Seq("a calming cup of tea")
+      .toDF("text"), "text", 64).collect(): Unit) == 0)
+  }
+
+  /** A row with each double replaced by its bits: equal means equal to
+    * the last bit. */
+  private def bits(r: org.apache.spark.sql.Row): Seq[Any] = r.toSeq.map {
+    case d: Double => ("double", java.lang.Double.doubleToRawLongBits(d))
+    case x         => x
+  }
+
+  /** Every read of `e`, with each frame's schema: search's and the
+    * indexes' rows as a multiset, every other read's in order. */
+  private def reads(e: Engine, queries: Seq[String], k: Int,
+                    shortlistSize: Int): Seq[(String, Any)] = {
+    import org.apache.spark.sql.DataFrame
+    def ordered(df: DataFrame) = (df.schema, df.collect().toSeq.map(bits))
+    def multiset(df: DataFrame) = (df.schema,
+      df.collect().toSeq.map(bits).groupBy(identity).map {
+        case (r, rs) => r -> rs.size })
+    val lexical = e.lexicalIndex()
+    Seq("countDocuments" -> e.countDocuments(),
+        "index" -> multiset(e.index()),
+        "lexicalIndex.lens" -> multiset(lexical.lens),
+        "lexicalIndex.postings" -> multiset(lexical.postings),
+        "lexicalIndex.corpus" -> ordered(lexical.corpus)) ++
+      queries.flatMap(q => Seq(
+        s"search($q)" -> multiset(e.search(q, k)),
+        s"answer($q)" -> e.answer(q),
+        s"context($q)" -> e.context(q, k),
+        s"searchDiverse($q)" -> ordered(e.searchDiverse(q, k, 0.3,
+          shortlistSize)),
+        s"hybridSearch($q)" -> ordered(e.hybridSearch(q, k)))) :+
+      ("searchAll" -> ordered(e.searchAll(queries, k)))
+  }
+
+  /** Runs every read on `block` at the session's default broadcast
+    * bound and on `plans` at -1, and checks both give the same rows
+    * and schemas. `block` must serve them all from its driver-held
+    * block: at most the one collect that builds it. */
+  private def onBothPaths(block: Engine, plans: Engine,
+                          queries: Seq[String], k: Int,
+                          shortlistSize: Int = 50): Unit = {
+    var got: Seq[(String, Any)] = Nil
+    block.documents() // resolving the store infers its schema: a job
+    val jobs = jobsOf { got = reads(block, queries, k, shortlistSize) }
+    val want = withBroadcastDisabled(reads(plans, queries, k, shortlistSize))
+    assert(got.map(_._1) == want.map(_._1))
+    got.zip(want).foreach { case ((name, a), (_, b)) =>
+      assert(a == b, s"$name differs between the block and the plans")
+    }
+    assert(jobs <= 1, s"$jobs jobs: the block did not serve")
+  }
+
+  private def enginePair(store: String, embedder: Embedder = HashEmbedder)
+      : (Engine, Engine) = {
+    def engine() = new Engine(spark, store, dim = 64, chunkSize = 40,
+      overlap = 10, embedder = embedder)
+    (engine(), engine())
+  }
+
+  private val probes = Seq(
+    "a calming cup of tea", "tea drinkers prefer a calming cup",
+    "interactive charts visualization dashboards data", "john likes",
+    "tea", "absent words only", "")
+
+  test("both paths give the same rows: multi-term hybrid queries, " +
+      "shortlistSize below k, and k beyond the store") {
+    val store = freshStore()
+    val (w, _) = enginePair(store)
+    w.loadDocuments(corpusDir)
+    Seq("john likes tea", "john likes beer", "charts are visual",
+      "tea tea tea and more tea for the tea drinkers",
+      "steeping loose leaves in hot water makes a calming cup")
+      .foreach(w.addDocument(_))
+    val (block, plans) = enginePair(store)
+    onBothPaths(block, plans, probes, k = 3)
+    onBothPaths(block, plans, probes, k = 4, shortlistSize = 2)
+    onBothPaths(block, plans, probes.take(2), k = 20)
+  }
+
+  test("both paths give the same rows when every score ties") {
+    val store = freshStore()
+    val w = new Engine(spark, store, dim = 64, chunkSize = 40,
+      overlap = 10, embedder = LengthEmbedder)
+    Seq("bbbbb", "aaaaa", "ccccc", "ddddd", "longer text", "other text!")
+      .foreach(w.addDocument(_))
+    val (block, plans) = enginePair(store, LengthEmbedder)
+    onBothPaths(block, plans, Seq("12345", "1234567890a", "x"), k = 3)
+    onBothPaths(block, plans, Seq("12345"), k = 3, shortlistSize = 2)
+  }
+
+  test("both paths give the same rows on an empty store") {
+    val dir = Files.createTempDirectory("graft_empty_both").toString
+    val (block, plans) = enginePair(dir + "/store")
+    onBothPaths(block, plans, probes.take(2), k = 3)
+    // an existing directory without data files
+    val (block2, plans2) = enginePair(dir)
+    onBothPaths(block2, plans2, probes.take(2), k = 3)
+  }
+
+  test("both paths give the same rows for a store another engine " +
+      "writes, before and after its next append") {
+    val store = freshStore()
+    val (writer, _) = enginePair(store)
+    writer.loadDocuments(corpusDir)
+    writer.addDocument("john likes tea")
+    val (block, plans) = enginePair(store)
+    onBothPaths(block, plans, probes, k = 3)
+    writer.addDocument("tea and charts for john")
+    assert(writer.deleteDocuments(Seq(1L)) == 1)
+    onBothPaths(block, plans, probes, k = 3)
+  }
+
+  test("countDocuments counts rows with a null doc_id on both paths") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val store = freshStore()
+    val schema = StructType(Seq(StructField("doc_id", LongType),
+      StructField("source", StringType), StructField("chunk_ix", IntegerType),
+      StructField("content", StringType),
+      StructField("embedding", ArrayType(FloatType))))
+    spark.createDataFrame(java.util.Arrays.asList(
+        Row(1L, "a", 0, "one", Seq(1f, 0f)),
+        Row(null, "b", 0, "two", Seq(0f, 1f)),
+        Row(null, "c", 0, "three", null)), schema)
+      .write.parquet(store)
+    val (block, plans) = enginePair(store)
+    assert(block.countDocuments() == 3)
+    assert(withBroadcastDisabled(plans.countDocuments()) == 3)
+  }
+
   test("two engines on one store: each sees the other's appends and " +
       "deletes on its next read, and writes never read a stale snapshot") {
+    twoEngines()
+    // with both of A's indexes persisted over the store path, B's append
+    // re-caches them in place (Spark's recacheByPath); the rules hold
+    withBroadcastDisabled(twoEngines())
+  }
+
+  private def twoEngines(): Unit = {
     import spark.implicits._
-    val store = Files.createTempDirectory("graft_two").toString + "/store"
+    val store = freshStore()
     def engine() = new Engine(spark, store, dim = 64, chunkSize = 40,
       overlap = 10)
     val a = engine()
@@ -301,11 +460,10 @@ class EngineSpec extends SparkSpec {
     def ids(e: Engine) = e.documents().select("doc_id").as[Long].collect()
 
     assert(a.addDocument(alpha, "a") == 1)
-    // A's snapshot is warm before B writes. A holds no cached index yet:
-    // an append through the same session refreshes the file listing
-    // under every cached plan over the path, which would hide a stale
-    // read here
+    // A's snapshot and both of its indexes are built before B writes
     assert(a.countDocuments() == 1)
+    a.index()
+    a.lexicalIndex()
 
     assert(b.addDocument(beta, "b") == 1)
     // ingest resolves the store under the lock: B's row is a duplicate
@@ -378,17 +536,6 @@ class EngineSpec extends SparkSpec {
 
   test("context on an engine equals contextAgg over its search rows, " +
       "ties included, and runs no more jobs than search") {
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.functions._
-    // one-hot on text length: equal-length texts score identically
-    object LengthEmbedder extends Embedder {
-      override def embed(df: DataFrame, textCol: String,
-                         dim: Int): DataFrame =
-        df.withColumn("embedding",
-          transform(sequence(lit(0), lit(dim - 1)),
-            i => when(i === length(col(textCol)) % dim, lit(1.0f))
-              .otherwise(lit(0.0f))))
-    }
     val store = Files.createTempDirectory("graft_ctx").toString + "/store"
     val e = new Engine(spark, store, dim = 64, chunkSize = 40,
       overlap = 10, embedder = LengthEmbedder)
