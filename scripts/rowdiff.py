@@ -2,7 +2,11 @@
 """Row identity of two output roots: every parquet dataset under either
 root must exist under both, with equal schemas and equal rows as a
 multiset (DuckDB `EXCEPT ALL` empty in both directions), and the two
-`verify_failed.json` files must hold the same entries.
+`verify_failed.json` files must hold the same entries. When both roots
+hold an `oracle_sql.json`, every oracle must match key by key once each
+`read_parquet` path is cut down to the artifact's `<name>_<hash8>`
+directory and its glob, so each side's artifacts root drops out but a
+glob resolved against another corpus still shows as another `hash8`.
 
 Usage: python3 scripts/rowdiff.py A B
 
@@ -15,6 +19,7 @@ exits 1 on any mismatch. Needs only the standard library and the
 """
 import json
 import os
+import re
 import sys
 
 import duckdb
@@ -63,6 +68,26 @@ def failed(root):
         return sorted(json.dumps(e, sort_keys=True) for e in json.load(f))
 
 
+PARQUET_PATH = re.compile(r"(read_parquet\(\s*')([^']*)'")
+
+
+def artifact_glob(m):
+    """A read_parquet path from the artifact directory on: the last
+    component without a wildcard and everything after it."""
+    parts = m.group(2).split("/")
+    keep = max(i for i, p in enumerate(parts) if "*" not in p)
+    return m.group(1) + "/".join(parts[keep:]) + "'"
+
+
+def oracles(root):
+    p = os.path.join(root, "oracle_sql.json")
+    if not os.path.exists(p):
+        return None
+    with open(p) as f:
+        return {k: PARQUET_PATH.sub(artifact_glob, v)
+                for k, v in json.load(f).items()}
+
+
 def main():
     if len(sys.argv) != 3:
         sys.exit(__doc__)
@@ -82,10 +107,19 @@ def main():
         if reason:
             print(f"{rel}: {reason}")
             bad += 1
+    oa, ob = oracles(a_root), oracles(b_root)
+    n_oracles = 0
+    if oa is not None and ob is not None:
+        for k in sorted(oa.keys() | ob.keys()):
+            n_oracles += 1
+            if oa.get(k) != ob.get(k):
+                print(f"oracle_sql.json: {k} differs")
+                bad += 1
     fa, fb = failed(a_root), failed(b_root)
     if fa != fb:
         print(f"verify_failed.json: {fa} != {fb}")
-    print(f"{len(da | db) - bad} identical / {bad} mismatched datasets; "
+    print(f"{len(da | db) + n_oracles - bad} identical / {bad} mismatched "
+          f"datasets and oracles; "
           f"verify_failed.json {'equal' if fa == fb else 'differs'}")
     sys.exit(1 if bad or fa != fb else 0)
 

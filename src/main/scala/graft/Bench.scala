@@ -11,10 +11,6 @@ object Bench {
     // clearCache between runs drops per-call persisted intermediates
     // (LSH signatures, postings) so data is still computed fresh.
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-    // Local-iteration filter: comma-separated query-name prefixes.
-    // Unset (the driver's case) => full inventory.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").toSeq).getOrElse(Seq(""))
     // Named artifact-ownership phase (full-inventory runs only): build
     // every shared per-corpus artifact ONCE, before any timing, so no
     // query's measurement includes another query's snapshot-time index/
@@ -65,7 +61,7 @@ object Bench {
     // after sweep N touched the same query, so repeat measurements are
     // far outside both the cold window and any single load spike.
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.exists(n.startsWith) }
+      .filter { case (n, _) => SparkEntry.selected(n) }
     val sweeps: Seq[Map[String, Double]] = (1 to runs).map { _ =>
       names.map { case (name, fn) =>
         val t0 = System.nanoTime()

@@ -66,6 +66,15 @@ object SparkEntry {
       .getOrCreate()
   }
 
+  /** Whether query `name` is in the `SPARK_GRAFT_ONLY` subset, the
+    * dev-loop filter of Bench and Verify: comma-separated name
+    * prefixes. Unset (a full run) selects every query, and so does a
+    * set-but-empty value ("".startsWith matches every name).
+    */
+  def selected(name: String): Boolean =
+    sys.env.get("SPARK_GRAFT_ONLY")
+      .forall(_.split(",").exists(name.startsWith))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     VectorQueries.queries ++ RelationalQueries.queries ++
       TextQueries.queries ++ IngestQueries.queries ++ StreamingQueries.queries

@@ -8,14 +8,8 @@ object Verify {
     val spark = SparkEntry.session()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // dev-loop subset filter, IDENTICAL semantics to Bench's (incl. the
-    // set-but-empty case, where "".startsWith matches everything):
-    // comma-separated name prefixes; unset (the driver's invocation)
-    // runs the full inventory.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").toSeq).getOrElse(Seq(""))
     val failed = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.exists(n.startsWith) }
+      .filter { case (n, _) => SparkEntry.selected(n) }
       .flatMap { case (name, fn) =>
       val failure =
         try {

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Ingest
+import graft.queries.OracleSql.{hash60, parquet}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1179,18 +1180,41 @@ object IngestQueries {
     "CASE WHEN trim(lower(text)) = '' THEN CAST([] AS VARCHAR[]) " +
       "ELSE string_split_regex(trim(lower(text)), '\\s+') END"
 
-  private def hash60(e: String): String =
-    s"CAST(concat('0x', substring(md5($e), 1, 15)) AS BIGINT)"
-
   private val batchSql =
     """SELECT doc_id + 10000 AS doc_id, text FROM documents
       |UNION ALL
       |SELECT doc_id + 20000 AS doc_id, text || ' EXTRA' AS text
       |FROM documents WHERE doc_id % 10 = 0""".stripMargin
 
-  // def, not val: the i26 oracle embeds Artifacts.oracleGlob, which
-  // resolves against the corpus the artifact LAST RAN for — a val
-  // would freeze the default at object-init, before the query runs
+  /** The new ids of the batch's novel texts: max(doc_id) + the text's
+    * rank, each with its smallest batch id (i03, and i10 — the
+    * distributed assignment must produce the identical mapping). */
+  private val assignIdsOracle: String =
+    s"""WITH batch AS ($batchSql),
+       |novel AS (
+       |  SELECT text, min(doc_id) AS batch_id FROM batch
+       |  WHERE text NOT IN (SELECT text FROM documents)
+       |  GROUP BY text),
+       |mx AS (SELECT max(doc_id) AS m FROM documents)
+       |SELECT CAST(row_number() OVER (ORDER BY text) + m AS BIGINT) AS doc_id,
+       |       batch_id
+       |FROM novel, mx
+       |ORDER BY doc_id""".stripMargin
+
+  /** The SQLite exports' per-group vector sums (i28, i29): each
+    * vector's component sum at 1e-5 as `vq`, then the group, count and
+    * sum columns; the caller continues the SELECT list. */
+  private val sqliteVecSums: String =
+    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev
+      |           FROM embeddings),
+      |per AS (SELECT vec_id,
+      |          CAST(round(list_sum(ev) * 100000, 0) AS BIGINT) AS vq
+      |        FROM e)
+      |SELECT vec_id % 8 AS grp, count(*) AS n_vecs,
+      |       CAST(sum(vq) AS BIGINT) AS sum_q,""".stripMargin
+
+  /** DuckDB oracles. A `def`: i26's artifact glob resolves at dump
+    * time ([[OracleSql]]). */
   def oracles: Map[String, String] = Map(
     // the written-file stats recomputed from the ORIGINAL rows: hex →
     // per-byte list → moments, plus v27's independent IEEE754 float32
@@ -1198,7 +1222,7 @@ object IngestQueries {
     "i26_sqlite_export" ->
       s"""WITH h AS (SELECT doc_id, content, hex(vector_blob) AS hx,
          |             CAST(octet_length(vector_blob) AS BIGINT) AS blen
-         |           FROM read_parquet('${Artifacts.oracleGlob("i26_refrows")}')),
+         |           FROM ${parquet("i26_refrows")}),
          |b AS (SELECT doc_id, content, blen,
          |        list_transform(range(0, CAST(blen AS INT)), i ->
          |          CAST(concat('0x', substr(hx, CAST(2*i+1 AS INT), 2))
@@ -1246,29 +1270,17 @@ object IngestQueries {
         |FROM embeddings WHERE vec_id IN (1, 5, 9)
         |ORDER BY id""".stripMargin,
     "i29_sqlite_dsv2_write" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev
-        |           FROM embeddings),
-        |per AS (SELECT vec_id,
-        |          CAST(round(list_sum(ev) * 100000, 0) AS BIGINT) AS vq
-        |        FROM e)
-        |SELECT vec_id % 8 AS grp, count(*) AS n_vecs,
-        |       CAST(sum(vq) AS BIGINT) AS sum_q,
-        |       CAST(count(*) AS BIGINT) AS n_content_ok,
-        |       min(vec_id) + 1 AS min_id, max(vec_id) + 1 AS max_id,
-        |       CAST(1 AS BIGINT) AS dup_write_rejected,
-        |       CAST(1 AS BIGINT) AS append_rejected
-        |FROM per GROUP BY 1 ORDER BY grp""".stripMargin,
+      s"""$sqliteVecSums
+         |       CAST(count(*) AS BIGINT) AS n_content_ok,
+         |       min(vec_id) + 1 AS min_id, max(vec_id) + 1 AS max_id,
+         |       CAST(1 AS BIGINT) AS dup_write_rejected,
+         |       CAST(1 AS BIGINT) AS append_rejected
+         |FROM per GROUP BY 1 ORDER BY grp""".stripMargin,
     "i28_sqlite_dsv2" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev
-        |           FROM embeddings),
-        |per AS (SELECT vec_id,
-        |          CAST(round(list_sum(ev) * 100000, 0) AS BIGINT) AS vq
-        |        FROM e)
-        |SELECT vec_id % 8 AS grp, count(*) AS n_vecs,
-        |       CAST(sum(vq) AS BIGINT) AS sum_q,
-        |       min(vec_id) + 1 AS min_id, max(vec_id) + 1 AS max_id,
-        |       'id,content' AS pruned_read_schema
-        |FROM per GROUP BY 1 ORDER BY grp""".stripMargin,
+      s"""$sqliteVecSums
+         |       min(vec_id) + 1 AS min_id, max(vec_id) + 1 AS max_id,
+         |       'id,content' AS pruned_read_schema
+         |FROM per GROUP BY 1 ORDER BY grp""".stripMargin,
     "i27_sqlite_scale_export" ->
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev
         |           FROM embeddings),
@@ -1634,26 +1646,6 @@ object IngestQueries {
          |  GROUP BY text)""".stripMargin,
     // the i03 oracle verbatim — THE parity statement: the distributed
     // assignment must produce the identical full id mapping
-    "i10_assign_ids_dist" ->
-      s"""WITH batch AS ($batchSql),
-         |novel AS (
-         |  SELECT text, min(doc_id) AS batch_id FROM batch
-         |  WHERE text NOT IN (SELECT text FROM documents)
-         |  GROUP BY text),
-         |mx AS (SELECT max(doc_id) AS m FROM documents)
-         |SELECT CAST(row_number() OVER (ORDER BY text) + m AS BIGINT) AS doc_id,
-         |       batch_id
-         |FROM novel, mx
-         |ORDER BY doc_id""".stripMargin,
-    "i03_assign_ids" ->
-      s"""WITH batch AS ($batchSql),
-         |novel AS (
-         |  SELECT text, min(doc_id) AS batch_id FROM batch
-         |  WHERE text NOT IN (SELECT text FROM documents)
-         |  GROUP BY text),
-         |mx AS (SELECT max(doc_id) AS m FROM documents)
-         |SELECT CAST(row_number() OVER (ORDER BY text) + m AS BIGINT) AS doc_id,
-         |       batch_id
-         |FROM novel, mx
-         |ORDER BY doc_id""".stripMargin)
+    "i10_assign_ids_dist" -> assignIdsOracle,
+    "i03_assign_ids" -> assignIdsOracle)
 }

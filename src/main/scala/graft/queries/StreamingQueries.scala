@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.OracleSql.{parquet, rankedPerQuery, withSrpSketch}
 import graft.streaming.Streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1248,8 +1249,8 @@ object StreamingQueries {
     "s15_stream_bloom" -> (streamBloomDecontaminate(_, _)),
     "s18_stream_dsir" -> (streamDsirScore(_, _)))
 
-  // `def`: s11's entry (t33's oracle verbatim) interpolates artifact
-  // globs, which must resolve at dump time, after the queries ran.
+  /** DuckDB oracles. A `def`: artifact globs resolve at dump time
+    * ([[OracleSql]]). */
   def oracles: Map[String, String] = Map(
     // t67's replay verbatim: stream ≡ batch tokenization, hash-gated
     "s24_stream_bpe_tokenize" -> TextQueries.oracles("t67_bpe_apply"),
@@ -1262,9 +1263,9 @@ object StreamingQueries {
     "s27_stream_graph_lsm" -> VectorQueries.driftTableOracle(
       s""",
          |sg AS (SELECT src, dst
-         |       FROM read_parquet('${Artifacts.oracleGlob("s27_edges")}')),
+         |       FROM ${parquet("s27_edges")}),
          |fg AS (SELECT src, dst
-         |       FROM read_parquet('${Artifacts.oracleGlob("v73_frozen_graph")}')),
+         |       FROM ${parquet("v73_frozen_graph")}),
          |ed AS (SELECT count(*) AS ediff FROM (
          |  (SELECT src, dst FROM sg EXCEPT SELECT src, dst FROM fg)
          |  UNION ALL
@@ -1417,17 +1418,7 @@ object StreamingQueries {
     // parity statement: continuous bucket-join search ≡ the same
     // approximate pipeline run as batch SQL.
     "s07_stream_search" ->
-      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |           FROM embeddings),
-         |s AS (SELECT vec_id, e,
-         |  CAST(list_sum(list_transform(range(0, $SrpBits), j ->
-         |    CASE WHEN list_sum(list_transform(range(0, len(e)), i ->
-         |        e[CAST(i + 1 AS INT)] *
-         |        (CASE WHEN CAST(concat('0x', substring(
-         |               md5(concat('srp:', j, ':', i)), 1, 15)) AS BIGINT)
-         |              % 2 = 1 THEN 1.0 ELSE -1.0 END))) > 0
-         |    THEN CAST(2 ** j AS BIGINT) ELSE 0 END)) AS BIGINT) AS sketch
-         |  FROM v),
+      s"""${withSrpSketch(SrpBits)},
          |q AS (SELECT vec_id AS query_id, e AS qe,
          |             sketch % ${1 << SrpBucketBits} AS qb
          |      FROM s WHERE vec_id < 8),
@@ -1442,25 +1433,15 @@ object StreamingQueries {
          |  SELECT p.query_id, i.vec_id,
          |         list_cosine_similarity(i.e, p.qe) AS score
          |  FROM idx i JOIN probes p USING (bucket)),
-         |ranked AS (
-         |  SELECT query_id, vec_id, score,
-         |         row_number() OVER (PARTITION BY query_id
-         |                            ORDER BY score DESC, vec_id) AS rank
-         |  FROM cand)
+         |${rankedPerQuery("cand")}
          |SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id,
          |       round(score, 6) AS score
          |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
     // identical to the batch r12 oracle — THE parity statement
-    "s01_stream_hourly" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS hour,
-        |       event_type, count(*) AS n, round(sum(value), 4) AS sum_value
-        |FROM events GROUP BY hour, event_type ORDER BY hour, event_type""".stripMargin,
+    "s01_stream_hourly" -> RelationalQueries.oracles("r12_hourly_events"),
     "s02_stream_dedup" ->
       "SELECT count(DISTINCT user_id) AS n_users FROM events",
-    "s04_stream_enrich" ->
-      """SELECT c_mktsegment, count(*) AS n, round(sum(value), 4) AS sum_value
-        |FROM events JOIN customer ON user_id = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
+    "s04_stream_enrich" -> RelationalQueries.oracles("r26_salted_join"),
     // SINGLE-BATCH ASSUMPTION: upsertToStore's keeper is "min event_id
     // within the FIRST batch that saw the key"; this oracle pins the
     // GLOBAL min, which coincides only because the events fixture is one
@@ -1484,15 +1465,5 @@ object StreamingQueries {
         |  AND p_ts <= click_ts + INTERVAL 30 MINUTE
         |GROUP BY user_id ORDER BY user_id""".stripMargin,
     // identical to the batch r11 oracle — custom state ≡ lag/cumsum
-    "s03_stream_sessions" ->
-      """WITH g AS (
-        |  SELECT user_id,
-        |         date_diff('second',
-        |           lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id),
-        |           ts) AS gap
-        |  FROM events)
-        |SELECT user_id,
-        |       CAST(sum(CASE WHEN gap IS NULL OR gap > 1800 THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
-        |       count(*) AS n_events
-        |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin)
+    "s03_stream_sessions" -> RelationalQueries.oracles("r11_sessionize"))
 }

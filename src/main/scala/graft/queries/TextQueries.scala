@@ -3,6 +3,8 @@ package graft.queries
 import graft.Tables
 import graft.operators.{Ann, Chunker, Dedup, Ingest, Multimodal, TextAnalysis}
 import graft.functions.TextFunctions.words
+import graft.queries.OracleSql.{corpus, hash60, parquet, signBits, srpPlaneDots,
+  srpPlanes, withCorpus}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2556,33 +2558,23 @@ object TextQueries {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  /** Shared DuckDB CTE chain replaying
-    * [[graft.operators.ImagePixels]] from first principles — pixel
-    * formula → integer block means → aHash — over the t49/v32
-    * synthetic PNG corpus (ids < 60; formulas in the SynthImages doc).
-    * Ends with `ah(doc_id, ahash)`; t49 extends it with dims + dHash,
-    * v32 (VectorQueries) with the all-pairs hamming join. The range
-    * bounds 24/22 are the max dims (16 + 8, 16 + 6). Bit 63 is the
-    * long's sign bit: a BIGINT can't hold +2^63, so the replay adds
-    * the explicit two's-complement term instead of shifting.
-    */
-  private[queries] val imageAhashCtes: String =
+  /** The synthetic image fixtures: `ids` (doc_id < 60), `d` (doc_id,
+    * src — every fifth image is its predecessor's near-copy) and
+    * `dims` (doc_id, src, w, h). */
+  private val imageDimsCtes: String =
     """ids AS (SELECT doc_id FROM documents WHERE doc_id < 60),
       |d AS (SELECT doc_id,
       |             CASE WHEN doc_id % 5 = 4 THEN doc_id - 1
       |                  ELSE doc_id END AS src
       |      FROM ids),
       |dims AS (SELECT doc_id, src, 16 + src % 9 AS w, 16 + src % 7 AS h
-      |         FROM d),
-      |px AS (
-      |  SELECT doc_id, w, h, rx.range AS x, ry.range AS y,
-      |         least(255, (src * 31 + rx.range * 7 + ry.range * 13) % 256
-      |           + CASE WHEN doc_id % 5 = 4
-      |                   AND (rx.range + ry.range) % 9 = 0
-      |                  THEN 24 ELSE 0 END) AS v
-      |  FROM dims, range(0, 24) rx, range(0, 22) ry
-      |  WHERE rx.range < w AND ry.range < h),
-      |m8 AS (
+      |         FROM d)""".stripMargin
+
+  /** aHash (8×8) over a `px(doc_id, w, h, x, y, v)` CTE: block means
+    * `m8`, their mean `gm`, and `ah(doc_id, ahash)`. Bit 63 is the
+    * long's sign bit, added as the explicit two's-complement term. */
+  private val imageAhashFromPx: String =
+    """m8 AS (
       |  SELECT doc_id, (y * 8) // h * 8 + (x * 8) // w AS i,
       |         sum(v) // count(*) AS m
       |  FROM px GROUP BY 1, 2),
@@ -2595,60 +2587,9 @@ object TextQueries {
       |           ELSE 0 END) AS BIGINT) AS ahash
       |  FROM m8 JOIN gm USING (doc_id) GROUP BY 1)""".stripMargin
 
-  /** Mixed-codec pixel CTE chain for the JPEG-bearing image oracles
-    * (t65/v46): ids matching `jpegPred` (SQL over doc_id) read their
-    * TRUE decoded gray grids from the persisted artifact at `glob`
-    * (lossy decode has no closed form); all other ids replay the
-    * closed-form PNG pixel formula exactly as [[imageAhashCtes]].
-    * Yields `dims(doc_id, src, w, h)` and `px(doc_id, w, h, x, y, v)`
-    * — dims come from the formula for BOTH halves (lossy encode
-    * preserves dimensions; ImagePixelsSpec pins it).
-    */
-  private[queries] def imageMixedPxCtes(jpegPred: String,
-                                        glob: String): String =
-    s"""ids AS (SELECT doc_id FROM documents WHERE doc_id < 60),
-       |d AS (SELECT doc_id,
-       |             CASE WHEN doc_id % 5 = 4 THEN doc_id - 1
-       |                  ELSE doc_id END AS src
-       |      FROM ids),
-       |dims AS (SELECT doc_id, src, 16 + src % 9 AS w, 16 + src % 7 AS h
-       |         FROM d),
-       |pxf AS (
-       |  SELECT doc_id, x, y, v FROM (
-       |    SELECT doc_id, rx.range AS x, ry.range AS y,
-       |           least(255, (src * 31 + rx.range * 7 + ry.range * 13)
-       |               % 256
-       |             + CASE WHEN doc_id % 5 = 4
-       |                     AND (rx.range + ry.range) % 9 = 0
-       |                    THEN 24 ELSE 0 END) AS v,
-       |           w, h
-       |    FROM dims, range(0, 24) rx, range(0, 22) ry
-       |    WHERE rx.range < w AND ry.range < h)
-       |  WHERE NOT ($jpegPred)),
-       |pxj AS (SELECT doc_id, x, y, v FROM read_parquet('$glob')),
-       |px AS (SELECT u.doc_id, dims.w, dims.h, u.x, u.y, u.v
-       |       FROM (SELECT * FROM pxf UNION ALL SELECT * FROM pxj) u
-       |       JOIN dims USING (doc_id))""".stripMargin
-
-  /** aHash (8×8) + dHash (9×8) replay over an existing
-    * `px(doc_id, w, h, x, y, v)` CTE — the hash math of
-    * [[imageAhashCtes]]/t49 factored so mixed-codec pixel sources
-    * reuse it verbatim. Yields `ah(doc_id, ahash)` and
-    * `dh(doc_id, dhash)`. */
-  private[queries] val imageHashFromPxCtes: String =
-    """m8 AS (
-      |  SELECT doc_id, (y * 8) // h * 8 + (x * 8) // w AS i,
-      |         sum(v) // count(*) AS m
-      |  FROM px GROUP BY 1, 2),
-      |gm AS (SELECT doc_id, sum(m) // 64 AS gm FROM m8 GROUP BY 1),
-      |ah AS (
-      |  SELECT m8.doc_id,
-      |         CAST(sum(CASE WHEN m > gm THEN
-      |             CASE WHEN i = 63 THEN -9223372036854775807 - 1
-      |                  ELSE 1::BIGINT << CAST(i AS INT) END
-      |           ELSE 0 END) AS BIGINT) AS ahash
-      |  FROM m8 JOIN gm USING (doc_id) GROUP BY 1),
-      |m9 AS (
+  /** dHash (9×8) over `px`: block means `m9` and `dh(doc_id, dhash)`. */
+  private val imageDhashFromPx: String =
+    """m9 AS (
       |  SELECT doc_id, (x * 9) // w AS bx, (y * 8) // h AS by,
       |         sum(v) // count(*) AS m
       |  FROM px GROUP BY 1, 2, 3),
@@ -2664,6 +2605,64 @@ object TextQueries {
       |    AND b.bx = a.bx + 1
       |  WHERE a.bx < 8 GROUP BY 1)""".stripMargin
 
+  /** Shared DuckDB CTE chain replaying
+    * [[graft.operators.ImagePixels]] from first principles — pixel
+    * formula → integer block means → aHash — over the t49/v32
+    * synthetic PNG corpus (ids < 60; formulas in the SynthImages doc).
+    * Ends with `ah(doc_id, ahash)`; t49 extends it with dims + dHash,
+    * v32 (VectorQueries) with the all-pairs hamming join. The range
+    * bounds 24/22 are the max dims (16 + 8, 16 + 6).
+    */
+  private[queries] val imageAhashCtes: String =
+    s"""$imageDimsCtes,
+       |px AS (
+       |  SELECT doc_id, w, h, rx.range AS x, ry.range AS y,
+       |         least(255, (src * 31 + rx.range * 7 + ry.range * 13) % 256
+       |           + CASE WHEN doc_id % 5 = 4
+       |                   AND (rx.range + ry.range) % 9 = 0
+       |                  THEN 24 ELSE 0 END) AS v
+       |  FROM dims, range(0, 24) rx, range(0, 22) ry
+       |  WHERE rx.range < w AND ry.range < h),
+       |$imageAhashFromPx""".stripMargin
+
+  /** Mixed-codec pixel CTE chain for the JPEG-bearing image oracles
+    * (t65/v46): ids matching `jpegPred` (SQL over doc_id) read their
+    * TRUE decoded gray grids from the persisted artifact `jpegPixels`
+    * (lossy decode has no closed form); all other ids replay the
+    * closed-form PNG pixel formula exactly as [[imageAhashCtes]].
+    * Yields `dims(doc_id, src, w, h)` and `px(doc_id, w, h, x, y, v)`
+    * — dims come from the formula for BOTH halves (lossy encode
+    * preserves dimensions; ImagePixelsSpec pins it).
+    */
+  private[queries] def imageMixedPxCtes(jpegPred: String,
+                                        jpegPixels: String): String =
+    s"""$imageDimsCtes,
+       |pxf AS (
+       |  SELECT doc_id, x, y, v FROM (
+       |    SELECT doc_id, rx.range AS x, ry.range AS y,
+       |           least(255, (src * 31 + rx.range * 7 + ry.range * 13)
+       |               % 256
+       |             + CASE WHEN doc_id % 5 = 4
+       |                     AND (rx.range + ry.range) % 9 = 0
+       |                    THEN 24 ELSE 0 END) AS v,
+       |           w, h
+       |    FROM dims, range(0, 24) rx, range(0, 22) ry
+       |    WHERE rx.range < w AND ry.range < h)
+       |  WHERE NOT ($jpegPred)),
+       |pxj AS (SELECT doc_id, x, y, v FROM ${parquet(jpegPixels)}),
+       |px AS (SELECT u.doc_id, dims.w, dims.h, u.x, u.y, u.v
+       |       FROM (SELECT * FROM pxf UNION ALL SELECT * FROM pxj) u
+       |       JOIN dims USING (doc_id))""".stripMargin
+
+  /** aHash (8×8) + dHash (9×8) replay over an existing
+    * `px(doc_id, w, h, x, y, v)` CTE — the hash math of
+    * [[imageAhashCtes]]/t49 factored so mixed-codec pixel sources
+    * reuse it verbatim. Yields `ah(doc_id, ahash)` and
+    * `dh(doc_id, dhash)`. */
+  private[queries] val imageHashFromPxCtes: String =
+    s"""$imageAhashFromPx,
+       |$imageDhashFromPx""".stripMargin
+
   /** Shared SQL fragments (DuckDB). */
   private val wsExpr =
     "CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) " +
@@ -2672,9 +2671,6 @@ object TextQueries {
   private val wsLowerExpr =
     "CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) " +
       "ELSE string_split_regex(trim(lower(text)), '\\s+') END"
-
-  private def hash60(e: String): String =
-    s"CAST(concat('0x', substring(md5($e), 1, 15)) AS BIGINT)"
 
   /** Hash buckets of the DSIR featurizer (t52/s18). */
   val DsirBuckets = 1024
@@ -2792,6 +2788,112 @@ object TextQueries {
        |  JOIN sizes sb ON sb.doc_id = id_b)""".stripMargin
       .replace("\n", " ")
 
+  /** [[jaccardPairCtes]] and `edges` (src, dst): the pairs at
+    * Jaccard >= 0.1, both directions. */
+  private lazy val jaccardEdgeCtes =
+    s"""$jaccardPairCtes,
+       |edges AS (
+       |  SELECT id_a AS src, id_b AS dst FROM jpairs WHERE jac >= 0.1
+       |  UNION ALL
+       |  SELECT id_b, id_a FROM jpairs WHERE jac >= 0.1)""".stripMargin
+
+  /** [[jaccardEdgeCtes]] and the recursive component walk `walk` (node,
+    * label): every id each node reaches; a component's min label is
+    * its keeper (t16's closure). Needs `WITH RECURSIVE`. */
+  private lazy val jaccardWalkCtes =
+    s"""$jaccardEdgeCtes,
+       |walk(node, label) AS (
+       |  SELECT src, src FROM (SELECT DISTINCT src FROM edges)
+       |  UNION
+       |  SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.node)""".stripMargin
+
+  /** The 16-hash MinHash signatures: `shb` (doc_id, hb), each doc's
+    * hashed 3-gram shingles, and `sig` (doc_id, signature), the
+    * per-hash minima (t30, t59). */
+  private def minhashSigCtes: String =
+    s"""shb AS (
+       |  SELECT doc_id, list_transform($shinglesExpr, s -> ${hash60("s")}) AS hb
+       |  FROM (SELECT doc_id, $wsExpr AS ws FROM documents)),
+       |sig AS (
+       |  SELECT doc_id,
+       |         list_transform(range(0, 16), j -> list_min(list_transform(hb,
+       |           b -> ${affineSqlJ("b")}))) AS signature
+       |  FROM shb)""".stripMargin
+
+  /** SimHash bit votes, opening a WITH list: `t` (doc_id, ws) and
+    * `votes` (doc_id, bit, v), the ±1 sum of bit `bit` of each word's
+    * hash60 for every bit below `bits`. */
+  private def simhashCtes(bits: Int): String =
+    s"""WITH t AS (SELECT doc_id, $wsExpr AS ws FROM documents),
+       |votes AS (
+       |  SELECT doc_id, bit,
+       |         sum(CASE WHEN (${hash60("w")} >> CAST(bit AS INT)) % 2 = 1
+       |                  THEN 1 ELSE -1 END) AS v
+       |  FROM (SELECT doc_id, unnest(ws) AS w FROM t),
+       |       (SELECT unnest(range(0, $bits)) AS bit)
+       |  GROUP BY doc_id, bit)""".stripMargin
+
+  /** `sh` (doc_id, simhash): the fingerprint of [[simhashCtes]]'
+    * positive votes (t14, t48). */
+  private val simhashFingerprint: String =
+    """sh AS (
+      |  SELECT doc_id,
+      |         CAST(sum(CASE WHEN v > 0 THEN CAST(2 ** bit AS BIGINT)
+      |                       ELSE 0 END) AS BIGINT) AS simhash
+      |  FROM votes GROUP BY doc_id)""".stripMargin
+
+  /** The curation funnel's first stages (t37, t46), opening a WITH
+    * list: embeddings `e`, `base` (doc_id, text, lang, emb), the
+    * English `langf`, the >= 30-word `qual` and its 8 seeded cells
+    * `cent` (centroid_id, c). */
+  private def curationFunnelCtes: String =
+    s"""WITH e AS (SELECT vec_id AS doc_id, CAST(embedding AS DOUBLE[])
+       |             AS emb FROM embeddings),
+       |base AS (SELECT dd.doc_id, dd.text, dd.lang, e.emb
+       |         FROM documents dd JOIN e USING (doc_id)),
+       |langf AS (SELECT * FROM base WHERE lang = 'en'),
+       |qual AS (SELECT * FROM langf WHERE len($wsExpr) >= 30),
+       |cent AS (SELECT doc_id AS centroid_id, emb AS c FROM qual
+       |         ORDER BY doc_id LIMIT 8)""".stripMargin
+
+  /** SemDeDup within a cell: `dropped` (doc_id), each `assigned` doc
+    * with a smaller-id cell mate at cosine >= 0.35 (t37, t46). */
+  private val semDedupDropped: String =
+    """dropped AS (
+      |  SELECT DISTINCT a.doc_id
+      |  FROM assigned a JOIN assigned b
+      |    ON a.centroid_id = b.centroid_id AND b.doc_id < a.doc_id
+      |   AND list_cosine_similarity(a.emb, b.emb) >= 0.35)""".stripMargin
+
+  /** t34's (and t47's) oracle: the full-corpus span relation. */
+  private def substringSpansOracle: String =
+    s"""WITH ${substringSpanCtes()}
+       |SELECT id_a, id_b, pos_a, pos_b, run_tokens FROM spans
+       |ORDER BY id_a, id_b, pos_a""".stripMargin
+
+  /** Span removal over `spans` and the docs' words `d` (doc_id, ws)
+    * (t35, t46): the removed token intervals `iv` (doc_id, s, `end`),
+    * the affected docs `aff`, their tokens `toks`, those outside every
+    * interval `keptt`, and each doc rebuilt from them, `reb` (doc_id,
+    * n_tokens_clean, clean). */
+  private def spanRemovalCtes(end: String): String =
+    s"""iv AS (SELECT id_b AS doc_id, pos_b AS s,
+       |              pos_b + run_tokens AS $end FROM spans),
+       |aff AS (SELECT DISTINCT doc_id FROM iv),
+       |toks AS (
+       |  SELECT d.doc_id, CAST(i - 1 AS BIGINT) AS pos, ws[i] AS tok
+       |  FROM d JOIN aff USING (doc_id),
+       |       unnest(range(1, len(ws) + 1)) AS t(i)),
+       |keptt AS (
+       |  SELECT tk.doc_id, tk.pos, tk.tok FROM toks tk
+       |  WHERE NOT EXISTS (SELECT 1 FROM iv
+       |    WHERE iv.doc_id = tk.doc_id
+       |      AND tk.pos >= iv.s AND tk.pos < iv.$end)),
+       |reb AS (
+       |  SELECT doc_id, count(*) AS n_tokens_clean,
+       |         string_agg(tok, ' ' ORDER BY pos) AS clean
+       |  FROM keptt GROUP BY doc_id)""".stripMargin
+
   /** The t08 quality-feature pipeline as CTEs ending in
     * `feat(doc_id, n_words, mean_word_len, stopword_ratio, alnum_ratio)`
     * — shared by t08 (per-doc features) and t20 (the gate filter).
@@ -2842,18 +2944,13 @@ object TextQueries {
        |FROM corpus c JOIN hits h USING (doc_id)
        |ORDER BY doc_id""".stripMargin
 
-  // `def`, not `val`: t32's entries interpolate Artifacts.oracleGlob,
-  // which resolves to the path the query REGISTERED at write time —
-  // Verify dumps oracleSql after the queries run (VectorQueries'
-  // convention).
   /** t33's oracle — also s11's verbatim (continuous scoring ≡ batch).
-    * A `def`: the artifact globs resolve at dump time.
+    * A `def`: the artifact globs resolve at dump time ([[OracleSql]]).
     */
   private[queries] def classifierOracle: String =
     s"""WITH m AS (SELECT cls, CAST(centroid AS DOUBLE[]) AS c
-         |           FROM read_parquet('${Artifacts.oracleGlob("t33_classmeans")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM read_parquet('${Artifacts.oracleGlob("t33_corpus")}')),
+         |           FROM ${parquet("t33_classmeans")}),
+         |${corpus(parquet("t33_corpus"))},
          |ev AS (SELECT vec_id, vec_id % 10 AS actual, e FROM v
          |       WHERE vec_id % 7 = 0),
          |pred AS (
@@ -2900,10 +2997,6 @@ object TextQueries {
        |  FROM r GROUP BY id_a, id_b, al, grp
        |  HAVING count(*) + 7 >= 16)""".stripMargin
 
-  /** t36's oracle — also s12's verbatim (continuous profiling ≡
-    * batch). A `def` per the artifact-glob convention (none used here,
-    * but the sibling oracles resolve at dump time).
-    */
   /** The t41 drift replay, shared verbatim with s14 — continuous
     * drift monitoring must converge to the batch answer. */
   private[queries] lazy val driftOracle: String =
@@ -3006,6 +3099,8 @@ object TextQueries {
          |       cnt_cms - cnt_exact AS overest
          |FROM est ORDER BY cnt_exact DESC, tok""".stripMargin
 
+  /** t36's oracle — also s12's verbatim (continuous profiling ≡
+    * batch). */
   private[queries] def hllOracle: String =
       s"""WITH d AS (SELECT doc_id, lang, $wsExpr AS ws FROM documents),
          |sh AS (
@@ -3062,6 +3157,42 @@ object TextQueries {
          |         AS rel_err
          |FROM u ORDER BY lang""".stripMargin
 
+  /** The prefilter's candidate meters and argmax over `cand` (vec_id,
+    * eval_id), corpus `v` and eval set `ev`: `nc` (vec_id, n_cand),
+    * the scored pairs `ps` and `pb`, each doc's candidates ranked by
+    * (s desc, eval_id asc) (t72, t73). */
+  private val prefilterArgmaxCtes: String =
+    """nc AS (SELECT v.vec_id, count(cand.eval_id) AS n_cand
+      |       FROM v LEFT JOIN cand USING (vec_id) GROUP BY v.vec_id),
+      |ps AS (SELECT cand.vec_id, cand.eval_id,
+      |         list_cosine_similarity(v.e, ev.q) AS s
+      |       FROM cand JOIN v USING (vec_id) JOIN ev USING (eval_id)),
+      |pb AS (SELECT vec_id, eval_id, s,
+      |         row_number() OVER (PARTITION BY vec_id
+      |           ORDER BY s DESC, eval_id) AS rn FROM ps)""".stripMargin
+
+  /** The per-stratum flag counts over the exact flags `ef` and the
+    * prefilter's `pf` (t72, t73); the caller appends its recall
+    * column(s) and [[prefilterStrataFrom]]. */
+  private val prefilterStrataCols: String =
+    """SELECT v.vec_id % 5 AS stratum, count(*) AS n_docs,
+      |       CAST(sum(CASE WHEN ef.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+      |            AS BIGINT) AS n_exact,
+      |       CAST(sum(CASE WHEN pf.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+      |            AS BIGINT) AS n_prefilter,
+      |       CAST(sum(CASE WHEN pf.vec_id IS NOT NULL
+      |                      AND ef.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+      |            AS BIGINT) AS n_both,
+      |       round(avg(nc.n_cand), 4) AS cand_per_doc,""".stripMargin
+
+  /** The FROM of [[prefilterStrataCols]]: every doc with its candidate
+    * count and both flags, grouped by stratum. */
+  private val prefilterStrataFrom: String =
+    """FROM v JOIN nc USING (vec_id)
+      |LEFT JOIN pf ON v.vec_id = pf.vec_id
+      |LEFT JOIN ef ON v.vec_id = ef.vec_id
+      |GROUP BY 1 ORDER BY 1""".stripMargin
+
   /** t72/s26's shared prefilter-replay CTEs (through `pb`, the
     * per-doc ranked candidate scores): 3-plane SRP sketch of BOTH
     * sides, full hamming-1 probe fan-out, candidate join, per-doc
@@ -3073,107 +3204,49 @@ object TextQueries {
     * the t73 oracle and s28's streaming twin (continuous ≡ batch on
     * the same per-doc flags). */
   private[queries] def semMarginOracleCtes: String =
-    s"""v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-       |      FROM read_parquet('${Artifacts.oracleGlob("t73_corpus")}')),
+    s"""${corpus(parquet("t73_corpus"))},
        |ev AS (SELECT eval_id, CAST(evec AS DOUBLE[]) AS q
-       |       FROM read_parquet('${Artifacts.oracleGlob("t73_eval")}')),
+       |       FROM ${parquet("t73_eval")}),
        |hh AS (SELECT CAST(ceil(56 * (acos(0.95) / pi()) +
        |                4 * sqrt(56 * (acos(0.95) / pi()) *
        |                         (1 - acos(0.95) / pi())))
        |              AS BIGINT) AS h),
-       |jj AS (SELECT unnest(range(0, 56)) AS j),
-       |sgm AS (SELECT jj.j,
-       |         list(CASE WHEN CAST(concat('0x', substring(
-       |                md5(concat('srp:', jj.j, ':', ix.i)), 1, 15))
-       |                AS BIGINT)
-       |               % 2 = 1 THEN 1.0 ELSE -1.0 END
-       |              ORDER BY ix.i) AS sv
-       |        FROM jj, (SELECT unnest(range(0,
-       |          (SELECT max(len(e)) FROM v))) AS i) ix
-       |        GROUP BY jj.j),
+       |${srpPlanes(56, "v")},
        |de AS (SELECT ev.eval_id, sgm.j,
        |         list_dot_product(ev.q, sgm.sv) AS dot
        |       FROM ev, sgm),
-       |be AS (SELECT eval_id,
-       |         CAST(sum(CASE WHEN dot > 0 THEN CAST(2 ** j AS BIGINT)
-       |                       ELSE 0 END) AS BIGINT) AS sk
-       |       FROM de GROUP BY eval_id),
+       |${signBits("be", "sk", "de", key = "eval_id")},
        |dv AS (SELECT v.vec_id, sgm.j,
        |         list_dot_product(v.e, sgm.sv) AS dot
        |       FROM v, sgm),
-       |bv AS (SELECT vec_id,
-       |         CAST(sum(CASE WHEN dot > 0 THEN CAST(2 ** j AS BIGINT)
-       |                       ELSE 0 END) AS BIGINT) AS sk
-       |       FROM dv GROUP BY vec_id),
+       |${signBits("bv", "sk", "dv")},
        |cand AS (SELECT bv.vec_id, be.eval_id
        |         FROM bv, be, hh
        |         WHERE bit_count(xor(bv.sk, be.sk)) <= hh.h),
-       |nc AS (SELECT v.vec_id, count(cand.eval_id) AS n_cand
-       |       FROM v LEFT JOIN cand USING (vec_id) GROUP BY v.vec_id),
-       |ps AS (SELECT cand.vec_id, cand.eval_id,
-       |         list_cosine_similarity(v.e, ev.q) AS s
-       |       FROM cand JOIN v USING (vec_id) JOIN ev USING (eval_id)),
-       |pb AS (SELECT vec_id, eval_id, s,
-       |         row_number() OVER (PARTITION BY vec_id
-       |           ORDER BY s DESC, eval_id) AS rn FROM ps)""".stripMargin
+       |$prefilterArgmaxCtes""".stripMargin
 
   private[queries] def semPrefilterOracleCtes: String =
-    s"""v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-       |      FROM read_parquet('${Artifacts.oracleGlob("t71_corpus")}')),
+    s"""${corpus(parquet("t71_corpus"))},
        |ev AS (SELECT eval_id, CAST(evec AS DOUBLE[]) AS q
-       |       FROM read_parquet('${Artifacts.oracleGlob("t71_eval")}')),
+       |       FROM ${parquet("t71_eval")}),
        |jj AS (SELECT unnest(range(0, 3)) AS j),
-       |de AS (SELECT ev.eval_id, jj.j,
-       |         list_sum(list_transform(range(0, len(ev.q)), i ->
-       |           ev.q[CAST(i + 1 AS INT)] *
-       |           (CASE WHEN CAST(concat('0x', substring(
-       |                  md5(concat('srp:', jj.j, ':', i)), 1, 15))
-       |                  AS BIGINT)
-       |                 % 2 = 1 THEN 1.0 ELSE -1.0 END))) AS dot
-       |       FROM ev, jj),
-       |be AS (SELECT eval_id,
-       |         CAST(sum(CASE WHEN dot > 0 THEN CAST(2 ** j AS BIGINT)
-       |                       ELSE 0 END) AS BIGINT) AS bucket
-       |       FROM de GROUP BY eval_id),
-       |dv AS (SELECT v.vec_id, jj.j,
-       |         list_sum(list_transform(range(0, len(v.e)), i ->
-       |           v.e[CAST(i + 1 AS INT)] *
-       |           (CASE WHEN CAST(concat('0x', substring(
-       |                  md5(concat('srp:', jj.j, ':', i)), 1, 15))
-       |                  AS BIGINT)
-       |                 % 2 = 1 THEN 1.0 ELSE -1.0 END))) AS dot
-       |       FROM v, jj),
-       |bv AS (SELECT vec_id,
-       |         CAST(sum(CASE WHEN dot > 0 THEN CAST(2 ** j AS BIGINT)
-       |                       ELSE 0 END) AS BIGINT) AS bucket
-       |       FROM dv GROUP BY vec_id),
+       |${srpPlaneDots("de", "ev.eval_id", "ev.q", "ev")},
+       |${signBits("be", "bucket", "de", key = "eval_id")},
+       |${srpPlaneDots("dv", "v.vec_id", "v.e", "v")},
+       |${signBits("bv", "bucket", "dv")},
        |pr AS (SELECT vec_id, bucket FROM bv
        |       UNION ALL
        |       SELECT bv.vec_id, xor(bv.bucket, CAST(2 ** jj.j AS BIGINT))
        |       FROM bv, jj),
        |cand AS (SELECT pr.vec_id, be.eval_id
        |         FROM pr JOIN be USING (bucket)),
-       |nc AS (SELECT v.vec_id, count(cand.eval_id) AS n_cand
-       |       FROM v LEFT JOIN cand USING (vec_id) GROUP BY v.vec_id),
-       |ps AS (SELECT cand.vec_id, cand.eval_id,
-       |         list_cosine_similarity(v.e, ev.q) AS s
-       |       FROM cand JOIN v USING (vec_id) JOIN ev USING (eval_id)),
-       |pb AS (SELECT vec_id, eval_id, s,
-       |         row_number() OVER (PARTITION BY vec_id
-       |           ORDER BY s DESC, eval_id) AS rn FROM ps)""".stripMargin
+       |$prefilterArgmaxCtes""".stripMargin
 
   def oracles: Map[String, String] = Map(
     // the capstone replay: t37's funnel CTEs + t35's reconstruction,
     // then packing/sharding in SQL — the whole export path re-derived
     "t46_training_export" ->
-      s"""WITH e AS (SELECT vec_id AS doc_id, CAST(embedding AS DOUBLE[])
-         |             AS emb FROM embeddings),
-         |base AS (SELECT dd.doc_id, dd.text, dd.lang, e.emb
-         |         FROM documents dd JOIN e USING (doc_id)),
-         |langf AS (SELECT * FROM base WHERE lang = 'en'),
-         |qual AS (SELECT * FROM langf WHERE len($wsExpr) >= 30),
-         |cent AS (SELECT doc_id AS centroid_id, emb AS c FROM qual
-         |         ORDER BY doc_id LIMIT 8),
+      s"""$curationFunnelCtes,
          |assigned AS (
          |  SELECT doc_id, emb, text, lang, centroid_id FROM (
          |    SELECT q.doc_id, q.emb, q.text, q.lang, cent.centroid_id,
@@ -3181,32 +3254,13 @@ object TextQueries {
          |             ORDER BY list_distance(q.emb, cent.c),
          |                      cent.centroid_id) AS rn
          |    FROM qual q, cent) WHERE rn = 1),
-         |dropped AS (
-         |  SELECT DISTINCT a.doc_id
-         |  FROM assigned a JOIN assigned b
-         |    ON a.centroid_id = b.centroid_id AND b.doc_id < a.doc_id
-         |   AND list_cosine_similarity(a.emb, b.emb) >= 0.35),
+         |$semDedupDropped,
          |keptd AS (
          |  SELECT a.doc_id, a.text, a.lang FROM assigned a
          |  LEFT JOIN dropped dr USING (doc_id)
          |  WHERE dr.doc_id IS NULL),
          |${substringSpanCtes("keptd")},
-         |iv AS (SELECT id_b AS doc_id, pos_b AS s,
-         |              pos_b + run_tokens AS e2 FROM spans),
-         |aff AS (SELECT DISTINCT doc_id FROM iv),
-         |toks AS (
-         |  SELECT d.doc_id, CAST(i - 1 AS BIGINT) AS pos, ws[i] AS tok
-         |  FROM d JOIN aff USING (doc_id),
-         |       unnest(range(1, len(ws) + 1)) AS t(i)),
-         |keptt AS (
-         |  SELECT tk.doc_id, tk.pos, tk.tok FROM toks tk
-         |  WHERE NOT EXISTS (SELECT 1 FROM iv
-         |    WHERE iv.doc_id = tk.doc_id
-         |      AND tk.pos >= iv.s AND tk.pos < iv.e2)),
-         |reb AS (
-         |  SELECT doc_id, count(*) AS n_tokens_clean,
-         |         string_agg(tok, ' ' ORDER BY pos) AS clean
-         |  FROM keptt GROUP BY doc_id),
+         |${spanRemovalCtes("e2")},
          |clean AS (
          |  SELECT k.doc_id, k.lang,
          |         CASE WHEN aff.doc_id IS NULL
@@ -3265,14 +3319,7 @@ object TextQueries {
          |UNION ALL SELECT * FROM shr
          |ORDER BY item""".stripMargin,
     "t37_curation_v2" ->
-      s"""WITH e AS (SELECT vec_id AS doc_id, CAST(embedding AS DOUBLE[])
-         |             AS emb FROM embeddings),
-         |base AS (SELECT dd.doc_id, dd.text, dd.lang, e.emb
-         |         FROM documents dd JOIN e USING (doc_id)),
-         |langf AS (SELECT * FROM base WHERE lang = 'en'),
-         |qual AS (SELECT * FROM langf WHERE len($wsExpr) >= 30),
-         |cent AS (SELECT doc_id AS centroid_id, emb AS c FROM qual
-         |         ORDER BY doc_id LIMIT 8),
+      s"""$curationFunnelCtes,
          |assigned AS (
          |  SELECT doc_id, emb, text, centroid_id FROM (
          |    SELECT q.doc_id, q.emb, q.text, cent.centroid_id,
@@ -3280,11 +3327,7 @@ object TextQueries {
          |             ORDER BY list_distance(q.emb, cent.c),
          |                      cent.centroid_id) AS rn
          |    FROM qual q, cent) WHERE rn = 1),
-         |dropped AS (
-         |  SELECT DISTINCT a.doc_id
-         |  FROM assigned a JOIN assigned b
-         |    ON a.centroid_id = b.centroid_id AND b.doc_id < a.doc_id
-         |   AND list_cosine_similarity(a.emb, b.emb) >= 0.35),
+         |$semDedupDropped,
          |keptd AS (
          |  SELECT a.doc_id, a.text FROM assigned a
          |  LEFT JOIN dropped dr USING (doc_id)
@@ -3375,7 +3418,7 @@ object TextQueries {
       s"""WITH tok AS (SELECT doc_id, unnest($wsLowerExpr) AS word
          |             FROM documents),
          |vv AS (SELECT word, CAST(len(syms) AS BIGINT) AS n_bpe
-         |       FROM read_parquet('${Artifacts.oracleGlob("t66_seqs_r8")}')),
+         |       FROM ${parquet("t66_seqs_r8")}),
          |dt AS (SELECT t.doc_id, CAST(sum(vv.n_bpe) AS BIGINT) AS n_toks
          |       FROM tok t JOIN vv USING (word) GROUP BY t.doc_id),
          |d AS (SELECT d0.doc_id, d0.source, dt.n_toks
@@ -3442,34 +3485,13 @@ object TextQueries {
         |       round(e.est_q, 6) AS est_q,
         |       round(abs(e.est_q - x.exact_q), 6) AS abs_err
         |FROM est e JOIN ex x ON x.q = e.q ORDER BY e.q""".stripMargin,
-    "t34_substring_spans" ->
-      s"""WITH ${substringSpanCtes()}
-         |SELECT id_a, id_b, pos_a, pos_b, run_tokens FROM spans
-         |ORDER BY id_a, id_b, pos_a""".stripMargin,
+    "t34_substring_spans" -> substringSpansOracle,
     // t34's full-corpus SQL VERBATIM: the twice-updated incremental
     // index must reproduce the full rebuild bit-for-bit
-    "t47_incremental_substr" ->
-      s"""WITH ${substringSpanCtes()}
-         |SELECT id_a, id_b, pos_a, pos_b, run_tokens FROM spans
-         |ORDER BY id_a, id_b, pos_a""".stripMargin,
+    "t47_incremental_substr" -> substringSpansOracle,
     "t35_substring_removal" ->
       s"""WITH ${substringSpanCtes()},
-         |iv AS (SELECT id_b AS doc_id, pos_b AS s,
-         |              pos_b + run_tokens AS e FROM spans),
-         |aff AS (SELECT DISTINCT doc_id FROM iv),
-         |toks AS (
-         |  SELECT d.doc_id, CAST(i - 1 AS BIGINT) AS pos, ws[i] AS tok
-         |  FROM d JOIN aff USING (doc_id),
-         |       unnest(range(1, len(ws) + 1)) AS t(i)),
-         |keptt AS (
-         |  SELECT tk.doc_id, tk.pos, tk.tok FROM toks tk
-         |  WHERE NOT EXISTS (SELECT 1 FROM iv
-         |    WHERE iv.doc_id = tk.doc_id
-         |      AND tk.pos >= iv.s AND tk.pos < iv.e)),
-         |reb AS (
-         |  SELECT doc_id, count(*) AS n_tokens_clean,
-         |         string_agg(tok, ' ' ORDER BY pos) AS clean
-         |  FROM keptt GROUP BY doc_id)
+         |${spanRemovalCtes("e")}
          |SELECT d.doc_id, CAST(len(d.ws) AS BIGINT) AS n_tokens,
          |       coalesce(reb.n_tokens_clean, 0) AS n_tokens_clean,
          |       md5(coalesce(reb.clean, '')) AS clean_md5
@@ -3490,15 +3512,7 @@ object TextQueries {
          |pf AS (SELECT vec_id FROM pb WHERE rn = 1 AND s >= 0.95),
          |ef AS (SELECT v.vec_id FROM v, ev GROUP BY v.vec_id
          |       HAVING max(list_cosine_similarity(v.e, ev.q)) >= 0.95)
-         |SELECT v.vec_id % 5 AS stratum, count(*) AS n_docs,
-         |       CAST(sum(CASE WHEN ef.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-         |            AS BIGINT) AS n_exact,
-         |       CAST(sum(CASE WHEN pf.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-         |            AS BIGINT) AS n_prefilter,
-         |       CAST(sum(CASE WHEN pf.vec_id IS NOT NULL
-         |                      AND ef.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-         |            AS BIGINT) AS n_both,
-         |       round(avg(nc.n_cand), 4) AS cand_per_doc,
+         |$prefilterStrataCols
          |       round(CASE
          |         WHEN sum(CASE WHEN ef.vec_id IS NOT NULL THEN 1 ELSE 0 END)
          |              = 0 THEN 1.0
@@ -3508,10 +3522,7 @@ object TextQueries {
          |              sum(CASE WHEN ef.vec_id IS NOT NULL THEN 1 ELSE 0 END)
          |         END, 6) AS flag_recall,
          |       (SELECT h FROM hh) AS margin_bits
-         |FROM v JOIN nc USING (vec_id)
-         |LEFT JOIN pf ON v.vec_id = pf.vec_id
-         |LEFT JOIN ef ON v.vec_id = ef.vec_id
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+         |$prefilterStrataFrom""".stripMargin,
     // the prefilter replay (shared CTEs) + both flag sets, per-stratum
     // counts, candidate meters and flag recall vs the exact argmax
     "t72_semantic_prefilter" ->
@@ -3523,29 +3534,17 @@ object TextQueries {
          |                    ev.eval_id) AS rn
          |       FROM v, ev),
          |ef AS (SELECT vec_id FROM eb WHERE rn = 1 AND s >= 0.95)
-         |SELECT v.vec_id % 5 AS stratum, count(*) AS n_docs,
-         |       CAST(sum(CASE WHEN ef.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-         |            AS BIGINT) AS n_exact,
-         |       CAST(sum(CASE WHEN pf.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-         |            AS BIGINT) AS n_prefilter,
-         |       CAST(sum(CASE WHEN pf.vec_id IS NOT NULL
-         |                      AND ef.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-         |            AS BIGINT) AS n_both,
-         |       round(avg(nc.n_cand), 4) AS cand_per_doc,
+         |$prefilterStrataCols
          |       round(CAST(sum(CASE WHEN pf.vec_id IS NOT NULL
          |                      AND ef.vec_id IS NOT NULL THEN 1 ELSE 0 END)
          |               AS DOUBLE) /
          |             sum(CASE WHEN ef.vec_id IS NOT NULL THEN 1 ELSE 0 END),
          |             6) AS flag_recall
-         |FROM v JOIN nc USING (vec_id)
-         |LEFT JOIN pf ON v.vec_id = pf.vec_id
-         |LEFT JOIN ef ON v.vec_id = ef.vec_id
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+         |$prefilterStrataFrom""".stripMargin,
     "t71_semantic_decontam" ->
-      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |           FROM read_parquet('${Artifacts.oracleGlob("t71_corpus")}')),
+      s"""${withCorpus(parquet("t71_corpus"))},
          |ev AS (SELECT eval_id, CAST(evec AS DOUBLE[]) AS q
-         |       FROM read_parquet('${Artifacts.oracleGlob("t71_eval")}')),
+         |       FROM ${parquet("t71_eval")}),
          |scored AS (SELECT v.vec_id, ev.eval_id,
          |             list_cosine_similarity(v.e, ev.q) AS s,
          |             row_number() OVER (PARTITION BY v.vec_id
@@ -3557,9 +3556,8 @@ object TextQueries {
          |ORDER BY vec_id""".stripMargin,
     "t32_semantic_dedup" ->
       s"""WITH cent AS (SELECT centroid_id, CAST(centroid AS DOUBLE[]) AS c
-         |              FROM read_parquet('${Artifacts.oracleGlob("t32_centroids")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM read_parquet('${Artifacts.oracleGlob("t32_corpus")}')),
+         |              FROM ${parquet("t32_centroids")}),
+         |${corpus(parquet("t32_corpus"))},
          |assigned AS (
          |  SELECT vec_id, e, centroid_id FROM (
          |    SELECT v.vec_id, v.e, cent.centroid_id,
@@ -3866,15 +3864,7 @@ object TextQueries {
     // t20's recursive component walk + per-size-bucket accounting —
     // mirror of dedupSavings (keeper = min-id label)
     "t61_dedup_savings" ->
-      s"""WITH RECURSIVE $jaccardPairCtes,
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM jpairs WHERE jac >= 0.1
-         |  UNION ALL
-         |  SELECT id_b, id_a FROM jpairs WHERE jac >= 0.1),
-         |walk(node, label) AS (
-         |  SELECT src, src FROM (SELECT DISTINCT src FROM edges)
-         |  UNION
-         |  SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.node),
+      s"""WITH RECURSIVE $jaccardWalkCtes,
          |comp AS (SELECT node, min(label) AS label FROM walk GROUP BY node),
          |sized AS (SELECT label, count(*) AS cluster_size
          |          FROM comp GROUP BY label)
@@ -3892,20 +3882,12 @@ object TextQueries {
     // t61, per-doc counts from the persisted final BPE segmentation,
     // singleton docs their own canonical, per-source savings
     "t70_token_savings" ->
-      s"""WITH RECURSIVE $jaccardPairCtes,
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM jpairs WHERE jac >= 0.1
-         |  UNION ALL
-         |  SELECT id_b, id_a FROM jpairs WHERE jac >= 0.1),
-         |walk(node, label) AS (
-         |  SELECT src, src FROM (SELECT DISTINCT src FROM edges)
-         |  UNION
-         |  SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.node),
+      s"""WITH RECURSIVE $jaccardWalkCtes,
          |comp AS (SELECT node, min(label) AS label FROM walk GROUP BY node),
          |tok AS (SELECT doc_id, unnest($wsLowerExpr) AS word
          |        FROM documents),
          |vv AS (SELECT word, CAST(len(syms) AS BIGINT) AS n_bpe
-         |       FROM read_parquet('${Artifacts.oracleGlob("t66_seqs_r8")}')),
+         |       FROM ${parquet("t66_seqs_r8")}),
          |dtok AS (SELECT t.doc_id, CAST(sum(vv.n_bpe) AS BIGINT) AS n_toks
          |         FROM tok t JOIN vv USING (word) GROUP BY t.doc_id),
          |fdoc AS (SELECT d.doc_id, d.source, dtok.n_toks,
@@ -3945,14 +3927,7 @@ object TextQueries {
     // generalize t05's bands=4 band-key formula)
     "t59_lsh_quality" ->
       s"""WITH $jaccardPairCtes,
-         |shb AS (
-         |  SELECT doc_id, list_transform($shinglesExpr, s -> ${hash60("s")}) AS hb
-         |  FROM (SELECT doc_id, $wsExpr AS ws FROM documents)),
-         |sig AS (
-         |  SELECT doc_id,
-         |         list_transform(range(0, 16), j -> list_min(list_transform(hb,
-         |           b -> ${affineSqlJ("b")}))) AS signature
-         |  FROM shb),
+         |$minhashSigCtes,
          |cfg AS (SELECT unnest([2, 4, 8]) AS bands),
          |banded AS (
          |  SELECT s2.doc_id, s2.signature, c.bands,
@@ -4078,15 +4053,7 @@ object TextQueries {
          |       round(avg(nll), 6) AS avg_nll
          |FROM r GROUP BY 1 ORDER BY bucket""".stripMargin,
     "t20_curation" ->
-      s"""WITH RECURSIVE $jaccardPairCtes,
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM jpairs WHERE jac >= 0.1
-         |  UNION ALL
-         |  SELECT id_b, id_a FROM jpairs WHERE jac >= 0.1),
-         |walk(node, label) AS (
-         |  SELECT src, src FROM (SELECT DISTINCT src FROM edges)
-         |  UNION
-         |  SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.node),
+      s"""WITH RECURSIVE $jaccardWalkCtes,
          |losers AS (
          |  SELECT node AS doc_id
          |  FROM (SELECT node, min(label) AS label FROM walk GROUP BY node)
@@ -4175,11 +4142,7 @@ object TextQueries {
            |  + 0.85 * sum(r.rank / d.deg) AS rank
            |FROM edges e JOIN $prev r ON r.node = e.src
            |JOIN deg d ON d.src = e.src GROUP BY e.dst)""".stripMargin
-      s"""WITH $jaccardPairCtes,
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM jpairs WHERE jac >= 0.1
-         |  UNION ALL
-         |  SELECT id_b, id_a FROM jpairs WHERE jac >= 0.1),
+      s"""WITH $jaccardEdgeCtes,
          |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
          |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM deg),
          |r0 AS (SELECT src AS node, 1.0 / (SELECT n FROM nn) AS rank
@@ -4193,28 +4156,12 @@ object TextQueries {
         .stripMargin
     },
     "t16_dup_clusters" ->
-      s"""WITH RECURSIVE $jaccardPairCtes,
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM jpairs WHERE jac >= 0.1
-         |  UNION ALL
-         |  SELECT id_b, id_a FROM jpairs WHERE jac >= 0.1),
-         |walk(node, label) AS (
-         |  SELECT src, src FROM (SELECT DISTINCT src FROM edges)
-         |  UNION
-         |  SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.node)
+      s"""WITH RECURSIVE $jaccardWalkCtes
          |SELECT component, count(*) AS n_docs FROM (
          |  SELECT node, min(label) AS component FROM walk GROUP BY node)
          |GROUP BY component ORDER BY component""".stripMargin,
     "t45_group_split" ->
-      s"""WITH RECURSIVE $jaccardPairCtes,
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM jpairs WHERE jac >= 0.1
-         |  UNION ALL
-         |  SELECT id_b, id_a FROM jpairs WHERE jac >= 0.1),
-         |walk(node, label) AS (
-         |  SELECT src, src FROM (SELECT DISTINCT src FROM edges)
-         |  UNION
-         |  SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.node),
+      s"""WITH RECURSIVE $jaccardWalkCtes,
          |comp AS (SELECT node, min(label) AS component FROM walk
          |         GROUP BY node),
          |asg AS (SELECT d.doc_id,
@@ -4275,14 +4222,7 @@ object TextQueries {
          |FROM pairs ORDER BY id_a, id_b""".stripMargin,
     "t30_minhash_estimate" ->
       s"""WITH $jaccardPairCtes,
-         |shb AS (
-         |  SELECT doc_id, list_transform($shinglesExpr, s -> ${hash60("s")}) AS hb
-         |  FROM (SELECT doc_id, $wsExpr AS ws FROM documents)),
-         |sig AS (
-         |  SELECT doc_id,
-         |         list_transform(range(0, 16), j -> list_min(list_transform(hb,
-         |           b -> ${affineSqlJ("b")}))) AS signature
-         |  FROM shb),
+         |$minhashSigCtes,
          |est AS (
          |  SELECT id_a, id_b, jac,
          |         list_sum(list_transform(range(0, 16),
@@ -4298,32 +4238,14 @@ object TextQueries {
          |       round(abs(est - jac), 6) AS abs_err
          |FROM est ORDER BY id_a, id_b""".stripMargin,
     "t06_simhash" ->
-      s"""WITH t AS (SELECT doc_id, $wsExpr AS ws FROM documents),
-         |votes AS (
-         |  SELECT doc_id, bit,
-         |         sum(CASE WHEN (${hash60("w")} >> CAST(bit AS INT)) % 2 = 1
-         |                  THEN 1 ELSE -1 END) AS v
-         |  FROM (SELECT doc_id, unnest(ws) AS w FROM t),
-         |       (SELECT unnest(range(0, 16)) AS bit)
-         |  GROUP BY doc_id, bit)
+      s"""${simhashCtes(16)}
          |SELECT doc_id,
          |       CAST(sum(CASE WHEN v > 0 THEN CAST(2 ** bit AS BIGINT) ELSE 0 END) AS BIGINT) AS simhash
          |FROM votes GROUP BY doc_id ORDER BY doc_id""".stripMargin,
     // t15 oracle lives above t07 (ordering in this map is irrelevant)
     "t14_simhash_near_dup" ->
-      s"""WITH t AS (SELECT doc_id, $wsExpr AS ws FROM documents),
-         |votes AS (
-         |  SELECT doc_id, bit,
-         |         sum(CASE WHEN (${hash60("w")} >> CAST(bit AS INT)) % 2 = 1
-         |                  THEN 1 ELSE -1 END) AS v
-         |  FROM (SELECT doc_id, unnest(ws) AS w FROM t),
-         |       (SELECT unnest(range(0, 32)) AS bit)
-         |  GROUP BY doc_id, bit),
-         |sh AS (
-         |  SELECT doc_id,
-         |         CAST(sum(CASE WHEN v > 0 THEN CAST(2 ** bit AS BIGINT)
-         |                       ELSE 0 END) AS BIGINT) AS simhash
-         |  FROM votes GROUP BY doc_id)
+      s"""${simhashCtes(32)},
+         |$simhashFingerprint
          |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
          |       CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
          |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
@@ -4341,8 +4263,7 @@ object TextQueries {
            |    SELECT p[1] AS lhs, p[2] AS rhs, sum(n) AS cnt
            |    FROM (SELECT n, unnest(list_transform(range(1, len(syms)),
            |                   i -> [syms[i], syms[i + 1]])) AS p
-           |          FROM read_parquet('${
-                        Artifacts.oracleGlob(s"t66_seqs_r${r - 1}")}')
+           |          FROM ${parquet(s"t66_seqs_r${r - 1}")}
            |          WHERE len(syms) >= 2)
            |    GROUP BY 1, 2)
            |  ORDER BY cnt DESC, lhs, rhs LIMIT 1)""".stripMargin
@@ -4359,7 +4280,7 @@ object TextQueries {
       s"""WITH v AS (
          |  SELECT word, CAST(len(syms) AS BIGINT) AS n_bpe,
          |         CAST(len(word) AS BIGINT) AS n_chars
-         |  FROM read_parquet('${Artifacts.oracleGlob("t66_seqs_r8")}')),
+         |  FROM ${parquet("t66_seqs_r8")}),
          |tok AS (
          |  SELECT doc_id, unnest($wsLowerExpr) AS word FROM documents)
          |SELECT t.doc_id, count(*) AS n_words,
@@ -4378,11 +4299,11 @@ object TextQueries {
          |    SELECT word, CAST(len(syms) AS BIGINT) AS n_bpe,
          |           row_number() OVER (ORDER BY n DESC, word) AS rn,
          |           count(*) OVER () AS nd
-         |    FROM read_parquet('${Artifacts.oracleGlob("t68_vocab")}'))
+         |    FROM ${parquet("t68_vocab")})
          |  WHERE rn <= ceil(0.75 * nd)),
          |ov AS (
          |  SELECT word, n_bpe, CAST(1 AS BIGINT) AS oov
-         |  FROM read_parquet('${Artifacts.oracleGlob("t68_oov_vocab")}')),
+         |  FROM ${parquet("t68_oov_vocab")}),
          |vv AS (SELECT * FROM tv UNION ALL SELECT * FROM ov),
          |tok AS (
          |  SELECT doc_id, unnest($wsLowerExpr) AS word FROM documents
@@ -4399,8 +4320,7 @@ object TextQueries {
     // (lossy — no closed form; the decode itself is golden-pixel
     // spec'd), hash math replayed over BOTH in one SQL chain
     "t65_jpeg_phash" ->
-      s"""WITH ${imageMixedPxCtes("doc_id % 3 = 2",
-             Artifacts.oracleGlob("t65_jpeg_pixels"))},
+      s"""WITH ${imageMixedPxCtes("doc_id % 3 = 2", "t65_jpeg_pixels")},
          |$imageHashFromPxCtes
          |SELECT dims.doc_id,
          |       CASE WHEN dims.doc_id % 3 = 2 THEN 'jpeg'
@@ -4417,21 +4337,7 @@ object TextQueries {
     // ImageIO decode end-to-end, not just the hash math
     "t49_image_phash" ->
       s"""WITH $imageAhashCtes,
-         |m9 AS (
-         |  SELECT doc_id, (x * 9) // w AS bx, (y * 8) // h AS by,
-         |         sum(v) // count(*) AS m
-         |  FROM px GROUP BY 1, 2, 3),
-         |dh AS (
-         |  SELECT a.doc_id,
-         |         CAST(sum(CASE WHEN b.m > a.m THEN
-         |             CASE WHEN a.by * 8 + a.bx = 63
-         |                  THEN -9223372036854775807 - 1
-         |                  ELSE 1::BIGINT << CAST(a.by * 8 + a.bx AS INT)
-         |             END
-         |           ELSE 0 END) AS BIGINT) AS dhash
-         |  FROM m9 a JOIN m9 b ON a.doc_id = b.doc_id AND a.by = b.by
-         |    AND b.bx = a.bx + 1
-         |  WHERE a.bx < 8 GROUP BY 1)
+         |$imageDhashFromPx
          |SELECT dims.doc_id, CAST(w AS BIGINT) AS width,
          |       CAST(h AS BIGINT) AS height, ahash, dhash
          |FROM dims JOIN ah ON dims.doc_id = ah.doc_id
@@ -4529,19 +4435,8 @@ object TextQueries {
     // t14's fingerprint CTEs + grouping: cross rows over distinct
     // fingerprints, self rows for duplicated ones
     "t48_simhash_groups" ->
-      s"""WITH t AS (SELECT doc_id, $wsExpr AS ws FROM documents),
-         |votes AS (
-         |  SELECT doc_id, bit,
-         |         sum(CASE WHEN (${hash60("w")} >> CAST(bit AS INT)) % 2 = 1
-         |                  THEN 1 ELSE -1 END) AS v
-         |  FROM (SELECT doc_id, unnest(ws) AS w FROM t),
-         |       (SELECT unnest(range(0, 32)) AS bit)
-         |  GROUP BY doc_id, bit),
-         |sh AS (
-         |  SELECT doc_id,
-         |         CAST(sum(CASE WHEN v > 0 THEN CAST(2 ** bit AS BIGINT)
-         |                       ELSE 0 END) AS BIGINT) AS simhash
-         |  FROM votes GROUP BY doc_id),
+      s"""${simhashCtes(32)},
+         |$simhashFingerprint,
          |g AS (SELECT simhash, count(*) AS n, min(doc_id) AS keeper
          |      FROM sh GROUP BY simhash),
          |pairs AS (

@@ -3,6 +3,8 @@ package graft.queries
 import graft.Tables
 import graft.functions.VectorFunctions.cosineSim
 import graft.operators.{Ann, Search}
+import graft.queries.OracleSql.{corpus, hash60, parquet, rankedPerQuery,
+  signBits, srpPlaneDots, srpPlanes, srpSketchCol, withCorpus, withSrpSketch}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -5635,20 +5637,94 @@ object VectorQueries {
     * definition of the parity statement all three twins must satisfy.
     */
   val batchHeapTopKOracle: String =
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qe
-        |           FROM embeddings WHERE vec_id < 8),
-        |scored AS (
-        |  SELECT q.query_id, e.vec_id,
-        |         list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-        |                                CAST(q.qe AS DOUBLE[])) AS score
-        |  FROM embeddings e, q WHERE e.vec_id >= 8),
-        |ranked AS (
-        |  SELECT query_id, vec_id, score,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY score DESC, vec_id) AS rank
-        |  FROM scored)
-        |SELECT query_id, rank, vec_id, round(score, 6) AS score
-        |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe
+         |           FROM embeddings WHERE vec_id < 8),
+         |scored AS (
+         |  SELECT q.query_id, e.vec_id,
+         |         list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+         |                                CAST(q.qe AS DOUBLE[])) AS score
+         |  FROM embeddings e, q WHERE e.vec_id >= 8),
+         |${rankedPerQuery("scored")}
+         |SELECT query_id, rank, vec_id, round(score, 6) AS score
+         |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+
+  /** Codebook CTE `name` (j, c, ctr): a persisted PQ codebook
+    * artifact, centers as DOUBLE[]. */
+  private def codebook(name: String, artifact: String): String =
+    s"""$name AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
+       |        FROM ${parquet(artifact)})""".stripMargin
+
+  /** The codebook `cb` ([[codebook]]) opening a WITH list. */
+  private def withCodebooks(artifact: String): String =
+    s"""WITH cb AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
+       |            FROM ${parquet(artifact)})""".stripMargin
+
+  /** The residual quantizers' stage 1 (v66, v67) over `cw` and the
+    * d=1536 codebook `cb1`: per-subspace distances `sub1` and the
+    * argmin codes `k1` (vec_id, j, c), ties to the smaller code. */
+  private val residualStage1: String =
+    """sub1 AS (
+      |  SELECT cw.vec_id, cb1.j, cb1.c,
+      |         list_sum(list_transform(range(0, 192), i ->
+      |           (cw.e[CAST(cb1.j * 192 + i + 1 AS INT)]
+      |              - cb1.ctr[CAST(i + 1 AS INT)]) *
+      |           (cw.e[CAST(cb1.j * 192 + i + 1 AS INT)]
+      |              - cb1.ctr[CAST(i + 1 AS INT)]))) AS dist
+      |  FROM cw, cb1),
+      |k1 AS (SELECT vec_id, j, c FROM (
+      |         SELECT vec_id, j, c,
+      |                row_number() OVER (PARTITION BY vec_id, j
+      |                                   ORDER BY dist, c) AS rn
+      |         FROM sub1) WHERE rn = 1)""".stripMargin
+
+  /** Stage 1's query LUT `l1` (j, c, d): squared L2 from `q` to each
+    * `cb1` center per subspace (v66, v67). */
+  private val residualStage1Lut: String =
+    """l1 AS (SELECT cb1.j, cb1.c,
+      |         list_sum(list_transform(range(0, 192), i ->
+      |           (q.qe[CAST(cb1.j * 192 + i + 1 AS INT)]
+      |              - cb1.ctr[CAST(i + 1 AS INT)]) *
+      |           (q.qe[CAST(cb1.j * 192 + i + 1 AS INT)]
+      |              - cb1.ctr[CAST(i + 1 AS INT)]))) AS d
+      |       FROM cb1, q)""".stripMargin
+
+  /** The exact k-NN replay over raw `embeddings`, opening a WITH list:
+    * `q` (vec_id 0) and `top`, its `k` nearest other vectors by cosine
+    * (columns `cols` and score), ties to the smaller id. */
+  private def exactKnnTop(k: Int, cols: String): String =
+    s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
+       |top AS (
+       |  SELECT $cols,
+       |         list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+       |                                CAST(q.qe AS DOUBLE[])) AS score
+       |  FROM embeddings e, q WHERE e.vec_id <> 0
+       |  ORDER BY score DESC, e.vec_id LIMIT $k)""".stripMargin
+
+  /** v07's nearest-cell `assigned` (vec_id, embedding, centroid_id)
+    * over the raw embeddings past the 16 seeded cells `c`. */
+  private val seededAssigned: String =
+    """assigned AS (
+      |  SELECT vec_id, embedding, centroid_id FROM (
+      |    SELECT e.vec_id, e.embedding, c.centroid_id,
+      |           row_number() OVER (PARTITION BY e.vec_id
+      |             ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]),
+      |                                    CAST(c.centroid AS DOUBLE[])),
+      |                      c.centroid_id) AS rn
+      |    FROM embeddings e, c WHERE e.vec_id >= 16) WHERE rn = 1)""".stripMargin
+
+  /** The rotation matvec (v64, v65): corpus `cw` and queries `q`
+    * multiplied by the persisted rotation rows `rr` (o, rv), each
+    * product rounded to 1e-6 (Opq.rotate's portability contract), as
+    * `rw` (vec_id, e) and `rq` (query_id, qe). */
+  private val rotatedCtes: String =
+    """rw AS (SELECT cw.vec_id,
+      |         list(round(list_dot_product(cw.e, rr.rv), 6)
+      |              ORDER BY rr.o) AS e
+      |       FROM cw, rr GROUP BY cw.vec_id),
+      |rq AS (SELECT q.query_id,
+      |         list(round(list_dot_product(q.qe, rr.rv), 6)
+      |              ORDER BY rr.o) AS qe
+      |       FROM q, rr GROUP BY q.query_id)""".stripMargin
 
   /** The PQ replay pipeline as CTEs over a candidate set `candCte`
     * (columns vec_id, e) and the codebook CTE `cb` (j, c, ctr):
@@ -5685,6 +5761,57 @@ object VectorQueries {
        |           AS adc_dist
        |  FROM codes JOIN lut ON codes.j = lut.j AND codes.c = lut.c
        |  GROUP BY codes.vec_id)""".stripMargin
+
+  /** `assigned` (vec_id, e, centroid_id): each vector of `corpus` in
+    * its nearest cell of `cent` by L2 to centroid column `ctr`, ties to
+    * the smaller centroid id. */
+  private def nearestCell(ctr: String): String =
+    s"""assigned AS (
+       |  SELECT vec_id, e, centroid_id FROM (
+       |    SELECT co.vec_id, co.e, cent.centroid_id,
+       |           row_number() OVER (PARTITION BY co.vec_id
+       |             ORDER BY list_distance(co.e, cent.$ctr),
+       |                      cent.centroid_id) AS rn
+       |    FROM corpus co, cent) WHERE rn = 1)""".stripMargin
+
+  /** v07's seeded cells over `v`: `cent` (centroid_id, ctr0), the 16
+    * smallest ids, and `corpus` (vec_id, e), the rest. */
+  private val seededCells: String =
+    """cent AS (SELECT vec_id AS centroid_id, e AS ctr0 FROM v
+      |         ORDER BY vec_id LIMIT 16),
+      |corpus AS (SELECT vec_id, e FROM v WHERE vec_id >= 16)""".stripMargin
+
+  /** The IVF-PQ search replay over `cb`, `q`, `cent` (centroid_id,
+    * ctr0) and `corpus`: [[nearestCell]], the `probes` cells nearest
+    * the query, the probed vectors' ADC ([[pqAdcCtes]]), shortlist-50
+    * and the exact L2 rerank to the top-10 (vec_id, l2_dist). */
+  private def ivfPqSearchTail(probes: Int, dsub: Int = 8): String =
+    s"""${nearestCell("ctr0")},
+       |probed AS (
+       |  SELECT centroid_id FROM cent, q
+       |  ORDER BY list_distance(ctr0, qe), centroid_id LIMIT $probes),
+       |cand AS (
+       |  SELECT a.vec_id, a.e FROM assigned a JOIN probed
+       |  USING (centroid_id)),
+       |${pqAdcCtes("cand", dsub)},
+       |short AS (SELECT vec_id FROM adc ORDER BY adc_dist, vec_id LIMIT 50),
+       |res AS (
+       |  SELECT ca.vec_id, list_distance(ca.e, q.qe) AS d
+       |  FROM cand ca JOIN short USING (vec_id), q
+       |  ORDER BY d, ca.vec_id LIMIT 10)
+       |SELECT vec_id, round(d, 6) AS l2_dist FROM res
+       |ORDER BY vec_id""".stripMargin
+
+  /** v22's whole replay over the persisted `codebooks`: seeded cells,
+    * probe-4 routing, ADC, shortlist-50, exact rerank. v26 differs only
+    * in where the Spark side keeps the index, so it replays the same. */
+  private def seededIvfPqOracle(codebooks: String): String =
+    s"""WITH cb AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
+       |            FROM ${parquet(codebooks)}),
+       |${corpus("embeddings")},
+       |q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
+       |$seededCells,
+       |${ivfPqSearchTail(4)}""".stripMargin
 
   /** One OPQ-vs-PQ variant's full replay as prefixed CTEs (the v64
     * and v65 oracles each instantiate it twice — raw basis vs rotated
@@ -5913,22 +6040,160 @@ object VectorQueries {
        |             round(sum(par_vec) / sum(mse_vec), 6) AS par_share
        |           FROM ${p}pv)""".stripMargin
 
-  /** The v12/v20/v21/v23 16-bit SRP sketch replay, factored as the
-    * shared `v`/`s` CTE pair the newer bucket-routed oracles (v43-v45)
-    * build on — identical text to the inlined copies, one definition.
-    */
-  private val srpSketch16Ctes: String =
-    """v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-      |           FROM embeddings),
-      |s AS (SELECT vec_id, e,
-      |  CAST(list_sum(list_transform(range(0, 16), j ->
-      |    CASE WHEN list_sum(list_transform(range(0, len(e)), i ->
-      |        e[CAST(i + 1 AS INT)] *
-      |        (CASE WHEN CAST(concat('0x', substring(
-      |               md5(concat('srp:', j, ':', i)), 1, 15)) AS BIGINT)
-      |              % 2 = 1 THEN 1.0 ELSE -1.0 END))) > 0
-      |    THEN CAST(2 ** j AS BIGINT) ELSE 0 END)) AS BIGINT) AS sketch
-      |  FROM v)""".stripMargin
+  /** The reference-geometry corpora's held-out query `q` (vec_id 1000)
+    * and the corpus `c` without it, both over `v`. */
+  private def heldOut(c: String): String =
+    s"""q AS (SELECT e AS qe FROM v WHERE vec_id = 1000),
+       |$c AS (SELECT vec_id, e FROM v WHERE vec_id != 1000)""".stripMargin
+
+  /** The exact answer `ex`: corpus `c`'s top-10 by cosine to the one
+    * query `q`, ties to the smaller vec_id. */
+  private val exactTop10: String =
+    """ex AS (SELECT c.vec_id FROM c, q
+      |       ORDER BY list_cosine_similarity(c.e, q.qe) DESC, c.vec_id
+      |       LIMIT 10)""".stripMargin
+
+  /** [[exactTop10]] over corpus `cw`. */
+  private val exactTop10Cw: String =
+    """ex AS (SELECT cw.vec_id FROM cw, q
+      |       ORDER BY list_cosine_similarity(cw.e, q.qe) DESC,
+      |                cw.vec_id LIMIT 10)""".stripMargin
+
+  /** Per-row hits `h` of a ranked `top` (rank, vec_id, score) against
+    * `ex`, and their recall@10 `r`. */
+  private val hitRecall: String =
+    """h AS (SELECT top.rank, top.vec_id, top.score,
+      |        CASE WHEN ex.vec_id IS NULL THEN 0 ELSE 1 END AS hit
+      |      FROM top LEFT JOIN ex USING (vec_id)),
+      |r AS (SELECT round(CAST(sum(hit) AS DOUBLE) / 10.0, 6)
+      |        AS recall_at_10 FROM h)""".stripMargin
+
+  /** The served top-10 `top` of `from` (vec_id, score), ranked, then
+    * [[hitRecall]]. */
+  private def rankedHits(from: String): String =
+    s"""top AS (SELECT vec_id, score,
+       |          row_number() OVER (ORDER BY score DESC, vec_id) AS rank
+       |        FROM $from ORDER BY score DESC, vec_id LIMIT 10),
+       |$hitRecall""".stripMargin
+
+  /** The sharded-serving routing shared by v55 and v58: the
+    * hive-partitioned graph `store` as `ga` (shard, src, dst), the
+    * clustered corpus artifact with query `q` (vec_id 0) and corpus `c`
+    * (vec_id >= 8), the query's 6-plane sketch `qb`, its probe buckets
+    * `pb` (own + hamming 1), each vector's bucket `bk` and the routed
+    * graph `g`, the probed shards' edges. */
+  private def shardRouteCtes(store: String, corpusArtifact: String): String =
+    s"""WITH ga AS (SELECT CAST(shard AS BIGINT) AS shard, src, dst
+       |            FROM read_parquet(
+       |              '${Artifacts.oracleGlobHive(store)}',
+       |              hive_partitioning = 1)),
+       |${corpus(parquet(corpusArtifact))},
+       |q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
+       |c AS (SELECT vec_id, e FROM v WHERE vec_id >= 8),
+       |qb AS (SELECT
+       |${srpSketchCol(6, "qe", "b")}
+       |  FROM q),
+       |pb AS (SELECT DISTINCT bucket FROM (
+       |        SELECT b AS bucket FROM qb
+       |        UNION ALL SELECT xor(b, 1) FROM qb
+       |        UNION ALL SELECT xor(b, 2) FROM qb
+       |        UNION ALL SELECT xor(b, 4) FROM qb
+       |        UNION ALL SELECT xor(b, 8) FROM qb
+       |        UNION ALL SELECT xor(b, 16) FROM qb
+       |        UNION ALL SELECT xor(b, 32) FROM qb)),
+       |bk AS (SELECT vec_id,
+       |${srpSketchCol(6, "e", "bucket")}
+       |  FROM c),
+       |g AS (SELECT src, dst FROM ga JOIN pb ON ga.shard = pb.bucket)""".stripMargin
+
+  /** [[bucketEntries]] over the routed graph `g`, kept to the probed
+    * buckets `pb` (v55, v58). */
+  private val routedEntries: String =
+    """dg AS (SELECT dst AS vec_id, count(*) AS deg FROM g
+      |       GROUP BY dst),
+      |en AS (SELECT vec_id FROM (
+      |         SELECT bk.vec_id,
+      |                row_number() OVER (PARTITION BY bk.bucket
+      |                  ORDER BY dg.deg DESC, bk.vec_id) AS rn
+      |         FROM bk JOIN dg USING (vec_id)
+      |         JOIN pb ON bk.bucket = pb.bucket) WHERE rn <= 2)""".stripMargin
+
+  /** The persisted graph artifact as `g` (src, dst), opening a WITH
+    * list. */
+  private def withGraph(artifact: String): String =
+    s"""WITH g AS (SELECT src, dst
+       |           FROM ${parquet(artifact)})""".stripMargin
+
+  /** The PQ-scored graph walk v59 and v60 share: the v57 graph and
+    * corpus, v30's d=1536 codebooks, every vector's ADC score
+    * (`c.ascore`, −ADC), the sketch entries and the 3 rounds scored by
+    * it, ending at `s3`. */
+  private def pqWalkCtes: String =
+    s"""${withGraph("v57_graph")},
+       |cb AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
+       |       FROM ${parquet("v30_codebooks")}),
+       |${corpus(parquet("v57_corpus"))},
+       |${heldOut("cw")},
+       |${pqAdcCtes("cw", dsub = 192)},
+       |c AS (SELECT cw.vec_id, cw.e, -adc.adc_dist AS ascore
+       |      FROM cw JOIN adc USING (vec_id)),
+       |$refDimSketchCtes,
+       |$refDimEntryCtes,
+       |${walkUnrollSql("", "g", "c", beam = 8, customEntries = true,
+                        score = "c.ascore")}""".stripMargin
+
+  /** The exact cosine rerank `rr` of the walk's `short` list to a
+    * ranked top-10, then [[hitRecall]] (v59, v62). */
+  private def rerankHits: String =
+    s"""rr AS (SELECT c.vec_id,
+       |              list_cosine_similarity(c.e, q.qe) AS score
+       |       FROM c JOIN short USING (vec_id), q
+       |       ORDER BY score DESC, vec_id LIMIT 10),
+       |top AS (SELECT vec_id, score,
+       |          row_number() OVER (ORDER BY score DESC, vec_id) AS rank
+       |        FROM rr),
+       |$hitRecall""".stripMargin
+
+  /** Per-anchor argmax on each side of τ = 0.4 over `scored` (anchor_id,
+    * cand, cos), ties to the smaller candidate, and the triplet rows
+    * (v36, v44; [[graft.operators.Ann.contrastiveTriplets]]). */
+  private val tripletArgmax: String =
+    """pos AS (
+      |  SELECT anchor_id, cand AS pos_id, cos AS pc,
+      |         row_number() OVER (PARTITION BY anchor_id
+      |           ORDER BY cos DESC, cand) AS rn
+      |  FROM scored WHERE cos >= 0.4),
+      |neg AS (
+      |  SELECT anchor_id, cand AS neg_id, cos AS ncos,
+      |         row_number() OVER (PARTITION BY anchor_id
+      |           ORDER BY cos DESC, cand) AS rn
+      |  FROM scored WHERE cos < 0.4)
+      |SELECT p.anchor_id, p.pos_id, round(p.pc, 6) AS pos_cos,
+      |       n.neg_id, round(n.ncos, 6) AS neg_cos
+      |FROM pos p JOIN neg n USING (anchor_id)
+      |WHERE p.rn = 1 AND n.rn = 1
+      |ORDER BY p.anchor_id""".stripMargin
+
+  /** The top-5 cosine vote over `sc` (vec_id, label, tid, tl, cos),
+    * ties by (votes DESC, label), and each test row's prediction
+    * (v42, v45). */
+  private val knnVote: String =
+    """top AS (
+      |  SELECT * FROM (
+      |    SELECT *, row_number() OVER (PARTITION BY vec_id
+      |      ORDER BY cos DESC, tid) AS rn
+      |    FROM sc) WHERE rn <= 5),
+      |votes AS (
+      |  SELECT vec_id, label, tl, count(*) AS v
+      |  FROM top GROUP BY 1, 2, 3),
+      |pred AS (
+      |  SELECT vec_id, label, tl AS pred FROM (
+      |    SELECT vec_id, label, tl, row_number() OVER (
+      |      PARTITION BY vec_id ORDER BY v DESC, tl) AS rn
+      |    FROM votes) WHERE rn = 1)
+      |SELECT vec_id, CAST(label AS BIGINT) AS label,
+      |       CAST(pred AS BIGINT) AS pred, label = pred AS correct
+      |FROM pred ORDER BY vec_id""".stripMargin
 
   /** The LSM graph-serving replay (v48 and its streaming twin s23 —
     * identical semantics, different base-graph artifact): the
@@ -5937,10 +6202,8 @@ object VectorQueries {
     * exact full-corpus answer.
     */
   private[queries] def graphLsmOracleSql(artifact: String): String =
-    s"""WITH g AS (SELECT src, dst
-       |           FROM read_parquet('${Artifacts.oracleGlob(artifact)}')),
-       |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-       |      FROM embeddings),
+    s"""${withGraph(artifact)},
+       |${corpus("embeddings")},
        |q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
        |c AS (SELECT vec_id, e FROM v
        |      WHERE vec_id <> 0 AND vec_id % 10 <> 9),
@@ -5975,51 +6238,130 @@ object VectorQueries {
        |       dn.delta_scanned, r.recall_at_10
        |FROM h, wt, dn, r ORDER BY rank""".stripMargin
 
+  /** The SRP sketch of corpus `c` (vec_id, e) as CTEs: the sign planes
+    * ([[OracleSql.srpPlanes]]), the per-plane dots `d` and `out`
+    * (vec_id, `col`), the sign bits. */
+  private def srpSignCtes(planes: Int, out: String, col: String): String =
+    s"""${srpPlanes(planes, "c")},
+       |d AS (SELECT c.vec_id, sgm.j,
+       |        list_dot_product(c.e, sgm.sv) AS dot
+       |      FROM c, sgm),
+       |${signBits(out, col, "d")}""".stripMargin
+
+  /** The d=1536 SRP sketch replay shared by v57/v59 (CTEs jj, sgm, d,
+    * bk — expects `c` (vec_id, e)): 5 hyperplanes over all 1536
+    * components, bucket = sign bits. */
+  private val refDimSketchCtes: String = srpSignCtes(5, "bk", "bucket")
+
+  /** Per-bucket top-2 in-degree entries
+    * ([[graft.operators.Ann.topDegreeEntriesPerBucket]] replayed):
+    * `dg` (vec_id, deg), the in-degrees of graph `g`, and `en`
+    * (vec_id), the two highest-degree members of each bucket of `bk`
+    * (vec_id, bucket), ties to the smaller id. Continuation lines align
+    * under each CTE's opening parenthesis. */
+  private def bucketEntries(dg: String, en: String, g: String,
+                            bk: String): String = {
+    val d = " " * (dg.length + 5)
+    val e = " " * (en.length + 7)
+    s"""$dg AS (SELECT dst AS vec_id, count(*) AS deg FROM $g
+       |${d}GROUP BY dst),
+       |$en AS (SELECT vec_id FROM (
+       |${e}SELECT $bk.vec_id,
+       |$e       row_number() OVER (PARTITION BY $bk.bucket
+       |$e         ORDER BY $dg.deg DESC, $bk.vec_id) AS rn
+       |${e}FROM $bk JOIN $dg USING (vec_id)) WHERE rn <= 2)""".stripMargin
+  }
+
+  /** The v57/v59 entries: [[bucketEntries]] over `g` and `bk`. */
+  private val refDimEntryCtes: String = bucketEntries("dg", "en", "g", "bk")
+
+  /** The occupancy chooser `name` (b): the smallest bucket width whose
+    * size-biased load in `occ` (bucket_bits, size_biased) is at most
+    * 48, else 20. */
+  private def chooser(name: String, occ: String): String =
+    s"""$name AS (SELECT coalesce(min(bucket_bits)
+       |                 FILTER (WHERE size_biased <= 48.0), 20) AS b
+       |        FROM $occ)""".stripMargin
+
+  /** `${p}oc` (bucket_bits, size_biased), the size-biased load of each
+    * width in histogram `${p}hc` (bucket_bits, bucket, bn), and its
+    * [[chooser]] `${p}chc`. */
+  private def sizeBiasedChooser(p: String): String =
+    s"""${p}oc AS (SELECT bucket_bits,
+       |              round(CAST(sum(bn * bn) AS DOUBLE) / sum(bn), 4)
+       |                AS size_biased
+       |       FROM ${p}hc GROUP BY 1),
+       |${chooser(s"${p}chc", s"${p}oc")}""".stripMargin
+
+  /** The per-width histogram `${p}hc` of the fine sketches in `fb`
+    * (vec_id, fb) of the vectors in `members`, widths from `bb`, then
+    * [[sizeBiasedChooser]]. */
+  private def occupancyChooser(p: String, fb: String,
+                               members: String): String =
+    s"""${p}hc AS (SELECT bb.bucket_bits,
+       |              $fb.fb % CAST(2 ** bb.bucket_bits AS BIGINT)
+       |                AS bucket, count(*) AS bn
+       |       FROM $fb JOIN $members USING (vec_id), bb GROUP BY 1, 2),
+       |${sizeBiasedChooser(p)}""".stripMargin
+
+  /** The near-dup pair rule's FROM/WHERE tail for `pr`: each vector
+    * `m` paired with every smaller id `nn` of the same fine bucket in
+    * `fb`, kept at cosine >= `tau` over corpus `c`. */
+  private def nearDupPairsFrom(tau: String): String =
+    s"""       FROM fb f1 JOIN fb f2
+       |         ON f1.fb = f2.fb AND f2.vec_id < f1.vec_id
+       |       JOIN c cm ON cm.vec_id = f1.vec_id
+       |       JOIN c cn ON cn.vec_id = f2.vec_id
+       |       WHERE list_cosine_similarity(cm.e, cn.e) >= $tau)""".stripMargin
+
+  /** The near-dup tier's serve replay shared by v76 and v78, over `c`,
+    * `q`, `fb` and the pair relation `pr` (m, nn): the one-hop rep
+    * `oh`, three pointer jumps `o1`..`o3` (chains up to 8), the kept
+    * reps, the collapsed histogram and chooser, the chosen buckets,
+    * entries, the 3-round walk over the persisted rep graph, the
+    * member expansion `mem`, its exact rerank `resc` and `ex`. */
+  private def nearDupServeCtes: String =
+    s"""oh AS (SELECT m AS id, min(nn) AS rep FROM pr GROUP BY m),
+       |o1 AS (SELECT a.id, coalesce(b.rep, a.rep) AS rep
+       |       FROM oh a LEFT JOIN oh b ON a.rep = b.id),
+       |o2 AS (SELECT a.id, coalesce(b.rep, a.rep) AS rep
+       |       FROM o1 a LEFT JOIN o1 b ON a.rep = b.id),
+       |o3 AS (SELECT a.id, coalesce(b.rep, a.rep) AS rep
+       |       FROM o2 a LEFT JOIN o2 b ON a.rep = b.id),
+       |keep AS (SELECT c.vec_id FROM c LEFT JOIN oh ON oh.id = c.vec_id
+       |         WHERE oh.id IS NULL),
+       |rp AS (SELECT vec_id AS id, vec_id AS rep FROM keep
+       |       UNION ALL SELECT id, rep FROM o3),
+       |ck AS (SELECT c.vec_id, c.e FROM c JOIN keep USING (vec_id)),
+       |bb AS (SELECT unnest(range(3, 21)) AS bucket_bits),
+       |${occupancyChooser("", "fb", "keep")},
+       |bk AS (SELECT fb.vec_id,
+       |         fb.fb % CAST(2 ** (SELECT b FROM chc) AS BIGINT)
+       |           AS bucket FROM fb JOIN keep USING (vec_id)),
+       |g AS (SELECT src, dst
+       |      FROM ${parquet("v76_graph")}),
+       |${bucketEntries("dg", "nen", "g", "bk")},
+       |${walkUnrollSql("n", "g", "ck", beam = 8, customEntries = true)},
+       |ntop AS (SELECT vec_id FROM ns3 ORDER BY score DESC, vec_id
+       |         LIMIT 10),
+       |mem AS (SELECT rp.id AS vec_id FROM rp
+       |        JOIN ntop ON rp.rep = ntop.vec_id),
+       |resc AS (SELECT c.vec_id FROM c JOIN mem USING (vec_id), q
+       |         ORDER BY list_cosine_similarity(c.e, q.qe) DESC,
+       |           c.vec_id
+       |         LIMIT 10),
+       |$exactTop10""".stripMargin
+
   /** The v43-shape beam walk (graph-derived entries — the 4 highest
     * in-degree nodes, [[Ann.topDegreeEntries]]'s aggregate replayed in
     * SQL — beam 8, 3 rounds) unrolled as a prefixed CTE block — `p`
     * namespaces the round CTEs so one oracle can replay TWO walks over
     * different (graph, corpus) pairs (the v49 compaction fold walks
     * both the compacted and the base graph). Ends at `${p}s3`, the
-    * final scored visited set.
+    * final scored visited set. With `customEntries = true` the
+    * `${p}en` CTE is NOT emitted — the caller supplies its own entry
+    * CTE of that name upstream (v55's per-routed-bucket entry rule).
     */
-  /** With `customEntries = true` the `${p}en` CTE is NOT emitted — the
-    * caller supplies its own entry CTE of that name upstream (v55's
-    * per-routed-bucket entry rule). */
-  /** The d=1536 SRP sketch replay shared by v57/v59 (CTEs jj, d, bk —
-    * expects `c` (vec_id, e)): 5 hyperplanes over all 1536 components,
-    * bucket = sign bits. */
-  private val refDimSketchCtes: String =
-    """jj AS (SELECT unnest(range(0, 5)) AS j),
-      |sgm AS (SELECT jj.j,
-      |         list(CASE WHEN CAST(concat('0x', substring(
-      |                md5(concat('srp:', jj.j, ':', ix.i)), 1, 15))
-      |                AS BIGINT)
-      |               % 2 = 1 THEN 1.0 ELSE -1.0 END
-      |              ORDER BY ix.i) AS sv
-      |        FROM jj, (SELECT unnest(range(0,
-      |          (SELECT max(len(e)) FROM c))) AS i) ix
-      |        GROUP BY jj.j),
-      |d AS (SELECT c.vec_id, sgm.j,
-      |        list_dot_product(c.e, sgm.sv) AS dot
-      |      FROM c, sgm),
-      |bk AS (SELECT vec_id,
-      |         CAST(sum(CASE WHEN dot > 0 THEN CAST(2 ** j AS BIGINT)
-      |                       ELSE 0 END) AS BIGINT) AS bucket
-      |       FROM d GROUP BY vec_id)""".stripMargin
-
-  /** Per-bucket top-2 in-degree entries (CTEs dg, en — expects `g`
-    * (src, dst) and `bk`), [[graft.operators.Ann.topDegreeEntriesPerBucket]]
-    * replayed. Shared by v57/v59. */
-  private val refDimEntryCtes: String =
-    """dg AS (SELECT dst AS vec_id, count(*) AS deg FROM g
-      |       GROUP BY dst),
-      |en AS (SELECT vec_id FROM (
-      |         SELECT bk.vec_id,
-      |                row_number() OVER (PARTITION BY bk.bucket
-      |                  ORDER BY dg.deg DESC, bk.vec_id) AS rn
-      |         FROM bk JOIN dg USING (vec_id)) WHERE rn <= 2)""".stripMargin
-
   private def walkUnrollSql(p: String, g: String, c: String,
                             beam: Int = 8,
                             customEntries: Boolean = false,
@@ -6077,18 +6419,12 @@ object VectorQueries {
        |                AS bucket, count(*) AS bn
        |       FROM fb JOIN ${p}keep USING (vec_id), bb
        |       GROUP BY 1, 2),
-       |${p}oc AS (SELECT bucket_bits,
-       |              round(CAST(sum(bn * bn) AS DOUBLE) / sum(bn), 4)
-       |                AS size_biased
-       |       FROM ${p}hc GROUP BY 1),
-       |${p}chc AS (SELECT coalesce(min(bucket_bits)
-       |                 FILTER (WHERE size_biased <= 48.0), 20) AS b
-       |        FROM ${p}oc),
+       |${sizeBiasedChooser(p)},
        |${p}bk AS (SELECT fb.vec_id,
        |         fb.fb % CAST(2 ** (SELECT b FROM ${p}chc) AS BIGINT)
        |           AS bucket FROM fb JOIN ${p}keep USING (vec_id)),
        |${p}g AS (SELECT src, dst
-       |      FROM read_parquet('${Artifacts.oracleGlob(s"v79_graph_t$tp")}')),
+       |      FROM ${parquet(s"v79_graph_t$tp")}),
        |${p}dg AS (SELECT dst AS vec_id, count(*) AS deg FROM ${p}g
        |       GROUP BY dst),
        |${p}en AS (SELECT vec_id FROM (
@@ -6142,17 +6478,7 @@ object VectorQueries {
        |       ORDER BY list_cosine_similarity(va.e, qf.qe) DESC,
        |         va.vec_id
        |       LIMIT 10),
-       |${p}hc AS (SELECT bb.bucket_bits,
-       |              fbv.fb % CAST(2 ** bb.bucket_bits AS BIGINT)
-       |                AS bucket, count(*) AS bn
-       |       FROM fbv JOIN ${p}cs USING (vec_id), bb GROUP BY 1, 2),
-       |${p}oc AS (SELECT bucket_bits,
-       |              round(CAST(sum(bn * bn) AS DOUBLE) / sum(bn), 4)
-       |                AS size_biased
-       |       FROM ${p}hc GROUP BY 1),
-       |${p}chc AS (SELECT coalesce(min(bucket_bits)
-       |                 FILTER (WHERE size_biased <= 48.0), 20) AS b
-       |        FROM ${p}oc)""".stripMargin
+       |${occupancyChooser(p, "fbv", s"${p}cs")}""".stripMargin
   }
 
   /** v80's per-snapshot output row over [[v80SnapCtes]]'s frames. */
@@ -6224,12 +6550,6 @@ object VectorQueries {
     (s0 +: steps).mkString(",\n")
   }
 
-  /** DuckDB oracles. `embeddings`/`documents` resolve to the same
-    * parquet. A `def`, not a `val`: the v14/v16/v22 entries interpolate
-    * [[Artifacts.oracleGlob]], which resolves to the corpus the queries
-    * actually ran against — Verify dumps `oracleSql` AFTER running the
-    * queries, so the glob matches the run.
-    */
   /** v74's width-keyed prefix-walk replay for ONE variant — expects
     * CTEs `g`, `en`, `wd` plus the variant's corpus `$c` (vec_id, e)
     * and query `$q` (qe); emits ${p}cp/${p}qp/${p}en4/${p}g4/
@@ -6297,27 +6617,14 @@ object VectorQueries {
   private[queries] def driftTableOracle(extraCtes: String,
                                         extraCols: String,
                                         extraFrom: String): String =
-    s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |           FROM read_parquet('${Artifacts.oracleGlob("v71_corpus")}')),
+    s"""${withCorpus(parquet("v71_corpus"))},
          |c AS (SELECT vec_id, vec_id % 1000 AS k, e FROM v
          |      WHERE vec_id != 1000),
-         |jj AS (SELECT unnest(range(0, 20)) AS j),
-         |sgm AS (SELECT jj.j,
-         |         list(CASE WHEN CAST(concat('0x', substring(
-         |                md5(concat('srp:', jj.j, ':', ix.i)), 1, 15))
-         |                AS BIGINT)
-         |               % 2 = 1 THEN 1.0 ELSE -1.0 END
-         |              ORDER BY ix.i) AS sv
-         |        FROM jj, (SELECT unnest(range(0,
-         |          (SELECT max(len(e)) FROM c))) AS i) ix
-         |        GROUP BY jj.j),
+         |${srpPlanes(20, "c")},
          |d AS (SELECT c.vec_id, c.k, sgm.j,
          |        list_dot_product(c.e, sgm.sv) AS dot
          |      FROM c, sgm),
-         |fb AS (SELECT vec_id, k,
-         |         CAST(sum(CASE WHEN dot > 0 THEN CAST(2 ** j AS BIGINT)
-         |                       ELSE 0 END) AS BIGINT) AS fb
-         |       FROM d GROUP BY vec_id, k),
+         |${signBits("fb", "fb", "d", key = "vec_id, k")},
          |st AS (SELECT * FROM (VALUES (0, 40), (1, 80), (2, 160),
          |                             (3, 320)) AS t(step, lim)),
          |bb AS (SELECT unnest(range(3, 21)) AS bucket_bits),
@@ -6351,31 +6658,23 @@ object VectorQueries {
          |  AND oc.bucket_bits = ch.cb AND n.step = st.step
          |ORDER BY step""".stripMargin
 
+  /** DuckDB oracles. `embeddings`/`documents` resolve to the same
+    * parquet. A `def`: the artifact globs resolve at dump time
+    * ([[OracleSql]]). */
   def oracles: Map[String, String] = Map(
     // the walk replay: read the SAME persisted graph, re-derive the
     // top-degree entries, unroll the three beam rounds (score → top-8
     // beam → neighbor expansion → re-score), then top-10, hit-vs-exact
     // and the visited-set size
     "v43_graph_ann" ->
-      s"""WITH g AS (SELECT src, dst
-         |           FROM read_parquet('${Artifacts.oracleGlob("v43_graph")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM embeddings),
+      s"""${withGraph("v43_graph")},
+         |${corpus("embeddings")},
          |q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
          |c AS (SELECT vec_id, e FROM v WHERE vec_id <> 0),
          |${walkUnrollSql("", "g", "c")},
          |t AS (SELECT count(*) AS nodes_touched FROM s3),
-         |ex AS (SELECT c.vec_id FROM c, q
-         |       ORDER BY list_cosine_similarity(c.e, q.qe) DESC, c.vec_id
-         |       LIMIT 10),
-         |top AS (SELECT vec_id, score,
-         |          row_number() OVER (ORDER BY score DESC, vec_id) AS rank
-         |        FROM s3 ORDER BY score DESC, vec_id LIMIT 10),
-         |h AS (SELECT top.rank, top.vec_id, top.score,
-         |        CASE WHEN ex.vec_id IS NULL THEN 0 ELSE 1 END AS hit
-         |      FROM top LEFT JOIN ex USING (vec_id)),
-         |r AS (SELECT round(CAST(sum(hit) AS DOUBLE) / 10.0, 6)
-         |        AS recall_at_10 FROM h)
+         |$exactTop10,
+         |${rankedHits("s3")}
          |SELECT CAST(h.rank AS BIGINT) AS rank, h.vec_id,
          |       round(h.score, 6) AS score, CAST(h.hit AS BIGINT) AS hit,
          |       t.nodes_touched, r.recall_at_10
@@ -6388,10 +6687,8 @@ object VectorQueries {
     // beam width (`r <= query_id` is each width's own window limit),
     // three rounds, then per-width top-10 recall + visited-set size
     "v50_beam_sweep" ->
-      s"""WITH g AS (SELECT src, dst
-         |           FROM read_parquet('${Artifacts.oracleGlob("v50_graph")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM embeddings),
+      s"""${withGraph("v50_graph")},
+         |${corpus("embeddings")},
          |qv AS (SELECT e AS qe FROM v WHERE vec_id = 0),
          |q AS (SELECT CAST(b.beam AS BIGINT) AS query_id, qv.qe
          |      FROM (VALUES (2), (4), (8), (16)) b(beam), qv),
@@ -6457,8 +6754,7 @@ object VectorQueries {
     // graph (traversal unfiltered), then the predicate cuts the
     // visited set before top-10; recall vs the exact FILTERED scan
     "v51_graph_filtered" ->
-      s"""WITH g AS (SELECT src, dst
-         |           FROM read_parquet('${Artifacts.oracleGlob("v51_graph")}')),
+      s"""${withGraph("v51_graph")},
          |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e, label
          |      FROM embeddings),
          |q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
@@ -6471,14 +6767,7 @@ object VectorQueries {
          |ex AS (SELECT c.vec_id FROM c, q WHERE c.label < 5
          |       ORDER BY list_cosine_similarity(c.e, q.qe) DESC, c.vec_id
          |       LIMIT 10),
-         |top AS (SELECT vec_id, score,
-         |          row_number() OVER (ORDER BY score DESC, vec_id) AS rank
-         |        FROM pv ORDER BY score DESC, vec_id LIMIT 10),
-         |h AS (SELECT top.rank, top.vec_id, top.score,
-         |        CASE WHEN ex.vec_id IS NULL THEN 0 ELSE 1 END AS hit
-         |      FROM top LEFT JOIN ex USING (vec_id)),
-         |r AS (SELECT round(CAST(sum(hit) AS DOUBLE) / 10.0, 6)
-         |        AS recall_at_10 FROM h)
+         |${rankedHits("pv")}
          |SELECT CAST(h.rank AS BIGINT) AS rank, h.vec_id,
          |       round(h.score, 6) AS score, CAST(h.hit AS BIGINT) AS hit,
          |       t.nodes_touched, np.passed_visited, r.recall_at_10
@@ -6489,11 +6778,10 @@ object VectorQueries {
     // and the three freshness numbers, all in SQL
     "v49_graph_compact" ->
       s"""WITH gc AS (SELECT src, dst
-         |           FROM read_parquet('${Artifacts.oracleGlob("v49_graph")}')),
+         |           FROM ${parquet("v49_graph")}),
          |gb AS (SELECT src, dst
-         |       FROM read_parquet('${Artifacts.oracleGlob("v49_base_graph")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM embeddings),
+         |       FROM ${parquet("v49_base_graph")}),
+         |${corpus("embeddings")},
          |q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
          |cf AS (SELECT vec_id, e FROM v WHERE vec_id <> 0),
          |cb AS (SELECT vec_id, e FROM v
@@ -6539,10 +6827,8 @@ object VectorQueries {
     // rounds with PARTITION BY query_id windows for the per-query
     // beams, then per-query top-5 + visited-set size
     "v47_graph_ann_batch" ->
-      s"""WITH g AS (SELECT src, dst
-         |           FROM read_parquet('${Artifacts.oracleGlob("v47_graph")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM embeddings),
+      s"""${withGraph("v47_graph")},
+         |${corpus("embeddings")},
          |q AS (SELECT vec_id AS query_id, e AS qe FROM v
          |      WHERE vec_id < 8),
          |c AS (SELECT vec_id, e FROM v WHERE vec_id >= 8),
@@ -6587,7 +6873,7 @@ object VectorQueries {
     // per-anchor argmax each side of τ — the v36 mirror over the
     // bucketed candidate set instead of all pairs
     "v44_triplet_shortlist" ->
-      s"""WITH $srpSketch16Ctes,
+      s"""${withSrpSketch(16)},
          |p AS (SELECT anchor_id, qe,
          |        unnest([qb, xor(qb, 1), xor(qb, 2), xor(qb, 4),
          |                xor(qb, 8)]) AS bucket
@@ -6598,26 +6884,12 @@ object VectorQueries {
          |  SELECT p.anchor_id, i.cand,
          |         list_cosine_similarity(i.e, p.qe) AS cos
          |  FROM i JOIN p USING (bucket) WHERE p.anchor_id <> i.cand),
-         |pos AS (
-         |  SELECT anchor_id, cand AS pos_id, cos AS pc,
-         |         row_number() OVER (PARTITION BY anchor_id
-         |           ORDER BY cos DESC, cand) AS rn
-         |  FROM scored WHERE cos >= 0.4),
-         |neg AS (
-         |  SELECT anchor_id, cand AS neg_id, cos AS ncos,
-         |         row_number() OVER (PARTITION BY anchor_id
-         |           ORDER BY cos DESC, cand) AS rn
-         |  FROM scored WHERE cos < 0.4)
-         |SELECT p.anchor_id, p.pos_id, round(p.pc, 6) AS pos_cos,
-         |       n.neg_id, round(n.ncos, 6) AS neg_cos
-         |FROM pos p JOIN neg n USING (anchor_id)
-         |WHERE p.rn = 1 AND n.rn = 1
-         |ORDER BY p.anchor_id""".stripMargin,
+         |$tripletArgmax""".stripMargin,
     // v42's vote replayed over the bucket-routed candidate set: train
     // rows keep their one sketch bucket, test rows fan out to their
     // multi-probe buckets, candidates are the bucket equi-join
     "v45_knn_classify_shortlist" ->
-      s"""WITH $srpSketch16Ctes,
+      s"""${withSrpSketch(16)},
          |tr AS (SELECT s.vec_id AS tid, s.e AS te, emb.label AS tl,
          |              s.sketch % 16 AS bucket
          |       FROM s JOIN embeddings emb ON s.vec_id = emb.vec_id
@@ -6632,40 +6904,18 @@ object VectorQueries {
          |sc AS (SELECT tep.vec_id, tep.label, tr.tid, tr.tl,
          |         list_cosine_similarity(tep.e, tr.te) AS cos
          |       FROM tep JOIN tr USING (bucket)),
-         |top AS (
-         |  SELECT * FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id
-         |      ORDER BY cos DESC, tid) AS rn
-         |    FROM sc) WHERE rn <= 5),
-         |votes AS (
-         |  SELECT vec_id, label, tl, count(*) AS v
-         |  FROM top GROUP BY 1, 2, 3),
-         |pred AS (
-         |  SELECT vec_id, label, tl AS pred FROM (
-         |    SELECT vec_id, label, tl, row_number() OVER (
-         |      PARTITION BY vec_id ORDER BY v DESC, tl) AS rn
-         |    FROM votes) WHERE rn = 1)
-         |SELECT vec_id, CAST(label AS BIGINT) AS label,
-         |       CAST(pred AS BIGINT) AS pred, label = pred AS correct
-         |FROM pred ORDER BY vec_id""".stripMargin,
+         |$knnVote""".stripMargin,
     // replays IVF on the PERSISTED k-means centroids: nearest-centroid
     // assignment, probe ranking by centroid distance, per-probe-width
     // top-10, recall vs the exact scan — training stayed in Spark, the
     // claim is hash-checked
     "v14_ivf_recall" ->
       s"""WITH cent AS (SELECT centroid_id, CAST(centroid AS DOUBLE[]) AS c
-         |              FROM read_parquet('${Artifacts.oracleGlob("v14_centroids")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM embeddings),
+         |              FROM ${parquet("v14_centroids")}),
+         |${corpus("embeddings")},
          |q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
          |corpus AS (SELECT vec_id, e FROM v WHERE vec_id <> 0),
-         |assigned AS (
-         |  SELECT vec_id, e, centroid_id FROM (
-         |    SELECT co.vec_id, co.e, cent.centroid_id,
-         |           row_number() OVER (PARTITION BY co.vec_id
-         |             ORDER BY list_distance(co.e, cent.c),
-         |                      cent.centroid_id) AS rn
-         |    FROM corpus co, cent) WHERE rn = 1),
+         |${nearestCell("c")},
          |cranks AS (
          |  SELECT centroid_id,
          |         row_number() OVER (ORDER BY list_distance(c, qe),
@@ -6695,10 +6945,8 @@ object VectorQueries {
     // order — the kernel's accumulation order), top-10 / shortlist-100 /
     // exact rerank, recall vs the exact L2 scan
     "v16_pq_recall" ->
-      s"""WITH cb AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |            FROM read_parquet('${Artifacts.oracleGlob("v16_codebooks")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM embeddings),
+      s"""${withCodebooks("v16_codebooks")},
+         |${corpus("embeddings")},
          |q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
          |corpus AS (SELECT vec_id, e FROM v WHERE vec_id <> 0),
          |${pqAdcCtes("corpus")},
@@ -6724,54 +6972,16 @@ object VectorQueries {
     // seeded cells (v07's CTE), probe-4 routing, code-only ADC within
     // the probed cells, shortlist-50, exact L2 rerank to top-10
     "v22_ivfpq_search" ->
-      s"""WITH cb AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |            FROM read_parquet('${Artifacts.oracleGlob("v22_codebooks")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM embeddings),
-         |q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
-         |cent AS (SELECT vec_id AS centroid_id, e AS ctr0 FROM v
-         |         ORDER BY vec_id LIMIT 16),
-         |corpus AS (SELECT vec_id, e FROM v WHERE vec_id >= 16),
-         |assigned AS (
-         |  SELECT vec_id, e, centroid_id FROM (
-         |    SELECT co.vec_id, co.e, cent.centroid_id,
-         |           row_number() OVER (PARTITION BY co.vec_id
-         |             ORDER BY list_distance(co.e, cent.ctr0),
-         |                      cent.centroid_id) AS rn
-         |    FROM corpus co, cent) WHERE rn = 1),
-         |probed AS (
-         |  SELECT centroid_id FROM cent, q
-         |  ORDER BY list_distance(ctr0, qe), centroid_id LIMIT 4),
-         |cand AS (
-         |  SELECT a.vec_id, a.e FROM assigned a JOIN probed
-         |  USING (centroid_id)),
-         |${pqAdcCtes("cand")},
-         |short AS (SELECT vec_id FROM adc ORDER BY adc_dist, vec_id LIMIT 50),
-         |res AS (
-         |  SELECT ca.vec_id, list_distance(ca.e, q.qe) AS d
-         |  FROM cand ca JOIN short USING (vec_id), q
-         |  ORDER BY d, ca.vec_id LIMIT 10)
-         |SELECT vec_id, round(d, 6) AS l2_dist FROM res
-         |ORDER BY vec_id""".stripMargin,
+      seededIvfPqOracle("v22_codebooks"),
     // v22's CTE chain parameterized by query id: probes, LUT, ADC,
     // shortlist and rerank all PARTITION BY query_id — the whole
     // 8-query batch replayed per query
     "v33_batched_ivfpq" ->
-      s"""WITH cb AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |            FROM read_parquet('${Artifacts.oracleGlob("v33_codebooks")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM embeddings),
+      s"""${withCodebooks("v33_codebooks")},
+         |${corpus("embeddings")},
          |q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < 8),
-         |cent AS (SELECT vec_id AS centroid_id, e AS ctr0 FROM v
-         |         ORDER BY vec_id LIMIT 16),
-         |corpus AS (SELECT vec_id, e FROM v WHERE vec_id >= 16),
-         |assigned AS (
-         |  SELECT vec_id, e, centroid_id FROM (
-         |    SELECT co.vec_id, co.e, cent.centroid_id,
-         |           row_number() OVER (PARTITION BY co.vec_id
-         |             ORDER BY list_distance(co.e, cent.ctr0),
-         |                      cent.centroid_id) AS rn
-         |    FROM corpus co, cent) WHERE rn = 1),
+         |$seededCells,
+         |${nearestCell("ctr0")},
          |probed AS (
          |  SELECT query_id, centroid_id FROM (
          |    SELECT q.query_id, cent.centroid_id,
@@ -6836,8 +7046,7 @@ object VectorQueries {
     // the same filter-during-search the Spark plan applies on the
     // attribute-carrying index
     "v29_filtered_ivfpq" ->
-      s"""WITH cb AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |            FROM read_parquet('${Artifacts.oracleGlob("v29_codebooks")}')),
+      s"""${withCodebooks("v29_codebooks")},
          |v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
          |      FROM embeddings),
          |q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
@@ -6870,35 +7079,7 @@ object VectorQueries {
     // partitioned by centroid_id, probed via static pruning) — the
     // answer must not
     "v26_ivfpq_pruned" ->
-      s"""WITH cb AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |            FROM read_parquet('${Artifacts.oracleGlob("v26_codebooks")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM embeddings),
-         |q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
-         |cent AS (SELECT vec_id AS centroid_id, e AS ctr0 FROM v
-         |         ORDER BY vec_id LIMIT 16),
-         |corpus AS (SELECT vec_id, e FROM v WHERE vec_id >= 16),
-         |assigned AS (
-         |  SELECT vec_id, e, centroid_id FROM (
-         |    SELECT co.vec_id, co.e, cent.centroid_id,
-         |           row_number() OVER (PARTITION BY co.vec_id
-         |             ORDER BY list_distance(co.e, cent.ctr0),
-         |                      cent.centroid_id) AS rn
-         |    FROM corpus co, cent) WHERE rn = 1),
-         |probed AS (
-         |  SELECT centroid_id FROM cent, q
-         |  ORDER BY list_distance(ctr0, qe), centroid_id LIMIT 4),
-         |cand AS (
-         |  SELECT a.vec_id, a.e FROM assigned a JOIN probed
-         |  USING (centroid_id)),
-         |${pqAdcCtes("cand")},
-         |short AS (SELECT vec_id FROM adc ORDER BY adc_dist, vec_id LIMIT 50),
-         |res AS (
-         |  SELECT ca.vec_id, list_distance(ca.e, q.qe) AS d
-         |  FROM cand ca JOIN short USING (vec_id), q
-         |  ORDER BY d, ca.vec_id LIMIT 10)
-         |SELECT vec_id, round(d, 6) AS l2_dist FROM res
-         |ORDER BY vec_id""".stripMargin,
+      seededIvfPqOracle("v26_codebooks"),
     // the reference's OWN 1536-dim float32 blobs, decoded from raw
     // bytes by an independent IEEE754 implementation (hex → u32 →
     // sign/exponent/mantissa, exact in double arithmetic incl.
@@ -6906,7 +7087,7 @@ object VectorQueries {
     // full-dimension kernel pinned against the Spark side
     "v27_ref_dim_search" ->
       s"""WITH h AS (SELECT doc_id, hex(vector_blob) AS hx
-         |           FROM read_parquet('${Artifacts.oracleGlob("v27_refblobs")}')),
+         |           FROM ${parquet("v27_refblobs")}),
          |bytes AS (
          |  SELECT doc_id, i,
          |    CAST(concat('0x', substr(hx, CAST(8*i+1 AS INT), 2)) AS BIGINT)
@@ -6938,18 +7119,11 @@ object VectorQueries {
     // top-10 recall — the clustered-data pruning claim, all in SQL
     "v28_clustered_recall" ->
       s"""WITH cent AS (SELECT centroid_id, CAST(centroid AS DOUBLE[]) AS c
-         |              FROM read_parquet('${Artifacts.oracleGlob("v28_centroids")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM read_parquet('${Artifacts.oracleGlob("v28_corpus")}')),
+         |              FROM ${parquet("v28_centroids")}),
+         |${corpus(parquet("v28_corpus"))},
          |q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < 8),
          |corpus AS (SELECT vec_id, e FROM v WHERE vec_id >= 8),
-         |assigned AS (
-         |  SELECT vec_id, e, centroid_id FROM (
-         |    SELECT co.vec_id, co.e, cent.centroid_id,
-         |           row_number() OVER (PARTITION BY co.vec_id
-         |             ORDER BY list_distance(co.e, cent.c),
-         |                      cent.centroid_id) AS rn
-         |    FROM corpus co, cent) WHERE rn = 1),
+         |${nearestCell("c")},
          |cranks AS (
          |  SELECT query_id, centroid_id,
          |         row_number() OVER (PARTITION BY query_id
@@ -7049,23 +7223,11 @@ object VectorQueries {
         |SELECT vec_id, score FROM s WHERE score >= 0.2
         |ORDER BY vec_id""".stripMargin,
     "v01_knn_topk" ->
-      """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-        |top AS (
-        |  SELECT e.vec_id,
-        |         list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-        |                                CAST(q.qe AS DOUBLE[])) AS score
-        |  FROM embeddings e, q WHERE e.vec_id <> 0
-        |  ORDER BY score DESC, e.vec_id LIMIT 10)
-        |SELECT vec_id, round(score, 6) AS score FROM top ORDER BY vec_id""".stripMargin,
+      s"""${exactKnnTop(10, "e.vec_id")}
+         |SELECT vec_id, round(score, 6) AS score FROM top ORDER BY vec_id""".stripMargin,
     "v02_knn_enrich" ->
-      """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-        |top AS (
-        |  SELECT e.vec_id, e.label,
-        |         list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-        |                                CAST(q.qe AS DOUBLE[])) AS score
-        |  FROM embeddings e, q WHERE e.vec_id <> 0
-        |  ORDER BY score DESC, e.vec_id LIMIT 10)
-        |SELECT vec_id, label, round(score, 6) AS score FROM top ORDER BY vec_id""".stripMargin,
+      s"""${exactKnnTop(10, "e.vec_id, e.label")}
+         |SELECT vec_id, label, round(score, 6) AS score FROM top ORDER BY vec_id""".stripMargin,
     "v03_grouped_topk" ->
       """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
         |scored AS (
@@ -7081,53 +7243,32 @@ object VectorQueries {
         |SELECT label, rank, vec_id, round(score, 6) AS score
         |FROM ranked WHERE rank <= 3 ORDER BY label, rank""".stripMargin,
     "v04_search_context" ->
-      """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-        |top AS (
-        |  SELECT e.vec_id,
-        |         list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-        |                                CAST(q.qe AS DOUBLE[])) AS score
-        |  FROM embeddings e, q WHERE e.vec_id <> 0
-        |  ORDER BY score DESC, e.vec_id LIMIT 5),
-        |enriched AS (
-        |  SELECT t.vec_id, t.score, substring(d.text, 1, 30) AS content
-        |  FROM top t LEFT JOIN documents d ON d.doc_id = t.vec_id),
-        |ranked AS (
-        |  SELECT *, row_number() OVER (ORDER BY score DESC, vec_id) AS rank
-        |  FROM enriched WHERE content IS NOT NULL)
-        |SELECT CAST(0 AS BIGINT) AS query_id,
-        |       string_agg(rank || '. ' || content, chr(10) ORDER BY rank) AS context
-        |FROM ranked""".stripMargin,
+      s"""${exactKnnTop(5, "e.vec_id")},
+         |enriched AS (
+         |  SELECT t.vec_id, t.score, substring(d.text, 1, 30) AS content
+         |  FROM top t LEFT JOIN documents d ON d.doc_id = t.vec_id),
+         |ranked AS (
+         |  SELECT *, row_number() OVER (ORDER BY score DESC, vec_id) AS rank
+         |  FROM enriched WHERE content IS NOT NULL)
+         |SELECT CAST(0 AS BIGINT) AS query_id,
+         |       string_agg(rank || '. ' || content, chr(10) ORDER BY rank) AS context
+         |FROM ranked""".stripMargin,
     "v05_batch_search" -> batchHeapTopKOracle,
     // top-5 cosine vote with (votes DESC, label) ties ≡ the engine's
     // max(struct(votes, -label)) — mirror of knnClassify
     "v42_knn_classify" ->
-      """WITH tr AS (
-        |  SELECT vec_id AS tid, CAST(embedding AS DOUBLE[]) AS te,
-        |         label AS tl
-        |  FROM embeddings WHERE vec_id % 5 <> 0),
-        |te AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e, label
-        |  FROM embeddings WHERE vec_id % 5 = 0),
-        |sc AS (
-        |  SELECT te.vec_id, te.label, tr.tid, tr.tl,
-        |         list_cosine_similarity(te.e, tr.te) AS cos
-        |  FROM te, tr),
-        |top AS (
-        |  SELECT * FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY vec_id
-        |      ORDER BY cos DESC, tid) AS rn
-        |    FROM sc) WHERE rn <= 5),
-        |votes AS (
-        |  SELECT vec_id, label, tl, count(*) AS v
-        |  FROM top GROUP BY 1, 2, 3),
-        |pred AS (
-        |  SELECT vec_id, label, tl AS pred FROM (
-        |    SELECT vec_id, label, tl, row_number() OVER (
-        |      PARTITION BY vec_id ORDER BY v DESC, tl) AS rn
-        |    FROM votes) WHERE rn = 1)
-        |SELECT vec_id, CAST(label AS BIGINT) AS label,
-        |       CAST(pred AS BIGINT) AS pred, label = pred AS correct
-        |FROM pred ORDER BY vec_id""".stripMargin,
+      s"""WITH tr AS (
+         |  SELECT vec_id AS tid, CAST(embedding AS DOUBLE[]) AS te,
+         |         label AS tl
+         |  FROM embeddings WHERE vec_id % 5 <> 0),
+         |te AS (
+         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e, label
+         |  FROM embeddings WHERE vec_id % 5 = 0),
+         |sc AS (
+         |  SELECT te.vec_id, te.label, tr.tid, tr.tl,
+         |         list_cosine_similarity(te.e, tr.te) AS cos
+         |  FROM te, tr),
+         |$knnVote""".stripMargin,
     // per-subspace minimum distance to the PERSISTED codebooks ≡ the
     // encode kernel's chosen-code distance (argmin definition) —
     // mirror of pqDistortion at both geometries
@@ -7135,7 +7276,7 @@ object VectorQueries {
       s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
          |           FROM embeddings WHERE vec_id <> 0),
          |cb4 AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |  FROM read_parquet('${Artifacts.oracleGlob("v41_codebooks_m4")}')),
+         |  FROM ${parquet("v41_codebooks_m4")}),
          |b4 AS (
          |  SELECT va.vec_id, cb.j,
          |         min(list_sum(list_transform(range(0, 16), i ->
@@ -7145,7 +7286,7 @@ object VectorQueries {
          |              - cb.ctr[CAST(i + 1 AS INT)])))) AS d
          |  FROM v va, cb4 cb GROUP BY 1, 2),
          |cb16 AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |  FROM read_parquet('${Artifacts.oracleGlob("v41_codebooks_m16")}')),
+         |  FROM ${parquet("v41_codebooks_m16")}),
          |b16 AS (
          |  SELECT va.vec_id, cb.j,
          |         min(list_sum(list_transform(range(0, 4), i ->
@@ -7168,43 +7309,33 @@ object VectorQueries {
     // v20's sketch/shortlist/rerank chain with per-stage candidate
     // counts and recall vs the exact top-10 — mirror of retrievalFunnel
     "v40_retrieval_funnel" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-        |           FROM embeddings),
-        |s AS (SELECT vec_id, e,
-        |  CAST(list_sum(list_transform(range(0, 16), j ->
-        |    CASE WHEN list_sum(list_transform(range(0, len(e)), i ->
-        |        e[CAST(i + 1 AS INT)] *
-        |        (CASE WHEN CAST(concat('0x', substring(
-        |               md5(concat('srp:', j, ':', i)), 1, 15)) AS BIGINT)
-        |              % 2 = 1 THEN 1.0 ELSE -1.0 END))) > 0
-        |    THEN CAST(2 ** j AS BIGINT) ELSE 0 END)) AS BIGINT) AS sketch
-        |  FROM v),
-        |q AS (SELECT e AS qe, sketch AS qsketch FROM s WHERE vec_id = 0),
-        |exact AS (
-        |  SELECT vec_id FROM (
-        |    SELECT s.vec_id FROM s, q WHERE s.vec_id <> 0
-        |    ORDER BY list_cosine_similarity(s.e, q.qe) DESC, s.vec_id
-        |    LIMIT 10)),
-        |short AS (
-        |  SELECT s.vec_id, s.e, q.qe,
-        |         CAST(bit_count(xor(s.sketch, q.qsketch)) AS BIGINT)
-        |           AS hamming
-        |  FROM s, q WHERE s.vec_id <> 0
-        |  ORDER BY hamming, s.vec_id LIMIT 50),
-        |rr AS (
-        |  SELECT vec_id FROM short
-        |  ORDER BY list_cosine_similarity(e, qe) DESC, vec_id LIMIT 10),
-        |legs AS (
-        |  SELECT '1_full_index' AS stage, vec_id FROM v WHERE vec_id <> 0
-        |  UNION ALL SELECT '2_srp_shortlist', vec_id FROM short
-        |  UNION ALL SELECT '3_exact_rerank', vec_id FROM rr)
-        |SELECT l.stage, count(*) AS n_candidates,
-        |       CAST(sum(CASE WHEN x.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-        |            AS BIGINT) AS n_hits,
-        |       round(sum(CASE WHEN x.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-        |             / 10.0, 6) AS recall_at_10
-        |FROM legs l LEFT JOIN exact x ON x.vec_id = l.vec_id
-        |GROUP BY l.stage ORDER BY l.stage""".stripMargin,
+      s"""${withSrpSketch(16)},
+         |q AS (SELECT e AS qe, sketch AS qsketch FROM s WHERE vec_id = 0),
+         |exact AS (
+         |  SELECT vec_id FROM (
+         |    SELECT s.vec_id FROM s, q WHERE s.vec_id <> 0
+         |    ORDER BY list_cosine_similarity(s.e, q.qe) DESC, s.vec_id
+         |    LIMIT 10)),
+         |short AS (
+         |  SELECT s.vec_id, s.e, q.qe,
+         |         CAST(bit_count(xor(s.sketch, q.qsketch)) AS BIGINT)
+         |           AS hamming
+         |  FROM s, q WHERE s.vec_id <> 0
+         |  ORDER BY hamming, s.vec_id LIMIT 50),
+         |rr AS (
+         |  SELECT vec_id FROM short
+         |  ORDER BY list_cosine_similarity(e, qe) DESC, vec_id LIMIT 10),
+         |legs AS (
+         |  SELECT '1_full_index' AS stage, vec_id FROM v WHERE vec_id <> 0
+         |  UNION ALL SELECT '2_srp_shortlist', vec_id FROM short
+         |  UNION ALL SELECT '3_exact_rerank', vec_id FROM rr)
+         |SELECT l.stage, count(*) AS n_candidates,
+         |       CAST(sum(CASE WHEN x.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |            AS BIGINT) AS n_hits,
+         |       round(sum(CASE WHEN x.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |             / 10.0, 6) AS recall_at_10
+         |FROM legs l LEFT JOIN exact x ON x.vec_id = l.vec_id
+         |GROUP BY l.stage ORDER BY l.stage""".stripMargin,
     // the three index versions rebuilt from the source table with the
     // same membership rules — mirror of snapshotSearch (time-travel
     // reads ≡ filtered brute-force scans)
@@ -7260,9 +7391,7 @@ object VectorQueries {
         |GROUP BY t.width ORDER BY t.width""".stripMargin,
     // subword-hash token embeddings + late-interaction MaxSim —
     // mirror of TextSearch.maxSimSearch (round BEFORE the top-k rank)
-    "v37_maxsim_search" -> {
-      def h60(e: String) =
-        s"CAST(concat('0x', substring(md5($e), 1, 15)) AS BIGINT)"
+    "v37_maxsim_search" ->
       s"""WITH toks AS (
          |  SELECT DISTINCT doc_id,
          |         unnest(string_split_regex(trim(lower(text)), '\\s+')) AS w
@@ -7276,8 +7405,8 @@ object VectorQueries {
          |    i -> substring('<' || w || '>', i, 3))) AS g
          |  FROM allw),
          |sgn AS (
-         |  SELECT w, ${h60("g")} % 64 AS bucket,
-         |         CASE WHEN ${h60("concat('sign:', g)")} % 2 = 1
+         |  SELECT w, ${hash60("g")} % 64 AS bucket,
+         |         CASE WHEN ${hash60("concat('sign:', g)")} % 2 = 1
          |              THEN 1.0 ELSE -1.0 END AS s
          |  FROM g),
          |s AS (SELECT w, bucket, sum(s) AS v FROM sgn
@@ -7296,32 +7425,17 @@ object VectorQueries {
          |           FROM contrib GROUP BY 1),
          |top AS (SELECT doc_id, score FROM scored
          |        ORDER BY score DESC, doc_id LIMIT 10)
-         |SELECT doc_id, score FROM top ORDER BY doc_id""".stripMargin
-    },
+         |SELECT doc_id, score FROM top ORDER BY doc_id""".stripMargin,
     // per-anchor argmax on each side of the τ line over the directed
     // scored frame — mirror of Ann.contrastiveTriplets (rn=1 with
     // (cos DESC, cand) ties ≡ max(struct(cos, -cand)))
     "v36_triplet_mining" ->
-      """WITH scored AS (
-        |  SELECT a.vec_id AS anchor_id, b.vec_id AS cand,
-        |         list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |                                CAST(b.embedding AS DOUBLE[])) AS cos
-        |  FROM embeddings a, embeddings b WHERE a.vec_id <> b.vec_id),
-        |pos AS (
-        |  SELECT anchor_id, cand AS pos_id, cos AS pc,
-        |         row_number() OVER (PARTITION BY anchor_id
-        |           ORDER BY cos DESC, cand) AS rn
-        |  FROM scored WHERE cos >= 0.4),
-        |neg AS (
-        |  SELECT anchor_id, cand AS neg_id, cos AS ncos,
-        |         row_number() OVER (PARTITION BY anchor_id
-        |           ORDER BY cos DESC, cand) AS rn
-        |  FROM scored WHERE cos < 0.4)
-        |SELECT p.anchor_id, p.pos_id, round(p.pc, 6) AS pos_cos,
-        |       n.neg_id, round(n.ncos, 6) AS neg_cos
-        |FROM pos p JOIN neg n USING (anchor_id)
-        |WHERE p.rn = 1 AND n.rn = 1
-        |ORDER BY p.anchor_id""".stripMargin,
+      s"""WITH scored AS (
+         |  SELECT a.vec_id AS anchor_id, b.vec_id AS cand,
+         |         list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+         |                                CAST(b.embedding AS DOUBLE[])) AS cos
+         |  FROM embeddings a, embeddings b WHERE a.vec_id <> b.vec_id),
+         |$tripletArgmax""".stripMargin,
     "v06_near_dup_pairs" ->
       """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
         |       round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
@@ -7332,38 +7446,25 @@ object VectorQueries {
         |                             CAST(b.embedding AS DOUBLE[])) >= 0.4
         |ORDER BY id_a, id_b""".stripMargin,
     "v07_ivf_search" ->
-      """WITH c AS (SELECT vec_id AS centroid_id, embedding AS centroid
-        |           FROM embeddings ORDER BY vec_id LIMIT 16),
-        |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-        |assigned AS (
-        |  SELECT vec_id, embedding, centroid_id FROM (
-        |    SELECT e.vec_id, e.embedding, c.centroid_id,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |             ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]),
-        |                                    CAST(c.centroid AS DOUBLE[])),
-        |                      c.centroid_id) AS rn
-        |    FROM embeddings e, c WHERE e.vec_id >= 16) WHERE rn = 1),
-        |probed AS (
-        |  SELECT c.centroid_id FROM c, q
-        |  ORDER BY list_distance(CAST(c.centroid AS DOUBLE[]),
-        |                         CAST(q.qe AS DOUBLE[])), c.centroid_id
-        |  LIMIT 4),
-        |top AS (
-        |  SELECT a.vec_id,
-        |         list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |                                CAST(q.qe AS DOUBLE[])) AS score
-        |  FROM assigned a JOIN probed p USING (centroid_id), q
-        |  ORDER BY score DESC, a.vec_id LIMIT 10)
-        |SELECT vec_id, round(score, 6) AS score FROM top ORDER BY vec_id""".stripMargin,
+      s"""WITH c AS (SELECT vec_id AS centroid_id, embedding AS centroid
+         |           FROM embeddings ORDER BY vec_id LIMIT 16),
+         |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
+         |$seededAssigned,
+         |probed AS (
+         |  SELECT c.centroid_id FROM c, q
+         |  ORDER BY list_distance(CAST(c.centroid AS DOUBLE[]),
+         |                         CAST(q.qe AS DOUBLE[])), c.centroid_id
+         |  LIMIT 4),
+         |top AS (
+         |  SELECT a.vec_id,
+         |         list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+         |                                CAST(q.qe AS DOUBLE[])) AS score
+         |  FROM assigned a JOIN probed p USING (centroid_id), q
+         |  ORDER BY score DESC, a.vec_id LIMIT 10)
+         |SELECT vec_id, round(score, 6) AS score FROM top ORDER BY vec_id""".stripMargin,
     "v09_sql_knn" ->
-      """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-        |top AS (
-        |  SELECT e.vec_id,
-        |         list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-        |                                CAST(q.qe AS DOUBLE[])) AS score
-        |  FROM embeddings e, q WHERE e.vec_id <> 0
-        |  ORDER BY score DESC, e.vec_id LIMIT 7)
-        |SELECT vec_id, round(score, 6) AS score FROM top ORDER BY vec_id""".stripMargin,
+      s"""${exactKnnTop(7, "e.vec_id")}
+         |SELECT vec_id, round(score, 6) AS score FROM top ORDER BY vec_id""".stripMargin,
     "v10_batch_search_heap" -> batchHeapTopKOracle,
     "v13_hybrid_rrf" ->
       """WITH ws AS (
@@ -7486,7 +7587,7 @@ object VectorQueries {
     // hamming scan the pigeonhole join must match
     "v46_crossformat_neardup" ->
       s"""WITH ${TextQueries.imageMixedPxCtes("doc_id % 5 = 4",
-             Artifacts.oracleGlob("v46_jpeg_pixels"))},
+             "v46_jpeg_pixels")},
          |${TextQueries.imageHashFromPxCtes}
          |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
          |       CAST(bit_count(xor(a.ahash, b.ahash)) AS BIGINT)
@@ -7534,151 +7635,76 @@ object VectorQueries {
     // artifact instead of the seeded CTE; corpus = everything but the
     // query vector
     "v25_learned_ivfpq" ->
-      s"""WITH cb AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |            FROM read_parquet('${Artifacts.oracleGlob("v25_codebooks")}')),
+      s"""${withCodebooks("v25_codebooks")},
          |cent AS (SELECT centroid_id, CAST(centroid AS DOUBLE[]) AS ctr0
-         |         FROM read_parquet('${Artifacts.oracleGlob("v25_centroids")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM embeddings),
+         |         FROM ${parquet("v25_centroids")}),
+         |${corpus("embeddings")},
          |q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
          |corpus AS (SELECT vec_id, e FROM v WHERE vec_id <> 0),
-         |assigned AS (
-         |  SELECT vec_id, e, centroid_id FROM (
-         |    SELECT co.vec_id, co.e, cent.centroid_id,
-         |           row_number() OVER (PARTITION BY co.vec_id
-         |             ORDER BY list_distance(co.e, cent.ctr0),
-         |                      cent.centroid_id) AS rn
-         |    FROM corpus co, cent) WHERE rn = 1),
-         |probed AS (
-         |  SELECT centroid_id FROM cent, q
-         |  ORDER BY list_distance(ctr0, qe), centroid_id LIMIT 4),
-         |cand AS (
-         |  SELECT a.vec_id, a.e FROM assigned a JOIN probed
-         |  USING (centroid_id)),
-         |${pqAdcCtes("cand")},
-         |short AS (SELECT vec_id FROM adc ORDER BY adc_dist, vec_id LIMIT 50),
-         |res AS (
-         |  SELECT ca.vec_id, list_distance(ca.e, q.qe) AS d
-         |  FROM cand ca JOIN short USING (vec_id), q
-         |  ORDER BY d, ca.vec_id LIMIT 10)
-         |SELECT vec_id, round(d, 6) AS l2_dist FROM res
-         |ORDER BY vec_id""".stripMargin,
+         |${ivfPqSearchTail(4)}""".stripMargin,
     // the serverArray variant replay: prefix slice -> L2 shortlist ->
     // full cosine rerank, both rank windows in SQL
     "v31_prefix_search" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-        |           FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < 8),
-        |c AS (SELECT vec_id, e FROM v WHERE vec_id >= 8),
-        |pd AS (SELECT q.query_id, c.vec_id, c.e, q.qe,
-        |         list_distance(c.e[1:5], q.qe[1:5]) AS pd
-        |       FROM c, q),
-        |sl AS (SELECT * FROM (
-        |         SELECT *, row_number() OVER (PARTITION BY query_id
-        |                  ORDER BY pd, vec_id) AS prank
-        |         FROM pd) WHERE prank <= 32),
-        |r AS (SELECT query_id, vec_id,
-        |        list_cosine_similarity(e, qe) AS score FROM sl),
-        |ranked AS (
-        |  SELECT query_id, vec_id, score,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY score DESC, vec_id) AS rank
-        |  FROM r)
-        |SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id,
-        |       round(score, 6) AS score
-        |FROM ranked WHERE rank <= 5
-        |ORDER BY query_id, rank""".stripMargin,
+      s"""${withCorpus("embeddings")},
+         |q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < 8),
+         |c AS (SELECT vec_id, e FROM v WHERE vec_id >= 8),
+         |pd AS (SELECT q.query_id, c.vec_id, c.e, q.qe,
+         |         list_distance(c.e[1:5], q.qe[1:5]) AS pd
+         |       FROM c, q),
+         |sl AS (SELECT * FROM (
+         |         SELECT *, row_number() OVER (PARTITION BY query_id
+         |                  ORDER BY pd, vec_id) AS prank
+         |         FROM pd) WHERE prank <= 32),
+         |r AS (SELECT query_id, vec_id,
+         |        list_cosine_similarity(e, qe) AS score FROM sl),
+         |${rankedPerQuery("r")}
+         |SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id,
+         |       round(score, 6) AS score
+         |FROM ranked WHERE rank <= 5
+         |ORDER BY query_id, rank""".stripMargin,
     // v25's replay at reference geometry: 1536-dim artifacts, 8 coarse
     // cells probed 3 wide, dsub=192 ADC — the SAME CTE pipeline, only
     // the widths change
     "v30_ref_ivfpq" ->
-      s"""WITH cb AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |            FROM read_parquet('${Artifacts.oracleGlob("v30_codebooks")}')),
+      s"""${withCodebooks("v30_codebooks")},
          |cent AS (SELECT centroid_id, CAST(centroid AS DOUBLE[]) AS ctr0
-         |         FROM read_parquet('${Artifacts.oracleGlob("v30_centroids")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM read_parquet('${Artifacts.oracleGlob("v30_corpus")}')),
+         |         FROM ${parquet("v30_centroids")}),
+         |${corpus(parquet("v30_corpus"))},
          |q AS (SELECT e AS qe FROM v WHERE vec_id = 1000),
          |corpus AS (SELECT vec_id, e FROM v WHERE vec_id <> 1000),
-         |assigned AS (
-         |  SELECT vec_id, e, centroid_id FROM (
-         |    SELECT co.vec_id, co.e, cent.centroid_id,
-         |           row_number() OVER (PARTITION BY co.vec_id
-         |             ORDER BY list_distance(co.e, cent.ctr0),
-         |                      cent.centroid_id) AS rn
-         |    FROM corpus co, cent) WHERE rn = 1),
-         |probed AS (
-         |  SELECT centroid_id FROM cent, q
-         |  ORDER BY list_distance(ctr0, qe), centroid_id LIMIT 3),
-         |cand AS (
-         |  SELECT a.vec_id, a.e FROM assigned a JOIN probed
-         |  USING (centroid_id)),
-         |${pqAdcCtes("cand", dsub = 192)},
-         |short AS (SELECT vec_id FROM adc ORDER BY adc_dist, vec_id LIMIT 50),
-         |res AS (
-         |  SELECT ca.vec_id, list_distance(ca.e, q.qe) AS d
-         |  FROM cand ca JOIN short USING (vec_id), q
-         |  ORDER BY d, ca.vec_id LIMIT 10)
-         |SELECT vec_id, round(d, 6) AS l2_dist FROM res
-         |ORDER BY vec_id""".stripMargin,
+         |${ivfPqSearchTail(3, dsub = 192)}""".stripMargin,
     // the kNN-graph replay: same sketch CTE, every vector probes its
     // own + hamming-1 buckets, self-pairs excluded, per-vector top-3
     "v23_knn_graph" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-        |           FROM embeddings),
-        |s AS (SELECT vec_id, e,
-        |  CAST(list_sum(list_transform(range(0, 16), j ->
-        |    CASE WHEN list_sum(list_transform(range(0, len(e)), i ->
-        |        e[CAST(i + 1 AS INT)] *
-        |        (CASE WHEN CAST(concat('0x', substring(
-        |               md5(concat('srp:', j, ':', i)), 1, 15)) AS BIGINT)
-        |              % 2 = 1 THEN 1.0 ELSE -1.0 END))) > 0
-        |    THEN CAST(2 ** j AS BIGINT) ELSE 0 END)) AS BIGINT) AS sketch
-        |  FROM v),
-        |p AS (SELECT query_id, qe,
-        |        unnest([qb, xor(qb, 1), xor(qb, 2), xor(qb, 4),
-        |                xor(qb, 8)]) AS bucket
-        |      FROM (SELECT vec_id AS query_id, e AS qe,
-        |                   sketch % 16 AS qb FROM s)),
-        |i AS (SELECT vec_id, e, sketch % 16 AS bucket FROM s),
-        |cand AS (
-        |  SELECT p.query_id, i.vec_id,
-        |         list_cosine_similarity(i.e, p.qe) AS score
-        |  FROM i JOIN p USING (bucket) WHERE p.query_id <> i.vec_id),
-        |ranked AS (
-        |  SELECT query_id, vec_id, score,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY score DESC, vec_id) AS rank
-        |  FROM cand)
-        |SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id,
-        |       round(score, 6) AS score
-        |FROM ranked WHERE rank <= 3 AND query_id < 30
-        |ORDER BY query_id, rank""".stripMargin,
+      s"""${withSrpSketch(16)},
+         |p AS (SELECT query_id, qe,
+         |        unnest([qb, xor(qb, 1), xor(qb, 2), xor(qb, 4),
+         |                xor(qb, 8)]) AS bucket
+         |      FROM (SELECT vec_id AS query_id, e AS qe,
+         |                   sketch % 16 AS qb FROM s)),
+         |i AS (SELECT vec_id, e, sketch % 16 AS bucket FROM s),
+         |cand AS (
+         |  SELECT p.query_id, i.vec_id,
+         |         list_cosine_similarity(i.e, p.qe) AS score
+         |  FROM i JOIN p USING (bucket) WHERE p.query_id <> i.vec_id),
+         |${rankedPerQuery("cand")}
+         |SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id,
+         |       round(score, 6) AS score
+         |FROM ranked WHERE rank <= 3 AND query_id < 30
+         |ORDER BY query_id, rank""".stripMargin,
     // the cross-modal replay: store floats from the artifact (the
     // feature kernels are pinned by v34/i01), sketch -> probe buckets
     // -> one scored candidate set -> the 'all'+modality scoped ranking
     "v56_crossmodal" ->
       s"""WITH st AS (SELECT item_id, modality,
          |              CAST(embedding AS DOUBLE[]) AS e
-         |            FROM read_parquet('${Artifacts.oracleGlob("v56_store")}')),
+         |            FROM ${parquet("v56_store")}),
          |q AS (SELECT e AS qe FROM st WHERE item_id = 0),
          |s AS (SELECT item_id, modality, e,
-         |  CAST(list_sum(list_transform(range(0, 4), j ->
-         |    CASE WHEN list_sum(list_transform(range(0, len(e)), i ->
-         |        e[CAST(i + 1 AS INT)] *
-         |        (CASE WHEN CAST(concat('0x', substring(
-         |               md5(concat('srp:', j, ':', i)), 1, 15)) AS BIGINT)
-         |              % 2 = 1 THEN 1.0 ELSE -1.0 END))) > 0
-         |    THEN CAST(2 ** j AS BIGINT) ELSE 0 END)) AS BIGINT) AS bucket
+         |${srpSketchCol(4, "e", "bucket")}
          |  FROM st WHERE item_id <> 0),
          |qb AS (SELECT
-         |  CAST(list_sum(list_transform(range(0, 4), j ->
-         |    CASE WHEN list_sum(list_transform(range(0, len(qe)), i ->
-         |        qe[CAST(i + 1 AS INT)] *
-         |        (CASE WHEN CAST(concat('0x', substring(
-         |               md5(concat('srp:', j, ':', i)), 1, 15)) AS BIGINT)
-         |              % 2 = 1 THEN 1.0 ELSE -1.0 END))) > 0
-         |    THEN CAST(2 ** j AS BIGINT) ELSE 0 END)) AS BIGINT) AS b
+         |${srpSketchCol(4, "qe", "b")}
          |  FROM q),
          |pb AS (SELECT DISTINCT bucket FROM (
          |        SELECT b AS bucket FROM qb
@@ -7714,21 +7740,13 @@ object VectorQueries {
     // joint k1×k2 enumerations (struct-min, decomposed tables), the
     // query-ADC serves, top-10s, exact scan, recalls and MSEs per rung
     "v70_joint_aq" ->
-      s"""WITH cb1g AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |        FROM read_parquet('${Artifacts.oracleGlob("v67_cb1")}')),
-         |cb2g AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |        FROM read_parquet('${Artifacts.oracleGlob("v67_cb2")}')),
-         |cb1r AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |        FROM read_parquet('${Artifacts.oracleGlob("v70_aq_cb1")}')),
-         |cb2r AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |        FROM read_parquet('${Artifacts.oracleGlob("v70_aq_cb2")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM read_parquet('${Artifacts.oracleGlob("v67_corpus")}')),
-         |q AS (SELECT e AS qe FROM v WHERE vec_id = 1000),
-         |cw AS (SELECT vec_id, e FROM v WHERE vec_id != 1000),
-         |ex AS (SELECT cw.vec_id FROM cw, q
-         |       ORDER BY list_cosine_similarity(cw.e, q.qe) DESC,
-         |                cw.vec_id LIMIT 10),
+      s"""WITH ${codebook("cb1g", "v67_cb1")},
+         |${codebook("cb2g", "v67_cb2")},
+         |${codebook("cb1r", "v70_aq_cb1")},
+         |${codebook("cb2r", "v70_aq_cb2")},
+         |${corpus(parquet("v67_corpus"))},
+         |${heldOut("cw")},
+         |$exactTop10Cw,
          |gsub1 AS (
          |  SELECT cw.vec_id, ca.j, ca.c,
          |         list_sum(list_transform(range(0, 192), i ->
@@ -7785,8 +7803,7 @@ object VectorQueries {
     // persisted codebooks, IP LUTs + MIPS scores, top-10s, exact scan,
     // recalls and the mse / parallel-share meters per rung
     "v68_aniso_refdim" ->
-      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |           FROM read_parquet('${Artifacts.oracleGlob("v57_corpus")}')),
+      s"""${withCorpus(parquet("v57_corpus"))},
          |cw AS (SELECT vec_id, e FROM v WHERE vec_id != 1000),
          |q AS (SELECT e AS qe FROM v WHERE vec_id = 1000),
          |jn AS (SELECT unnest(range(0, 8)) AS j),
@@ -7795,17 +7812,11 @@ object VectorQueries {
          |           cw.e[CAST(jn.j * 192 + i + 1 AS INT)] *
          |           cw.e[CAST(jn.j * 192 + i + 1 AS INT)])) AS n2
          |       FROM cw, jn),
-         |ex AS (SELECT cw.vec_id FROM cw, q
-         |       ORDER BY list_cosine_similarity(cw.e, q.qe) DESC,
-         |                cw.vec_id LIMIT 10),
-         |cb1 AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |        FROM read_parquet('${Artifacts.oracleGlob("v30_codebooks")}')),
-         |cb4 AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |        FROM read_parquet('${Artifacts.oracleGlob("v68_aniso_cb_e4")}')),
-         |cb16 AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |        FROM read_parquet('${Artifacts.oracleGlob("v68_aniso_cb_e16")}')),
-         |cb64 AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |        FROM read_parquet('${Artifacts.oracleGlob("v68_aniso_cb_e64")}')),
+         |$exactTop10Cw,
+         |${codebook("cb1", "v30_codebooks")},
+         |${codebook("cb4", "v68_aniso_cb_e4")},
+         |${codebook("cb16", "v68_aniso_cb_e16")},
+         |${codebook("cb64", "v68_aniso_cb_e64")},
          |${anisoVariantCtes("a", "cb1", 1)},
          |${anisoVariantCtes("b", "cb4", 4)},
          |${anisoVariantCtes("d", "cb16", 16)},
@@ -7829,26 +7840,9 @@ object VectorQueries {
     // prefix coarsening, bucket-count/max/size-biased metrics and the
     // smallest-width-under-48 choice
     "v69_occupancy_geometry" ->
-      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |           FROM read_parquet('${Artifacts.oracleGlob("v57_corpus")}')),
+      s"""${withCorpus(parquet("v57_corpus"))},
          |c AS (SELECT vec_id, e FROM v WHERE vec_id != 1000),
-         |jj AS (SELECT unnest(range(0, 20)) AS j),
-         |sgm AS (SELECT jj.j,
-         |         list(CASE WHEN CAST(concat('0x', substring(
-         |                md5(concat('srp:', jj.j, ':', ix.i)), 1, 15))
-         |                AS BIGINT)
-         |               % 2 = 1 THEN 1.0 ELSE -1.0 END
-         |              ORDER BY ix.i) AS sv
-         |        FROM jj, (SELECT unnest(range(0,
-         |          (SELECT max(len(e)) FROM c))) AS i) ix
-         |        GROUP BY jj.j),
-         |d AS (SELECT c.vec_id, sgm.j,
-         |        list_dot_product(c.e, sgm.sv) AS dot
-         |      FROM c, sgm),
-         |fb AS (SELECT vec_id,
-         |         CAST(sum(CASE WHEN dot > 0 THEN CAST(2 ** j AS BIGINT)
-         |                       ELSE 0 END) AS BIGINT) AS fb
-         |       FROM d GROUP BY vec_id),
+         |${srpSignCtes(20, "fb", "fb")},
          |bb AS (SELECT unnest(range(3, 21)) AS bucket_bits),
          |hist AS (SELECT bb.bucket_bits,
          |                fb.fb % CAST(2 ** bb.bucket_bits AS BIGINT)
@@ -7887,29 +7881,16 @@ object VectorQueries {
     // beam-8 walks from the edge artifacts, exact top-10, and both
     // recalls — the cost/benefit pair acting on `rebucket` buys
     "v73_drift_serve" ->
-      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |           FROM read_parquet('${Artifacts.oracleGlob("v71_corpus")}')),
+      s"""${withCorpus(parquet("v71_corpus"))},
          |c AS (SELECT vec_id, e FROM v WHERE vec_id != 1000),
          |ck AS (SELECT vec_id, vec_id % 1000 AS k, e FROM v
          |       WHERE vec_id != 1000),
          |q AS (SELECT e AS qe FROM v WHERE vec_id = 1000),
-         |jj AS (SELECT unnest(range(0, 20)) AS j),
-         |sgm AS (SELECT jj.j,
-         |         list(CASE WHEN CAST(concat('0x', substring(
-         |                md5(concat('srp:', jj.j, ':', ix.i)), 1, 15))
-         |                AS BIGINT)
-         |               % 2 = 1 THEN 1.0 ELSE -1.0 END
-         |              ORDER BY ix.i) AS sv
-         |        FROM jj, (SELECT unnest(range(0,
-         |          (SELECT max(len(e)) FROM ck))) AS i) ix
-         |        GROUP BY jj.j),
+         |${srpPlanes(20, "ck")},
          |d AS (SELECT ck.vec_id, ck.k, sgm.j,
          |        list_dot_product(ck.e, sgm.sv) AS dot
          |      FROM ck, sgm),
-         |fb AS (SELECT vec_id, k,
-         |         CAST(sum(CASE WHEN dot > 0 THEN CAST(2 ** j AS BIGINT)
-         |                       ELSE 0 END) AS BIGINT) AS fb
-         |       FROM d GROUP BY vec_id, k),
+         |${signBits("fb", "fb", "d", key = "vec_id, k")},
          |bb AS (SELECT unnest(range(3, 21)) AS bucket_bits),
          |histf AS (SELECT bb.bucket_bits,
          |                 fb.fb % CAST(2 ** bb.bucket_bits AS BIGINT)
@@ -7919,9 +7900,7 @@ object VectorQueries {
          |                round(CAST(sum(bn * bn) AS DOUBLE) / sum(bn), 4)
          |                  AS size_biased
          |         FROM histf GROUP BY bucket_bits),
-         |fch AS (SELECT coalesce(min(bucket_bits)
-         |                 FILTER (WHERE size_biased <= 48.0), 20) AS b
-         |        FROM occf),
+         |${chooser("fch", "occf")},
          |hista AS (SELECT bb.bucket_bits,
          |                 fb.fb % CAST(2 ** bb.bucket_bits AS BIGINT)
          |                   AS bucket, count(*) AS bn
@@ -7930,9 +7909,7 @@ object VectorQueries {
          |                round(CAST(sum(bn * bn) AS DOUBLE) / sum(bn), 4)
          |                  AS size_biased
          |         FROM hista GROUP BY bucket_bits),
-         |rch AS (SELECT coalesce(min(bucket_bits)
-         |                 FILTER (WHERE size_biased <= 48.0), 20) AS b
-         |        FROM occa),
+         |${chooser("rch", "occa")},
          |bkf AS (SELECT vec_id,
          |          fb.fb % CAST(2 ** (SELECT b FROM fch) AS BIGINT)
          |            AS bucket FROM fb),
@@ -7940,28 +7917,14 @@ object VectorQueries {
          |          fb.fb % CAST(2 ** (SELECT b FROM rch) AS BIGINT)
          |            AS bucket FROM fb),
          |fg AS (SELECT src, dst
-         |       FROM read_parquet('${Artifacts.oracleGlob("v73_frozen_graph")}')),
+         |       FROM ${parquet("v73_frozen_graph")}),
          |rg AS (SELECT src, dst
-         |       FROM read_parquet('${Artifacts.oracleGlob("v73_fresh_graph")}')),
-         |fdg AS (SELECT dst AS vec_id, count(*) AS deg FROM fg
-         |        GROUP BY dst),
-         |fen AS (SELECT vec_id FROM (
-         |          SELECT bkf.vec_id,
-         |                 row_number() OVER (PARTITION BY bkf.bucket
-         |                   ORDER BY fdg.deg DESC, bkf.vec_id) AS rn
-         |          FROM bkf JOIN fdg USING (vec_id)) WHERE rn <= 2),
-         |rdg AS (SELECT dst AS vec_id, count(*) AS deg FROM rg
-         |        GROUP BY dst),
-         |ren AS (SELECT vec_id FROM (
-         |          SELECT bkr.vec_id,
-         |                 row_number() OVER (PARTITION BY bkr.bucket
-         |                   ORDER BY rdg.deg DESC, bkr.vec_id) AS rn
-         |          FROM bkr JOIN rdg USING (vec_id)) WHERE rn <= 2),
+         |       FROM ${parquet("v73_fresh_graph")}),
+         |${bucketEntries("fdg", "fen", "fg", "bkf")},
+         |${bucketEntries("rdg", "ren", "rg", "bkr")},
          |${walkUnrollSql("f", "fg", "c", beam = 8, customEntries = true)},
          |${walkUnrollSql("r", "rg", "c", beam = 8, customEntries = true)},
-         |ex AS (SELECT c.vec_id FROM c, q
-         |       ORDER BY list_cosine_similarity(c.e, q.qe) DESC, c.vec_id
-         |       LIMIT 10),
+         |$exactTop10,
          |ftop AS (SELECT vec_id FROM fs3 ORDER BY score DESC, vec_id
          |         LIMIT 10),
          |rtop AS (SELECT vec_id FROM rs3 ORDER BY score DESC, vec_id
@@ -7986,26 +7949,9 @@ object VectorQueries {
     // the cosine-tau rule, smallest-id rep choice, both variants'
     // full per-width histograms, both chooser decisions, all stats
     "v75_neardup_tier" ->
-      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |           FROM read_parquet('${Artifacts.oracleGlob("v71_corpus")}')),
+      s"""${withCorpus(parquet("v71_corpus"))},
          |c AS (SELECT vec_id, e FROM v WHERE vec_id != 1000),
-         |jj AS (SELECT unnest(range(0, 20)) AS j),
-         |sgm AS (SELECT jj.j,
-         |         list(CASE WHEN CAST(concat('0x', substring(
-         |                md5(concat('srp:', jj.j, ':', ix.i)), 1, 15))
-         |                AS BIGINT)
-         |               % 2 = 1 THEN 1.0 ELSE -1.0 END
-         |              ORDER BY ix.i) AS sv
-         |        FROM jj, (SELECT unnest(range(0,
-         |          (SELECT max(len(e)) FROM c))) AS i) ix
-         |        GROUP BY jj.j),
-         |d AS (SELECT c.vec_id, sgm.j,
-         |        list_dot_product(c.e, sgm.sv) AS dot
-         |      FROM c, sgm),
-         |fb AS (SELECT vec_id,
-         |         CAST(sum(CASE WHEN dot > 0 THEN CAST(2 ** j AS BIGINT)
-         |                       ELSE 0 END) AS BIGINT) AS fb
-         |       FROM d GROUP BY vec_id),
+         |${srpSignCtes(20, "fb", "fb")},
          |bb AS (SELECT unnest(range(3, 21)) AS bucket_bits),
          |ha AS (SELECT bb.bucket_bits,
          |              fb.fb % CAST(2 ** bb.bucket_bits AS BIGINT)
@@ -8015,15 +7961,9 @@ object VectorQueries {
          |              round(CAST(sum(bn * bn) AS DOUBLE) / sum(bn), 4)
          |                AS size_biased
          |       FROM ha GROUP BY 1),
-         |cha AS (SELECT coalesce(min(bucket_bits)
-         |                 FILTER (WHERE size_biased <= 48.0), 20) AS b
-         |        FROM oa),
+         |${chooser("cha", "oa")},
          |pr AS (SELECT f1.vec_id AS m, f2.vec_id AS nn
-         |       FROM fb f1 JOIN fb f2
-         |         ON f1.fb = f2.fb AND f2.vec_id < f1.vec_id
-         |       JOIN c cm ON cm.vec_id = f1.vec_id
-         |       JOIN c cn ON cn.vec_id = f2.vec_id
-         |       WHERE list_cosine_similarity(cm.e, cn.e) >= 0.8),
+         |${nearDupPairsFrom("0.8")},
          |keep AS (SELECT c.vec_id FROM c LEFT JOIN pr ON pr.m = c.vec_id
          |         GROUP BY c.vec_id HAVING count(pr.nn) = 0),
          |hc AS (SELECT bb.bucket_bits,
@@ -8034,9 +7974,7 @@ object VectorQueries {
          |              round(CAST(sum(bn * bn) AS DOUBLE) / sum(bn), 4)
          |                AS size_biased
          |       FROM hc GROUP BY 1),
-         |chc AS (SELECT coalesce(min(bucket_bits)
-         |                 FILTER (WHERE size_biased <= 48.0), 20) AS b
-         |        FROM oc)
+         |${chooser("chc", "oc")}
          |SELECT * FROM (
          |  SELECT 'collapsed' AS variant,
          |         (SELECT count(*) FROM keep) AS n_vectors,
@@ -8070,80 +8008,12 @@ object VectorQueries {
     "v76_neardup_serve" ->
       s"""WITH v AS (SELECT vec_id,
          |             CAST(embedding AS DOUBLE[]) AS e
-         |           FROM read_parquet('${Artifacts.oracleGlob("v71_corpus")}')),
-         |q AS (SELECT e AS qe FROM v WHERE vec_id = 1000),
-         |c AS (SELECT vec_id, e FROM v WHERE vec_id != 1000),
-         |jj AS (SELECT unnest(range(0, 20)) AS j),
-         |sgm AS (SELECT jj.j,
-         |         list(CASE WHEN CAST(concat('0x', substring(
-         |                md5(concat('srp:', jj.j, ':', ix.i)), 1, 15))
-         |                AS BIGINT)
-         |               % 2 = 1 THEN 1.0 ELSE -1.0 END
-         |              ORDER BY ix.i) AS sv
-         |        FROM jj, (SELECT unnest(range(0,
-         |          (SELECT max(len(e)) FROM c))) AS i) ix
-         |        GROUP BY jj.j),
-         |d AS (SELECT c.vec_id, sgm.j,
-         |        list_dot_product(c.e, sgm.sv) AS dot
-         |      FROM c, sgm),
-         |fb AS (SELECT vec_id,
-         |         CAST(sum(CASE WHEN dot > 0 THEN CAST(2 ** j AS BIGINT)
-         |                       ELSE 0 END) AS BIGINT) AS fb
-         |       FROM d GROUP BY vec_id),
+         |           FROM ${parquet("v71_corpus")}),
+         |${heldOut("c")},
+         |${srpSignCtes(20, "fb", "fb")},
          |pr AS (SELECT f1.vec_id AS m, f2.vec_id AS nn
-         |       FROM fb f1 JOIN fb f2
-         |         ON f1.fb = f2.fb AND f2.vec_id < f1.vec_id
-         |       JOIN c cm ON cm.vec_id = f1.vec_id
-         |       JOIN c cn ON cn.vec_id = f2.vec_id
-         |       WHERE list_cosine_similarity(cm.e, cn.e) >= 0.8),
-         |oh AS (SELECT m AS id, min(nn) AS rep FROM pr GROUP BY m),
-         |o1 AS (SELECT a.id, coalesce(b.rep, a.rep) AS rep
-         |       FROM oh a LEFT JOIN oh b ON a.rep = b.id),
-         |o2 AS (SELECT a.id, coalesce(b.rep, a.rep) AS rep
-         |       FROM o1 a LEFT JOIN o1 b ON a.rep = b.id),
-         |o3 AS (SELECT a.id, coalesce(b.rep, a.rep) AS rep
-         |       FROM o2 a LEFT JOIN o2 b ON a.rep = b.id),
-         |keep AS (SELECT c.vec_id FROM c LEFT JOIN oh ON oh.id = c.vec_id
-         |         WHERE oh.id IS NULL),
-         |rp AS (SELECT vec_id AS id, vec_id AS rep FROM keep
-         |       UNION ALL SELECT id, rep FROM o3),
-         |ck AS (SELECT c.vec_id, c.e FROM c JOIN keep USING (vec_id)),
-         |bb AS (SELECT unnest(range(3, 21)) AS bucket_bits),
-         |hc AS (SELECT bb.bucket_bits,
-         |              fb.fb % CAST(2 ** bb.bucket_bits AS BIGINT)
-         |                AS bucket, count(*) AS bn
-         |       FROM fb JOIN keep USING (vec_id), bb GROUP BY 1, 2),
-         |oc AS (SELECT bucket_bits,
-         |              round(CAST(sum(bn * bn) AS DOUBLE) / sum(bn), 4)
-         |                AS size_biased
-         |       FROM hc GROUP BY 1),
-         |chc AS (SELECT coalesce(min(bucket_bits)
-         |                 FILTER (WHERE size_biased <= 48.0), 20) AS b
-         |        FROM oc),
-         |bk AS (SELECT fb.vec_id,
-         |         fb.fb % CAST(2 ** (SELECT b FROM chc) AS BIGINT)
-         |           AS bucket FROM fb JOIN keep USING (vec_id)),
-         |g AS (SELECT src, dst
-         |      FROM read_parquet('${Artifacts.oracleGlob("v76_graph")}')),
-         |dg AS (SELECT dst AS vec_id, count(*) AS deg FROM g
-         |       GROUP BY dst),
-         |nen AS (SELECT vec_id FROM (
-         |          SELECT bk.vec_id,
-         |                 row_number() OVER (PARTITION BY bk.bucket
-         |                   ORDER BY dg.deg DESC, bk.vec_id) AS rn
-         |          FROM bk JOIN dg USING (vec_id)) WHERE rn <= 2),
-         |${walkUnrollSql("n", "g", "ck", beam = 8, customEntries = true)},
-         |ntop AS (SELECT vec_id FROM ns3 ORDER BY score DESC, vec_id
-         |         LIMIT 10),
-         |mem AS (SELECT rp.id AS vec_id FROM rp
-         |        JOIN ntop ON rp.rep = ntop.vec_id),
-         |resc AS (SELECT c.vec_id FROM c JOIN mem USING (vec_id), q
-         |         ORDER BY list_cosine_similarity(c.e, q.qe) DESC,
-         |           c.vec_id
-         |         LIMIT 10),
-         |ex AS (SELECT c.vec_id FROM c, q
-         |       ORDER BY list_cosine_similarity(c.e, q.qe) DESC, c.vec_id
-         |       LIMIT 10)
+         |${nearDupPairsFrom("0.8")},
+         |$nearDupServeCtes
          |SELECT CAST((SELECT b FROM chc) AS BIGINT) AS chosen_bits,
          |       (SELECT count(*) FROM keep) AS n_reps,
          |       (SELECT count(*) FROM o3 a JOIN oh b ON a.rep = b.id)
@@ -8164,35 +8034,14 @@ object VectorQueries {
     // reps' expansion) and pinned 0 here — s27's edges_diff
     // convention: the hash match IS the equality proof.
     "v78_neardup_tier_lsm" ->
-      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |           FROM read_parquet('${Artifacts.oracleGlob("v71_corpus")}')),
+      s"""${withCorpus(parquet("v71_corpus"))},
          |q AS (SELECT e AS qe FROM v WHERE vec_id = 1000),
          |c AS (SELECT vec_id, vec_id % 1000 AS k, e FROM v
          |      WHERE vec_id != 1000),
-         |jj AS (SELECT unnest(range(0, 20)) AS j),
-         |sgm AS (SELECT jj.j,
-         |         list(CASE WHEN CAST(concat('0x', substring(
-         |                md5(concat('srp:', jj.j, ':', ix.i)), 1, 15))
-         |                AS BIGINT)
-         |               % 2 = 1 THEN 1.0 ELSE -1.0 END
-         |              ORDER BY ix.i) AS sv
-         |        FROM jj, (SELECT unnest(range(0,
-         |          (SELECT max(len(e)) FROM c))) AS i) ix
-         |        GROUP BY jj.j),
-         |d AS (SELECT c.vec_id, sgm.j,
-         |        list_dot_product(c.e, sgm.sv) AS dot
-         |      FROM c, sgm),
-         |fb AS (SELECT vec_id,
-         |         CAST(sum(CASE WHEN dot > 0 THEN CAST(2 ** j AS BIGINT)
-         |                       ELSE 0 END) AS BIGINT) AS fb
-         |       FROM d GROUP BY vec_id),
+         |${srpSignCtes(20, "fb", "fb")},
          |pr AS (SELECT f1.vec_id AS m, cm.k AS ka,
          |              f2.vec_id AS nn, cn.k AS kb
-         |       FROM fb f1 JOIN fb f2
-         |         ON f1.fb = f2.fb AND f2.vec_id < f1.vec_id
-         |       JOIN c cm ON cm.vec_id = f1.vec_id
-         |       JOIN c cn ON cn.vec_id = f2.vec_id
-         |       WHERE list_cosine_similarity(cm.e, cn.e) >= 0.8),
+         |${nearDupPairsFrom("0.8")},
          |lims AS (SELECT unnest([40, 80, 160, 320]) AS lim),
          |tot AS (SELECT lim, count(*) AS n FROM lims, c
          |        WHERE c.k < lim GROUP BY lim),
@@ -8206,54 +8055,7 @@ object VectorQueries {
          |                   WHEN kb < 160 THEN 2 ELSE 3 END) >
          |             (CASE WHEN ka < 40 THEN 0 WHEN ka < 80 THEN 1
          |                   WHEN ka < 160 THEN 2 ELSE 3 END)),
-         |oh AS (SELECT m AS id, min(nn) AS rep FROM pr GROUP BY m),
-         |o1 AS (SELECT a.id, coalesce(b.rep, a.rep) AS rep
-         |       FROM oh a LEFT JOIN oh b ON a.rep = b.id),
-         |o2 AS (SELECT a.id, coalesce(b.rep, a.rep) AS rep
-         |       FROM o1 a LEFT JOIN o1 b ON a.rep = b.id),
-         |o3 AS (SELECT a.id, coalesce(b.rep, a.rep) AS rep
-         |       FROM o2 a LEFT JOIN o2 b ON a.rep = b.id),
-         |keep AS (SELECT c.vec_id FROM c LEFT JOIN oh ON oh.id = c.vec_id
-         |         WHERE oh.id IS NULL),
-         |rp AS (SELECT vec_id AS id, vec_id AS rep FROM keep
-         |       UNION ALL SELECT id, rep FROM o3),
-         |ck AS (SELECT c.vec_id, c.e FROM c JOIN keep USING (vec_id)),
-         |bb AS (SELECT unnest(range(3, 21)) AS bucket_bits),
-         |hc AS (SELECT bb.bucket_bits,
-         |              fb.fb % CAST(2 ** bb.bucket_bits AS BIGINT)
-         |                AS bucket, count(*) AS bn
-         |       FROM fb JOIN keep USING (vec_id), bb GROUP BY 1, 2),
-         |oc AS (SELECT bucket_bits,
-         |              round(CAST(sum(bn * bn) AS DOUBLE) / sum(bn), 4)
-         |                AS size_biased
-         |       FROM hc GROUP BY 1),
-         |chc AS (SELECT coalesce(min(bucket_bits)
-         |                 FILTER (WHERE size_biased <= 48.0), 20) AS b
-         |        FROM oc),
-         |bk AS (SELECT fb.vec_id,
-         |         fb.fb % CAST(2 ** (SELECT b FROM chc) AS BIGINT)
-         |           AS bucket FROM fb JOIN keep USING (vec_id)),
-         |g AS (SELECT src, dst
-         |      FROM read_parquet('${Artifacts.oracleGlob("v76_graph")}')),
-         |dg AS (SELECT dst AS vec_id, count(*) AS deg FROM g
-         |       GROUP BY dst),
-         |nen AS (SELECT vec_id FROM (
-         |          SELECT bk.vec_id,
-         |                 row_number() OVER (PARTITION BY bk.bucket
-         |                   ORDER BY dg.deg DESC, bk.vec_id) AS rn
-         |          FROM bk JOIN dg USING (vec_id)) WHERE rn <= 2),
-         |${walkUnrollSql("n", "g", "ck", beam = 8, customEntries = true)},
-         |ntop AS (SELECT vec_id FROM ns3 ORDER BY score DESC, vec_id
-         |         LIMIT 10),
-         |mem AS (SELECT rp.id AS vec_id FROM rp
-         |        JOIN ntop ON rp.rep = ntop.vec_id),
-         |resc AS (SELECT c.vec_id FROM c JOIN mem USING (vec_id), q
-         |         ORDER BY list_cosine_similarity(c.e, q.qe) DESC,
-         |           c.vec_id
-         |         LIMIT 10),
-         |ex AS (SELECT c.vec_id FROM c, q
-         |       ORDER BY list_cosine_similarity(c.e, q.qe) DESC, c.vec_id
-         |       LIMIT 10)
+         |$nearDupServeCtes
          |SELECT (SELECT n FROM nkc WHERE lim = 40) AS n_kept_s0,
          |       (SELECT n FROM nkc WHERE lim = 80) AS n_kept_s1,
          |       (SELECT n FROM nkc WHERE lim = 160) AS n_kept_s2,
@@ -8272,38 +8074,14 @@ object VectorQueries {
     // chooser, entries from the persisted per-τ graphs, walk,
     // expansion, rerank) — one row per τ
     "v79_neardup_tau_sweep" ->
-      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |           FROM read_parquet('${Artifacts.oracleGlob("v71_corpus")}')),
-         |q AS (SELECT e AS qe FROM v WHERE vec_id = 1000),
-         |c AS (SELECT vec_id, e FROM v WHERE vec_id != 1000),
-         |jj AS (SELECT unnest(range(0, 20)) AS j),
-         |sgm AS (SELECT jj.j,
-         |         list(CASE WHEN CAST(concat('0x', substring(
-         |                md5(concat('srp:', jj.j, ':', ix.i)), 1, 15))
-         |                AS BIGINT)
-         |               % 2 = 1 THEN 1.0 ELSE -1.0 END
-         |              ORDER BY ix.i) AS sv
-         |        FROM jj, (SELECT unnest(range(0,
-         |          (SELECT max(len(e)) FROM c))) AS i) ix
-         |        GROUP BY jj.j),
-         |d AS (SELECT c.vec_id, sgm.j,
-         |        list_dot_product(c.e, sgm.sv) AS dot
-         |      FROM c, sgm),
-         |fb AS (SELECT vec_id,
-         |         CAST(sum(CASE WHEN dot > 0 THEN CAST(2 ** j AS BIGINT)
-         |                       ELSE 0 END) AS BIGINT) AS fb
-         |       FROM d GROUP BY vec_id),
+      s"""${withCorpus(parquet("v71_corpus"))},
+         |${heldOut("c")},
+         |${srpSignCtes(20, "fb", "fb")},
          |bb AS (SELECT unnest(range(3, 21)) AS bucket_bits),
          |pr AS (SELECT f1.vec_id AS m, f2.vec_id AS nn,
          |              list_cosine_similarity(cm.e, cn.e) AS sim
-         |       FROM fb f1 JOIN fb f2
-         |         ON f1.fb = f2.fb AND f2.vec_id < f1.vec_id
-         |       JOIN c cm ON cm.vec_id = f1.vec_id
-         |       JOIN c cn ON cn.vec_id = f2.vec_id
-         |       WHERE list_cosine_similarity(cm.e, cn.e) >= 0.7),
-         |ex AS (SELECT c.vec_id FROM c, q
-         |       ORDER BY list_cosine_similarity(c.e, q.qe) DESC, c.vec_id
-         |       LIMIT 10),
+         |${nearDupPairsFrom("0.7")},
+         |$exactTop10,
          |${tauSweepCtes("a", 70)},
          |${tauSweepCtes("b", 80)},
          |${tauSweepCtes("c", 90)}
@@ -8321,9 +8099,9 @@ object VectorQueries {
     // and gate verdicts
     "v80_prefix_sq8_lsm" ->
       s"""WITH vb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |           FROM read_parquet('${Artifacts.oracleGlob("v74_corpus")}')),
+         |           FROM ${parquet("v74_corpus")}),
          |vd AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |       FROM read_parquet('${Artifacts.oracleGlob("v80_delta")}')),
+         |       FROM ${parquet("v80_delta")}),
          |va AS (SELECT vec_id, e, CAST(0 AS BIGINT) AS step FROM vb
          |       WHERE vec_id != 1000
          |       UNION ALL
@@ -8333,7 +8111,7 @@ object VectorQueries {
          |       FROM vd),
          |qf AS (SELECT e AS qe FROM vb WHERE vec_id = 1000),
          |rr AS (SELECT o, rv
-         |       FROM read_parquet('${Artifacts.oracleGlob("v74_rot")}')),
+         |       FROM ${parquet("v74_rot")}),
          |rw AS (SELECT va.vec_id,
          |         list(round(list_dot_product(va.e, rr.rv), 6)
          |              ORDER BY rr.o) AS e
@@ -8358,33 +8136,21 @@ object VectorQueries {
          |             -127), 127)
          |             * scl.sc[CAST(i + 1 AS INT)] / 127) AS e
          |       FROM fc, scl),
-         |jj AS (SELECT unnest(range(0, 20)) AS j),
-         |sgm AS (SELECT jj.j,
-         |         list(CASE WHEN CAST(concat('0x', substring(
-         |                md5(concat('srp:', jj.j, ':', ix.i)), 1, 15))
-         |                AS BIGINT)
-         |               % 2 = 1 THEN 1.0 ELSE -1.0 END
-         |              ORDER BY ix.i) AS sv
-         |        FROM jj, (SELECT unnest(range(0,
-         |          (SELECT max(len(e)) FROM va))) AS i) ix
-         |        GROUP BY jj.j),
+         |${srpPlanes(20, "va")},
          |dsk AS (SELECT va.vec_id, sgm.j,
          |        list_dot_product(va.e, sgm.sv) AS dot
          |      FROM va, sgm),
-         |fbv AS (SELECT vec_id,
-         |         CAST(sum(CASE WHEN dot > 0 THEN CAST(2 ** j AS BIGINT)
-         |                       ELSE 0 END) AS BIGINT) AS fb
-         |       FROM dsk GROUP BY vec_id),
+         |${signBits("fbv", "fb", "dsk")},
          |bkv AS (SELECT vec_id, fb % 32 AS bucket FROM fbv),
          |bb AS (SELECT unnest(range(3, 21)) AS bucket_bits),
          |g0 AS (SELECT src, dst
-         |       FROM read_parquet('${Artifacts.oracleGlob("v74_graph")}')),
+         |       FROM ${parquet("v74_graph")}),
          |sc1 AS (SELECT src, dst
-         |        FROM read_parquet('${Artifacts.oracleGlob("v80_sc1")}')),
+         |        FROM ${parquet("v80_sc1")}),
          |sc2 AS (SELECT src, dst
-         |        FROM read_parquet('${Artifacts.oracleGlob("v80_sc2")}')),
+         |        FROM ${parquet("v80_sc2")}),
          |sc3 AS (SELECT src, dst
-         |        FROM read_parquet('${Artifacts.oracleGlob("v80_sc3")}')),
+         |        FROM ${parquet("v80_sc3")}),
          |${v80SnapCtes("p0", 0)},
          |${v80SnapCtes("p1", 1)},
          |${v80SnapCtes("p2", 2)},
@@ -8404,12 +8170,10 @@ object VectorQueries {
     // beam-16 walks (float prefix / dequantized prefix), the
     // full-width exact scan, both recalls and the fidelity min
     "v77_prefix_sq8" ->
-      s"""WITH g AS (SELECT src, dst
-         |           FROM read_parquet('${Artifacts.oracleGlob("v74_graph")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM read_parquet('${Artifacts.oracleGlob("v74_corpus")}')),
+      s"""${withGraph("v74_graph")},
+         |${corpus(parquet("v74_corpus"))},
          |rr AS (SELECT o, rv
-         |       FROM read_parquet('${Artifacts.oracleGlob("v74_rot")}')),
+         |       FROM ${parquet("v74_rot")}),
          |qf AS (SELECT e AS qe FROM v WHERE vec_id = 1000),
          |c AS (SELECT vec_id, e FROM v WHERE vec_id != 1000),
          |$refDimSketchCtes,
@@ -8472,14 +8236,11 @@ object VectorQueries {
     // slices at every width, sketch + entries over the full vectors,
     // 2 × 4 width-keyed walks, the full-width exact scan, every recall
     "v74_prefix_rotated" ->
-      s"""WITH g AS (SELECT src, dst
-         |           FROM read_parquet('${Artifacts.oracleGlob("v74_graph")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM read_parquet('${Artifacts.oracleGlob("v74_corpus")}')),
+      s"""${withGraph("v74_graph")},
+         |${corpus(parquet("v74_corpus"))},
          |rr AS (SELECT o, rv
-         |       FROM read_parquet('${Artifacts.oracleGlob("v74_rot")}')),
-         |q AS (SELECT e AS qe FROM v WHERE vec_id = 1000),
-         |c AS (SELECT vec_id, e FROM v WHERE vec_id != 1000),
+         |       FROM ${parquet("v74_rot")}),
+         |${heldOut("c")},
          |$refDimSketchCtes,
          |$refDimEntryCtes,
          |rw AS (SELECT c.vec_id,
@@ -8490,9 +8251,7 @@ object VectorQueries {
          |               ORDER BY rr.o) AS qe
          |        FROM q, rr WHERE rr.o < 768),
          |wd AS (SELECT unnest([96, 192, 384, 768]) AS width),
-         |ex AS (SELECT c.vec_id FROM c, q
-         |       ORDER BY list_cosine_similarity(c.e, q.qe) DESC, c.vec_id
-         |       LIMIT 10),
+         |$exactTop10,
          |${prefixWalkVariantCtes("p", "c", "q")},
          |${prefixWalkVariantCtes("o", "rw", "rqw")}
          |SELECT * FROM (
@@ -8508,12 +8267,9 @@ object VectorQueries {
     // fixture), per-bucket top-2 entries, 3 walk rounds, exact 1536-d
     // scan, recall
     "v57_graph_refdim" ->
-      s"""WITH g AS (SELECT src, dst
-         |           FROM read_parquet('${Artifacts.oracleGlob("v57_graph")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM read_parquet('${Artifacts.oracleGlob("v57_corpus")}')),
-         |q AS (SELECT e AS qe FROM v WHERE vec_id = 1000),
-         |c AS (SELECT vec_id, e FROM v WHERE vec_id != 1000),
+      s"""${withGraph("v57_graph")},
+         |${corpus(parquet("v57_corpus"))},
+         |${heldOut("c")},
          |$refDimSketchCtes,
          |fr AS (SELECT vec_id, j,
          |         row_number() OVER (PARTITION BY vec_id
@@ -8530,17 +8286,8 @@ object VectorQueries {
          |$refDimEntryCtes,
          |${walkUnrollSql("", "g", "c", beam = 8, customEntries = true)},
          |t AS (SELECT count(*) AS nodes_touched FROM s3),
-         |ex AS (SELECT c.vec_id FROM c, q
-         |       ORDER BY list_cosine_similarity(c.e, q.qe) DESC, c.vec_id
-         |       LIMIT 10),
-         |top AS (SELECT vec_id, score,
-         |          row_number() OVER (ORDER BY score DESC, vec_id) AS rank
-         |        FROM s3 ORDER BY score DESC, vec_id LIMIT 10),
-         |h AS (SELECT top.rank, top.vec_id, top.score,
-         |        CASE WHEN ex.vec_id IS NULL THEN 0 ELSE 1 END AS hit
-         |      FROM top LEFT JOIN ex USING (vec_id)),
-         |r AS (SELECT round(CAST(sum(hit) AS DOUBLE) / 10.0, 6)
-         |        AS recall_at_10 FROM h)
+         |$exactTop10,
+         |${rankedHits("s3")}
          |SELECT CAST(h.rank AS BIGINT) AS rank, h.vec_id,
          |       round(h.score, 6) AS score, CAST(h.hit AS BIGINT) AS hit,
          |       t.nodes_touched,
@@ -8553,44 +8300,17 @@ object VectorQueries {
     // 3 walk rounds scored by −ADC, the top-20 shortlist, the exact
     // cosine rerank and BOTH recalls (ADC-only and post-rerank)
     "v59_graph_pq_serve" ->
-      s"""WITH g AS (SELECT src, dst
-         |           FROM read_parquet('${Artifacts.oracleGlob("v57_graph")}')),
-         |cb AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |       FROM read_parquet('${Artifacts.oracleGlob("v30_codebooks")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM read_parquet('${Artifacts.oracleGlob("v57_corpus")}')),
-         |q AS (SELECT e AS qe FROM v WHERE vec_id = 1000),
-         |cw AS (SELECT vec_id, e FROM v WHERE vec_id != 1000),
-         |${pqAdcCtes("cw", dsub = 192)},
-         |c AS (SELECT cw.vec_id, cw.e, -adc.adc_dist AS ascore
-         |      FROM cw JOIN adc USING (vec_id)),
-         |$refDimSketchCtes,
-         |$refDimEntryCtes,
-         |${walkUnrollSql("", "g", "c", beam = 8, customEntries = true,
-                          score = "c.ascore")},
+      s"""$pqWalkCtes,
          |t AS (SELECT count(*) AS nodes_touched FROM s3),
          |short AS (SELECT vec_id FROM s3
          |          ORDER BY score DESC, vec_id LIMIT 20),
-         |ex AS (SELECT c.vec_id FROM c, q
-         |       ORDER BY list_cosine_similarity(c.e, q.qe) DESC, c.vec_id
-         |       LIMIT 10),
+         |$exactTop10,
          |at AS (SELECT vec_id FROM s3
          |       ORDER BY score DESC, vec_id LIMIT 10),
          |ar AS (SELECT round(CAST(count(*) AS DOUBLE) / 10.0, 6)
          |         AS adc_recall_at_10
          |       FROM at JOIN ex USING (vec_id)),
-         |rr AS (SELECT c.vec_id,
-         |              list_cosine_similarity(c.e, q.qe) AS score
-         |       FROM c JOIN short USING (vec_id), q
-         |       ORDER BY score DESC, vec_id LIMIT 10),
-         |top AS (SELECT vec_id, score,
-         |          row_number() OVER (ORDER BY score DESC, vec_id) AS rank
-         |        FROM rr),
-         |h AS (SELECT top.rank, top.vec_id, top.score,
-         |        CASE WHEN ex.vec_id IS NULL THEN 0 ELSE 1 END AS hit
-         |      FROM top LEFT JOIN ex USING (vec_id)),
-         |r AS (SELECT round(CAST(sum(hit) AS DOUBLE) / 10.0, 6)
-         |        AS recall_at_10 FROM h)
+         |$rerankHits
          |SELECT CAST(h.rank AS BIGINT) AS rank, h.vec_id,
          |       round(h.score, 6) AS score, CAST(h.hit AS BIGINT) AS hit,
          |       t.nodes_touched, ar.adc_recall_at_10, r.recall_at_10,
@@ -8600,21 +8320,7 @@ object VectorQueries {
     // the rerank-depth curve: v59's replay to s3, then the depth sweep
     // as an unnest + per-depth rank/recall
     "v60_pq_shortlist_sweep" ->
-      s"""WITH g AS (SELECT src, dst
-         |           FROM read_parquet('${Artifacts.oracleGlob("v57_graph")}')),
-         |cb AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |       FROM read_parquet('${Artifacts.oracleGlob("v30_codebooks")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM read_parquet('${Artifacts.oracleGlob("v57_corpus")}')),
-         |q AS (SELECT e AS qe FROM v WHERE vec_id = 1000),
-         |cw AS (SELECT vec_id, e FROM v WHERE vec_id != 1000),
-         |${pqAdcCtes("cw", dsub = 192)},
-         |c AS (SELECT cw.vec_id, cw.e, -adc.adc_dist AS ascore
-         |      FROM cw JOIN adc USING (vec_id)),
-         |$refDimSketchCtes,
-         |$refDimEntryCtes,
-         |${walkUnrollSql("", "g", "c", beam = 8, customEntries = true,
-                          score = "c.ascore")},
+      s"""$pqWalkCtes,
          |ranked AS (SELECT vec_id,
          |             row_number() OVER (ORDER BY score DESC, vec_id)
          |               AS rn
@@ -8628,9 +8334,7 @@ object VectorQueries {
          |       FROM (SELECT cand.shortlist, cand.vec_id,
          |                    list_cosine_similarity(c.e, q.qe) AS cs
          |             FROM cand JOIN c USING (vec_id), q)),
-         |ex AS (SELECT c.vec_id FROM c, q
-         |       ORDER BY list_cosine_similarity(c.e, q.qe) DESC, c.vec_id
-         |       LIMIT 10)
+         |$exactTop10
          |SELECT CAST(rr.shortlist AS BIGINT) AS shortlist,
          |       round(CAST(sum(CASE WHEN ex.vec_id IS NULL THEN 0
          |                           ELSE 1 END) AS DOUBLE) / 10.0, 6)
@@ -8645,12 +8349,9 @@ object VectorQueries {
     // dequantized reconstruction, exact float scan, recall and the
     // order-free min-fidelity meter
     "v61_sq8_serve" ->
-      s"""WITH g AS (SELECT src, dst
-         |           FROM read_parquet('${Artifacts.oracleGlob("v57_graph")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM read_parquet('${Artifacts.oracleGlob("v57_corpus")}')),
-         |q AS (SELECT e AS qe FROM v WHERE vec_id = 1000),
-         |cw AS (SELECT vec_id, e FROM v WHERE vec_id != 1000),
+      s"""${withGraph("v57_graph")},
+         |${corpus(parquet("v57_corpus"))},
+         |${heldOut("cw")},
          |ii AS (SELECT unnest(range(0, 1536)) AS i),
          |sx AS (SELECT ii.i,
          |         greatest(max(abs(cw.e[CAST(ii.i + 1 AS INT)])), 1e-30)
@@ -8672,17 +8373,8 @@ object VectorQueries {
          |${walkUnrollSql("", "g", "c", beam = 8, customEntries = true,
                           score = "list_cosine_similarity(c.de, q.qe)")},
          |t AS (SELECT count(*) AS nodes_touched FROM s3),
-         |ex AS (SELECT c.vec_id FROM c, q
-         |       ORDER BY list_cosine_similarity(c.e, q.qe) DESC, c.vec_id
-         |       LIMIT 10),
-         |top AS (SELECT vec_id, score,
-         |          row_number() OVER (ORDER BY score DESC, vec_id) AS rank
-         |        FROM s3 ORDER BY score DESC, vec_id LIMIT 10),
-         |h AS (SELECT top.rank, top.vec_id, top.score,
-         |        CASE WHEN ex.vec_id IS NULL THEN 0 ELSE 1 END AS hit
-         |      FROM top LEFT JOIN ex USING (vec_id)),
-         |r AS (SELECT round(CAST(sum(hit) AS DOUBLE) / 10.0, 6)
-         |        AS recall_at_10 FROM h)
+         |$exactTop10,
+         |${rankedHits("s3")}
          |SELECT CAST(h.rank AS BIGINT) AS rank, h.vec_id,
          |       round(h.score, 6) AS score, CAST(h.hit AS BIGINT) AS hit,
          |       t.nodes_touched, r.recall_at_10, fd.min_cos_fidelity,
@@ -8695,12 +8387,9 @@ object VectorQueries {
     // vectors, 3 hamming-scored walk rounds, shortlist-20 exact
     // rerank and both recalls
     "v62_bq_serve" ->
-      s"""WITH g AS (SELECT src, dst
-         |           FROM read_parquet('${Artifacts.oracleGlob("v57_graph")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM read_parquet('${Artifacts.oracleGlob("v57_corpus")}')),
-         |q AS (SELECT e AS qe FROM v WHERE vec_id = 1000),
-         |cw AS (SELECT vec_id, e FROM v WHERE vec_id != 1000),
+      s"""${withGraph("v57_graph")},
+         |${corpus(parquet("v57_corpus"))},
+         |${heldOut("cw")},
          |ww AS (SELECT unnest(range(0, 48)) AS w),
          |cd AS (SELECT cw.vec_id, ww.w,
          |         list_sum(list_transform(range(0, 32), b ->
@@ -8730,26 +8419,13 @@ object VectorQueries {
          |t AS (SELECT count(*) AS nodes_touched FROM s3),
          |short AS (SELECT vec_id FROM s3
          |          ORDER BY score DESC, vec_id LIMIT 20),
-         |ex AS (SELECT c.vec_id FROM c, q
-         |       ORDER BY list_cosine_similarity(c.e, q.qe) DESC, c.vec_id
-         |       LIMIT 10),
+         |$exactTop10,
          |bt AS (SELECT vec_id FROM s3
          |       ORDER BY score DESC, vec_id LIMIT 10),
          |br AS (SELECT round(CAST(count(*) AS DOUBLE) / 10.0, 6)
          |         AS bq_recall_at_10
          |       FROM bt JOIN ex USING (vec_id)),
-         |rr AS (SELECT c.vec_id,
-         |              list_cosine_similarity(c.e, q.qe) AS score
-         |       FROM c JOIN short USING (vec_id), q
-         |       ORDER BY score DESC, vec_id LIMIT 10),
-         |top AS (SELECT vec_id, score,
-         |          row_number() OVER (ORDER BY score DESC, vec_id) AS rank
-         |        FROM rr),
-         |h AS (SELECT top.rank, top.vec_id, top.score,
-         |        CASE WHEN ex.vec_id IS NULL THEN 0 ELSE 1 END AS hit
-         |      FROM top LEFT JOIN ex USING (vec_id)),
-         |r AS (SELECT round(CAST(sum(hit) AS DOUBLE) / 10.0, 6)
-         |        AS recall_at_10 FROM h)
+         |$rerankHits
          |SELECT CAST(h.rank AS BIGINT) AS rank, h.vec_id,
          |       round(h.score, 6) AS score, CAST(h.hit AS BIGINT) AS hit,
          |       t.nodes_touched, br.bq_recall_at_10, r.recall_at_10,
@@ -8761,12 +8437,9 @@ object VectorQueries {
     // walk rounds (the multi-index unroll), per-width recall vs the
     // full-dimension exact scan
     "v63_prefix_serve" ->
-      s"""WITH g AS (SELECT src, dst
-         |           FROM read_parquet('${Artifacts.oracleGlob("v57_graph")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM read_parquet('${Artifacts.oracleGlob("v57_corpus")}')),
-         |q AS (SELECT e AS qe FROM v WHERE vec_id = 1000),
-         |c AS (SELECT vec_id, e FROM v WHERE vec_id != 1000),
+      s"""${withGraph("v57_graph")},
+         |${corpus(parquet("v57_corpus"))},
+         |${heldOut("c")},
          |$refDimSketchCtes,
          |$refDimEntryCtes,
          |wd AS (SELECT unnest([96, 192, 384, 768]) AS width),
@@ -8796,9 +8469,7 @@ object VectorQueries {
                  |       FROM i$r JOIN cp USING (width, vec_id)
                  |       JOIN qp USING (width))""".stripMargin
             }.mkString(",\n")},
-         |ex AS (SELECT c.vec_id FROM c, q
-         |       ORDER BY list_cosine_similarity(c.e, q.qe) DESC, c.vec_id
-         |       LIMIT 10),
+         |$exactTop10,
          |t AS (SELECT width, count(*) AS nodes_touched FROM s3
          |      GROUP BY width),
          |tp AS (SELECT width, vec_id FROM (
@@ -8823,23 +8494,13 @@ object VectorQueries {
     // downstream of training in SQL
     "v64_opq_recall" ->
       s"""WITH rr AS (SELECT o, rv
-         |            FROM read_parquet('${Artifacts.oracleGlob("v64_rot")}')),
-         |cbp AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |        FROM read_parquet('${Artifacts.oracleGlob("v64_pq_cb")}')),
-         |cbo AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |        FROM read_parquet('${Artifacts.oracleGlob("v64_opq_cb")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM read_parquet('${Artifacts.oracleGlob("v28_corpus")}')),
+         |            FROM ${parquet("v64_rot")}),
+         |${codebook("cbp", "v64_pq_cb")},
+         |${codebook("cbo", "v64_opq_cb")},
+         |${corpus(parquet("v28_corpus"))},
          |q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < 8),
          |cw AS (SELECT vec_id, e FROM v WHERE vec_id >= 8),
-         |rw AS (SELECT cw.vec_id,
-         |         list(round(list_dot_product(cw.e, rr.rv), 6)
-         |              ORDER BY rr.o) AS e
-         |       FROM cw, rr GROUP BY cw.vec_id),
-         |rq AS (SELECT q.query_id,
-         |         list(round(list_dot_product(q.qe, rr.rv), 6)
-         |              ORDER BY rr.o) AS qe
-         |       FROM q, rr GROUP BY q.query_id),
+         |$rotatedCtes,
          |ex AS (SELECT query_id, vec_id FROM (
          |         SELECT q.query_id, cw.vec_id,
          |                row_number() OVER (PARTITION BY q.query_id
@@ -8862,24 +8523,14 @@ object VectorQueries {
     // exact-cosine reranks
     "v65_opq_refdim" ->
       s"""WITH rr AS (SELECT o, rv
-         |            FROM read_parquet('${Artifacts.oracleGlob("v65_rot")}')),
-         |cbp AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |        FROM read_parquet('${Artifacts.oracleGlob("v30_codebooks")}')),
-         |cbo AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |        FROM read_parquet('${Artifacts.oracleGlob("v65_opq_cb")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM read_parquet('${Artifacts.oracleGlob("v57_corpus")}')),
+         |            FROM ${parquet("v65_rot")}),
+         |${codebook("cbp", "v30_codebooks")},
+         |${codebook("cbo", "v65_opq_cb")},
+         |${corpus(parquet("v57_corpus"))},
          |q AS (SELECT vec_id AS query_id, e AS qe FROM v
          |      WHERE vec_id = 1000),
          |cw AS (SELECT vec_id, e FROM v WHERE vec_id != 1000),
-         |rw AS (SELECT cw.vec_id,
-         |         list(round(list_dot_product(cw.e, rr.rv), 6)
-         |              ORDER BY rr.o) AS e
-         |       FROM cw, rr GROUP BY cw.vec_id),
-         |rq AS (SELECT q.query_id,
-         |         list(round(list_dot_product(q.qe, rr.rv), 6)
-         |              ORDER BY rr.o) AS qe
-         |       FROM q, rr GROUP BY q.query_id),
+         |$rotatedCtes,
          |ex AS (SELECT q.query_id, cw.vec_id FROM cw, q
          |       ORDER BY list_cosine_similarity(cw.e, q.qe) DESC,
          |                cw.vec_id LIMIT 10),
@@ -8911,29 +8562,12 @@ object VectorQueries {
     // tables, the decomposed two-stage ADC summed in subspace order,
     // stage-1-only ADC, three top-10s + recalls, three MSE meters
     "v66_residual_pq" ->
-      s"""WITH cb1 AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |        FROM read_parquet('${Artifacts.oracleGlob("v30_codebooks")}')),
-         |c2s AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |        FROM read_parquet('${Artifacts.oracleGlob("v66_cb2_split")}')),
-         |c2c AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |        FROM read_parquet('${Artifacts.oracleGlob("v66_cb2_corpus")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM read_parquet('${Artifacts.oracleGlob("v57_corpus")}')),
-         |q AS (SELECT e AS qe FROM v WHERE vec_id = 1000),
-         |cw AS (SELECT vec_id, e FROM v WHERE vec_id != 1000),
-         |sub1 AS (
-         |  SELECT cw.vec_id, cb1.j, cb1.c,
-         |         list_sum(list_transform(range(0, 192), i ->
-         |           (cw.e[CAST(cb1.j * 192 + i + 1 AS INT)]
-         |              - cb1.ctr[CAST(i + 1 AS INT)]) *
-         |           (cw.e[CAST(cb1.j * 192 + i + 1 AS INT)]
-         |              - cb1.ctr[CAST(i + 1 AS INT)]))) AS dist
-         |  FROM cw, cb1),
-         |k1 AS (SELECT vec_id, j, c FROM (
-         |         SELECT vec_id, j, c,
-         |                row_number() OVER (PARTITION BY vec_id, j
-         |                                   ORDER BY dist, c) AS rn
-         |         FROM sub1) WHERE rn = 1),
+      s"""WITH ${codebook("cb1", "v30_codebooks")},
+         |${codebook("c2s", "v66_cb2_split")},
+         |${codebook("c2c", "v66_cb2_corpus")},
+         |${corpus(parquet("v57_corpus"))},
+         |${heldOut("cw")},
+         |$residualStage1,
          |rs AS (SELECT cw.vec_id, k1.j,
          |         list_transform(range(0, 192), i ->
          |           cw.e[CAST(k1.j * 192 + i + 1 AS INT)]
@@ -8966,13 +8600,7 @@ object VectorQueries {
          |                 row_number() OVER (PARTITION BY vec_id, j
          |                                    ORDER BY dist, c) AS rn
          |          FROM sub2c) WHERE rn = 1),
-         |l1 AS (SELECT cb1.j, cb1.c,
-         |         list_sum(list_transform(range(0, 192), i ->
-         |           (q.qe[CAST(cb1.j * 192 + i + 1 AS INT)]
-         |              - cb1.ctr[CAST(i + 1 AS INT)]) *
-         |           (q.qe[CAST(cb1.j * 192 + i + 1 AS INT)]
-         |              - cb1.ctr[CAST(i + 1 AS INT)]))) AS d
-         |       FROM cb1, q),
+         |$residualStage1Lut,
          |l2s AS (SELECT cb.j, cb.c,
          |          list_sum(list_transform(range(0, 192), i ->
          |            cb.ctr[CAST(i + 1 AS INT)] * cb.ctr[CAST(i + 1 AS INT)]
@@ -9019,9 +8647,7 @@ object VectorQueries {
          |             JOIN cxc ON k1.j = cxc.j AND k1.c = cxc.c1
          |                     AND k2c.c = cxc.c2
          |        GROUP BY k1.vec_id),
-         |ex AS (SELECT cw.vec_id FROM cw, q
-         |       ORDER BY list_cosine_similarity(cw.e, q.qe) DESC,
-         |                cw.vec_id LIMIT 10),
+         |$exactTop10Cw,
          |r1 AS (SELECT round(CAST(count(*) AS DOUBLE) / 10.0, 6) AS r
          |       FROM (SELECT vec_id FROM a1
          |             ORDER BY adc, vec_id LIMIT 10) t
@@ -9062,29 +8688,12 @@ object VectorQueries {
     // three decomposed ADCs in subspace order, three top-10s/recalls
     // and the three-rung MSE ladder
     "v67_rvq_depth" ->
-      s"""WITH cb1 AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |        FROM read_parquet('${Artifacts.oracleGlob("v67_cb1")}')),
-         |cb2 AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |        FROM read_parquet('${Artifacts.oracleGlob("v67_cb2")}')),
-         |cb3 AS (SELECT j, c, CAST(center AS DOUBLE[]) AS ctr
-         |        FROM read_parquet('${Artifacts.oracleGlob("v67_cb3")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM read_parquet('${Artifacts.oracleGlob("v67_corpus")}')),
-         |q AS (SELECT e AS qe FROM v WHERE vec_id = 1000),
-         |cw AS (SELECT vec_id, e FROM v WHERE vec_id != 1000),
-         |sub1 AS (
-         |  SELECT cw.vec_id, cb1.j, cb1.c,
-         |         list_sum(list_transform(range(0, 192), i ->
-         |           (cw.e[CAST(cb1.j * 192 + i + 1 AS INT)]
-         |              - cb1.ctr[CAST(i + 1 AS INT)]) *
-         |           (cw.e[CAST(cb1.j * 192 + i + 1 AS INT)]
-         |              - cb1.ctr[CAST(i + 1 AS INT)]))) AS dist
-         |  FROM cw, cb1),
-         |k1 AS (SELECT vec_id, j, c FROM (
-         |         SELECT vec_id, j, c,
-         |                row_number() OVER (PARTITION BY vec_id, j
-         |                                   ORDER BY dist, c) AS rn
-         |         FROM sub1) WHERE rn = 1),
+      s"""WITH ${codebook("cb1", "v67_cb1")},
+         |${codebook("cb2", "v67_cb2")},
+         |${codebook("cb3", "v67_cb3")},
+         |${corpus(parquet("v67_corpus"))},
+         |${heldOut("cw")},
+         |$residualStage1,
          |rs1 AS (SELECT cw.vec_id, k1.j,
          |          list_transform(range(0, 192), i ->
          |            cw.e[CAST(k1.j * 192 + i + 1 AS INT)]
@@ -9124,13 +8733,7 @@ object VectorQueries {
          |                row_number() OVER (PARTITION BY vec_id, j
          |                                   ORDER BY dist, c) AS rn
          |         FROM sub3) WHERE rn = 1),
-         |l1 AS (SELECT cb1.j, cb1.c,
-         |         list_sum(list_transform(range(0, 192), i ->
-         |           (q.qe[CAST(cb1.j * 192 + i + 1 AS INT)]
-         |              - cb1.ctr[CAST(i + 1 AS INT)]) *
-         |           (q.qe[CAST(cb1.j * 192 + i + 1 AS INT)]
-         |              - cb1.ctr[CAST(i + 1 AS INT)]))) AS d
-         |       FROM cb1, q),
+         |$residualStage1Lut,
          |l2 AS (SELECT cb.j, cb.c,
          |         list_sum(list_transform(range(0, 192), i ->
          |           cb.ctr[CAST(i + 1 AS INT)] * cb.ctr[CAST(i + 1 AS INT)]
@@ -9187,9 +8790,7 @@ object VectorQueries {
          |            JOIN x23 ON k2.j = x23.j AND k2.c = x23.c1
          |                    AND k3.c = x23.c2
          |       GROUP BY k1.vec_id),
-         |ex AS (SELECT cw.vec_id FROM cw, q
-         |       ORDER BY list_cosine_similarity(cw.e, q.qe) DESC,
-         |                cw.vec_id LIMIT 10),
+         |$exactTop10Cw,
          |r1 AS (SELECT round(CAST(count(*) AS DOUBLE) / 10.0, 6) AS r
          |       FROM (SELECT vec_id FROM a1
          |             ORDER BY adc, vec_id LIMIT 10) t
@@ -9229,49 +8830,8 @@ object VectorQueries {
     // rounds -> exact over base UNION delta, plus the shards-written
     // arithmetic (distinct sidecar-src buckets) — all in SQL
     "v58_graph_sharded_lsm" ->
-      s"""WITH ga AS (SELECT CAST(shard AS BIGINT) AS shard, src, dst
-         |            FROM read_parquet(
-         |              '${Artifacts.oracleGlobHive("v58_store")}',
-         |              hive_partitioning = 1)),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM read_parquet('${Artifacts.oracleGlob("v58_corpus")}')),
-         |q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
-         |c AS (SELECT vec_id, e FROM v WHERE vec_id >= 8),
-         |qb AS (SELECT
-         |  CAST(list_sum(list_transform(range(0, 6), j ->
-         |    CASE WHEN list_sum(list_transform(range(0, len(qe)), i ->
-         |        qe[CAST(i + 1 AS INT)] *
-         |        (CASE WHEN CAST(concat('0x', substring(
-         |               md5(concat('srp:', j, ':', i)), 1, 15)) AS BIGINT)
-         |              % 2 = 1 THEN 1.0 ELSE -1.0 END))) > 0
-         |    THEN CAST(2 ** j AS BIGINT) ELSE 0 END)) AS BIGINT) AS b
-         |  FROM q),
-         |pb AS (SELECT DISTINCT bucket FROM (
-         |        SELECT b AS bucket FROM qb
-         |        UNION ALL SELECT xor(b, 1) FROM qb
-         |        UNION ALL SELECT xor(b, 2) FROM qb
-         |        UNION ALL SELECT xor(b, 4) FROM qb
-         |        UNION ALL SELECT xor(b, 8) FROM qb
-         |        UNION ALL SELECT xor(b, 16) FROM qb
-         |        UNION ALL SELECT xor(b, 32) FROM qb)),
-         |bk AS (SELECT vec_id,
-         |  CAST(list_sum(list_transform(range(0, 6), j ->
-         |    CASE WHEN list_sum(list_transform(range(0, len(e)), i ->
-         |        e[CAST(i + 1 AS INT)] *
-         |        (CASE WHEN CAST(concat('0x', substring(
-         |               md5(concat('srp:', j, ':', i)), 1, 15)) AS BIGINT)
-         |              % 2 = 1 THEN 1.0 ELSE -1.0 END))) > 0
-         |    THEN CAST(2 ** j AS BIGINT) ELSE 0 END)) AS BIGINT) AS bucket
-         |  FROM c),
-         |g AS (SELECT src, dst FROM ga JOIN pb ON ga.shard = pb.bucket),
-         |dg AS (SELECT dst AS vec_id, count(*) AS deg FROM g
-         |       GROUP BY dst),
-         |en AS (SELECT vec_id FROM (
-         |         SELECT bk.vec_id,
-         |                row_number() OVER (PARTITION BY bk.bucket
-         |                  ORDER BY dg.deg DESC, bk.vec_id) AS rn
-         |         FROM bk JOIN dg USING (vec_id)
-         |         JOIN pb ON bk.bucket = pb.bucket) WHERE rn <= 2),
+      s"""${shardRouteCtes("v58_store", "v58_corpus")},
+         |$routedEntries,
          |${walkUnrollSql("", "g", "c", beam = 16, customEntries = true,
                           rounds = 4)},
          |t AS (SELECT count(*) AS nodes_touched FROM s4),
@@ -9291,9 +8851,7 @@ object VectorQueries {
          |             UNION ALL
          |             SELECT vec_id, score, 'delta' AS src FROM dt)
          |       GROUP BY vec_id),
-         |ex AS (SELECT c.vec_id FROM c, q
-         |       ORDER BY list_cosine_similarity(c.e, q.qe) DESC, c.vec_id
-         |       LIMIT 10),
+         |$exactTop10,
          |top AS (SELECT vec_id, score, src,
          |          row_number() OVER (ORDER BY score DESC, vec_id) AS rank
          |        FROM mg ORDER BY score DESC, vec_id LIMIT 10),
@@ -9315,66 +8873,17 @@ object VectorQueries {
          |       dn.delta_scanned, r.recall_at_10, r.delta_in_top
          |FROM h, t, sp, sw, dn, r ORDER BY rank""".stripMargin,
     "v55_graph_sharded" ->
-      s"""WITH ga AS (SELECT CAST(shard AS BIGINT) AS shard, src, dst
-         |            FROM read_parquet(
-         |              '${Artifacts.oracleGlobHive("v55_graph")}',
-         |              hive_partitioning = 1)),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM read_parquet('${Artifacts.oracleGlob("v55_corpus")}')),
-         |q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
-         |c AS (SELECT vec_id, e FROM v WHERE vec_id >= 8),
-         |qb AS (SELECT
-         |  CAST(list_sum(list_transform(range(0, 6), j ->
-         |    CASE WHEN list_sum(list_transform(range(0, len(qe)), i ->
-         |        qe[CAST(i + 1 AS INT)] *
-         |        (CASE WHEN CAST(concat('0x', substring(
-         |               md5(concat('srp:', j, ':', i)), 1, 15)) AS BIGINT)
-         |              % 2 = 1 THEN 1.0 ELSE -1.0 END))) > 0
-         |    THEN CAST(2 ** j AS BIGINT) ELSE 0 END)) AS BIGINT) AS b
-         |  FROM q),
-         |pb AS (SELECT DISTINCT bucket FROM (
-         |        SELECT b AS bucket FROM qb
-         |        UNION ALL SELECT xor(b, 1) FROM qb
-         |        UNION ALL SELECT xor(b, 2) FROM qb
-         |        UNION ALL SELECT xor(b, 4) FROM qb
-         |        UNION ALL SELECT xor(b, 8) FROM qb
-         |        UNION ALL SELECT xor(b, 16) FROM qb
-         |        UNION ALL SELECT xor(b, 32) FROM qb)),
-         |bk AS (SELECT vec_id,
-         |  CAST(list_sum(list_transform(range(0, 6), j ->
-         |    CASE WHEN list_sum(list_transform(range(0, len(e)), i ->
-         |        e[CAST(i + 1 AS INT)] *
-         |        (CASE WHEN CAST(concat('0x', substring(
-         |               md5(concat('srp:', j, ':', i)), 1, 15)) AS BIGINT)
-         |              % 2 = 1 THEN 1.0 ELSE -1.0 END))) > 0
-         |    THEN CAST(2 ** j AS BIGINT) ELSE 0 END)) AS BIGINT) AS bucket
-         |  FROM c),
-         |g AS (SELECT src, dst FROM ga JOIN pb ON ga.shard = pb.bucket),
+      s"""${shardRouteCtes("v55_graph", "v55_corpus")},
          |fg AS (SELECT src, dst FROM ga),
-         |dg AS (SELECT dst AS vec_id, count(*) AS deg FROM g
-         |       GROUP BY dst),
-         |en AS (SELECT vec_id FROM (
-         |         SELECT bk.vec_id,
-         |                row_number() OVER (PARTITION BY bk.bucket
-         |                  ORDER BY dg.deg DESC, bk.vec_id) AS rn
-         |         FROM bk JOIN dg USING (vec_id)
-         |         JOIN pb ON bk.bucket = pb.bucket) WHERE rn <= 2),
-         |fdg AS (SELECT dst AS vec_id, count(*) AS deg FROM fg
-         |        GROUP BY dst),
-         |fen AS (SELECT vec_id FROM (
-         |          SELECT bk.vec_id,
-         |                 row_number() OVER (PARTITION BY bk.bucket
-         |                   ORDER BY fdg.deg DESC, bk.vec_id) AS rn
-         |          FROM bk JOIN fdg USING (vec_id)) WHERE rn <= 2),
+         |$routedEntries,
+         |${bucketEntries("fdg", "fen", "fg", "bk")},
          |${walkUnrollSql("", "g", "c", beam = 16, customEntries = true,
                           rounds = 4)},
          |${walkUnrollSql("f", "fg", "c", beam = 16,
                           customEntries = true, rounds = 4)},
          |t AS (SELECT count(*) AS nodes_touched FROM s4),
          |sp AS (SELECT count(*) AS shards_probed FROM pb),
-         |ex AS (SELECT c.vec_id FROM c, q
-         |       ORDER BY list_cosine_similarity(c.e, q.qe) DESC, c.vec_id
-         |       LIMIT 10),
+         |$exactTop10,
          |fw AS (SELECT vec_id FROM fs4
          |       ORDER BY score DESC, vec_id LIMIT 10),
          |rf AS (SELECT round(CAST(count(ex.vec_id) AS DOUBLE) / 10.0, 6)
@@ -9406,21 +8915,13 @@ object VectorQueries {
     // from the sketch replay, all 4 batched walk rounds, exact ground
     // truth and per-query recall — every step in SQL
     "v54_graph_clustered" ->
-      s"""WITH g AS (SELECT src, dst
-         |           FROM read_parquet('${Artifacts.oracleGlob("v54_graph")}')),
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |      FROM read_parquet('${Artifacts.oracleGlob("v54_corpus")}')),
+      s"""${withGraph("v54_graph")},
+         |${corpus(parquet("v54_corpus"))},
          |q AS (SELECT vec_id AS query_id, e AS qe FROM v
          |      WHERE vec_id < 8),
          |c AS (SELECT vec_id, e FROM v WHERE vec_id >= 8),
          |bk AS (SELECT vec_id,
-         |  CAST(list_sum(list_transform(range(0, 6), j ->
-         |    CASE WHEN list_sum(list_transform(range(0, len(e)), i ->
-         |        e[CAST(i + 1 AS INT)] *
-         |        (CASE WHEN CAST(concat('0x', substring(
-         |               md5(concat('srp:', j, ':', i)), 1, 15)) AS BIGINT)
-         |              % 2 = 1 THEN 1.0 ELSE -1.0 END))) > 0
-         |    THEN CAST(2 ** j AS BIGINT) ELSE 0 END)) AS BIGINT) AS bucket
+         |${srpSketchCol(6, "e", "bucket")}
          |  FROM c),
          |dg AS (SELECT dst AS vec_id, count(*) AS deg FROM g GROUP BY dst),
          |en AS (SELECT vec_id FROM (
@@ -9461,223 +8962,171 @@ object VectorQueries {
     // BOTH member and probe ids -> the (bucket, salt) group join, next
     // to the unsalted bucket join for the edge_overlap retention metric
     "v53_graph_salted_build" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-        |           FROM embeddings),
-        |s AS (SELECT vec_id, e,
-        |  CAST(list_sum(list_transform(range(0, 16), j ->
-        |    CASE WHEN list_sum(list_transform(range(0, len(e)), i ->
-        |        e[CAST(i + 1 AS INT)] *
-        |        (CASE WHEN CAST(concat('0x', substring(
-        |               md5(concat('srp:', j, ':', i)), 1, 15)) AS BIGINT)
-        |              % 2 = 1 THEN 1.0 ELSE -1.0 END))) > 0
-        |    THEN CAST(2 ** j AS BIGINT) ELSE 0 END)) AS BIGINT) AS sketch
-        |  FROM v),
-        |p AS (SELECT src, qe,
-        |        unnest([qb, xor(qb, 1), xor(qb, 2), xor(qb, 4),
-        |                xor(qb, 8)]) AS bucket
-        |      FROM (SELECT vec_id AS src, e AS qe,
-        |                   sketch % 16 AS qb FROM s)),
-        |i AS (SELECT vec_id, e, sketch % 16 AS bucket FROM s),
-        |cnt AS (SELECT bucket, CAST(ceil(count(*) / 16.0) AS BIGINT) AS ns
-        |        FROM i GROUP BY bucket),
-        |im AS (SELECT i.vec_id, i.e, i.bucket,
-        |         CAST(concat('0x', substring(md5(concat('gsalt:',
-        |              CAST(i.vec_id AS VARCHAR))), 1, 15)) AS BIGINT)
-        |           % cnt.ns AS salt
-        |       FROM i JOIN cnt USING (bucket)),
-        |pm AS (SELECT p.src, p.qe, p.bucket,
-        |         CAST(concat('0x', substring(md5(concat('gsalt:',
-        |              CAST(p.src AS VARCHAR))), 1, 15)) AS BIGINT)
-        |           % cnt.ns AS salt
-        |       FROM p JOIN cnt USING (bucket)),
-        |cc AS (SELECT pm.src, im.vec_id,
-        |         list_cosine_similarity(im.e, pm.qe) AS score
-        |       FROM pm JOIN im USING (bucket, salt)
-        |       WHERE pm.src <> im.vec_id),
-        |fc AS (SELECT p.src, i.vec_id,
-        |         list_cosine_similarity(i.e, p.qe) AS score
-        |       FROM p JOIN i USING (bucket) WHERE p.src <> i.vec_id),
-        |ce AS (SELECT src, vec_id, score,
-        |         row_number() OVER (PARTITION BY src
-        |                            ORDER BY score DESC, vec_id) AS rank
-        |       FROM cc),
-        |fe AS (SELECT src, vec_id, score,
-        |         row_number() OVER (PARTITION BY src
-        |                            ORDER BY score DESC, vec_id) AS rank
-        |       FROM fc),
-        |nv AS (SELECT count(*) AS nv FROM v),
-        |nc AS (SELECT count(*) AS nc FROM cc),
-        |mx AS (SELECT max(c) AS mx FROM
-        |        (SELECT src, count(*) AS c FROM cc GROUP BY src)),
-        |nf AS (SELECT count(*) AS nf FROM fe WHERE rank <= 3),
-        |ncm AS (SELECT count(*) AS ncm
-        |        FROM (SELECT src, vec_id FROM ce WHERE rank <= 3)
-        |        JOIN (SELECT src, vec_id FROM fe WHERE rank <= 3)
-        |        USING (src, vec_id))
-        |SELECT ce.src, CAST(ce.rank AS BIGINT) AS rank,
-        |       ce.vec_id AS dst, round(ce.score, 6) AS score,
-        |       round(CAST(nc.nc AS DOUBLE) / nv.nv, 4) AS cand_per_vec,
-        |       mx.mx AS max_cand_src,
-        |       round(CAST(ncm.ncm AS DOUBLE) / nf.nf, 4) AS edge_overlap
-        |FROM ce, nv, nc, mx, nf, ncm
-        |WHERE ce.rank <= 3 AND ce.src < 30
-        |ORDER BY src, rank""".stripMargin,
+      s"""${withSrpSketch(16)},
+         |p AS (SELECT src, qe,
+         |        unnest([qb, xor(qb, 1), xor(qb, 2), xor(qb, 4),
+         |                xor(qb, 8)]) AS bucket
+         |      FROM (SELECT vec_id AS src, e AS qe,
+         |                   sketch % 16 AS qb FROM s)),
+         |i AS (SELECT vec_id, e, sketch % 16 AS bucket FROM s),
+         |cnt AS (SELECT bucket, CAST(ceil(count(*) / 16.0) AS BIGINT) AS ns
+         |        FROM i GROUP BY bucket),
+         |im AS (SELECT i.vec_id, i.e, i.bucket,
+         |         CAST(concat('0x', substring(md5(concat('gsalt:',
+         |              CAST(i.vec_id AS VARCHAR))), 1, 15)) AS BIGINT)
+         |           % cnt.ns AS salt
+         |       FROM i JOIN cnt USING (bucket)),
+         |pm AS (SELECT p.src, p.qe, p.bucket,
+         |         CAST(concat('0x', substring(md5(concat('gsalt:',
+         |              CAST(p.src AS VARCHAR))), 1, 15)) AS BIGINT)
+         |           % cnt.ns AS salt
+         |       FROM p JOIN cnt USING (bucket)),
+         |cc AS (SELECT pm.src, im.vec_id,
+         |         list_cosine_similarity(im.e, pm.qe) AS score
+         |       FROM pm JOIN im USING (bucket, salt)
+         |       WHERE pm.src <> im.vec_id),
+         |fc AS (SELECT p.src, i.vec_id,
+         |         list_cosine_similarity(i.e, p.qe) AS score
+         |       FROM p JOIN i USING (bucket) WHERE p.src <> i.vec_id),
+         |ce AS (SELECT src, vec_id, score,
+         |         row_number() OVER (PARTITION BY src
+         |                            ORDER BY score DESC, vec_id) AS rank
+         |       FROM cc),
+         |fe AS (SELECT src, vec_id, score,
+         |         row_number() OVER (PARTITION BY src
+         |                            ORDER BY score DESC, vec_id) AS rank
+         |       FROM fc),
+         |nv AS (SELECT count(*) AS nv FROM v),
+         |nc AS (SELECT count(*) AS nc FROM cc),
+         |mx AS (SELECT max(c) AS mx FROM
+         |        (SELECT src, count(*) AS c FROM cc GROUP BY src)),
+         |nf AS (SELECT count(*) AS nf FROM fe WHERE rank <= 3),
+         |ncm AS (SELECT count(*) AS ncm
+         |        FROM (SELECT src, vec_id FROM ce WHERE rank <= 3)
+         |        JOIN (SELECT src, vec_id FROM fe WHERE rank <= 3)
+         |        USING (src, vec_id))
+         |SELECT ce.src, CAST(ce.rank AS BIGINT) AS rank,
+         |       ce.vec_id AS dst, round(ce.score, 6) AS score,
+         |       round(CAST(nc.nc AS DOUBLE) / nv.nv, 4) AS cand_per_vec,
+         |       mx.mx AS max_cand_src,
+         |       round(CAST(ncm.ncm AS DOUBLE) / nf.nf, 4) AS edge_overlap
+         |FROM ce, nv, nc, mx, nf, ncm
+         |WHERE ce.rank <= 3 AND ce.src < 30
+         |ORDER BY src, rank""".stripMargin,
     // the capped-probe graph replay: per-plane dots for the 6 bucket
     // planes, sign bits -> own bucket, |margin| rank -> the 2 flips the
     // cap keeps, then BOTH candidate joins (capped + full hamming-1)
     // for the retention metric
     "v52_graph_capped_probe" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-        |           FROM embeddings),
-        |jj AS (SELECT unnest(range(0, 6)) AS j),
-        |d AS (SELECT v.vec_id, jj.j,
-        |        list_sum(list_transform(range(0, len(v.e)), i ->
-        |          v.e[CAST(i + 1 AS INT)] *
-        |          (CASE WHEN CAST(concat('0x', substring(
-        |                 md5(concat('srp:', jj.j, ':', i)), 1, 15))
-        |                 AS BIGINT)
-        |                % 2 = 1 THEN 1.0 ELSE -1.0 END))) AS dot
-        |      FROM v, jj),
-        |own AS (SELECT vec_id,
-        |          CAST(sum(CASE WHEN dot > 0 THEN CAST(2 ** j AS BIGINT)
-        |                        ELSE 0 END) AS BIGINT) AS qb
-        |        FROM d GROUP BY vec_id),
-        |fr AS (SELECT vec_id, j,
-        |         row_number() OVER (PARTITION BY vec_id
-        |                            ORDER BY abs(dot), j) AS rn
-        |       FROM d),
-        |cp AS (SELECT vec_id AS query_id, qb AS bucket FROM own
-        |       UNION ALL
-        |       SELECT own.vec_id, xor(own.qb, CAST(2 ** fr.j AS BIGINT))
-        |       FROM own JOIN fr USING (vec_id) WHERE fr.rn <= 2),
-        |fp AS (SELECT vec_id AS query_id, qb AS bucket FROM own
-        |       UNION ALL
-        |       SELECT own.vec_id, xor(own.qb, CAST(2 ** jj.j AS BIGINT))
-        |       FROM own, jj),
-        |i AS (SELECT v.vec_id, v.e, own.qb AS bucket
-        |      FROM v JOIN own USING (vec_id)),
-        |cc AS (SELECT cp.query_id, i.vec_id,
-        |         list_cosine_similarity(i.e, q.e) AS score
-        |       FROM cp JOIN i USING (bucket)
-        |       JOIN v q ON q.vec_id = cp.query_id
-        |       WHERE cp.query_id <> i.vec_id),
-        |fc AS (SELECT fp.query_id, i.vec_id,
-        |         list_cosine_similarity(i.e, q.e) AS score
-        |       FROM fp JOIN i USING (bucket)
-        |       JOIN v q ON q.vec_id = fp.query_id
-        |       WHERE fp.query_id <> i.vec_id),
-        |ce AS (SELECT query_id, vec_id, score,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY score DESC, vec_id) AS rank
-        |       FROM cc),
-        |fe AS (SELECT query_id, vec_id, score,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY score DESC, vec_id) AS rank
-        |       FROM fc),
-        |nv AS (SELECT count(*) AS nv FROM v),
-        |nc AS (SELECT count(*) AS nc FROM cc),
-        |nf AS (SELECT count(*) AS nf FROM fe WHERE rank <= 3),
-        |ncm AS (SELECT count(*) AS ncm
-        |        FROM (SELECT query_id, vec_id FROM ce WHERE rank <= 3)
-        |        JOIN (SELECT query_id, vec_id FROM fe WHERE rank <= 3)
-        |        USING (query_id, vec_id))
-        |SELECT ce.query_id, CAST(ce.rank AS BIGINT) AS rank, ce.vec_id,
-        |       round(ce.score, 6) AS score,
-        |       round(CAST(nc.nc AS DOUBLE) / nv.nv, 4) AS cand_per_vec,
-        |       round(CAST(ncm.ncm AS DOUBLE) / nf.nf, 4) AS edge_overlap
-        |FROM ce, nv, nc, nf, ncm
-        |WHERE ce.rank <= 3 AND ce.query_id < 30
-        |ORDER BY query_id, rank""".stripMargin,
+      s"""${withCorpus("embeddings")},
+         |jj AS (SELECT unnest(range(0, 6)) AS j),
+         |${srpPlaneDots("d", "v.vec_id", "v.e", "v")},
+         |own AS (SELECT vec_id,
+         |          CAST(sum(CASE WHEN dot > 0 THEN CAST(2 ** j AS BIGINT)
+         |                        ELSE 0 END) AS BIGINT) AS qb
+         |        FROM d GROUP BY vec_id),
+         |fr AS (SELECT vec_id, j,
+         |         row_number() OVER (PARTITION BY vec_id
+         |                            ORDER BY abs(dot), j) AS rn
+         |       FROM d),
+         |cp AS (SELECT vec_id AS query_id, qb AS bucket FROM own
+         |       UNION ALL
+         |       SELECT own.vec_id, xor(own.qb, CAST(2 ** fr.j AS BIGINT))
+         |       FROM own JOIN fr USING (vec_id) WHERE fr.rn <= 2),
+         |fp AS (SELECT vec_id AS query_id, qb AS bucket FROM own
+         |       UNION ALL
+         |       SELECT own.vec_id, xor(own.qb, CAST(2 ** jj.j AS BIGINT))
+         |       FROM own, jj),
+         |i AS (SELECT v.vec_id, v.e, own.qb AS bucket
+         |      FROM v JOIN own USING (vec_id)),
+         |cc AS (SELECT cp.query_id, i.vec_id,
+         |         list_cosine_similarity(i.e, q.e) AS score
+         |       FROM cp JOIN i USING (bucket)
+         |       JOIN v q ON q.vec_id = cp.query_id
+         |       WHERE cp.query_id <> i.vec_id),
+         |fc AS (SELECT fp.query_id, i.vec_id,
+         |         list_cosine_similarity(i.e, q.e) AS score
+         |       FROM fp JOIN i USING (bucket)
+         |       JOIN v q ON q.vec_id = fp.query_id
+         |       WHERE fp.query_id <> i.vec_id),
+         |ce AS (SELECT query_id, vec_id, score,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY score DESC, vec_id) AS rank
+         |       FROM cc),
+         |fe AS (SELECT query_id, vec_id, score,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY score DESC, vec_id) AS rank
+         |       FROM fc),
+         |nv AS (SELECT count(*) AS nv FROM v),
+         |nc AS (SELECT count(*) AS nc FROM cc),
+         |nf AS (SELECT count(*) AS nf FROM fe WHERE rank <= 3),
+         |ncm AS (SELECT count(*) AS ncm
+         |        FROM (SELECT query_id, vec_id FROM ce WHERE rank <= 3)
+         |        JOIN (SELECT query_id, vec_id FROM fe WHERE rank <= 3)
+         |        USING (query_id, vec_id))
+         |SELECT ce.query_id, CAST(ce.rank AS BIGINT) AS rank, ce.vec_id,
+         |       round(ce.score, 6) AS score,
+         |       round(CAST(nc.nc AS DOUBLE) / nv.nv, 4) AS cand_per_vec,
+         |       round(CAST(ncm.ncm AS DOUBLE) / nf.nf, 4) AS edge_overlap
+         |FROM ce, nv, nc, nf, ncm
+         |WHERE ce.rank <= 3 AND ce.query_id < 30
+         |ORDER BY query_id, rank""".stripMargin,
     "v21_srp_batch" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-        |           FROM embeddings),
-        |s AS (SELECT vec_id, e,
-        |  CAST(list_sum(list_transform(range(0, 16), j ->
-        |    CASE WHEN list_sum(list_transform(range(0, len(e)), i ->
-        |        e[CAST(i + 1 AS INT)] *
-        |        (CASE WHEN CAST(concat('0x', substring(
-        |               md5(concat('srp:', j, ':', i)), 1, 15)) AS BIGINT)
-        |              % 2 = 1 THEN 1.0 ELSE -1.0 END))) > 0
-        |    THEN CAST(2 ** j AS BIGINT) ELSE 0 END)) AS BIGINT) AS sketch
-        |  FROM v),
-        |q AS (SELECT vec_id AS query_id, e AS qe, sketch AS qsketch
-        |      FROM s WHERE vec_id < 8),
-        |cand AS (
-        |  SELECT q.query_id, s.vec_id, s.e, q.qe,
-        |         CAST(bit_count(xor(s.sketch, q.qsketch)) AS BIGINT)
-        |           AS hamming
-        |  FROM s, q WHERE s.vec_id >= 8),
-        |short AS (
-        |  SELECT * FROM (
-        |    SELECT cand.*, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY hamming, vec_id) AS hrank FROM cand)
-        |  WHERE hrank <= 50),
-        |top AS (
-        |  SELECT query_id, vec_id, hamming,
-        |         list_cosine_similarity(e, qe) AS score,
-        |         row_number() OVER (PARTITION BY query_id
-        |           ORDER BY list_cosine_similarity(e, qe) DESC, vec_id)
-        |           AS rank
-        |  FROM short)
-        |SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id, hamming,
-        |       round(score, 6) AS score
-        |FROM top WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
+      s"""${withSrpSketch(16)},
+         |q AS (SELECT vec_id AS query_id, e AS qe, sketch AS qsketch
+         |      FROM s WHERE vec_id < 8),
+         |cand AS (
+         |  SELECT q.query_id, s.vec_id, s.e, q.qe,
+         |         CAST(bit_count(xor(s.sketch, q.qsketch)) AS BIGINT)
+         |           AS hamming
+         |  FROM s, q WHERE s.vec_id >= 8),
+         |short AS (
+         |  SELECT * FROM (
+         |    SELECT cand.*, row_number() OVER (PARTITION BY query_id
+         |      ORDER BY hamming, vec_id) AS hrank FROM cand)
+         |  WHERE hrank <= 50),
+         |top AS (
+         |  SELECT query_id, vec_id, hamming,
+         |         list_cosine_similarity(e, qe) AS score,
+         |         row_number() OVER (PARTITION BY query_id
+         |           ORDER BY list_cosine_similarity(e, qe) DESC, vec_id)
+         |           AS rank
+         |  FROM short)
+         |SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id, hamming,
+         |       round(score, 6) AS score
+         |FROM top WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
     "v20_srp_shortlist" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-        |           FROM embeddings),
-        |s AS (SELECT vec_id, e,
-        |  CAST(list_sum(list_transform(range(0, 16), j ->
-        |    CASE WHEN list_sum(list_transform(range(0, len(e)), i ->
-        |        e[CAST(i + 1 AS INT)] *
-        |        (CASE WHEN CAST(concat('0x', substring(
-        |               md5(concat('srp:', j, ':', i)), 1, 15)) AS BIGINT)
-        |              % 2 = 1 THEN 1.0 ELSE -1.0 END))) > 0
-        |    THEN CAST(2 ** j AS BIGINT) ELSE 0 END)) AS BIGINT) AS sketch
-        |  FROM v),
-        |q AS (SELECT e AS qe, sketch AS qsketch FROM s WHERE vec_id = 0),
-        |short AS (
-        |  SELECT s.vec_id, s.e,
-        |         CAST(bit_count(xor(s.sketch, q.qsketch)) AS BIGINT)
-        |           AS hamming,
-        |         q.qe
-        |  FROM s, q WHERE s.vec_id <> 0
-        |  ORDER BY hamming, s.vec_id LIMIT 50),
-        |top AS (
-        |  SELECT vec_id, hamming, list_cosine_similarity(e, qe) AS score
-        |  FROM short ORDER BY score DESC, vec_id LIMIT 10)
-        |SELECT vec_id, hamming, round(score, 6) AS score FROM top
-        |ORDER BY vec_id""".stripMargin,
+      s"""${withSrpSketch(16)},
+         |q AS (SELECT e AS qe, sketch AS qsketch FROM s WHERE vec_id = 0),
+         |short AS (
+         |  SELECT s.vec_id, s.e,
+         |         CAST(bit_count(xor(s.sketch, q.qsketch)) AS BIGINT)
+         |           AS hamming,
+         |         q.qe
+         |  FROM s, q WHERE s.vec_id <> 0
+         |  ORDER BY hamming, s.vec_id LIMIT 50),
+         |top AS (
+         |  SELECT vec_id, hamming, list_cosine_similarity(e, qe) AS score
+         |  FROM short ORDER BY score DESC, vec_id LIMIT 10)
+         |SELECT vec_id, hamming, round(score, 6) AS score FROM top
+         |ORDER BY vec_id""".stripMargin,
     "v12_srp_sketch" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-        |           FROM embeddings)
-        |SELECT vec_id,
-        |  CAST(list_sum(list_transform(range(0, 16), j ->
-        |    CASE WHEN list_sum(list_transform(range(0, len(e)), i ->
-        |        e[CAST(i + 1 AS INT)] *
-        |        (CASE WHEN CAST(concat('0x', substring(
-        |               md5(concat('srp:', j, ':', i)), 1, 15)) AS BIGINT)
-        |              % 2 = 1 THEN 1.0 ELSE -1.0 END))) > 0
-        |    THEN CAST(2 ** j AS BIGINT) ELSE 0 END)) AS BIGINT) AS sketch
-        |FROM v ORDER BY vec_id""".stripMargin,
+      s"""${withCorpus("embeddings")}
+         |SELECT vec_id,
+         |${srpSketchCol(16, "e", "sketch")}
+         |FROM v ORDER BY vec_id""".stripMargin,
     "v11_bucketed_near_dup" ->
-      """WITH c AS (SELECT vec_id AS centroid_id, embedding AS centroid
-        |           FROM embeddings ORDER BY vec_id LIMIT 16),
-        |assigned AS (
-        |  SELECT vec_id, embedding, centroid_id FROM (
-        |    SELECT e.vec_id, e.embedding, c.centroid_id,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |             ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]),
-        |                                    CAST(c.centroid AS DOUBLE[])),
-        |                      c.centroid_id) AS rn
-        |    FROM embeddings e, c WHERE e.vec_id >= 16) WHERE rn = 1)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |       round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |                                    CAST(b.embedding AS DOUBLE[])), 6) AS cosine
-        |FROM assigned a JOIN assigned b
-        |  ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
-        |WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |                             CAST(b.embedding AS DOUBLE[])) >= 0.4
-        |ORDER BY id_a, id_b""".stripMargin,
+      s"""WITH c AS (SELECT vec_id AS centroid_id, embedding AS centroid
+         |           FROM embeddings ORDER BY vec_id LIMIT 16),
+         |$seededAssigned
+         |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+         |       round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+         |                                    CAST(b.embedding AS DOUBLE[])), 6) AS cosine
+         |FROM assigned a JOIN assigned b
+         |  ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
+         |WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+         |                             CAST(b.embedding AS DOUBLE[])) >= 0.4
+         |ORDER BY id_a, id_b""".stripMargin,
     "v08_ivf_cells" ->
       """WITH c AS (SELECT vec_id AS centroid_id, embedding AS centroid
         |           FROM embeddings ORDER BY vec_id LIMIT 16),
