@@ -1,8 +1,10 @@
 #!/bin/bash
 # Launch a graft main directly (bypassing sbt) — same JVM flags as
-# build.sbt's forked run. Usage: runmain.sh <mainClass> [args...]
+# build.sbt's forked run, on the compiled classes of the checkout that
+# holds this script. Usage: runmain.sh <mainClass> [args...]
 MAIN=$1; shift
-CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
   --add-opens java.base/java.lang.invoke=ALL-UNNAMED \

@@ -2,6 +2,7 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    SparkEntry.requireReferenceDb()
     val spark = SparkEntry.session()
     spark.sparkContext.setLogLevel("WARN")
     // Timed runs per query, report the fastest: the first run of a

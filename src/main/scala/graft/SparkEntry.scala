@@ -66,6 +66,20 @@ object SparkEntry {
       .getOrCreate()
   }
 
+  /** Ends a main with status 2, before its first query, when
+    * [[graft.sources.Sources.referenceDb]] is not a file. Without it
+    * the reference-geometry queries each fail with PATH_NOT_FOUND, and
+    * only after the whole run. */
+  def requireReferenceDb(): Unit = {
+    val db = graft.sources.Sources.referenceDb
+    if (!new java.io.File(db).isFile) {
+      System.err.println(s"reference store $db is not a file: set " +
+        "-Dgraft.reference.dir to the directory holding vectors.db " +
+        "(the relative default resolves against the working directory)")
+      sys.exit(2)
+    }
+  }
+
   /** Whether query `name` is in the `SPARK_GRAFT_ONLY` subset, the
     * dev-loop filter of Bench and Verify: comma-separated name
     * prefixes. Unset (a full run) selects every query, and so does a

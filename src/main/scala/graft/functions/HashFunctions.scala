@@ -59,11 +59,6 @@ object HashFunctions {
   def md5Long(s: Column, salt: Int): Column =
     md5Long(concat(lit(salt.toString), lit(":"), s))
 
-  /** Bit `i` (0-based from LSB of the 60-bit hash) as ±1 — SimHash votes. */
-  def hashBitSign(s: Column, bit: Int): Column =
-    when(shiftright(md5Long(s), bit).bitwiseAND(1) === 1, lit(1))
-      .otherwise(lit(-1))
-
   // ---- affine universal-hash family over one md5 base hash ------------
   //
   // md5 (string hex → conv → long) is ~50× the cost of integer math, so

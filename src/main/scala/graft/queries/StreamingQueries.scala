@@ -650,10 +650,7 @@ object StreamingQueries {
       : DataFrame = {
     import graft.operators.Ann
     import spark.implicits._
-    val all = spark.read
-      .parquet(VectorQueries.v71Corpus(spark, sfDir))
-      .filter(col("vec_id") =!= 1000L)
-      .withColumn("_k", pmod(col("vec_id"), lit(1000L)))
+    val all = VectorQueries.v71Accreted(spark, sfDir)
     val base = all.filter(col("_k") < 40).drop("_k")
     // the three delta batches staged ONCE per (app, corpus) as three
     // files in accretion order → three AvailableNow micro-batches
@@ -1198,11 +1195,10 @@ object StreamingQueries {
     * the scales are learned, never what the tier answers.
     */
   def streamSq8Store(spark: SparkSession, sfDir: String): DataFrame = {
-    val (corpusDir, _, _) = VectorQueries.v57Artifacts(spark, sfDir)
+    val corpusDir = VectorQueries.v57Corpus(spark, sfDir)
     val schema = spark.read.parquet(corpusDir).schema
-    val vecStream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "*.parquet").parquet(corpusDir)
-      .filter(col("vec_id") =!= 1000L)
+    val vecStream = VectorQueries.servingOf(spark.readStream.schema(schema)
+      .option("pathGlobFilter", "*.parquet").parquet(corpusDir))
     // identical arithmetic to Sq8.scalesRow's batch pass (abs/max in
     // float, one exact double widening, dead-dim floor) — max is
     // order-free, so streamed == batch to the last bit
