@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.{Chunker, Ingest, Search, ServeBlock}
+import graft.operators.{Chunker, Ingest, Search, ServeBlock, TextSearch,
+  VectorBlock}
 import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -63,19 +64,26 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
              embedder: Embedder = HashEmbedder) {
 
   /** The store as the reads see it: the resolved relation, the store
-    * directory's modification time when it was resolved, and the
-    * driver-held block, collected on first use. */
-  private case class Snapshot(docs: DataFrame, mtime: Option[Long]) {
+    * directory's modification time when it was resolved, and what is
+    * built from it on first use — the driver-held block and both
+    * indexes. Dropping the snapshot releases them, so no index outlives
+    * the snapshot it was built from. Its fields change only under the
+    * engine's lock. */
+  private final class Snapshot(val docs: DataFrame, val mtime: Option[Long]) {
     /** The optimizer's size estimate of the block's columns (no job);
       * None when their types keep every read on the plans. */
     lazy val size: Option[BigInt] = ServeBlock.size(docs)
     lazy val block: Option[ServeBlock] = ServeBlock.collect(docs)
+    var index: Option[DataFrame] = None
+    var lexical: Option[TextSearch.Bm25Index] = None
+
+    def release(): Unit = {
+      index.foreach(_.unpersist())
+      lexical.foreach(_.release())
+    }
   }
 
   @volatile private var snapshot: Option[Snapshot] = None
-  @volatile private var cachedIndex: Option[DataFrame] = None
-  @volatile private var cachedLexical
-      : Option[graft.operators.TextSearch.Bm25Index] = None
 
   /** The store directory's modification time, `None` when it does not
     * exist: one FS status call, no Spark job. Appends and the delete's
@@ -109,15 +117,18 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
     // two leaves a snapshot keyed on the older time, which the next
     // call re-resolves, never a stale snapshot keyed on the newer one
     val mtime = storeMtime()
-    snapshot match {
-      case Some(s) if s.mtime == mtime => s
-      case _ =>
-        invalidateIndex()
-        val s = Snapshot(
-          Ingest.readStore(spark, storePath).getOrElse(emptyStore), mtime)
-        snapshot = Some(s)
-        s
+    snapshot.filter(_.mtime == mtime).getOrElse {
+      dropSnapshot()
+      val s = new Snapshot(
+        Ingest.readStore(spark, storePath).getOrElse(emptyStore), mtime)
+      snapshot = Some(s)
+      s
     }
+  }
+
+  private def dropSnapshot(): Unit = synchronized {
+    snapshot.foreach(_.release())
+    snapshot = None
   }
 
   /** The snapshot's driver-held block, when its size estimate is within
@@ -125,7 +136,7 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
     * plans). The first call per snapshot collects it: one job. */
   private def held(s: Snapshot = current()): Option[ServeBlock] =
     synchronized {
-      if (s.size.exists(ServeBlock.fits(s.docs, _))) s.block else None
+      if (s.size.exists(VectorBlock.fits(s.docs, _))) s.block else None
     }
 
   /** GET /count-documents: the held block's row count (no job), else
@@ -135,37 +146,26 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
   /** The (doc_id, embedding) index, built on demand: a local frame of
     * the held block, else the cached projection of the snapshot. */
   def index(): DataFrame = synchronized {
-    // first: a moved store mtime drops the stale index here
     val s = current()
-    cachedIndex.getOrElse {
+    s.index.getOrElse {
       val idx = held(s).fold(
         Ingest.buildIndex(s.docs, "doc_id", "embedding"))(_.index)
-      cachedIndex = Some(idx)
+      s.index = Some(idx)
       idx
     }
   }
 
   /** The BM25 corpus statistics, built on demand — local frames of the
     * held block, else cached frames over the snapshot — and released
-    * together with the vector index whenever the snapshot is dropped.
-    */
-  def lexicalIndex(): graft.operators.TextSearch.Bm25Index = synchronized {
-    // first, as in index()
+    * with it. */
+  def lexicalIndex(): TextSearch.Bm25Index = synchronized {
     val s = current()
-    cachedLexical.getOrElse {
-      val idx = held(s).fold(graft.operators.TextSearch.buildBm25Index(
+    s.lexical.getOrElse {
+      val idx = held(s).fold(TextSearch.buildBm25Index(
         s.docs.select("doc_id", "content"), "doc_id", "content"))(_.bm25Index)
-      cachedLexical = Some(idx)
+      s.lexical = Some(idx)
       idx
     }
-  }
-
-  private def invalidateIndex(): Unit = synchronized {
-    snapshot = None
-    cachedIndex.foreach(_.unpersist())
-    cachedIndex = None
-    cachedLexical.foreach(_.release())
-    cachedLexical = None
   }
 
   /** Chunk → embed → dedup → assign ids → append. Returns the number of
@@ -204,7 +204,7 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
       val n = assigned.count()
       if (n > 0) {
         Ingest.writeStore(assigned, storePath)
-        invalidateIndex()
+        dropSnapshot()
       }
       n
     } finally assigned.unpersist()
@@ -264,7 +264,7 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
             .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
             .option("compression", "zstd").parquet(tmp)
           Ingest.replaceStoreDir(spark, tmp, storePath)
-          invalidateIndex()
+          dropSnapshot()
         }
         n
       }
@@ -349,7 +349,6 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
     * input and term bag). Returns (doc_id, rrf_score, content).
     */
   def hybridSearch(query: String, k: Int): DataFrame = {
-    import graft.operators.TextSearch
     val q = queryFrame(query)
     val terms = query.toLowerCase.trim.split("\\s+").toSeq
     served(q)(_.hybrid(_, terms, k)).getOrElse {
@@ -384,22 +383,17 @@ object Engine {
 
   /** [[Search.contextAgg]]'s string for one query's (doc_id, score,
     * content) rows, built on the driver: rows with null content are
-    * dropped, the rest ranked by score descending in Spark's double
-    * order (-0.0 equals 0.0, NaN ranks first, null last) then doc_id,
-    * and joined as "rank. content" lines. No rows give "". */
+    * dropped, the rest ranked by [[Search.ranksBefore]] with doc_id as
+    * tie key, and joined as "rank. content" lines. No rows give "". */
   private[graft] def formatContext(rows: Seq[Row]): String = {
-    def score(r: Row): Option[Double] =
-      if (r.isNullAt(1)) None else Some(r.getDouble(1))
-    val byScoreDesc: Ordering[Option[Double]] = {
-      case (Some(a), Some(b)) =>
-        if (a == b) 0 else java.lang.Double.compare(b, a)
-      case (a, b) => java.lang.Boolean.compare(a.isEmpty, b.isEmpty)
-    }
-    rows.filterNot(_.isNullAt(2))
-      .sortBy(r => (score(r), r.getLong(0)))(
-        Ordering.Tuple2(byScoreDesc, Ordering.Long))
+    val kept = rows.filterNot(_.isNullAt(2)).toIndexedSeq
+    def score(i: Int): Double =
+      if (kept(i).isNullAt(1)) 0.0 else kept(i).getDouble(1)
+    Search.firstK(kept.indices, kept.length)((a, b) => Search.ranksBefore(
+        score(a), kept(a).isNullAt(1), kept(a).getLong(0),
+        score(b), kept(b).isNullAt(1), kept(b).getLong(0)))
       .zipWithIndex
-      .map { case (r, i) => s"${i + 1}. ${r.getString(2)}" }
+      .map { case (i, r) => s"${r + 1}. ${kept(i).getString(2)}" }
       .mkString("\n")
   }
 }

@@ -24,11 +24,8 @@ abstract class VectorBinaryExpression extends BinaryExpression {
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    def ok(dt: DataType): Boolean = dt match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _                                    => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckSuccess
+    if (VectorInput.accepts(left.dataType) &&
+        VectorInput.accepts(right.dataType)) TypeCheckSuccess
     else TypeCheckFailure(
       s"$prettyName requires array<float|double> inputs, " +
         s"got ${left.dataType.sql} and ${right.dataType.sql}")

@@ -1,7 +1,7 @@
 package graft.operators
 
+import graft.expressions.VectorInput
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -22,11 +22,11 @@ import scala.jdk.CollectionConverters._
   * The rules are the per-round loop's, so answers are row-identical:
   * entries are the entry ids present in the vectors; expansions
   * without a vector are dropped; each round keeps the `beam` best of
-  * the whole visited set (score desc with nulls last, doubles
-  * compared as Spark sorts them, then id asc); `nodes_touched` is the
-  * visited-set size. The cosine widens and accumulates exactly as
-  * [[graft.expressions.CosineSimilarity]] does, and a width mismatch
-  * throws its `IllegalArgumentException`.
+  * the whole visited set, and the output its `k` best, both by
+  * [[Search.firstK]] under [[Search.ranksBefore]] with the id as tie
+  * key; `nodes_touched` is the visited-set size. The cosine widens and
+  * accumulates exactly as [[graft.expressions.CosineSimilarity]] does,
+  * and a width mismatch throws its `IllegalArgumentException`.
   */
 private[operators] object BroadcastWalk {
 
@@ -45,11 +45,6 @@ private[operators] object BroadcastWalk {
 
   private def isId(t: DataType): Boolean = t == IntegerType || t == LongType
 
-  private def isVec(t: DataType): Boolean = t match {
-    case ArrayType(FloatType | DoubleType, _) => true
-    case _                                    => false
-  }
-
   private def field(df: DataFrame, c: String): StructField =
     df.select(col(c)).schema.head
 
@@ -66,12 +61,16 @@ private[operators] object BroadcastWalk {
     val idF = field(vectors, idCol)
     val vecF = field(vectors, vecCol)
     val qeF = field(q, "qe")
-    val shapes = isId(idF.dataType) && isVec(vecF.dataType) &&
-      isVec(qeF.dataType) && isId(field(graph, "src").dataType) &&
+    val shapes = isId(idF.dataType) && VectorInput.accepts(vecF.dataType) &&
+      VectorInput.accepts(qeF.dataType) &&
+      isId(field(graph, "src").dataType) &&
       isId(field(graph, "dst").dataType) &&
       !graph.columns.contains(queryIdCol) &&
       beam.forall(b => isId(field(q, b).dataType))
-    if (!shapes || !fits(graph, vectors, idCol, vecCol)) return None
+    if (!shapes || !VectorBlock.fits(vectors,
+        VectorBlock.sizeOf(graph.select(col("src"), col("dst"))) +
+          VectorBlock.sizeOf(vectors.select(col(idCol), col(vecCol)))))
+      return None
     collectIndex(graph, vectors, idCol, vecCol, pred).map { ix =>
       val entries = entryIds.distinct
         .map(id => java.util.Arrays.binarySearch(ix.v.ids, id))
@@ -99,15 +98,6 @@ private[operators] object BroadcastWalk {
           nullable = false)))
       spark.createDataFrame(rows.toSeq.asJava, schema)
     }
-  }
-
-  /** The size switch: the optimizer's estimate of both projections is
-    * at most the session's broadcast bound (-1 turns the path off). */
-  private def fits(graph: DataFrame, vectors: DataFrame, idCol: String,
-                   vecCol: String): Boolean = {
-    val bound = VectorBlock.bound(vectors)
-    bound >= 0 && VectorBlock.sizeOf(graph.select(col("src"), col("dst"))) +
-      VectorBlock.sizeOf(vectors.select(col(idCol), col(vecCol))) <= bound
   }
 
   /** Collects the vectors (one job) and, unless an id repeats, the
@@ -201,14 +191,7 @@ private[operators] object BroadcastWalk {
   private def walkOne(ix: Index, r: Row, entries: Array[Int],
                       fixedBeam: Int, rounds: Int, k: Int,
                       idIsInt: Boolean, filtered: Boolean): Iterator[Row] = {
-    // a null element reads as 0, as ArrayData.getFloat/getDouble do
-    val qv: Array[Double] =
-      if (r.isNullAt(1)) null
-      else r.getSeq[Any](1).iterator.map {
-        case x: Float  => x.toDouble
-        case x: Double => x
-        case _         => 0.0
-      }.toArray
+    val qv = VectorBlock.widen(r, 1)
     val beam =
       if (r.length < 3) fixedBeam
       else if (r.isNullAt(2)) 0
@@ -224,18 +207,14 @@ private[operators] object BroadcastWalk {
       nul += isNull
       score += (if (isNull) 0.0 else ix.v.cosine(i, qv))
     }
-    // score desc, nulls last, then id asc (row order is id order)
-    def before(a: Int, b: Int): Boolean =
-      if (nul(a) != nul(b)) !nul(a)
-      else {
-        val c = if (nul(a)) 0 else SQLOrderingUtil.compareDoubles(score(a),
-          score(b))
-        if (c != 0) c > 0 else vis(a) < vis(b)
-      }
+    // the k best visited positions; the row (id order) breaks ties
+    def best(ps: Seq[Int], k: Int): Array[Int] =
+      Search.firstK(ps, k)((a, b) => Search.ranksBefore(score(a), nul(a),
+        vis(a), score(b), nul(b), vis(b)))
     entries.foreach(visit)
     for (_ <- 1 to rounds) {
-      val frontier = vis.indices.sortWith(before).take(beam).map(vis(_))
-      frontier.foreach { i =>
+      best(vis.indices, beam).foreach { p =>
+        val i = vis(p)
         var e = ix.adjOff(i)
         while (e < ix.adjOff(i + 1)) { visit(ix.adj(e)); e += 1 }
       }
@@ -243,7 +222,7 @@ private[operators] object BroadcastWalk {
     val candidates =
       if (filtered) vis.indices.filter(p => ix.pass(vis(p))) else vis.indices
     val touched = vis.length.toLong
-    candidates.sortWith(before).take(k).iterator.zipWithIndex.map {
+    best(candidates, k).iterator.zipWithIndex.map {
       case (p, rank) =>
         val id = ix.v.ids(vis(p))
         Row.fromSeq(Seq(r.get(0), rank + 1L,

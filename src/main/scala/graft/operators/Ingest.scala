@@ -68,27 +68,13 @@ object Ingest {
     novel
   }
 
-  /** Assign contiguous ids after maxExisting, ordered by content for
-    * determinism. Global window = the one intentional serialization
-    * point (AUTOINCREMENT parity).
-    */
-  def assignIds(novel: DataFrame, contentCol: String, maxExisting: Long)
-      : DataFrame =
-    novel.withColumn("doc_id",
-      // boundedGlobalWindow: the single-partition ranking is the
-      // documented AUTOINCREMENT-parity serialization point, deliberate,
-      // not an accidental unpartitioned window (a plain lit(0) partition
-      // no longer works — Spark 4's EliminateWindowPartitions strips
-      // foldable keys and the warning returns; the non-foldable constant
-      // survives the optimizer)
-      row_number().over(
-        Search.boundedGlobalWindow(length(col(contentCol)))
-          .orderBy(col(contentCol))) + maxExisting)
-
-  /** Single-plan variant: the store's max id arrives as a broadcast
-    * 1-row aggregate instead of a driver-side `.head()` fetch, so the
-    * whole ingest (chunk → embed → anti-join → assign → write) stays ONE
-    * Spark job instead of splitting at a driver sync.
+  /** Assign contiguous ids after the store's max id (0 for an empty
+    * store), ordered by content for determinism. The global window is
+    * the one intentional serialization point (AUTOINCREMENT parity).
+    * The max id arrives as a broadcast 1-row aggregate instead of a
+    * driver-side `.head()` fetch, so the whole ingest (chunk → embed →
+    * anti-join → assign → write) stays ONE Spark job instead of
+    * splitting at a driver sync.
     */
   def assignIdsAfter(novel: DataFrame, contentCol: String,
                      store: DataFrame, storeIdCol: String): DataFrame = {
@@ -96,6 +82,11 @@ object Ingest {
       .agg(coalesce(max(col(storeIdCol)), lit(0L)).as("_max_existing"))
     novel.crossJoin(broadcast(maxFrame))
       .withColumn("doc_id",
+        // boundedGlobalWindow: a deliberate single-partition ranking, not
+        // an accidental unpartitioned window (a plain lit(0) partition
+        // no longer works — Spark 4's EliminateWindowPartitions strips
+        // foldable keys and the warning returns; the non-foldable
+        // constant survives the optimizer)
         row_number().over(
           Search.boundedGlobalWindow(length(col(contentCol)))
             .orderBy(col(contentCol))) + col("_max_existing"))
@@ -103,7 +94,7 @@ object Ingest {
   }
 
   /** Distributed id assignment — the scale path the AUTOINCREMENT-parity
-    * [[assignIds]] window trades away. Same contract (ids dense and
+    * [[assignIdsAfter]] window trades away. Same contract (ids dense and
     * contiguous after the store max, ordered by `contentCol`), but no
     * single task ever sees the whole batch:
     *

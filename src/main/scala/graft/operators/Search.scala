@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.VectorFunctions.cosineSim
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -99,8 +100,9 @@ object Search {
     * the retrieval that produced the shortlist, and this pass stays
     * O(k·N·d) on ~50 rows regardless of corpus size.
     *
-    * Determinism: candidates are processed in (score desc, id) order,
-    * ties in the marginal score break on ascending id, and the
+    * Determinism: candidates are processed in [[ranksBefore]] order
+    * (score descending in Spark's double order, then id), ties in the
+    * marginal score break on ascending id, and the
     * candidate-candidate cosine is [[BroadcastWalk.cosine]], the
     * arithmetic of [[graft.expressions.CosineSimilarity]] (float→double
     * widening, sequential accumulation, `dot/(√na·√nb)`), so results
@@ -124,7 +126,10 @@ object Search {
   private[operators] def mmrPicks(
       shortlist: Array[(Long, Double, Array[Float])], k: Int, lambda: Double)
       : Seq[(Long, Long, Double)] = {
-    val cand = shortlist.sortBy { case (id, s, _) => (-s, id) }
+    val cand = firstK(shortlist.indices, shortlist.length) { (a, b) =>
+      ranksBefore(shortlist(a)._2, false, shortlist(a)._1,
+        shortlist(b)._2, false, shortlist(b)._1)
+    }.map(shortlist)
     val used = new Array[Boolean](cand.length)
     // selected vectors, widened once
     val selVecs = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
@@ -167,6 +172,40 @@ object Search {
     }
     out.toSeq
   }
+
+  /** The driver-side rank rule of the plans' `ORDER BY score DESC, id`:
+    * whether (score `sa`, null flag `na`, tie key `ka`) ranks before
+    * (`sb`, `nb`, `kb`). Scores order descending in Spark's double order
+    * (NaN first, -0.0 equals 0.0), null scores last, then the tie key
+    * ascending. */
+  private[graft] def ranksBefore(sa: Double, na: Boolean, ka: Long,
+                                 sb: Double, nb: Boolean, kb: Long)
+      : Boolean =
+    if (na != nb) !na
+    else {
+      val c = if (na) 0 else SQLOrderingUtil.compareDoubles(sa, sb)
+      if (c != 0) c > 0 else ka < kb
+    }
+
+  /** The first `k` of `items` under `before`, first first: one sort when
+    * `k` covers them all, else a bounded heap of the kept `k`. `before`
+    * is a strict order, [[ranksBefore]] over the items' scores; items
+    * it ties keep their input order in the sort but come in no set
+    * order from the heap, so a caller that cuts breaks every tie. */
+  private[graft] def firstK(items: Seq[Int], k: Int)(
+      before: (Int, Int) => Boolean): Array[Int] =
+    if (k <= 0) Array.empty
+    else if (k >= items.length) items.toArray.sortWith(before)
+    else {
+      // worst of the kept k at the head
+      val heap = new java.util.PriorityQueue[Int](k,
+        (a: Int, b: Int) => if (a == b) 0 else if (before(a, b)) 1 else -1)
+      items.foreach { i =>
+        if (heap.size < k) heap.add(i)
+        else if (before(i, heap.peek)) { heap.poll(); heap.add(i) }
+      }
+      Array.fill(heap.size)(heap.poll(): Int).reverse
+    }
 
   /** Enrich hits with document content — broadcast the (tiny) hit set
     * into the corpus join. Inner join: a broadcast hash join cannot

@@ -1,9 +1,10 @@
 package graft.operators
 
+import graft.expressions.VectorInput
 import graft.functions.TextFunctions.words
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
@@ -17,11 +18,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * The rows sit in a [[VectorBlock]] (id order), next to their
   * content and the BM25 statistics counted from the Spark-tokenized
   * arrays: per-term postings, each row's `dl`, and (N, avgdl). Every
-  * read ranks with the rules of the plans it stands in for, so it
-  * returns their rows:
+  * read ranks with the shared driver-side rules of the plans it stands
+  * in for, so it returns their rows:
   *  - the cosine is [[BroadcastWalk.cosine]];
-  *  - ranks order score descending in Spark's double order, nulls
-  *    last, then id ascending;
+  *  - every ranking is [[Search.firstK]] under [[Search.ranksBefore]]
+  *    with the row (id order) as tie key;
   *  - BM25 is [[TextSearch.bm25Term]], summed in the query's
   *    distinct-term order;
   *  - RRF is [[TextSearch.rrfFuse]]'s `1.0 / (c + rank)` over `depth`;
@@ -191,27 +192,15 @@ private[graft] object ServeBlock {
     def field: StructField = schema("qe")
   }
 
-  private def isVec(t: DataType): Boolean = t match {
-    case ArrayType(FloatType | DoubleType, _) => true
-    case _                                    => false
-  }
-
   /** The rows of the local frame `q` and their `qe` vectors — no job
     * for a frame the optimizer folds to a local relation — or None when
     * `qe` is not an array<float|double>. */
   def queries(q: DataFrame): Option[Queries] = {
     val qe = q.schema.fieldIndex("qe")
-    if (!isVec(q.schema(qe).dataType)) None
+    if (!VectorInput.accepts(q.schema(qe).dataType)) None
     else {
       val rows = q.collect()
-      Some(new Queries(q.schema, rows, rows.map { r =>
-        if (r.isNullAt(qe)) null
-        else r.getSeq[Any](qe).iterator.map {
-          case x: Float  => x.toDouble
-          case x: Double => x
-          case _         => 0.0
-        }.toArray
-      }))
+      Some(new Queries(q.schema, rows, rows.map(VectorBlock.widen(_, qe))))
     }
   }
 
@@ -219,30 +208,12 @@ private[graft] object ServeBlock {
   private def one(q: Queries): Option[Array[Double]] =
     if (q.vecs.length == 1) Some(q.vecs(0)) else None
 
-  /** The `k` best of `rows` by score descending in Spark's double
-    * order (-0.0 equals 0.0, NaN first), null scores last, then row —
-    * which is id — ascending; best first. */
+  /** The `k` best of `rows` by score `s` (null where `nul`), the row —
+    * which is id — breaking ties; best first. */
   private def best(rows: Seq[Int], k: Int, s: Array[Double],
-                   nul: Array[Boolean]): Array[Int] = {
-    def before(a: Int, b: Int): Boolean =
-      if (nul(a) != nul(b)) !nul(a)
-      else {
-        val c = if (nul(a)) 0 else SQLOrderingUtil.compareDoubles(s(a), s(b))
-        if (c != 0) c > 0 else a < b
-      }
-    if (k <= 0) Array.empty
-    else if (k >= rows.length) rows.toArray.sortWith(before)
-    else {
-      // worst of the kept k at the head
-      val heap = new java.util.PriorityQueue[Int](k,
-        (a: Int, b: Int) => if (a == b) 0 else if (before(a, b)) 1 else -1)
-      rows.foreach { i =>
-        if (heap.size < k) heap.add(i)
-        else if (before(i, heap.peek)) { heap.poll(); heap.add(i) }
-      }
-      Array.fill(heap.size)(heap.poll(): Int).reverse
-    }
-  }
+                   nul: Array[Boolean]): Array[Int] =
+    Search.firstK(rows, k)((a, b) =>
+      Search.ranksBefore(s(a), nul(a), a, s(b), nul(b), b))
 
   private val Columns = Seq("doc_id", "content", "embedding")
 
@@ -253,16 +224,10 @@ private[graft] object ServeBlock {
     val s = docs.schema
     val shaped = Columns.forall(s.fieldNames.contains) &&
       s("doc_id").dataType == LongType &&
-      s("content").dataType == StringType && isVec(s("embedding").dataType)
+      s("content").dataType == StringType &&
+      VectorInput.accepts(s("embedding").dataType)
     if (shaped) Some(VectorBlock.sizeOf(docs.select(Columns.map(col): _*)))
     else None
-  }
-
-  /** Whether a size estimate is within the session's broadcast bound
-    * (-1 turns the block off). */
-  def fits(docs: DataFrame, size: BigInt): Boolean = {
-    val bound = VectorBlock.bound(docs)
-    bound >= 0 && size <= bound
   }
 
   /** One term's postings: the block rows holding it, ascending, and

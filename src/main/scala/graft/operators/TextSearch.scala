@@ -124,13 +124,6 @@ object TextSearch {
                  k1: Double = 1.2, b: Double = 0.75): DataFrame =
     bm25ScoresIndexed(buildBm25Index(docs, idCol, textCol), queryTerms, k1, b)
 
-  def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
-               queryTerms: Seq[String], k: Int,
-               k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25Scores(docs, idCol, textCol, queryTerms, k1, b)
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
-
   /** [[rrfFuse]]'s default rank offset and per-ranking depth. */
   private[operators] val RrfC = 60
   private[operators] val RrfDepth = 1000

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
 import scala.reflect.ClassTag
 
@@ -24,7 +24,7 @@ private[operators] final class VectorBlock(val ids: Array[Long],
     BroadcastWalk.cosine(f, d, vecOff(i), vecOff(i + 1) - vecOff(i), q)
 }
 
-private[operators] object VectorBlock {
+private[graft] object VectorBlock {
 
   /** The block of rows given in input order: row `r` has id `ids(r)`
     * and the next `lens(r)` values of `f` (or `d`, the other being
@@ -53,13 +53,29 @@ private[operators] object VectorBlock {
       gather(f), gather(d)), order))
   }
 
-  /** The session's broadcast bound (-1 turns the driver paths off). */
-  def bound(df: DataFrame): Long =
-    df.queryExecution.sparkSession.sessionState.conf
+  /** Whether a size estimate is within the session's broadcast bound,
+    * `spark.sql.autoBroadcastJoinThreshold` (-1 turns the driver paths
+    * off). */
+  def fits(df: DataFrame, size: BigInt): Boolean = {
+    val bound = df.queryExecution.sparkSession.sessionState.conf
       .autoBroadcastJoinThreshold
+    bound >= 0 && size <= bound
+  }
 
   /** The optimizer's size estimate of `df`, the number the planner
-    * compares with [[bound]] to pick a broadcast join: no job runs. */
+    * compares with the bound of [[fits]] to pick a broadcast join: no
+    * job runs. */
   def sizeOf(df: DataFrame): BigInt =
     df.queryExecution.optimizedPlan.stats.sizeInBytes
+
+  /** Field `i` of `r`, an array<float|double> vector, widened to double:
+    * null for a null vector, and a null element reads as 0, as
+    * ArrayData.getFloat/getDouble do. */
+  def widen(r: Row, i: Int): Array[Double] =
+    if (r.isNullAt(i)) null
+    else r.getSeq[Any](i).iterator.map {
+      case x: Float  => x.toDouble
+      case x: Double => x
+      case _         => 0.0
+    }.toArray
 }

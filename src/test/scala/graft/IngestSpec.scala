@@ -41,10 +41,12 @@ class IngestSpec extends SparkSpec {
     assert(Ingest.dedupIngest(batch, afterFirst, "text", "doc_id").count() == 0)
   }
 
-  test("assignIds: contiguous ids after maxExisting, ordered by content") {
+  test("assignIdsAfter: contiguous ids after the store max, ordered by " +
+      "content") {
     val novel = docsDf((10L, "bb"), (11L, "aa"), (12L, "cc"))
       .withColumnRenamed("doc_id", "batch_id")
-    val got = Ingest.assignIds(novel, "text", 100L)
+    val store = docsDf((7L, "existing a"), (100L, "existing b"))
+    val got = Ingest.assignIdsAfter(novel, "text", store, "doc_id")
       .select("doc_id", "text").as[(Long, String)].collect().toSeq.sorted
     assert(got == Seq((101L, "aa"), (102L, "bb"), (103L, "cc")))
   }
@@ -55,8 +57,9 @@ class IngestSpec extends SparkSpec {
       .map { case (t, i) => (1000L + i, t) }.toDF("batch_id", "text")
       .repartition(8) // many input splits — no task sees the whole batch
     val store = docsDf((1L, "existing a"), (41L, "existing b"))
-    val serial = Ingest
-      .assignIds(novel.withColumnRenamed("batch_id", "doc_id"), "text", 41L)
+    val serial = Ingest.assignIdsAfter(
+        novel.withColumnRenamed("batch_id", "doc_id"), "text", store,
+        "doc_id")
       .select("doc_id", "text").as[(Long, String)].collect().toSet
     val dist = Ingest.assignIdsDistributed(novel, "text", store, "doc_id")
       .select("doc_id", "text").as[(Long, String)].collect().toSet

@@ -122,6 +122,61 @@ class SearchSpec extends SparkSpec {
     assert(got.head._2 == top1, "rank 1 must be the pure-relevance winner")
   }
 
+  test("mmrRerank candidates follow Spark's double order: -0.0 ties 0.0, " +
+      "so the lower id wins") {
+    val shortlist = Seq((5L, 0.0, Seq(1f, 0f)), (3L, -0.0, Seq(0f, 1f)))
+      .toDF("vec_id", "score", "embedding")
+    val got = Search.mmrRerank(shortlist, "vec_id", "embedding", "score",
+        k = 1, lambda = 1.0)
+      .select("vec_id").as[Long].collect().toSeq
+    assert(got == Seq(3L))
+  }
+
+  test("firstK under ranksBefore equals a full sort in Spark's double " +
+      "order: NaN, signed zeros, null and all-tied scores, any k") {
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+    val rng = new scala.util.Random(14)
+    val pool = Array(Double.NaN, 0.0, -0.0, 0.5, -1.0,
+      Double.PositiveInfinity, Double.NegativeInfinity)
+    for (trial <- 0 until 300) {
+      val n = rng.nextInt(25)
+      val tied = trial % 5 == 0
+      // tied: every score 0.0 or -0.0, which Spark orders as equal
+      val s = Array.fill(n)(pool(
+        if (tied) 1 + rng.nextInt(2) else rng.nextInt(pool.length)))
+      val nul = Array.fill(n)(!tied && rng.nextInt(4) == 0)
+      val key = rng.shuffle((0 until n).map(_ * 3L - 7)).toArray
+      // the rule spelled independently: nulls last, scores descending
+      // under Spark's comparison, then the key ascending
+      val want = Ordering.fromLessThan[Int] { (a, b) =>
+        val c = java.lang.Boolean.compare(nul(a), nul(b))
+        val d = if (nul(a) || c != 0) 0
+          else SQLOrderingUtil.compareDoubles(s(b), s(a))
+        if (c != 0) c < 0
+        else if (d != 0) d < 0
+        else key(a) < key(b)
+      }
+      val items = rng.shuffle((0 until n).filter(_ => rng.nextInt(5) > 0))
+      val sorted = items.sorted(want)
+      for (k <- Seq(0, 1, rng.nextInt(n + 1), items.length,
+          items.length + 3)) {
+        val got = Search.firstK(items, k)((a, b) => Search.ranksBefore(
+          s(a), nul(a), key(a), s(b), nul(b), key(b)))
+        assert(got.toSeq == sorted.take(k), s"trial $trial, k $k")
+      }
+    }
+    // the independent rule is the plans' ORDER BY score DESC, key
+    val s = Array(0.0, Double.NaN, -0.0, 0.5, 0.5, 2.0)
+    val rows = s.indices.map(i =>
+      (i.toLong, if (i == 4) None else Some(s(i))))
+    val plan = rows.toDF("key", "score")
+      .orderBy(col("score").desc, col("key")).select("key").as[Long]
+      .collect().toSeq
+    val nul = rows.map(_._2.isEmpty).toArray
+    assert(Search.firstK(s.indices, s.length)((a, b) => Search.ranksBefore(
+      s(a), nul(a), a, s(b), nul(b), b)).map(_.toLong).toSeq == plan)
+  }
+
   test("contextAgg drops null contents like the reference filter") {
     val enriched = Seq(
       (0L, 1L, 0.9, Some("a")), (0L, 2L, 0.8, None), (0L, 3L, 0.7, Some("b")))

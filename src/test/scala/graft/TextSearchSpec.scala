@@ -13,8 +13,9 @@ class TextSearchSpec extends SparkSpec {
     (4L, "completely unrelated prose about gardens"))
 
   test("bm25: docs matching more/rarer query terms rank higher") {
-    val got = TextSearch.bm25TopK(docs, "doc_id", "text",
-        Seq("hash", "joins"), k = 4)
+    val got = TextSearch.bm25Scores(docs, "doc_id", "text",
+        Seq("hash", "joins"))
+      .orderBy(col("score").desc, col("doc_id")).limit(4)
       .select("doc_id").as[Long].collect().toSeq
     // doc 1 has both terms (joins x3, hash x1); doc 2 only "hash" (x2);
     // docs 3/4 match nothing and must be absent entirely
