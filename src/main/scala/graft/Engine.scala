@@ -386,14 +386,12 @@ object Engine {
     * dropped, the rest ranked by [[Search.ranksBefore]] with doc_id as
     * tie key, and joined as "rank. content" lines. No rows give "". */
   private[graft] def formatContext(rows: Seq[Row]): String = {
-    val kept = rows.filterNot(_.isNullAt(2)).toIndexedSeq
-    def score(i: Int): Double =
-      if (kept(i).isNullAt(1)) 0.0 else kept(i).getDouble(1)
-    Search.firstK(kept.indices, kept.length)((a, b) => Search.ranksBefore(
-        score(a), kept(a).isNullAt(1), kept(a).getLong(0),
-        score(b), kept(b).isNullAt(1), kept(b).getLong(0)))
+    def score(r: Row): Double = if (r.isNullAt(1)) 0.0 else r.getDouble(1)
+    rows.filterNot(_.isNullAt(2))
+      .sortWith((a, b) => Search.ranksBefore(score(a), a.isNullAt(1),
+        a.getLong(0), score(b), b.isNullAt(1), b.getLong(0)))
       .zipWithIndex
-      .map { case (i, r) => s"${r + 1}. ${kept(i).getString(2)}" }
+      .map { case (r, i) => s"${i + 1}. ${r.getString(2)}" }
       .mkString("\n")
   }
 }

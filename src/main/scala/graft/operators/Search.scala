@@ -126,10 +126,8 @@ object Search {
   private[operators] def mmrPicks(
       shortlist: Array[(Long, Double, Array[Float])], k: Int, lambda: Double)
       : Seq[(Long, Long, Double)] = {
-    val cand = firstK(shortlist.indices, shortlist.length) { (a, b) =>
-      ranksBefore(shortlist(a)._2, false, shortlist(a)._1,
-        shortlist(b)._2, false, shortlist(b)._1)
-    }.map(shortlist)
+    val cand = shortlist.sortWith((a, b) =>
+      ranksBefore(a._2, false, a._1, b._2, false, b._1))
     val used = new Array[Boolean](cand.length)
     // selected vectors, widened once
     val selVecs = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
