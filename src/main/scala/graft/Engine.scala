@@ -69,7 +69,8 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
     * indexes. Dropping the snapshot releases them, so no index outlives
     * the snapshot it was built from. Its fields change only under the
     * engine's lock. */
-  private final class Snapshot(val docs: DataFrame, val mtime: Option[Long]) {
+  private final class Snapshot(val docs: DataFrame,
+                               val mtime: Option[Long]) {
     /** The optimizer's size estimate of the block's columns (no job);
       * None when their types keep every read on the plans. */
     lazy val size: Option[BigInt] = ServeBlock.size(docs)
