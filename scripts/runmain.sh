@@ -4,6 +4,11 @@
 # holds this script. Usage: runmain.sh <mainClass> [args...]
 MAIN=$1; shift
 ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+SERVICES=META-INF/services/org.apache.spark.sql.sources.DataSourceRegister
+if [ ! -f "$ROOT/target/scala-2.13/classes/$SERVICES" ]; then
+  echo "runmain.sh: $SERVICES is not in target/scala-2.13/classes; build with 'sbt Compile/copyResources compile' first" >&2
+  exit 2
+fi
 CP="$ROOT/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \

@@ -36,16 +36,17 @@ import org.apache.spark.sql.functions._
   *    runs its Spark plan.
   *
   * Reads go through one store snapshot ([[documents]]): the store is
-  * listed and its schema inferred once per change, not once per call,
-  * and nothing is persisted for it. A read sees every row committed
-  * before the snapshot was taken. The snapshot, its block and both
-  * indexes are dropped on this engine's writes, and when the store
-  * directory's modification time differs from the one recorded with the
-  * snapshot (one FS status call per read, no Spark job) — that is how a
-  * write by another engine or JVM shows. On file systems without
-  * directory mtimes (object stores), another writer's rows show after
-  * this engine's next write. Writes never read the snapshot: ingest and
-  * delete resolve the store afresh under [[Ingest.withStoreLock]].
+  * listed once per change, not once per call, with the schema every
+  * write gives it (no inference job), and nothing is persisted for it.
+  * A read sees every row committed before the snapshot was taken. The
+  * snapshot, its block and both indexes are dropped on this engine's
+  * writes, and when the store directory's modification time differs
+  * from the one recorded with the snapshot (one FS status call per
+  * read, no Spark job) — that is how a write by another engine or JVM
+  * shows. On file systems without directory mtimes (object stores),
+  * another writer's rows show after this engine's next write. Writes
+  * never read the snapshot: ingest and delete resolve the store afresh
+  * under [[Ingest.withStoreLock]].
   *
   * All mutation goes through dedup-ingest (INSERT OR IGNORE parity) and
   * contiguous id assignment. Embedding is the deterministic hash
@@ -104,8 +105,13 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
       array().cast("array<float>").as("embedding"))
     .limit(0)
 
+  /** The store resolved now with the schema every write gives it, so
+    * no schema-inference job runs; None while it is empty. */
+  private def readStore(): Option[DataFrame] =
+    Ingest.readStore(spark, storePath, Some(emptyStore.schema))
+
   /** Full store scan (GET /documents): the snapshot every read goes
-    * through. It is resolved (listing and schema inference) once per
+    * through. It is resolved (a listing, no schema inference) once per
     * store change, not per call, and is never persisted. It is dropped
     * with both indexes on this engine's writes, and when the store
     * directory's modification time moved since it was taken — another
@@ -120,8 +126,7 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
     val mtime = storeMtime()
     snapshot.filter(_.mtime == mtime).getOrElse {
       dropSnapshot()
-      val s = new Snapshot(
-        Ingest.readStore(spark, storePath).getOrElse(emptyStore), mtime)
+      val s = new Snapshot(readStore().getOrElse(emptyStore), mtime)
       snapshot = Some(s)
       s
     }
@@ -184,7 +189,7 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
   private def ingestLocked(docs: DataFrame): Long = {
     // resolved fresh under the lock, never the snapshot: dedup and id
     // assignment must see every row another writer committed
-    val store = Ingest.readStore(spark, storePath).getOrElse(emptyStore)
+    val store = readStore().getOrElse(emptyStore)
     val chunked = Chunker.chunk(docs, "text", chunkSize, overlap)
       .select(col("source"), col("chunk_ix"), col("chunk").as("content"))
     val embedded = embedder.embed(chunked, "content", dim)
@@ -255,7 +260,7 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
     import spark.implicits._
     if (ids.isEmpty || storeMtime().isEmpty) return 0L
     Ingest.withStoreLock(spark, storePath) {
-      Ingest.readStore(spark, storePath).fold(0L) { store =>
+      readStore().fold(0L) { store =>
         val victims = ids.distinct.toDF("doc_id")
         val n = store.join(broadcast(victims), Seq("doc_id"), "left_semi")
           .count()

@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   * The graph index (a persisted k-NN graph, [[buildKnnGraph]]) is
   * served by ONE batched beam-walk loop, [[beamWalk]], and one
   * ranked-top-k tail, [[walkTopK]]; the cosine walks over one shared
-  * graph go through [[cosineSearch]], which runs the same walk as one
-  * Spark job over broadcast arrays ([[BroadcastWalk]]) when the graph
-  * and vectors fit the session's broadcast bound. The public walks are
+  * graph go through [[cosineSearch]], which collects the graph and
+  * vectors in one Spark job and walks on the driver ([[DriverWalk]])
+  * when they fit the session's broadcast bound. The public walks are
   * wrappers that differ only in the entries frame and scorer they pass:
   * [[graphBeamSearch]], [[graphBeamSearchPerBucket]] and
   * [[graphBeamSearchFiltered]] (one query, cosine),
@@ -534,7 +534,7 @@ object Ann {
     * `score` function mapping such pairs to (queryIdCol, idCol, score),
     * larger = closer, then calls this and [[walkTopK]] (the cosine
     * walks through [[cosineSearch]], which may take the one-job
-    * [[BroadcastWalk]] instead). The walk is
+    * [[DriverWalk]] instead). The walk is
     * fully deterministic so an oracle can replay it in SQL: score the
     * entries, and for `rounds` iterations rank each query's scored
     * nodes (score DESC, id ties) as `_r`, keep the rows `beamCut`
@@ -621,8 +621,8 @@ object Ann {
     * each row also carries `passed_visited`.
     *
     * THE SIZE SWITCH: with entry ids and a graph plus vectors that fit
-    * the session's broadcast bound, the walk runs as ONE job over
-    * broadcast arrays ([[BroadcastWalk]]); otherwise — the 100 TB
+    * the session's broadcast bound, the walk is ONE collect job and a
+    * walk on the driver ([[DriverWalk]]); otherwise — the 100 TB
     * path — it is the per-round loop [[beamWalk]] and [[walkTopK]].
     * Both give the same rows under the same schema. */
   private def cosineSearch(graph: DataFrame, vectors: DataFrame,
@@ -632,7 +632,7 @@ object Ann {
                            rounds: Int, k: Int,
                            pred: Option[Column] = None): DataFrame = {
     val oneJob = entries.swap.toOption.flatMap(ids =>
-      BroadcastWalk.search(graph, vectors, q, nonEmpty(ids), queryIdCol,
+      DriverWalk.search(graph, vectors, q, nonEmpty(ids), queryIdCol,
         idCol, vecCol, beam, rounds, k, pred))
     oneJob.getOrElse {
       val entryNodes = entries.fold(literalEntries(vectors, idCol, _),

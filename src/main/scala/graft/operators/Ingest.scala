@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.StructType
 
 /** The reference's ingest pipeline (reference server.js:161-215):
   * read docs → chunk → embed → dedupe on content (INSERT OR IGNORE,
@@ -359,9 +360,14 @@ object Ingest {
     * must propagate — treating a real-but-unreadable store as empty
     * would restart doc_id assignment at 0 and append duplicate ids once
     * it becomes readable.
+    *
+    * Given the store's `schema`, no schema-inference job runs; a
+    * directory without data files then shows as an empty listing.
     */
-  def readStore(spark: SparkSession, path: String): Option[DataFrame] =
-    try Some(spark.read.parquet(path))
+  def readStore(spark: SparkSession, path: String,
+                schema: Option[StructType] = None): Option[DataFrame] =
+    try Some(schema.fold(spark.read)(spark.read.schema).parquet(path))
+      .filter(_.inputFiles.nonEmpty)
     catch {
       case e: org.apache.spark.sql.AnalysisException
           if e.getCondition == "PATH_NOT_FOUND" => None

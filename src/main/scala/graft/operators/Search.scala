@@ -103,7 +103,7 @@ object Search {
     * Determinism: candidates are processed in [[ranksBefore]] order
     * (score descending in Spark's double order, then id), ties in the
     * marginal score break on ascending id, and the
-    * candidate-candidate cosine is [[BroadcastWalk.cosine]], the
+    * candidate-candidate cosine is [[DriverWalk.cosine]], the
     * arithmetic of [[graft.expressions.CosineSimilarity]] (float→double
     * widening, sequential accumulation, `dot/(√na·√nb)`), so results
     * are bit-comparable with a SQL oracle.
@@ -147,7 +147,7 @@ object Search {
             if (selVecs.isEmpty) 0.0 else Double.NegativeInfinity
           var j = 0
           while (j < selVecs.length) {
-            val s = BroadcastWalk.cosine(v, null, 0, v.length, selVecs(j))
+            val s = DriverWalk.cosine(v, null, 0, v.length, selVecs(j))
             if (s > maxSim) maxSim = s
             j += 1
           }

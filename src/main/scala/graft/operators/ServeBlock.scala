@@ -20,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * arrays: per-term postings, each row's `dl`, and (N, avgdl). Every
   * read ranks with the shared driver-side rules of the plans it stands
   * in for, so it returns their rows:
-  *  - the cosine is [[BroadcastWalk.cosine]];
+  *  - the cosine is [[DriverWalk.cosine]];
   *  - every ranking is [[Search.firstK]] under [[Search.ranksBefore]]
   *    with the row (id order) as tie key;
   *  - BM25 is [[TextSearch.bm25Term]], summed in the query's
@@ -263,12 +263,7 @@ private[graft] object ServeBlock {
     if (rows.exists(_.isNullAt(0)) || vecs.exists(a =>
         a != null && (0 until a.numElements()).exists(a.isNullAt)))
       return None
-    def flat[T: scala.reflect.ClassTag](get: ArrayData => Array[T]) =
-      vecs.filter(_ != null).flatMap(get)
-    VectorBlock.byId(rows.map(_.getLong(0)), vecs.map(_ == null),
-        vecs.map(a => if (a == null) 0 else a.numElements()),
-        if (isFloat) flat(_.toFloatArray()) else null,
-        if (isFloat) null else flat(_.toDoubleArray())).map {
+    VectorBlock.byId(rows.map(_.getLong(0)), vecs, isFloat).map {
       case (v, order) =>
         // size(null) in this session: -1 under the legacy rule, else null
         val nullSize: java.lang.Double =

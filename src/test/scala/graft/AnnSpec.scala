@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Ann, Pq, Search}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 class AnnSpec extends SparkSpec {
@@ -1455,8 +1456,9 @@ class AnnSpec extends SparkSpec {
     assert(oneJob == withBroadcastDisabled(walks().map(_.schema)))
   }
 
-  test("a 16-query batch walk over a small graph runs in at most 3 " +
-      "Spark jobs under default settings") {
+  test("a 16-query batch walk over a small graph runs in exactly 1 " +
+      "Spark job under default settings, from a local or a parquet " +
+      "query frame") {
     val rng = new scala.util.Random(3)
     val n = 200
     val vecs = vecsDf((1 to n).map(i =>
@@ -1466,16 +1468,25 @@ class AnnSpec extends SparkSpec {
     val qdf = (1 to 16).map(q =>
       (q.toLong, Array.fill(8)(rng.nextGaussian().toFloat)))
       .toDF("query_id", "qe")
-    var answered = 0
-    def walk(): Unit = answered = Ann.graphBeamSearchBatch(graph, vecs,
-        qdf, "vec_id", "embedding", "query_id", Seq(1L, 2L, 3L),
-        beam = 4, rounds = 3, k = 5)
-      .collect().map(_.getLong(0)).distinct.length
-    val oneJob = jobsOf(walk())
-    assert(answered == 16)
-    assert(oneJob <= 3, s"one-job walk ran $oneJob jobs")
+    val qDir = java.nio.file.Files.createTempDirectory("graft_walk_q")
+      .resolve("q").toString
+    qdf.write.parquet(qDir)
+    // read (and its schema inferred) before any job is counted
+    val qParquet = spark.read.parquet(qDir)
+    def walk(q: org.apache.spark.sql.DataFrame): Seq[Row] =
+      Ann.graphBeamSearchBatch(graph, vecs, q, "vec_id", "embedding",
+        "query_id", Seq(1L, 2L, 3L), beam = 4, rounds = 3, k = 5)
+        .collect().toSeq.sortBy(r => (r.getLong(0), r.getLong(1)))
+    var local, fromParquet: Seq[Row] = Nil
+    val localJobs = jobsOf { local = walk(qdf) }
+    val parquetJobs = jobsOf { fromParquet = walk(qParquet) }
+    assert(local.map(_.getLong(0)).distinct.length == 16)
+    assert(fromParquet == local)
+    assert(localJobs == 1, s"one-job walk ran $localJobs jobs")
+    assert(parquetJobs == 1,
+      s"one-job walk over a parquet query frame ran $parquetJobs jobs")
     // the counter sees the loop's one job per round
-    val loop = withBroadcastDisabled(jobsOf(walk()))
+    val loop = withBroadcastDisabled(jobsOf(walk(qdf)))
     assert(loop > 3, s"per-round loop ran $loop jobs")
   }
 

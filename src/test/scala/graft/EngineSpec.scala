@@ -204,6 +204,16 @@ class EngineSpec extends SparkSpec {
     assert(e.countDocuments() == 1)
   }
 
+  test("resolving a written store runs no job and reads the schema " +
+      "inference would give") {
+    val path = freshStore()
+    val e = new Engine(spark, path, dim = 64, chunkSize = 40, overlap = 10)
+    assert(e.addDocument("a store with one chunk") == 1)
+    var docs: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { docs = e.documents() } == 0)
+    assert(docs.schema == spark.read.parquet(path).schema)
+  }
+
   test("long documents chunk with overlap and remain searchable") {
     val e = freshEngine
     val long = (1 to 120).map(i => s"token$i").mkString(" ") +

@@ -428,6 +428,29 @@ class IngestSpec extends SparkSpec {
     assert(a.toSeq == b.toSeq)
   }
 
+  test("readStore with the store's schema: the inferred read's rows " +
+      "and schema, no job, and None for a missing or metadata-only " +
+      "directory") {
+    val root = Files.createTempDirectory("graft_store_schema")
+    val dir = root.resolve("docs").toString
+    val schema = Some(Ingest.hashEmbed(docsDf(), "text", 16).schema)
+    assert(Ingest.readStore(spark, dir, schema).isEmpty)
+    val meta = Files.createDirectories(root.resolve("meta"))
+    Files.writeString(meta.resolve("_SUCCESS"), "")
+    Files.writeString(meta.resolve(".part.crc"), "")
+    assert(Ingest.readStore(spark, meta.toString).isEmpty)
+    assert(Ingest.readStore(spark, meta.toString, schema).isEmpty)
+
+    Ingest.writeStore(Ingest.hashEmbed(docsDf((1L, "x y z"),
+      (2L, "p q r")), "text", 16), dir)
+    val Some(inferred) = Ingest.readStore(spark, dir): @unchecked
+    var given: Option[org.apache.spark.sql.DataFrame] = None
+    assert(jobsOf { given = Ingest.readStore(spark, dir, schema) } == 0)
+    assert(given.map(_.schema).contains(inferred.schema))
+    assert(given.get.orderBy("doc_id").collect().toSeq ==
+      inferred.orderBy("doc_id").collect().toSeq)
+  }
+
   test("buildIndex persists (id, vector) projection") {
     val df = Ingest.hashEmbed(docsDf((1L, "x"), (2L, "y")), "text", 8)
     val idx = Ingest.buildIndex(df, "doc_id", "embedding")
