@@ -77,7 +77,7 @@ private[operators] object DriverWalk {
         val rows = queries.flatMap(walkOne(ix, _, entries,
           beam.fold(identity, _ => 0), rounds, k,
           idF.dataType == IntegerType, pred.isDefined))
-        val schema = StructType(Seq(qs(queryIdCol),
+        val schema = StructType(Seq(qsel.schema.head,
           StructField("rank", LongType, nullable = false), idF,
           StructField("score", DoubleType,
             nullable = vs(vecCol).nullable || qs("qe").nullable),
@@ -137,11 +137,10 @@ private[operators] object DriverWalk {
     val from = new Array[Int](ends.map(_._1.length).sum)
     val to = new Array[Int](from.length)
     var m = 0
-    val rowOf = rowIndex(v.ids)
     for ((src, dst) <- ends; e <- src.indices) {
-      val s = rowOf(src(e))
+      val s = java.util.Arrays.binarySearch(v.ids, src(e))
       if (s >= 0) {
-        val t = rowOf(dst(e))
+        val t = java.util.Arrays.binarySearch(v.ids, dst(e))
         if (t >= 0) { from(m) = s; to(m) = t; m += 1 }
       }
     }
@@ -155,21 +154,6 @@ private[operators] object DriverWalk {
     val toRow = CatalystTypeConverters.createToScalaConverter(q.schema)
     Some((new Index(v, pass, adjOff, adj),
       parts.drop(nv + ng).flatten.map(toRow(_).asInstanceOf[Row])))
-  }
-
-  /** Row lookup over ids sorted ascending, negative when absent: a
-    * table when the ids span less than twice their count, else a
-    * binary search. */
-  private def rowIndex(ids: Array[Long]): Long => Int = {
-    val span = if (ids.isEmpty) -1L else ids.last - ids.head
-    if (span < 0 || span >= 2L * ids.length)
-      java.util.Arrays.binarySearch(ids, _)
-    else {
-      val (lo, hi) = (ids.head, ids.last)
-      val table = Array.fill(span.toInt + 1)(-1)
-      for (i <- ids.indices) table((ids(i) - lo).toInt) = i
-      id => if (id < lo || id > hi) -1 else table((id - lo).toInt)
-    }
   }
 
   /** CosineSimilarity's arithmetic for the `n` elements of `f` (`d`

@@ -361,13 +361,15 @@ object Ingest {
     * would restart doc_id assignment at 0 and append duplicate ids once
     * it becomes readable.
     *
-    * Given the store's `schema`, no schema-inference job runs; a
-    * directory without data files then shows as an empty listing.
+    * Given the store's `schema` (as `Engine` gives its own), no
+    * schema-inference job runs and a directory without data files shows
+    * as an empty listing. Without it (as `Streaming` reads), inference
+    * throws UNABLE_TO_INFER_SCHEMA on such a directory instead.
     */
   def readStore(spark: SparkSession, path: String,
                 schema: Option[StructType] = None): Option[DataFrame] =
     try Some(schema.fold(spark.read)(spark.read.schema).parquet(path))
-      .filter(_.inputFiles.nonEmpty)
+      .filter(df => schema.isEmpty || df.inputFiles.nonEmpty)
     catch {
       case e: org.apache.spark.sql.AnalysisException
           if e.getCondition == "PATH_NOT_FOUND" => None

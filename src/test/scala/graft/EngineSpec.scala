@@ -358,7 +358,7 @@ class EngineSpec extends SparkSpec {
                           queries: Seq[String], k: Int,
                           shortlistSize: Int = 50): Unit = {
     var got: Seq[(String, Any)] = Nil
-    block.documents() // resolving the store infers its schema: a job
+    block.documents() // lists the store under its fixed schema: no job
     val jobs = jobsOf { got = reads(block, queries, k, shortlistSize) }
     val want = withBroadcastDisabled(reads(plans, queries, k, shortlistSize))
     assert(got.map(_._1) == want.map(_._1))
